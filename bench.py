@@ -332,6 +332,9 @@ def run_once() -> dict:
     tracker = spark.sparkContext.statusTracker()
 
     def _max_job_id() -> int:
+        # getJobIdsForGroup(None) returns only jobs run OUTSIDE a job
+        # group: jobs a builder launches under setJobGroup are not
+        # counted, so a query's figure is a lower bound.
         ids = tracker.getJobIdsForGroup(None)
         return max(ids) if ids else -1
     # Boundary observability (VERDICT r10 #7): attribute cachereg

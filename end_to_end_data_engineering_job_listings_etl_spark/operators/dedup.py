@@ -20,12 +20,13 @@ makes the MinHash signatures oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 import random
 
 from ..functions.text import fingerprint
+from .ids import release_pins
 
 # Affine MinHash family h_i(x) = (a_i*x + b_i) mod p over a 32-bit base
 # hash: one md5 per shingle (not one per seed), then cheap integer
@@ -395,53 +396,6 @@ def prefix_filter_pairs(
     )
 
 
-# The FINAL labels frame returned by connected_components is a
-# localCheckpoint (corpus-sized at scale). Intermediate generations are
-# released inside the loop, but the returned one outlives the call —
-# so it is registered here per SESSION and released when the NEXT
-# invocation on that session supersedes it, or when cachereg evicts
-# (ADVICE r5 item 1 — mirrors corpus.py's _TRANSIENT_PINS/_repin). At
-# most one labels checkpoint is live per session; a caller that holds
-# the previous result past the next invocation fail-stops on access
-# (the module's designed loss semantics, ids.py::release_pins).
-# Weakly keyed (ADVICE r6): a session stopped via sc.stop() — which
-# bypasses the hooked stop — must not keep its pinned checkpoint
-# entry alive until some other session's touch() happens by.
-import weakref  # noqa: E402
-
-_CC_PINS: "weakref.WeakKeyDictionary[SparkSession, list[DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _cc_repin(spark: SparkSession, frame: DataFrame) -> None:
-    from .. import cachereg
-    from .ids import release_pins
-
-    # session-scoped (the operator never sees sf_dir) — the family LRU
-    # entry uses the empty sf_dir, and clear_cc_pins ignores it anyway
-    cachereg.touch_family(spark, "", "dedup_cc")
-    release_pins(_CC_PINS.pop(spark, []))
-    _CC_PINS[spark] = [frame]
-
-
-def clear_cc_pins(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """cachereg evictor: labels pins are session-scoped (the operator
-    never sees sf_dir), so ANY eviction touching the session releases
-    them — re-running the owning query rebuilds and re-pins."""
-    from .ids import release_pins
-
-    for sess in [s for s in _CC_PINS if spark is None or s is spark]:
-        release_pins(_CC_PINS.pop(sess))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("dedup_cc", clear_cc_pins)
-
-
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -449,6 +403,7 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 25,
+    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Resolve near-dup candidate pairs into duplicate clusters:
     connected components by iterative min-label propagation. Returns
@@ -456,39 +411,47 @@ def connected_components(
     that turns pairwise similarity output (LSH/Jaccard pairs) into an
     actual keep/drop decision per document.
 
-    Shape per iteration: two shuffle joins (labels ⋈ adjacency for
-    neighbor propagation, labels ⋈ labels for pointer jumping — each
-    node also adopts its current label's label) + one min-aggregate.
-    Pointer jumping halves the remaining distance to the component
-    minimum every round, so convergence is O(log diameter) rounds, not
-    O(diameter) — the property that keeps long duplicate chains (100 TB
-    corpora produce them) from serializing the loop. Same family as
+    Each round unions three label candidates per vertex — its own
+    label, its neighbours' labels (labels ⋈ adjacency) and, from round
+    2 on, its label's label (pointer jumping, labels ⋈ labels) — and
+    keeps the minimum in one aggregate. Pointer jumping halves the
+    distance to the component minimum every round, so convergence
+    takes O(log diameter) rounds, not O(diameter); long duplicate
+    chains do not serialize the loop. Same family as
     GraphX/GraphFrames connectedComponents (large-star/small-star).
-    ``localCheckpoint`` truncates the per-round lineage so the plan
-    doesn't grow by one join per iteration (the classic iterative-Spark
-    trap), and each round RELEASES the previous round's checkpoint
-    blocks once its successor is materialized — live storage is two
-    label generations, not O(iterations) (at corpus scale every
-    generation is corpus-sized; unreleased generations were also the
-    block-manager churn behind this query's ±40% bench spread,
-    VERDICT r4 item 3). Driver involvement per round is a single
-    boolean ("did any label change"), computed as a limit(1).count()
-    — no label data is collected. The old label rides through the
-    min-aggregate (tagged ``__own`` rows — every vertex contributes
-    exactly one), so the changed check is a shuffle-free filter over
-    the freshly checkpointed blocks instead of a per-round
-    new ⋈ old label join (r12; guide §2.4 — one exchange per round,
-    not two).
+
+    One Spark action per round: the round's eager ``localCheckpoint``
+    truncates the lineage, and an ``Observation`` on that same action
+    counts the vertices whose label changed (each vertex's previous
+    label rides through the aggregate as its ``__own`` candidate), so
+    the convergence check launches no job of its own and no label data
+    reaches the driver. The previous round's checkpoint is released as
+    soon as its successor is materialized, so at most two generations
+    are live.
+
+    The returned frame reads the final round's checkpoint. It outlives
+    the call, so its owner releases it: ``pinned_out`` receives that
+    checkpoint for ``ids.release_pins`` (the ``ids.ranked_ids``
+    convention). Without ``pinned_out`` the blocks live until the JVM's
+    ContextCleaner collects the plan. After release, a retained handle
+    fail-stops on access instead of recomputing.
     """
-    from .ids import release_pins
-    sym = edges.select(
-        F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
-    ).union(edges.select(F.col(dst_col).alias("__src"), F.col(src_col).alias("__dst")))
-    adj = sym.persist()
-    gen = vertices.select(
+    # Both directions from one pass over ``edges``: a union of two
+    # projections would plan (and run) the whole edge pipeline twice.
+    adj = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")),
+                F.struct(F.col(dst_col).alias("__src"), F.col(src_col).alias("__dst")),
+            )
+        ).alias("__e")
+    ).select("__e.__src", "__e.__dst").persist()
+    # Round 1 reads the identity labels twice (own label + adjacency
+    # join); the lazy pin computes them once inside that round's action
+    # instead of paying an eager job of their own.
+    labels = vertices.select(
         F.col(id_col).alias("__id"), F.col(id_col).alias("cluster_id")
-    ).localCheckpoint()
-    labels = gen
+    ).localCheckpoint(eager=False)
     for it in range(max_iter):
         msgs = adj.join(labels, adj["__src"] == labels["__id"]).select(
             F.col("__dst").alias("__id"),
@@ -512,6 +475,7 @@ def connected_components(
                 )
             )
             candidates = candidates.union(jump)
+        obs = Observation()
         new_gen = (
             candidates.groupBy("__id")
             .agg(
@@ -521,22 +485,22 @@ def connected_components(
                     "__prev"
                 ),
             )
+            .observe(
+                obs,
+                F.count(F.when(F.col("cluster_id") != F.col("__prev"), 1)).alias(
+                    "changed"
+                ),
+            )
+            .select("__id", "cluster_id")
             .localCheckpoint()
         )
-        changed = (
-            new_gen.filter(F.col("cluster_id") != F.col("__prev"))
-            .limit(1)
-            .count()
-        )
-        # new_gen is materialized (eager checkpoint) and `changed`
-        # has consumed it — the old generation's blocks can go now.
-        release_pins([gen])
-        gen = new_gen
-        labels = new_gen.select("__id", "cluster_id")
-        if changed == 0:
+        release_pins([labels])
+        labels = new_gen
+        if obs.get["changed"] == 0:
             break
     adj.unpersist()
-    _cc_repin(vertices.sparkSession, gen)
+    if pinned_out is not None:
+        pinned_out.append(labels)
     return labels.select(F.col("__id").alias(id_col), "cluster_id")
 
 

@@ -93,16 +93,20 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
 # or least-recently-checked surface into the window (every name here
 # has a DuckDB oracle — no rows-only checks waste a slot).
 #
-# Round 13 window — ZERO overlap with the r12 window (standing
-# rotation policy). Computed from CORRECTNESS_r0{1..9}/r10/r11/r12.json
-# the same way every round: strictly the 50 oracled names whose last
-# driver row is OLDEST, oldest round first, alphabetical within a
-# round — the r7 remainder (star_wide, the text chunk/langid/
-# repetition/stats band, latest-per-customer) plus the first 44 of the
-# r8 band (exact-agg checked twins, the relational-semantics rel_*/
-# set_* kit, the ER family, pandas cogroup/grouped-seq operators, the
-# sql_* view stack, multibatch stream drains, bucketed-join sink).
+# The window leads with the near-dup cluster queries, which share one
+# memoized connected-components build, so the driver checks them
+# first. The other 47 are the oracled names whose last driver row is
+# oldest, oldest round first, alphabetical within a round: the r7
+# remainder (star_wide, the text chunk/langid/repetition/stats band,
+# latest-per-customer) plus the first 41 of the r8 band (exact-agg
+# checked twins, the relational-semantics rel_*/set_* kit, the ER
+# family, pandas cogroup/grouped-seq operators, the sql_* view stack,
+# bucketed-join sink).
 _WINDOW = [
+    # near-dup cluster queries over the shared labels memo
+    "dd_keep_best",
+    "dd_duplicate_clusters",
+    "samp_split_by_cluster",
     # r7 band — last driver row in CORRECTNESS_r07 (the remainder)
     "star_wide",
     "text_chunk_dedup",
@@ -110,7 +114,7 @@ _WINDOW = [
     "text_repetition_metrics",
     "text_stats",
     "w_latest_per_customer",
-    # r8 band — last driver row in CORRECTNESS_r08 (first 44)
+    # r8 band — last driver row in CORRECTNESS_r08 (first 41)
     "agg_approx_distinct_checked",
     "agg_grouping_sets",
     "agg_multi_distinct",
@@ -152,9 +156,6 @@ _WINDOW = [
     "sql_v1_star",
     "sql_v2_star_dates",
     "sql_v3_bridge_flat",
-    "stream_cdc_multibatch",
-    "stream_dedup",
-    "stream_dedup_multibatch",
 ]
 
 

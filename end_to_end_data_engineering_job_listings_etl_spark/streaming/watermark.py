@@ -169,12 +169,13 @@ def derived_state_partitions(spark: SparkSession, source_dir: str) -> int:
     paying per-instance commit overhead. Partitioning never changes
     stateful-aggregation values (same keys, same windows, same
     watermark), only their layout. Env override:
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` — taken VERBATIM (≥ 1),
-    including values above the session's shuffle-partition count: an
-    explicit override is the operator sizing the state store for a
-    target cluster, so the derivation's clamp ceiling does not apply
-    (ADVICE r12). A malformed value warns and falls through to the
-    derivation instead of being silently ignored."""
+    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` — a positive integer is
+    taken VERBATIM, including values above the session's
+    shuffle-partition count: an explicit override is the operator
+    sizing the state store for a target cluster, so the derivation's
+    clamp ceiling does not apply. A malformed or non-positive value
+    warns and falls through to the derivation instead of being
+    silently ignored or floored."""
     import os
     import warnings
 
@@ -182,14 +183,17 @@ def derived_state_partitions(spark: SparkSession, source_dir: str) -> int:
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
         try:
-            return max(1, int(env))
+            n = int(env)
         except ValueError:
-            warnings.warn(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS="
-                f"{env!r} is not an integer — override ignored, "
-                "deriving state partitions from source bytes",
-                stacklevel=2,
-            )
+            n = 0
+        if n >= 1:
+            return n
+        warnings.warn(
+            "SPARK_GRAFT_STREAM_STATE_PARTITIONS="
+            f"{env!r} is not a positive integer — override ignored, "
+            "deriving state partitions from source bytes",
+            stacklevel=2,
+        )
     total = 0
     for root, _dirs, files in os.walk(source_dir, followlinks=True):
         for f in files:

@@ -166,11 +166,14 @@ def test_local_checkpoint_loss_fail_stop(spark):
 
 
 def test_connected_components_pins_released_on_reinvocation(spark):
-    """ADVICE r5 item 1: the FINAL labels checkpoint returned by
-    connected_components is registered per session and released when
-    the next invocation supersedes it — at most ONE labels checkpoint
-    lives per session, and cachereg eviction drops it too."""
+    """connected_components hands its final labels checkpoint to the
+    caller through ``pinned_out`` and keeps nothing itself; the
+    near-dup labels memo owns that pin. Re-invoking the cluster
+    queries reuses it — at most ONE labels checkpoint lives per
+    (session, dataset) — and cachereg eviction releases it."""
     from end_to_end_data_engineering_job_listings_etl_spark.operators import dedup
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import release_pins
+    from end_to_end_data_engineering_job_listings_etl_spark.plans import traindata
 
     cachereg.evict()
     baseline = _persistent_ids(spark)
@@ -178,21 +181,73 @@ def test_connected_components_pins_released_on_reinvocation(spark):
     edges = spark.range(0, 99).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out1 = dedup.connected_components(verts, edges)
-    assert out1.count() == 100
-    assert len(dedup._CC_PINS.get(spark, [])) == 1
-    first_created = _persistent_ids(spark) - baseline
-    assert first_created  # the labels checkpoint really is pinned
-    out2 = dedup.connected_components(verts, edges)
-    assert out2.count() == 100
-    # the first invocation's checkpoint blocks are gone...
-    assert not (_persistent_ids(spark) & first_created)
-    # ...and only one generation is registered
-    assert len(dedup._CC_PINS.get(spark, [])) == 1
-    # cachereg eviction releases the survivor: zero orphans
-    cachereg.evict(spark)
-    assert spark not in dedup._CC_PINS
+    pins = []
+    out = dedup.connected_components(verts, edges, pinned_out=pins)
+    assert out.count() == 100
+    assert len(pins) == 1
+    assert _persistent_ids(spark) - baseline  # the checkpoint is pinned
+    release_pins(pins)
     assert not (_persistent_ids(spark) - baseline)
+
+    qs = registry.all_queries()
+    qs["dd_duplicate_clusters"](spark, SF_A).count()
+    first_created = _persistent_ids(spark) - baseline
+    assert len(traindata._NEAR_DUP_LABELS) == 1
+    assert len(traindata._NEAR_DUP_LABELS[(spark, SF_A)][1]) == 1
+    qs["dd_duplicate_clusters"](spark, SF_A).count()
+    qs["samp_split_by_cluster"](spark, SF_A).count()
+    # re-invocation pins nothing new and keeps one memo entry
+    assert _persistent_ids(spark) - baseline == first_created
+    assert len(traindata._NEAR_DUP_LABELS[(spark, SF_A)][1]) == 1
+    # eviction releases the survivor: zero orphans
+    cachereg.evict(spark, SF_A)
+    assert not traindata._NEAR_DUP_LABELS
+    assert not (_persistent_ids(spark) - baseline)
+
+
+def test_near_dup_labels_built_once_per_dataset(spark, monkeypatch):
+    """The three cluster queries share one connected-components build
+    per (session, dataset): the later two launch no Spark job while
+    building, all three stay oracle-exact, and eviction leaves no
+    orphaned pins before the next consumer rebuilds."""
+    from end_to_end_data_engineering_job_listings_etl_spark.operators import dedup
+    from tests.oracle_check import compare, duckdb_conn
+
+    calls = []
+    real_cc = dedup.connected_components
+
+    def counting_cc(*args, **kwargs):
+        calls.append(1)
+        return real_cc(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", counting_cc)
+    tracker = spark.sparkContext.statusTracker()
+
+    def max_job_id() -> int:
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    cachereg.evict()
+    baseline = _persistent_ids(spark)
+    qs, oracles = registry.all_queries(), registry.all_oracles()
+    con = duckdb_conn(SF_A)
+    names = ("dd_keep_best", "dd_duplicate_clusters", "samp_split_by_cluster")
+    for i, name in enumerate(names):
+        j0 = max_job_id()
+        df = qs[name](spark, SF_A)
+        if i > 0:
+            assert max_job_id() == j0, f"{name} launched jobs while building"
+        compare(df, con, oracles[name], name)
+    assert len(calls) == 1
+
+    created = _persistent_ids(spark) - baseline
+    assert created
+    cachereg.evict(spark, SF_A)
+    assert not (_persistent_ids(spark) & created)
+
+    compare(qs["dd_keep_best"](spark, SF_A), con, oracles["dd_keep_best"], "dd_keep_best")
+    assert len(calls) == 2
+    cachereg.evict(spark)
 
 
 def test_dead_session_pruned_on_touch(spark):

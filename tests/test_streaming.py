@@ -150,9 +150,9 @@ def test_state_partitions_override_semantics(spark, monkeypatch):
     """ADVICE r12: an explicit SPARK_GRAFT_STREAM_STATE_PARTITIONS
     override is honored verbatim — including ABOVE the session's
     shuffle-partition count (the operator is sizing for a target
-    cluster, not this session) — and a malformed value warns and falls
-    back to the source-bytes derivation instead of being silently
-    swallowed."""
+    cluster, not this session) — and a malformed or non-positive value
+    warns and falls back to the source-bytes derivation instead of
+    being silently swallowed or floored."""
     import warnings
 
     from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
@@ -165,13 +165,12 @@ def test_state_partitions_override_semantics(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(cur + 7))
     assert derived_state_partitions(spark, d) == cur + 7
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0")
-    assert derived_state_partitions(spark, d) == 1  # floor, not ignore
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "not-an-int")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        derived = derived_state_partitions(spark, d)
-    assert any("override ignored" in str(w.message) for w in caught)
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    assert derived == derived_state_partitions(spark, d)  # the derivation
+    derivation = derived_state_partitions(spark, d)
+    for bad in ("0", "-3", "not-an-int"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", bad)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            derived = derived_state_partitions(spark, d)
+        assert any("override ignored" in str(w.message) for w in caught), bad
+        assert derived == derivation, bad
