@@ -249,7 +249,7 @@ HEADLINE = [
 # (and are timed) in the subset, but only the NOISY names' extra
 # samples are merged back into the medians.
 MEMO_PEER_GROUPS: list[set[str]] = [
-    # plans/star.py::_LANDING_CACHE/_PLAN_CACHE/_DIMS_BUNDLE_CACHE
+    # cachereg memo family "star" (plans/star.py)
     {
         "fact_orders",
         "star_wide",
@@ -258,7 +258,7 @@ MEMO_PEER_GROUPS: list[set[str]] = [
         "bi_revenue_by_segment",
         "bi_top_keywords",
     },
-    # plans/joblistings.py::_JL_STAR_CACHE
+    # cachereg memo family "jl_star" (plans/joblistings.py)
     {"jl_fact_checked", "jl_fact_fallback_checked"},
 ]
 

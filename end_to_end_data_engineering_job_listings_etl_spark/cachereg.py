@@ -1,58 +1,41 @@
-"""Session-scoped cache lifecycle: central eviction for the per-
-(session, sf_dir) memo caches (catalog._DIST_CACHE, plans/star.py's
-landing/plan/dims memos, plans/joblistings.py's star memo).
+"""Session memo state: one table owns every memoized frame and pin.
 
-The memo convention persists frames for process lifetime — right for
-a bench/driver process that visits one or two datasets, wrong for a
-long-lived multi-tenant driver that walks many (VERDICT r4 item 4:
-"nothing calls the clear_caches hooks automatically"). This module
-wires two automatic paths:
+Builders that reuse work across queries (reader plans, the star and
+job-listings stars, the near-dup labels, scratch pins, the Derby
+landing) go through ``memo(spark, sf_dir, family, key, build)``. The
+table is weakly keyed by session; per session it maps
+(sf_dir, family, key) to an entry, most recently used last. An entry
+holds the memoized value, the frames its build pinned, and a release
+action: ``ids.release_pins(frames)`` unless the caller passes another
+one (the Derby landing drops its database and also carries an
+unmanaged-heap estimate, state the block manager cannot see).
 
-1. **LRU dataset cap** — every ``catalog.load_table`` call records a
-   (session, sf_dir) touch; when a session has touched more than
-   $SPARK_GRAFT_CACHE_DATASETS (default 4) distinct sf_dirs, the
-   least-recently-used dataset's cached frames are evicted and
-   unpersisted. The cap is per-session, so a multi-tenant driver's
-   cache footprint is bounded by cap × per-dataset working set
-   regardless of how many datasets it walks.
-2. **Session-stop hook** — ``session.get_spark`` wraps the session's
-   ``stop`` so closing the session evicts everything it pinned first
-   (persisted frames die with the session's executors anyway, but the
-   Python-side memo dicts would otherwise retain dead DataFrame
-   handles forever — a driver-side leak).
+``evict(spark, sf_dir, family)`` is the one release path; ``None`` is
+a wildcard on any axis. Its callers are the eviction scopes:
 
-Eviction invalidates externally-held DataFrames from the evicted
-dataset only in the weak sense that their cached/checkpointed blocks
-are dropped: plain-persisted frames silently recompute, while
-localCheckpoint-pinned frames (operators/ids.py) FAIL-STOP on next
-access — the designed loss semantics (tests/test_edges.py exercises
-it). Re-running a registry query after eviction always rebuilds from
-source and re-pins.
+1. **Dataset cap.** A session keeps at most ``_DATASET_CAP`` datasets
+   (sf_dirs) memoized; inserting an entry for one more evicts the
+   least-recently-used dataset. Insertion also evicts sessions whose
+   SparkContext has stopped outside the hooked ``stop``.
+2. **State budget.** ``query_boundary`` runs before every registry
+   query. When block-manager memory plus unmanaged estimates exceed
+   $SPARK_GRAFT_STATE_BUDGET_MB (default 40% of the driver heap), it
+   evicts least-recently-used (sf_dir, family) groups, always keeping
+   the two most recent: a query's own family and the catalog scans it
+   nests over.
+3. **Session stop.** ``hook_session`` wraps ``spark.stop`` so the
+   session's entries are released first.
+4. **Explicit callers**: ``evict(spark[, sf_dir])``.
 
-Modules register an evictor ``fn(spark, sf_dir)`` (either may be
-None = wildcard) at import time; ``evict`` fans out to all of them.
+Fail-stop: after release, a plain-persisted frame recomputes on next
+use, but a localCheckpoint-pinned frame (operators/ids.py) or the
+dropped Derby landing fails on next access. Their lineage was cut on
+purpose, so a caller holding result frames across an eviction must
+re-run the registry query, which rebuilds from source and re-pins.
 
-3. **Within-dataset state budget** (r9 verdict #1 — the r9 full sf10
-   surface needed 24-name fresh-process chunks because NOTHING bounded
-   same-dataset accumulation): modules register their evictor under a
-   FAMILY name (``register_family``) and report memo activity
-   (``touch_family``) plus unmanaged-heap estimates
-   (``note_unmanaged`` — embedded Derby pages are invisible to the
-   block manager). ``query_boundary`` — called by the registry's
-   per-query wrapper, i.e. at the only point where no memo build is
-   in flight — measures pinned storage (block-manager memSize +
-   reported unmanaged bytes) and, when it exceeds
-   $SPARK_GRAFT_STATE_BUDGET_MB (default 40% of driver max heap),
-   evicts least-recently-touched families until back under budget.
-   The two most-recently-touched families are kept (same-family
-   query bursts — the registry walks families contiguously — keep
-   their memo plus the catalog scans it nests over), so the
-   steady-state bound is budget + the last two families' working
-   sets. Under budget, nothing happens: at sf≤1 the whole
-   surface fits and memo semantics are byte-identical to r9.
-   ``query_boundary`` also drops terminated streaming-query handles
-   (``spark.streams.resetTerminated()`` — retained progress buffers
-   were part of the accumulated session state).
+Datasets are immutable: entries are keyed by path, not by file
+content, so replacing a file under a live session's sf_dir needs
+``evict(spark, sf_dir)`` before the next query.
 """
 
 from __future__ import annotations
@@ -60,37 +43,27 @@ from __future__ import annotations
 import os
 import time
 import weakref
+from collections import OrderedDict
 from collections.abc import Callable
+from dataclasses import dataclass
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-_Evictor = Callable[[SparkSession | None, "str | None"], None]
-_EVICTORS: list[_Evictor] = []
+from .operators.ids import release_pins
 
-# family name -> evictor (a subset of _EVICTORS, addressable for the
-# within-dataset budget path)
-_FAMILIES: dict[str, _Evictor] = {}
-# per-session LRU of (sf_dir, family) memo touches, MRU last. Weakly
-# keyed for the same reason as _LRU below.
-_FAMILY_LRU: "weakref.WeakKeyDictionary[SparkSession, list[tuple[str, str]]]" = (
-    weakref.WeakKeyDictionary()
-)
-# per-session unmanaged-heap estimates, family -> bytes (embedded
-# Derby pages etc. — state the block manager can't see)
-_UNMANAGED: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
+_DATASET_CAP = 4
 
-# Most-recent-last sf_dirs per live session. WEAKLY keyed by the
-# session object (ADVICE r5 item 3): a session that is stopped via
-# sc.stop() (bypassing the hooked spark.stop), never stopped, or
-# created before hook_session must not have its _LRU entry — and,
-# through the evictors, its registered memo frames — retained for
-# process lifetime. Weak keying drops the entry when the last user
-# reference dies; ``touch`` additionally prunes sessions whose
-# SparkContext reports stopped (evictors are exception-tolerant, so a
-# dead JVM can't wedge eviction).
-_LRU: "weakref.WeakKeyDictionary[SparkSession, list[str]]" = (
+
+@dataclass
+class _Entry:
+    value: Any
+    pins: list[DataFrame]
+    release: Callable[[], None]
+    unmanaged: int = 0
+
+
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, OrderedDict[tuple, _Entry]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -102,65 +75,98 @@ def _is_stopped(sess: SparkSession) -> bool:
         return True
 
 
-def register_evictor(fn: _Evictor) -> _Evictor:
-    """Register a module's cache-eviction hook. Idempotent per fn."""
-    if fn not in _EVICTORS:
-        _EVICTORS.append(fn)
-    return fn
+def memo(
+    spark: SparkSession,
+    sf_dir: str,
+    family: str,
+    key: Any,
+    build: Callable[[list[DataFrame]], Any],
+    release: Callable[[], None] | None = None,
+    unmanaged: int = 0,
+) -> Any:
+    """The value memoized under (spark, sf_dir, family, key). On a miss
+    ``build(pins)`` runs once; it appends every frame it pins to
+    ``pins``, which the entry releases on eviction (or ``release``
+    replaces that action). ``unmanaged`` is the entry's off-block-
+    manager heap estimate, counted by the state budget."""
+    k = (sf_dir, family, key)
+    table = _MEMO.get(spark)
+    hit = table.get(k) if table is not None else None
+    if hit is not None:
+        table.move_to_end(k)
+        return hit.value
+    pins: list[DataFrame] = []
+    try:
+        value = build(pins)
+    except Exception:
+        release_pins(pins)
+        raise
+    # re-fetch: an eviction during a nested build may have dropped the
+    # session's table
+    table = _MEMO.setdefault(spark, OrderedDict())
+    table[k] = _Entry(value, pins, release or (lambda: release_pins(pins)), unmanaged)
+    for sess in [s for s in list(_MEMO) if s is not spark and _is_stopped(s)]:
+        evict(sess)
+    datasets = list(dict.fromkeys(d for d, _, _ in reversed(table)))
+    for old in datasets[_DATASET_CAP:]:
+        evict(spark, old)
+    return value
 
 
-def register_family(family: str, fn: _Evictor) -> _Evictor:
-    """Register a module's evictor under a FAMILY name so the
-    within-dataset budget path (``query_boundary``) can evict it
-    individually. The evictor also joins the plain fan-out registry,
-    so session-stop and dataset-LRU eviction behave exactly as before.
-    """
-    _FAMILIES[family] = fn
-    return register_evictor(fn)
+def evict(
+    spark: SparkSession | None = None,
+    sf_dir: str | None = None,
+    family: str | None = None,
+) -> None:
+    """Release every entry in the (session, dataset, family) scope;
+    ``None`` is a wildcard, so ``evict()`` clears the process. A
+    failing release (a stopped session's unpersist) is swallowed so
+    every other entry is still released."""
+    for sess in list(_MEMO) if spark is None else [spark]:
+        table = _MEMO.get(sess)
+        if table is None:
+            continue
+        for k in [
+            k
+            for k in table
+            if (sf_dir is None or k[0] == sf_dir) and (family is None or k[1] == family)
+        ]:
+            try:
+                table.pop(k).release()
+            except Exception:  # noqa: BLE001
+                pass
+        if not table:
+            _MEMO.pop(sess, None)
 
 
-def touch_family(spark: SparkSession, sf_dir: str, family: str) -> None:
-    """Record a family memo access (hit or build) for the session's
-    within-dataset LRU. Called from each module's memo chokepoint;
-    cheap (list surgery, no JVM round-trip)."""
-    lru = _FAMILY_LRU.setdefault(spark, [])
-    key = (sf_dir, family)
-    if lru and lru[-1] == key:
-        return
-    if key in lru:
-        lru.remove(key)
-    lru.append(key)
-
-
-def note_unmanaged(spark: SparkSession, family: str, n_bytes: int) -> None:
-    """Report (or clear, with 0) a family's unmanaged-heap estimate —
-    driver-side state invisible to the block manager (embedded Derby's
-    in-memory pages). Counted by the budget alongside pinned storage."""
-    notes = _UNMANAGED.setdefault(spark, {})
-    if n_bytes <= 0:
-        notes.pop(family, None)
-    else:
-        notes[family] = int(n_bytes)
+def _family_lru(spark: SparkSession) -> list[tuple[str, str]]:
+    """The session's (sf_dir, family) groups, least recently used
+    first."""
+    table = _MEMO.get(spark) or {}
+    return list(dict.fromkeys((d, f) for d, f, _ in reversed(table)))[::-1]
 
 
 def unmanaged_estimates(spark: SparkSession) -> dict[str, int]:
-    """Copy of the session's reported unmanaged-heap estimates
-    (family -> bytes) — read by calibration probes that compare the
-    honor-system estimate against measured heap growth."""
-    return dict(_UNMANAGED.get(spark, {}))
+    """Unmanaged-heap estimates per family (a fresh dict) — read by
+    calibration probes that compare the estimate against measured heap
+    growth."""
+    out: dict[str, int] = {}
+    for (_, family, _), e in (_MEMO.get(spark) or {}).items():
+        if e.unmanaged:
+            out[family] = out.get(family, 0) + e.unmanaged
+    return out
 
 
 def pinned_bytes(spark: SparkSession) -> int:
     """Session state the budget governs: block-manager memSize over
     every persisted RDD (memo persists + localCheckpoint pins; disk
-    spill is not heap and is not counted) plus reported unmanaged
-    estimates."""
+    spill is not heap and is not counted) plus unmanaged estimates."""
     try:
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         mem = sum(i.memSize() for i in infos)
     except Exception:  # noqa: BLE001 - stopped JVM pins nothing
         mem = 0
-    return mem + sum(_UNMANAGED.get(spark, {}).values())
+    return mem + sum(unmanaged_estimates(spark).values())
 
 
 def state_budget_bytes(spark: SparkSession) -> int:
@@ -169,9 +175,9 @@ def state_budget_bytes(spark: SparkSession) -> int:
     even when a query's working set peaks."""
     env = os.environ.get("SPARK_GRAFT_STATE_BUDGET_MB")
     if env:
-        # tolerate a malformed override (ADVICE r10 #1): query_boundary
-        # sits on the registry hot path, so a bad env var must fall
-        # through to the heap-derived default, not fail every query
+        # query_boundary sits on the registry hot path, so a malformed
+        # override falls through to the heap-derived default instead
+        # of failing every query
         try:
             return int(env) * 2**20
         except ValueError:
@@ -185,12 +191,9 @@ def state_budget_bytes(spark: SparkSession) -> int:
     return int(max_heap * 0.40)
 
 
-# Boundary observability (VERDICT r10 #7): a bounded in-process log of
-# query_boundary outcomes so harnesses (bench.py, sweep scripts) can
-# attribute eviction churn to the query that triggered it. Counters are
-# cumulative for process lifetime; the event list keeps only boundaries
-# that actually evicted (the no-op case is ~1 ms and unbounded in
-# count — logging it would be the leak this module exists to prevent).
+# Boundary observability: cumulative counters for process lifetime,
+# plus a bounded log of the boundaries that actually evicted (the
+# no-op case is ~1 ms and unbounded in count).
 _BOUNDARY_COUNTS = {"boundaries": 0, "evicting_boundaries": 0, "evictions": 0, "evict_sec": 0.0}
 _BOUNDARY_EVENTS: list[dict] = []
 _BOUNDARY_EVENTS_CAP = 500
@@ -207,33 +210,15 @@ def boundary_stats() -> dict:
 
 
 def query_boundary(spark: SparkSession) -> dict:
-    """Bound within-dataset session state at a SAFE point — between
-    registry queries, where no memo build is in flight (evicting
-    mid-build would release a half-built family's checkpoint pins and
-    fail the query). Called by registry._pinned before every query.
+    """Bound session state at a safe point — between registry queries,
+    where no memo build is in flight. Called by registry._pinned before
+    every query.
 
-    Always: drop terminated streaming-query handles (their retained
-    progress buffers accumulate per stream drain). Then, only if
-    pinned state exceeds the budget: evict least-recently-touched
-    families until back under. The two most-recently-touched families
-    are NEVER evicted here (see the loop comment) — same-family bursts
-    keep their memo, and the worst-case bound is budget + the last two
-    families' working sets (documented in the module docstring).
-
-    Retained-frame hazard (ADVICE r10 #2): eviction here releases pins
-    that DataFrames RETURNED BY EARLIER registry queries may still
-    reference. Plain-persisted frames silently recompute on next
-    access; localCheckpoint-pinned frames (operators/ids.py) and the
-    dropped Derby landing FAIL-STOP instead — lineage was truncated, so
-    recompute is impossible by design. A caller holding result frames
-    across queries in an over-budget session must either re-invoke the
-    registry query (always rebuilds from source) or raise
-    $SPARK_GRAFT_STATE_BUDGET_MB; under budget nothing is ever
-    released. Checkpoint pins are NOT downgraded to plain unpersist to
-    dodge this: the pins exist to cut quadratic lineage (log-round
-    label propagation), and keeping a recompute path would keep that
-    lineage alive on the executors — the fail-stop is the cheaper,
-    explicit contract (tests/test_edges.py pins it)."""
+    Always drops terminated streaming-query handles (their retained
+    progress buffers accumulate per stream drain). Then, only if pinned
+    state exceeds the budget, evicts least-recently-used
+    (sf_dir, family) groups, never the two most recent, until back
+    under budget (the fail-stop contract is in the module docstring)."""
     try:
         spark.streams.resetTerminated()
     except Exception:  # noqa: BLE001 - no streaming, stopped JVM
@@ -245,33 +230,13 @@ def query_boundary(spark: SparkSession) -> dict:
     if before <= budget:
         return stats
     t0 = time.monotonic()
-    lru = _FAMILY_LRU.get(spark) or []
-    # oldest-first; the TWO most-recently-touched entries are never
-    # evicted here: a memo build touches its own family first and then
-    # the catalog scans it loads through (star → catalog nesting), so
-    # at query end the just-built family is the SECOND-most-recent
-    # entry — protecting only the MRU would evict the very frames the
-    # burst is about to reuse
-    for sf_dir, family in list(lru[:-2]):
-        fn = _FAMILIES.get(family)
-        if fn is None:
-            continue
-        try:
-            fn(spark, sf_dir or None)
-        except Exception:  # noqa: BLE001 - same tolerance as evict()
-            pass
-        try:
-            lru.remove((sf_dir, family))
-        except ValueError:
-            pass
+    for sf_dir, family in _family_lru(spark)[:-2]:
+        evict(spark, sf_dir, family)
         stats["evicted"].append(family)
         # unpersist is async for plain persists — poll the block
-        # manager (capped) instead of a fixed settle (VERDICT r10
-        # "what's wrong" #2) so the re-measure neither over-evicts the
-        # next family for blocks already on their way out nor pays the
+        # manager (capped) so the re-measure neither over-evicts the
+        # next group for blocks already on their way out nor pays the
         # full wait when the release lands immediately
-        if pinned_bytes(spark) <= budget:
-            break
         deadline = time.monotonic() + 0.15
         while pinned_bytes(spark) > budget and time.monotonic() < deadline:
             time.sleep(0.03)
@@ -280,11 +245,8 @@ def query_boundary(spark: SparkSession) -> dict:
     stats["after"] = pinned_bytes(spark)
     stats["sec"] = round(time.monotonic() - t0, 3)
     if not stats["evicted"]:
-        # Over budget but nothing evictable (LRU <= 2 families, all
-        # protected): don't count this as an evicting boundary or burn
-        # an event slot — a session stuck over budget would otherwise
-        # fill the event cap with no-op entries and starve real
-        # eviction attribution (ADVICE r11).
+        # over budget with every group protected: not an evicting
+        # boundary, and no event slot spent on it
         return stats
     _BOUNDARY_COUNTS["evicting_boundaries"] += 1
     _BOUNDARY_COUNTS["evictions"] += len(stats["evicted"])
@@ -304,73 +266,9 @@ def query_boundary(spark: SparkSession) -> dict:
     return stats
 
 
-def evict(spark: SparkSession | None = None, sf_dir: str | None = None) -> None:
-    """Evict (and unpersist) every registered module cache matching
-    the (session, dataset) scope; ``None`` is a wildcard on either
-    axis. ``evict()`` with no args clears the process. Evictor
-    failures are swallowed per-fn: a stopped session's unpersist
-    raising must still let every other module drop its (now dead)
-    handles."""
-    for fn in _EVICTORS:
-        try:
-            fn(spark, sf_dir)
-        except Exception:  # noqa: BLE001
-            pass
-    for sess in list(_LRU) if spark is None else [spark]:
-        dirs = _LRU.get(sess)
-        if dirs is None:
-            continue
-        if sf_dir is None:
-            _LRU.pop(sess, None)
-        else:
-            _LRU[sess] = [d for d in dirs if d != sf_dir]
-    # keep the family-level bookkeeping consistent with what the
-    # fan-out just evicted
-    for sess in list(_FAMILY_LRU) if spark is None else [spark]:
-        lru = _FAMILY_LRU.get(sess)
-        if lru is None:
-            continue
-        if sf_dir is None:
-            _FAMILY_LRU.pop(sess, None)
-            _UNMANAGED.pop(sess, None)
-        else:
-            _FAMILY_LRU[sess] = [
-                (d, f) for d, f in lru if d and d != sf_dir
-            ]
-
-
-def dataset_cap() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CACHE_DATASETS", "4"))
-
-
-def touch(spark: SparkSession, sf_dir: str) -> None:
-    """Record a dataset access; evict the least-recently-used
-    dataset's caches once the session exceeds the dataset cap. Called
-    from ``catalog.load_table`` — the chokepoint every query path
-    reads tables through. Also prunes entries for OTHER sessions whose
-    SparkContext has stopped (e.g. sc.stop() bypassed the hooked
-    spark.stop): their module memos hold dead DataFrame handles."""
-    for sess in [s for s in list(_LRU) if s is not spark and _is_stopped(s)]:
-        evict(sess)
-    lru = _LRU.setdefault(spark, [])
-    if lru and lru[-1] == sf_dir:
-        return  # hot path: repeated loads of the current dataset
-    if sf_dir in lru:
-        lru.remove(sf_dir)
-    lru.append(sf_dir)
-    cap = dataset_cap()
-    while len(lru) > cap:
-        old = lru.pop(0)
-        for fn in _EVICTORS:
-            try:
-                fn(spark, old)
-            except Exception:  # noqa: BLE001 - same tolerance as evict()
-                pass
-
-
 def hook_session(spark: SparkSession) -> None:
     """Wrap ``spark.stop`` so session shutdown evicts the session's
-    caches first. Safe to call repeatedly (guards on a marker)."""
+    entries first. Safe to call repeatedly (guards on a marker)."""
     if getattr(spark, "_sg_cache_stop_hooked", False):
         return
     orig_stop = spark.stop

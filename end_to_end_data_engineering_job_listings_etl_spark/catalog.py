@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import cachereg
+
 TABLES = (
     "region",
     "nation",
@@ -28,57 +30,19 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Memoized reader frames per (session, sf_dir, table). A DataFrame is
-# an immutable PLAN — nothing is persisted and every action still scans
-# the parquet — but `spark.read.parquet` runs a one-task schema-
-# inference JOB on every call (measured r13: 1 job per load_table, 0
-# with a known schema), and the suite builds tables hundreds of times
-# per bench pass. Reusing the plan object collapses that per-call job
-# and its py4j round-trips to once per (session, dataset, table).
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (single parquet file per table).
 
-    ``events.ts`` is physically timestamp[us] with no timezone, which
-    Spark reads natively as TIMESTAMP_NTZ — filters on it push into the
-    scan. Older fixtures stored TIMESTAMP(NANOS), which the vectorized
-    reader rejects; the bigint sniff below keeps that layout working
-    (legacy nanosAsLong read + micros rebuild, truncation — matching
-    how micros engines like DuckDB ingest nanos)."""
-    cachereg.touch(spark, sf_dir)
-    key = (spark, sf_dir, name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _read_table(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
-
-
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    The reader frame is memoized per (session, sf_dir, table). A
+    DataFrame is an immutable plan — nothing is persisted and every
+    action still scans the parquet — but ``spark.read.parquet`` runs a
+    one-task schema-inference job on every call, and the suite builds
+    tables hundreds of times per pass; reusing the plan object pays
+    that job once per (session, dataset, table)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # Keep the raw nanos column: predicates on the derived
-            # timestamp cannot push into the scan, but their exact
-            # nanos translation can (see incremental.filter_after).
-            # `div` = integral long division. floor(ts/1000.0) would
-            # detour through double and mis-round by 1 µs at int64
-            # nanos magnitudes (> 2^53).
-            df = df.withColumn("ts_nanos", F.col("ts")).withColumn(
-                "ts", F.timestamp_micros(F.expr("ts_nanos div 1000"))
-            )
-        return df
-    return spark.read.parquet(path)
-
-
-_DIST_CACHE: dict[tuple, DataFrame] = {}
+    return cachereg.memo(
+        spark, sf_dir, "catalog", name, lambda pins: spark.read.parquet(path)
+    )
 
 
 def load_table_dist(
@@ -105,57 +69,31 @@ def load_table_dist(
     table would silently defeat column pruning — the plan-quality
     tests check this).
     """
-    cachereg.touch_family(spark, sf_dir, "catalog")
-    key = (spark, sf_dir, name, cols, persist)
-    hit = _DIST_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = load_table(spark, sf_dir, name)
-    if cols is not None:
-        df = df.select(*cols)
-    slots = spark.sparkContext.defaultParallelism
-    # Estimate scan tasks from file bytes (an .rdd probe would cost a
-    # full plan→RDD conversion): ceil(bytes / maxPartitionBytes) is the
-    # upper bound on split count Spark will attempt.
-    n_bytes = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b")
-    )
-    if -(-n_bytes // max_split) < slots:
-        df = df.repartition(slots)
-        # persist=False: the caller materializes a derived frame
-        # immediately (e.g. star.landing persists the joined landing) —
-        # caching the repartitioned input too would double-materialize.
-        if persist:
-            df = df.persist()
-    _DIST_CACHE[key] = df
-    return df
 
+    def build(pins: list[DataFrame]) -> DataFrame:
+        df = load_table(spark, sf_dir, name)
+        if cols is not None:
+            df = df.select(*cols)
+        slots = spark.sparkContext.defaultParallelism
+        # Estimate scan tasks from file bytes (an .rdd probe would cost
+        # a full plan→RDD conversion): ceil(bytes / maxPartitionBytes)
+        # is the upper bound on split count Spark will attempt.
+        n_bytes = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
+        max_split = int(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b")
+        )
+        if -(-n_bytes // max_split) < slots:
+            df = df.repartition(slots)
+            # persist=False: the caller materializes a derived frame
+            # immediately (e.g. star.landing persists the joined
+            # landing) — caching the repartitioned input too would
+            # double-materialize.
+            if persist:
+                df = df.persist()
+        pins.append(df)
+        return df
 
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Evict (and unpersist) the memoized distributed-scan frames.
-    ``None`` is a wildcard on either axis; registered with
-    ``cachereg`` so the LRU dataset cap and the session-stop hook
-    evict automatically."""
-    for key in [
-        k
-        for k in _DIST_CACHE
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _DIST_CACHE.pop(key).unpersist()
-    for key in [
-        k
-        for k in _TABLE_CACHE
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _TABLE_CACHE.pop(key)  # plain reader plans — nothing persisted
-
-
-from . import cachereg  # noqa: E402  (import cycle: cachereg is leaf)
-
-cachereg.register_family("catalog", clear_caches)
+    return cachereg.memo(spark, sf_dir, "catalog", (name, cols, persist), build)
 
 
 def load_tables(

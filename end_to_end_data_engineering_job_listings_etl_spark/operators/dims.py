@@ -122,8 +122,8 @@ def build_dims_batched(
     ``persist()``-ed ranked frame, retained until the session ends or
     the caller unpersists it — pass ``shared_out`` (a list the shared
     frame is appended to) to take ownership; memo layers above
-    (plans/star.py, plans/joblistings.py) do so and expose
-    ``clear_caches(spark)`` as the eviction hook."""
+    (plans/star.py, plans/joblistings.py) pass their ``cachereg.memo``
+    pins list."""
     arity = max(len(k) for _, _, k, _ in specs)
     parts = []
     names: dict[str, tuple[list[str], str]] = {}

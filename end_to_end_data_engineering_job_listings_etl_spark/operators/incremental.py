@@ -30,27 +30,12 @@ def high_watermark(df: DataFrame, ts_col: str):
 def filter_after(df: DataFrame, ts_col: str, watermark) -> DataFrame:
     """Rows strictly newer than the watermark — the incremental scan
     (reference S6). A plain Catalyst filter: pushed into the parquet
-    footer/row-group pruning at scale.
-
-    When the frame carries a raw ``<ts_col>_nanos`` companion (the
-    nanos-physical events table), the predicate is rewritten onto that
-    underlying int64 so it pushes into the scan — ``micros(ts) > wm``
-    is exactly ``ts_nanos >= (wm_us + 1) * 1000`` (truncation-safe
-    boundary), whereas the expression-wrapped form scans everything."""
-    nanos_col = f"{ts_col}_nanos"
-    if nanos_col in df.columns:
-        wm_us = F.unix_micros(F.lit(watermark).cast("timestamp"))
-        return df.filter(F.col(nanos_col) >= (wm_us + 1) * 1000)
+    footer/row-group pruning at scale."""
     return df.filter(F.col(ts_col) > F.lit(watermark))
 
 
 def filter_upto(df: DataFrame, ts_col: str, watermark) -> DataFrame:
-    """Rows at or before the watermark (the 'already loaded' slice) —
-    same scan-pushdown rewrite as filter_after."""
-    nanos_col = f"{ts_col}_nanos"
-    if nanos_col in df.columns:
-        wm_us = F.unix_micros(F.lit(watermark).cast("timestamp"))
-        return df.filter(F.col(nanos_col) < (wm_us + 1) * 1000)
+    """Rows at or before the watermark (the 'already loaded' slice)."""
     return df.filter(F.col(ts_col) <= F.lit(watermark))
 
 

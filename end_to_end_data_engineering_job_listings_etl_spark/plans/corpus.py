@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table, load_table_dist
 from ..functions import text as T
 from ..operators import dedup as D
@@ -36,40 +37,6 @@ _JACCARD_MAX_ID = 100  # bound the exact-pairs demo; the scale path is LSH
 _MINHASH_K = 8
 _LSH_BANDS = 4
 _SHINGLE_K = 3
-
-# Scratch frames pinned by the latest dd_minhash_estimate call per
-# (session, sf_dir): superseded or evicted generations are released so
-# repeated calls in a long-lived process can't accumulate blocks.
-_TRANSIENT_PINS: dict[tuple[SparkSession, str], list[DataFrame]] = {}
-
-
-def _repin(spark: SparkSession, sf_dir: str, frames: list[DataFrame]) -> None:
-    from .. import cachereg
-    from ..operators.ids import release_pins
-
-    cachereg.touch_family(spark, sf_dir, "corpus")
-    release_pins(_TRANSIENT_PINS.pop((spark, sf_dir), []))
-    _TRANSIENT_PINS[(spark, sf_dir)] = frames
-
-
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Release this module's transient pinned frames (cachereg hook)."""
-    from ..operators.ids import release_pins
-
-    for key in [
-        k
-        for k in _TRANSIENT_PINS
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        release_pins(_TRANSIENT_PINS.pop(key))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("corpus", clear_caches)
-
 
 def _e6(col) -> F.Column:
     return F.floor(col * 1_000_000).cast("long")
@@ -238,7 +205,16 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("sz"))
         .localCheckpoint(eager=False)
     )
-    _repin(spark, sf_dir, [reps, sigs, fp_pairs, sh, sizes])
+    # the latest call's scratch frames stay pinned per (session,
+    # sf_dir); the superseded generation is released first
+    cachereg.evict(spark, sf_dir, family="corpus")
+    cachereg.memo(
+        spark,
+        sf_dir,
+        "corpus",
+        "minhash_scratch",
+        lambda pins: pins.extend([reps, sigs, fp_pairs, sh, sizes]),
+    )
     a = sh.select(F.col("fp").alias("fp_a"), "sh")
     b = sh.select(F.col("fp").alias("fp_b"), "sh")
     inter = (

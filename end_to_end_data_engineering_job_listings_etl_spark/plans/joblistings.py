@@ -29,12 +29,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..functions.dates import date_attributes
 from ..functions.keywords import extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
 from ..operators.dims import build_dim, build_dims_batched
-from ..operators.ids import exclusive_prefix_sum, ranked_ids, release_pins
+from ..operators.ids import exclusive_prefix_sum, ranked_ids
 
 SKILL_KEYWORDS = (
     "sql", "python", "spark", "aws", "excel", "tableau", "java", "airflow",
@@ -57,9 +58,8 @@ def build_star_schema(
 
     With ``sk_mode="range"`` the five ranked dims are slices of one
     internally persisted frame (operators.dims.build_dims_batched);
-    pass ``shared_out`` to take ownership of its lifetime, or call
-    this module's ``clear_caches`` if you went through the memoized
-    ``jl_*`` query layer."""
+    pass ``shared_out`` to take ownership of its lifetime (the memoized
+    ``jl_*`` query layer hands it to ``cachereg.memo``)."""
     if now is None:
         now = F.current_timestamp()
 
@@ -365,48 +365,18 @@ def landing_from_orders(
     )
 
 
-_JL_STAR_CACHE: dict[tuple[SparkSession, str], dict[str, DataFrame]] = {}
-_JL_STAR_SHARED: dict[tuple[SparkSession, str], list[DataFrame]] = {}
-
-
 def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Memoized star build over the parquet-derived landing: the nine
     per-table checked queries share one plan-construction pass."""
-    from .. import cachereg
-
-    cachereg.touch_family(spark, sf_dir, "jl_star")
-    key = (spark, sf_dir)
-    hit = _JL_STAR_CACHE.get(key)
-    if hit is None:
-        shared: list[DataFrame] = []
-        hit = build_star_schema(
-            landing_from_orders(spark, sf_dir, pinned_out=shared),
-            shared_out=shared,
-        )
-        _JL_STAR_CACHE[key] = hit
-        _JL_STAR_SHARED[key] = shared
-    return hit
-
-
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Evict the memoized jl_* star builds and unpersist the batched
-    dim assigner's shared ranked frames. Either axis may be ``None``
-    (wildcard); registered with ``cachereg`` for automatic eviction
-    (see plans/star.py::clear_caches)."""
-    for key in [
-        k
-        for k in _JL_STAR_CACHE
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _JL_STAR_CACHE.pop(key)
-        release_pins(_JL_STAR_SHARED.pop(key, []))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("jl_star", clear_caches)
+    return cachereg.memo(
+        spark,
+        sf_dir,
+        "jl_star",
+        "star",
+        lambda pins: build_star_schema(
+            landing_from_orders(spark, sf_dir, pinned_out=pins), shared_out=pins
+        ),
+    )
 
 
 def jl_fact_checked(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table, load_table_dist
 
 # ---------------------------------------------------------------------------
@@ -728,30 +729,25 @@ def sink_observed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Measured Derby-heap-bytes per staged-CSV-byte at sf10 in a 16 GB
 # JVM (scripts_dev/derby_calib_r11.json: 990 MB gc'd heap delta /
-# 389 MB staged CSV ≈ 2.5) — see the note_unmanaged call site.
+# 389 MB staged CSV ≈ 2.5) — see the landing's memo entry.
 _DERBY_HEAP_PER_CSV_BYTE = 2.5
 
 
-def _drop_derby_landing(spark: SparkSession | None = None, sf_dir=None) -> None:
-    """cachereg evictor for the embedded Derby landing DB: an
+def _drop_derby_landing(spark: SparkSession) -> None:
+    """Release action of the embedded Derby landing's memo entry: an
     in-memory Derby database lives in unmanaged driver heap until
     explicitly dropped (``;drop=true``), which Derby signals with the
     EXPECTED SQLException 08006 — so the handler treats the exception
     as success. One ``landing_db`` exists per JVM regardless of
     sf_dir; a retained ``src_jdbc_landing`` result frame read after
-    the drop fail-stops (the module's designed loss semantics), and
-    re-running the query rebuilds the DB from scratch."""
-    if spark is None:
-        return  # process-wide evict at exit — the JVM dies anyway
+    the drop fail-stops, and re-running the query rebuilds the DB from
+    scratch."""
     try:
         spark._jvm.java.sql.DriverManager.getConnection(
             "jdbc:derby:memory:landing_db;drop=true"
         )
     except Exception:  # noqa: BLE001 - 08006 'database dropped' = success
         pass
-    from .. import cachereg
-
-    cachereg.note_unmanaged(spark, "derby", 0)
 
 
 def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,6 +762,8 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters, reference S6's hand-built subquery done by
     Catalyst). Aggregate afterwards so the oracle checks the whole
     transport."""
+    # the previous call's landing DB is superseded: drop it first
+    cachereg.evict(spark, family="derby")
     url = "jdbc:derby:memory:landing_db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     orders = load_table(spark, sf_dir, "orders").select(
@@ -874,27 +872,24 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The in-memory Derby DB holds the whole staged table in UNMANAGED
     # driver heap (invisible to the block manager) until dropped — in
     # r9 it was part of the accumulated state that OOMed long sf10
-    # sessions. Report it to the state budget (estimate: the staged
-    # CSV bytes — Derby pages carry comparable volume) and register
-    # the drop evictor, so cachereg.query_boundary reclaims it when
-    # the session runs past the budget; the next call rebuilds the DB
-    # from scratch exactly as this call did.
-    from .. import cachereg
-
-    cachereg.register_family("derby", _drop_derby_landing)
-    cachereg.touch_family(spark, sf_dir, "derby")
+    # sessions. Its memo entry carries a heap estimate for the state
+    # budget and drops the DB on release, so cachereg.query_boundary
+    # reclaims it when the session runs past the budget.
     # Calibration (scripts_dev/derby_calib_r11.json, measured at sf10
     # in a 16 GB JVM): staged-CSV bytes UNDER-estimate Derby's actual
     # heap footprint ~2.5x (389 MB estimate vs 990 MB gc'd heap delta;
     # Derby stores rows uncompressed plus btree index pages and page
-    # slack, while the CSV stage is compact text). Scale the proxy by
-    # the measured factor (VERDICT r11 "what's wrong" #1) so a user
-    # who sets SPARK_GRAFT_STATE_BUDGET_MB tight sees eviction fire on
-    # time instead of ~600 MB late; the estimate stays deterministic
-    # and cheap (one multiply), and evicting the family still returns
-    # 97% of the measured delta either way.
-    cachereg.note_unmanaged(
-        spark, "derby", int(stage_bytes * _DERBY_HEAP_PER_CSV_BYTE)
+    # slack, while the CSV stage is compact text). Scaling the proxy by
+    # the measured factor makes a tight SPARK_GRAFT_STATE_BUDGET_MB
+    # fire on time; the estimate stays deterministic and cheap.
+    cachereg.memo(
+        spark,
+        sf_dir,
+        "derby",
+        "landing_db",
+        lambda pins: None,
+        release=lambda: _drop_derby_landing(spark),
+        unmanaged=int(stage_bytes * _DERBY_HEAP_PER_CSV_BYTE),
     )
     hi = orders.agg(F.max("o_orderkey")).collect()[0][0]
     back = (

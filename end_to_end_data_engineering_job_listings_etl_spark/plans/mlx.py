@@ -314,8 +314,7 @@ def op_grouped_seq_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts and numbers them, output is integers — so the Arrow
     group-exchange machinery itself sits under the value-hash gate
     (the SQL oracle is the equivalent window function). Ordering ties
-    break on event_id; the oracle orders by the micros-truncated
-    timestamp to match the engine's nanos→micros read path."""
+    break on event_id."""
     from ..operators.grouped import grouped_sequence
 
     ev = load_table(spark, sf_dir, "events")

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table, load_table_dist
 from ..functions.dates import date_attributes
 from ..functions.keywords import DEFAULT_KEYWORDS, extract_keywords
@@ -46,27 +47,23 @@ from ..operators.ids import ranked_ids
 # ---------------------------------------------------------------------------
 
 
-_LANDING_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-_PLAN_CACHE: dict[tuple[str, SparkSession, str], DataFrame] = {}
-
-
 def _memo_persist(fn):
     """Memoize + persist a builder per (session, sf_dir): the BI
     surface re-derives dims and the star view for every query — with
     the memo they materialize once per session and every later query
     starts from InMemoryTableScan (the reference's 8× .cache() at the
-    same cut points, ``dags/spark_etl_script.py:146-153``)."""
+    same cut points, ``dags/spark_etl_script.py:146-153``). ``fn`` is
+    called as ``fn(spark, sf_dir, pins)`` and appends any frame it pins
+    itself to ``pins``; the memo entry releases them with the persisted
+    result."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .. import cachereg
+        def build(pins: list[DataFrame]) -> DataFrame:
+            df = fn(spark, sf_dir, pins).persist()
+            pins.append(df)
+            return df
 
-        cachereg.touch_family(spark, sf_dir, "star")
-        key = (fn.__name__, spark, sf_dir)
-        hit = _PLAN_CACHE.get(key)
-        if hit is None:
-            hit = fn(spark, sf_dir).persist()
-            _PLAN_CACHE[key] = hit
-        return hit
+        return cachereg.memo(spark, sf_dir, "star", fn.__name__, build)
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
@@ -84,13 +81,12 @@ def landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dags/spark_etl_script.py:146-153``; this is its Spark-idiomatic
     form — reuse the same cached plan object so even a single action
     computes the landing join once)."""
-    from .. import cachereg
+    return cachereg.memo(
+        spark, sf_dir, "star", "landing", lambda pins: _landing(spark, sf_dir, pins)
+    )
 
-    cachereg.touch_family(spark, sf_dir, "star")
-    key = (spark, sf_dir)
-    cached = _LANDING_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _landing(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     # orders through the parallel loader: a single-row-group file scans
     # as ONE task, and a persist inherits that single partition — every
     # dim build and the fact join would then run single-threaded off
@@ -118,7 +114,7 @@ def landing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _LANDING_CACHE[key] = df
+    pins.append(df)
     return df
 
 
@@ -130,16 +126,11 @@ def _dims_bundle(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     whole dim layer. Values identical to per-dim build_dim
     (mode-equivalence locked in tests/test_edges.py); each registered
     dim query serves its slice."""
-    from .. import cachereg
 
-    cachereg.touch_family(spark, sf_dir, "star")
-    key = (spark, sf_dir)
-    hit = _DIMS_BUNDLE_CACHE.get(key)
-    if hit is None:
+    def build(pins: list[DataFrame]) -> dict[str, DataFrame]:
         l = landing(spark, sf_dir)
-        shared: list[DataFrame] = []
-        hit = build_dims_batched(
-            shared_out=shared,
+        return build_dims_batched(
+            shared_out=pins,
             specs=[
                 (
                     "company",
@@ -176,78 +167,36 @@ def _dims_bundle(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                 ),
             ]
         )
-        _DIMS_BUNDLE_CACHE[key] = hit
-        _DIMS_SHARED[key] = shared
-    return hit
 
-
-_DIMS_BUNDLE_CACHE: dict[tuple[SparkSession, str], dict[str, DataFrame]] = {}
-_DIMS_SHARED: dict[tuple[SparkSession, str], list[DataFrame]] = {}
-# localCheckpoint frames pinned by the fact PK's two-phase rank, per
-# (session, sf_dir) — released (RDD-level) on eviction
-_STAR_PINNED: dict[tuple[SparkSession, str], list[DataFrame]] = {}
-
-
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Evict this module's per-(session, sf_dir) memo caches and
-    unpersist every frame they pinned (landing, the star-plan memos,
-    and the dims bundle's shared ranked frame). Either axis may be
-    ``None`` (wildcard); registered with ``cachereg`` so a session's
-    LRU dataset cap and its stop hook evict automatically — a
-    long-lived multi-dataset process no longer has to know to call
-    this (VERDICT r4 item 4)."""
-
-    def _match(k_spark: SparkSession, k_sf: str) -> bool:
-        return (spark is None or k_spark is spark) and (
-            sf_dir is None or k_sf == sf_dir
-        )
-
-    from ..operators.ids import release_pins
-
-    for key in [k for k in _LANDING_CACHE if _match(k[0], k[1])]:
-        _LANDING_CACHE.pop(key).unpersist()
-    for key in [k for k in _PLAN_CACHE if _match(k[1], k[2])]:
-        _PLAN_CACHE.pop(key).unpersist()
-    for key in [k for k in _DIMS_BUNDLE_CACHE if _match(k[0], k[1])]:
-        _DIMS_BUNDLE_CACHE.pop(key)
-        release_pins(_DIMS_SHARED.pop(key, []))
-    for key in [k for k in _STAR_PINNED if _match(k[0], k[1])]:
-        release_pins(_STAR_PINNED.pop(key))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("star", clear_caches)
+    return cachereg.memo(spark, sf_dir, "star", "dims_bundle", build)
 
 
 @_memo_persist
-def dim_company(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_company(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_COMPANY analog (``dags/spark_etl_script.py:92-95``)."""
     return _dims_bundle(spark, sf_dir)["company"]
 
 
 @_memo_persist
-def dim_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_segment(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_PUBLISHER analog — trim+initcap (``:97-100``)."""
     return _dims_bundle(spark, sf_dir)["segment"]
 
 
 @_memo_persist
-def dim_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_priority(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_EMPLOYMENT_TYPE analog — trim+initcap (``:102-105``)."""
     return _dims_bundle(spark, sf_dir)["priority"]
 
 
 @_memo_persist
-def dim_location(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_location(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_LOCATION analog — multi-column distinct (``:107-110``)."""
     return _dims_bundle(spark, sf_dir)["location"]
 
 
 @_memo_persist
-def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_date(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_DATE analog — calendar attributes (``:112-120``). SK is the
     yyyyMMdd int itself (not a row_number), reference-exact."""
     return (
@@ -271,7 +220,7 @@ def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_memo_persist
-def dim_keyword(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dim_keyword(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_SKILL analog (``:141-144``)."""
     return _dims_bundle(spark, sf_dir)["keyword"]
 
@@ -293,7 +242,7 @@ def fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_memo_persist
-def star_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+def star_wide(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """The fact join-chain keeping both SKs and dimension names — this
     is simultaneously the fact builder (project SKs) and the BI star
     view V1/V2 (project names): one plan, two consumers."""
@@ -355,7 +304,7 @@ def star_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         pin_input=True,
         # checkpoint ownership: released with the rest of this
         # (session, sf_dir)'s pinned frames on eviction
-        pinned_out=_STAR_PINNED.setdefault((spark, sf_dir), []),
+        pinned_out=pins,
     )
     j = j.join(keymap, "o_orderkey")
     return j.select(

@@ -40,7 +40,6 @@ from ..functions import text as T
 from ..functions.text import word_shingles
 from ..operators import dedup as D
 from ..operators import similarity as S
-from ..operators.ids import release_pins
 from .corpus import (
     _BAND_EXPRS,
     _JACCARD_MAX_ID,
@@ -127,54 +126,24 @@ def text_pack_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (session, sf_dir) -> (near-dup labels frame, its checkpoint pins)
-_NEAR_DUP_LABELS: dict[
-    tuple[SparkSession, str], tuple[DataFrame, list[DataFrame]]
-] = {}
-
-
 def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) over the in-scope documents (doc_id <
     ``_JACCARD_MAX_ID``): exact-Jaccard pairs at threshold 0.5, then
     connected components. Built once per (session, sf_dir) and shared
     by ``dd_duplicate_clusters``, ``dd_keep_best`` and
-    ``samp_split_by_cluster``; the memo owns the labels checkpoint and
-    releases it on ``cachereg`` eviction (dataset LRU, state budget,
-    session stop).
+    ``samp_split_by_cluster``; the memo entry owns the labels
+    checkpoint."""
 
-    Datasets are assumed immutable: the memo is keyed by path, so
-    replacing ``documents.parquet`` under a live session needs
-    ``cachereg.evict(spark, sf_dir)`` before the next query."""
-    cachereg.touch_family(spark, sf_dir, "dedup_cc")
-    key = (spark, sf_dir)
-    hit = _NEAR_DUP_LABELS.get(key)
-    if hit is None:
+    def build(pins: list[DataFrame]) -> DataFrame:
         docs = load_table_dist(
             spark, sf_dir, "documents", cols=("doc_id", "text")
         ).filter(F.col("doc_id") < _JACCARD_MAX_ID)
         edges = D.jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
-        pins: list[DataFrame] = []
-        labels = D.connected_components(
+        return D.connected_components(
             docs.select("doc_id"), edges, id_col="doc_id", pinned_out=pins
         )
-        hit = _NEAR_DUP_LABELS[key] = (labels, pins)
-    return hit[0]
 
-
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Release the memoized near-dup labels (cachereg hook). Either
-    axis may be ``None`` (wildcard)."""
-    for key in [
-        k
-        for k in _NEAR_DUP_LABELS
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        release_pins(_NEAR_DUP_LABELS.pop(key)[1])
-
-
-cachereg.register_family("dedup_cc", clear_caches)
+    return cachereg.memo(spark, sf_dir, "dedup_cc", "labels", build)
 
 
 def dd_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -135,10 +135,7 @@ def main() -> int:
             rebuilds.append({"family": family, "status": "no-oracled-rep"})
             continue
         # guarantee the checked run starts cold for this family
-        try:
-            cachereg._FAMILIES[family](spark, None)
-        except Exception:  # noqa: BLE001 - same tolerance as cachereg.evict
-            pass
+        cachereg.evict(spark, family=family)
         t0 = time.time()
         try:
             df = qs[rep](spark, sf_dir)

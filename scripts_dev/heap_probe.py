@@ -65,7 +65,7 @@ def jvm_stats(spark) -> dict:
 
 
 def derby_calibration(sf_dir: str, out: Path) -> int:
-    """VERDICT r10 #6: the Derby family's ``note_unmanaged`` estimate
+    """VERDICT r10 #6: the Derby landing's unmanaged-heap estimate
     is a staged-CSV-bytes proxy; calibrate it against MEASURED heap
     growth. Protocol: gc'd heap before → build the Derby landing
     (src_jdbc_landing) → gc'd heap after (Derby page cache + staged
@@ -89,7 +89,7 @@ def derby_calibration(sf_dir: str, out: Path) -> int:
     est = cachereg.unmanaged_estimates(spark)
     est_mb = round(est.get("derby", 0) / 2**20, 1)
     # evict ONLY the derby family, then measure what came back
-    cachereg._FAMILIES["derby"](spark, None)
+    cachereg.evict(spark, family="derby")
     post = jvm_stats(spark)
     delta_mb = after["heap_mb"] - before["heap_mb"]
     row = {

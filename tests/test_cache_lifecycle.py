@@ -12,10 +12,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_job_listings_etl_spark import cachereg, catalog, registry
-from end_to_end_data_engineering_job_listings_etl_spark.plans import joblistings, star
+from end_to_end_data_engineering_job_listings_etl_spark.plans import star
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
+
+
+def _entries(spark, family=None) -> list[tuple]:
+    """(sf_dir, family, key) of the session's memo entries, LRU first."""
+    return [
+        k for k in cachereg._MEMO.get(spark, {}) if family is None or k[1] == family
+    ]
 
 
 def _n_persistent(spark) -> int:
@@ -44,32 +51,43 @@ def _drop_persistent_blocks(spark, only_ids=None) -> None:
 
 
 _BI_SURFACE = ("fact_orders", "star_wide")  # + every bi_* query
+# one query per remaining memo family: jl_star, dedup_cc, corpus, derby
+_OTHER_FAMILIES = (
+    "jl_fact_checked",
+    "dd_keep_best",
+    "dd_minhash_estimate",
+    "src_jdbc_landing",
+)
 
 
 def _run_bi_surface(spark, sf_dir: str) -> None:
     qs = registry.all_queries()
     names = list(_BI_SURFACE) + sorted(n for n in qs if n.startswith("bi_"))
+    names += _OTHER_FAMILIES
     for name in names:
         qs[name](spark, sf_dir).count()
 
 
 def test_two_datasets_full_bi_zero_orphans(spark):
-    """The judge's done-criterion: two sequential sf_dirs through the
-    full BI surface, then eviction, leave ZERO orphaned persisted
-    RDDs — and the surface rebuilds green afterwards. (Baseline is an
-    RDD-id snapshot, so stray pins from OTHER test modules in a full
-    suite run don't bleed into the delta.)"""
+    """Two sequential sf_dirs through the full BI surface plus one
+    query of every other memo family, then eviction, leave ZERO
+    orphaned persisted RDDs and zero unmanaged bytes — and the surface
+    rebuilds green afterwards. (Baseline is an RDD-id snapshot, so
+    stray pins from OTHER test modules in a full suite run don't bleed
+    into the delta.)"""
     cachereg.evict()  # clean slate (other tests may have memoized)
     baseline = _persistent_ids(spark)
     _run_bi_surface(spark, SF_A)
     _run_bi_surface(spark, SF_B)
     created = _persistent_ids(spark) - baseline
     assert created  # the memos really did pin frames
+    families = {f for _, f, _ in _entries(spark)}
+    assert families == {"catalog", "star", "jl_star", "dedup_cc", "corpus", "derby"}
+    assert cachereg.unmanaged_estimates(spark)["derby"] > 0
     cachereg.evict(spark)
     assert not (_persistent_ids(spark) & created)  # zero orphans
-    assert not star._LANDING_CACHE and not star._PLAN_CACHE
-    assert not star._DIMS_BUNDLE_CACHE and not star._DIMS_SHARED
-    assert not catalog._DIST_CACHE
+    assert not _entries(spark)
+    assert cachereg.unmanaged_estimates(spark) == {}
     # post-eviction rebuild: caches repopulate and results still flow
     qs = registry.all_queries()
     assert qs["bi_total_postings"](spark, SF_A).count() == 1
@@ -81,23 +99,24 @@ def test_sf_dir_scoped_eviction(spark):
     cachereg.evict()
     star.landing(spark, SF_A)
     star.landing(spark, SF_B)
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_A, SF_B}
+    assert {d for d, _, k in _entries(spark, "star") if k == "landing"} == {SF_A, SF_B}
     cachereg.evict(spark, SF_A)
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_B}
+    assert {d for d, _, _ in _entries(spark)} == {SF_B}
     cachereg.evict(spark)
 
 
 def test_lru_dataset_cap_evicts_oldest(spark, monkeypatch):
-    """Touching more than $SPARK_GRAFT_CACHE_DATASETS distinct sf_dirs
-    auto-evicts the least-recently-used dataset's caches."""
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DATASETS", "2")
+    """Memoizing more than ``_DATASET_CAP`` distinct sf_dirs
+    auto-evicts the least-recently-used dataset's entries."""
+    monkeypatch.setattr(cachereg, "_DATASET_CAP", 2)
     cachereg.evict()
-    star.landing(spark, SF_A)  # touch 1 (and pin frames)
-    star.landing(spark, SF_B)  # touch 2
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_A, SF_B}
-    catalog.load_table(spark, "/root/testdata/sf0.1", "region").count()  # touch 3
+    star.landing(spark, SF_A)  # dataset 1 (and pin frames)
+    star.landing(spark, SF_B)  # dataset 2
+    assert {d for d, _, k in _entries(spark, "star") if k == "landing"} == {SF_A, SF_B}
+    catalog.load_table(spark, "/root/testdata/sf0.1", "region").count()  # dataset 3
     # SF_A was least-recently-used → its pinned landing is gone
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_B}
+    assert {d for d, _, k in _entries(spark, "star") if k == "landing"} == {SF_B}
+    assert SF_A not in {d for d, _, _ in _entries(spark)}
     cachereg.evict(spark)
 
 
@@ -114,24 +133,22 @@ def test_session_stop_hook_wraps_and_evicts():
 
     calls = []
     fake = FakeSession()
-
-    def spy(spark, sf_dir):
-        calls.append((spark, sf_dir))
-
-    cachereg.register_evictor(spy)
+    cachereg.memo(
+        fake, "/x", "spy", "k", lambda pins: None, release=lambda: calls.append(fake)
+    )
     try:
         cachereg.hook_session(fake)
         assert fake._sg_cache_stop_hooked
-        before = len(calls)
         fake.stop()
         assert fake.stopped
-        assert (fake, None) in calls[before:]
+        assert calls == [fake]  # the entry was released on stop
+        assert fake not in cachereg._MEMO
         # idempotent: re-hooking must not double-wrap
         saved = fake.stop
         cachereg.hook_session(fake)
         assert fake.stop is saved
     finally:
-        cachereg._EVICTORS.remove(spy)
+        cachereg._MEMO.pop(fake, None)
 
 
 def test_real_session_is_stop_hooked(spark):
@@ -173,7 +190,6 @@ def test_connected_components_pins_released_on_reinvocation(spark):
     (session, dataset) — and cachereg eviction releases it."""
     from end_to_end_data_engineering_job_listings_etl_spark.operators import dedup
     from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import release_pins
-    from end_to_end_data_engineering_job_listings_etl_spark.plans import traindata
 
     cachereg.evict()
     baseline = _persistent_ids(spark)
@@ -192,16 +208,18 @@ def test_connected_components_pins_released_on_reinvocation(spark):
     qs = registry.all_queries()
     qs["dd_duplicate_clusters"](spark, SF_A).count()
     first_created = _persistent_ids(spark) - baseline
-    assert len(traindata._NEAR_DUP_LABELS) == 1
-    assert len(traindata._NEAR_DUP_LABELS[(spark, SF_A)][1]) == 1
+    labels = (SF_A, "dedup_cc", "labels")
+    assert _entries(spark, "dedup_cc") == [labels]
+    assert len(cachereg._MEMO[spark][labels].pins) == 1
     qs["dd_duplicate_clusters"](spark, SF_A).count()
     qs["samp_split_by_cluster"](spark, SF_A).count()
     # re-invocation pins nothing new and keeps one memo entry
     assert _persistent_ids(spark) - baseline == first_created
-    assert len(traindata._NEAR_DUP_LABELS[(spark, SF_A)][1]) == 1
+    assert _entries(spark, "dedup_cc") == [labels]
+    assert len(cachereg._MEMO[spark][labels].pins) == 1
     # eviction releases the survivor: zero orphans
     cachereg.evict(spark, SF_A)
-    assert not traindata._NEAR_DUP_LABELS
+    assert not _entries(spark, "dedup_cc")
     assert not (_persistent_ids(spark) - baseline)
 
 
@@ -251,72 +269,70 @@ def test_near_dup_labels_built_once_per_dataset(spark, monkeypatch):
 
 
 def test_dead_session_pruned_on_touch(spark):
-    """ADVICE r5 item 3: a session stopped OUTSIDE the hooked
-    spark.stop (sc.stop(), or never hooked at all) must not retain its
-    _LRU entry and memo frames forever — touch() prunes entries whose
-    SparkContext reports stopped and fans out eviction for them."""
+    """A session stopped OUTSIDE the hooked spark.stop (sc.stop(), or
+    never hooked at all) must not retain its memo entries forever: the
+    next memo insertion by a live session releases the entries of
+    every session whose SparkContext reports stopped."""
 
     class DeadSession:  # no sparkContext at all → _is_stopped() True
         pass
 
     dead = DeadSession()
-    cachereg._LRU[dead] = ["/some/sf_dir"]
     calls = []
-
-    def spy(sess, sf_dir):
-        calls.append((sess, sf_dir))
-
-    cachereg.register_evictor(spy)
+    cachereg.memo(
+        dead, "/some/sf_dir", "spy", "k", lambda pins: None,
+        release=lambda: calls.append(dead),
+    )
     try:
-        cachereg.touch(spark, SF_A)
-        assert (dead, None) in calls  # evictors fanned out for it
-        assert dead not in cachereg._LRU
-        assert spark in cachereg._LRU  # the live session is untouched
+        cachereg.memo(spark, SF_A, "probe", "k", lambda pins: None)
+        assert calls == [dead]  # its entry was released
+        assert dead not in cachereg._MEMO
+        assert spark in cachereg._MEMO  # the live session is untouched
     finally:
-        cachereg._EVICTORS.remove(spy)
+        cachereg._MEMO.pop(dead, None)
         cachereg.evict(spark)
 
 
 def test_lru_is_weakly_keyed():
-    """A session object whose last user reference dies leaves no _LRU
-    entry behind (WeakKeyDictionary), independent of any stop path."""
+    """A session object whose last user reference dies leaves no memo
+    table behind (WeakKeyDictionary), independent of any stop path."""
     import gc
 
     class GhostSession:
         pass
 
     ghost = GhostSession()
-    cachereg._LRU[ghost] = ["/x"]
-    n_with_ghost = len(cachereg._LRU)
+    cachereg.memo(ghost, "/x", "f", "k", lambda pins: None)
+    n_with_ghost = len(cachereg._MEMO)
     del ghost
     gc.collect()
-    assert len(cachereg._LRU) == n_with_ghost - 1
+    assert len(cachereg._MEMO) == n_with_ghost - 1
 
 
 def test_evictor_failure_does_not_wedge_eviction():
-    """evict() swallows a single evictor's exception so every other
-    module still drops its handles (dead-JVM unpersist tolerance)."""
+    """evict() swallows a single entry's failing release so every
+    other entry is still released (dead-JVM unpersist tolerance)."""
 
     calls = []
 
-    def bad(sess, sf_dir):
+    def bad():
         raise RuntimeError("dead JVM")
-
-    def good(sess, sf_dir):
-        calls.append((sess, sf_dir))
 
     class Sentinel:
         pass
 
     sentinel = Sentinel()
-    cachereg._EVICTORS.insert(0, bad)
-    cachereg.register_evictor(good)
+    cachereg.memo(sentinel, "/x", "f", "bad", lambda pins: None, release=bad)
+    cachereg.memo(
+        sentinel, "/x", "f", "good", lambda pins: None,
+        release=lambda: calls.append(sentinel),
+    )
     try:
         cachereg.evict(sentinel)
-        assert (sentinel, None) in calls
+        assert calls == [sentinel]
+        assert sentinel not in cachereg._MEMO
     finally:
-        cachereg._EVICTORS.remove(bad)
-        cachereg._EVICTORS.remove(good)
+        cachereg._MEMO.pop(sentinel, None)
 
 
 # ---------------------------------------------------------------------------
@@ -331,12 +347,13 @@ def test_query_boundary_noop_under_budget(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_STATE_BUDGET_MB", raising=False)
     qs = registry.all_queries()
     qs["fact_orders"](spark, SF_A).write.format("noop").mode("overwrite").save()
-    assert star._PLAN_CACHE and star._LANDING_CACHE
+    star_keys = {(SF_A, "star", "landing"), (SF_A, "star", "star_wide")}
+    assert star_keys <= set(_entries(spark, "star"))
     stats = cachereg.query_boundary(spark)
     # sf0.001 pinned state is far below the default 40%-of-heap budget
     assert stats["before"] <= stats["budget"]
     assert stats["evicted"] == []
-    assert star._PLAN_CACHE and star._LANDING_CACHE
+    assert star_keys <= set(_entries(spark, "star"))
     cachereg.evict(spark)
 
 
@@ -350,14 +367,14 @@ def test_query_boundary_evicts_lru_family_over_budget(spark, monkeypatch):
     qs = registry.all_queries()
     qs["fact_orders"](spark, SF_A).write.format("noop").mode("overwrite").save()
     qs["jl_fact_checked"](spark, SF_A).write.format("noop").mode("overwrite").save()
-    assert joblistings._JL_STAR_CACHE
-    lru_before = [f for _, f in cachereg._FAMILY_LRU.get(spark, [])]
+    assert _entries(spark, "jl_star")
+    lru_before = [f for _, f in cachereg._family_lru(spark)]
     assert set(lru_before) >= {"star", "jl_star", "catalog"}
     stats = cachereg.query_boundary(spark)
     assert stats["before"] > stats["budget"]
     assert stats["evicted"], "over-budget boundary must evict something"
     # the two most-recently-touched families survive
-    survivors = [f for _, f in cachereg._FAMILY_LRU.get(spark, [])]
+    survivors = [f for _, f in cachereg._family_lru(spark)]
     assert len(survivors) >= 2
     assert survivors == lru_before[-2:]
     for f in stats["evicted"]:
@@ -367,20 +384,20 @@ def test_query_boundary_evicts_lru_family_over_budget(spark, monkeypatch):
 
 
 def test_unmanaged_note_and_derby_drop(spark):
-    """src_jdbc_landing reports its in-memory Derby footprint to the
-    budget; the registered family evictor drops the DB (expected
-    SQLException 08006 = success) and clears the note. A fresh call
-    rebuilds the DB from scratch."""
+    """src_jdbc_landing's memo entry carries its in-memory Derby
+    footprint for the budget; evicting the derby family drops the DB
+    (expected SQLException 08006 = success) and its estimate. A fresh
+    call rebuilds the DB from scratch."""
     from end_to_end_data_engineering_job_listings_etl_spark.plans import media_stream
 
     df = media_stream.src_jdbc_landing(spark, SF_A)
     n1 = df.count()
     assert n1 > 0
-    assert cachereg._UNMANAGED.get(spark, {}).get("derby", 0) > 0
-    assert "derby" in cachereg._FAMILIES
+    assert cachereg.unmanaged_estimates(spark).get("derby", 0) > 0
+    assert _entries(spark, "derby") == [(SF_A, "derby", "landing_db")]
 
-    media_stream._drop_derby_landing(spark)
-    assert cachereg._UNMANAGED.get(spark, {}).get("derby", 0) == 0
+    cachereg.evict(spark, family="derby")
+    assert "derby" not in cachereg.unmanaged_estimates(spark)
     # the DB is gone: connecting WITHOUT create raises (XJ004)
     with pytest.raises(Exception):
         spark._jvm.java.sql.DriverManager.getConnection(
@@ -388,7 +405,6 @@ def test_unmanaged_note_and_derby_drop(spark):
         )
     # and the query rebuilds end-to-end after the drop
     assert media_stream.src_jdbc_landing(spark, SF_A).count() == n1
-    media_stream._drop_derby_landing(spark)
     cachereg.evict(spark)
 
 
@@ -451,12 +467,15 @@ def test_boundary_stats_counters_and_events(spark, monkeypatch):
 
 
 def test_unmanaged_estimates_accessor(spark):
-    """unmanaged_estimates returns a copy of the session's reported
-    family estimates; reporting 0 clears an entry."""
-    cachereg.note_unmanaged(spark, "probe_fam", 123)
+    """unmanaged_estimates returns a copy of the session's per-family
+    estimates; evicting the entry clears it."""
+    cachereg.memo(
+        spark, SF_A, "probe_fam", "k", lambda pins: None,
+        release=lambda: None, unmanaged=123,
+    )
     est = cachereg.unmanaged_estimates(spark)
     assert est["probe_fam"] == 123
     est["probe_fam"] = 999  # a copy — must not write through
     assert cachereg.unmanaged_estimates(spark)["probe_fam"] == 123
-    cachereg.note_unmanaged(spark, "probe_fam", 0)
+    cachereg.evict(spark, family="probe_fam")
     assert "probe_fam" not in cachereg.unmanaged_estimates(spark)

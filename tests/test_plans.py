@@ -41,6 +41,23 @@ def test_watermark_predicate_reaches_scan(spark):
     ), pushed
 
 
+def test_loading_events_leaves_session_conf_alone(spark):
+    """events.ts is stored as timestamp[us], so reading it needs no
+    legacy parquet flag: a fresh events load must not change session
+    conf."""
+    from end_to_end_data_engineering_job_listings_etl_spark import cachereg, catalog
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    try:
+        cachereg.evict(spark, SF_DIR)  # force a fresh read
+        ev = catalog.load_table(spark, SF_DIR, "events")
+        assert spark.conf.get(key) == "false"
+        assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_pricing_filter_reaches_scan(spark):
     p = _plan(pricing.li_pricing_summary(spark, SF_DIR))
     pushed = [l for l in p.splitlines() if "PushedFilters" in l]

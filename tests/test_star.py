@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from end_to_end_data_engineering_job_listings_etl_spark import cachereg
 from end_to_end_data_engineering_job_listings_etl_spark.plans import star
 from tests.conftest import SF_DIR
 from tests.oracle_check import compare
@@ -47,23 +48,23 @@ def test_fact_left_joins_preserve_orders(spark):
     assert star.fact_orders(spark, SF_DIR).count() == n_orders
 
 
+def _entries(spark, family: str) -> list[tuple]:
+    return [k for k in cachereg._MEMO.get(spark, {}) if k[:2] == (SF_DIR, family)]
+
+
 def test_clear_caches_evicts_and_unpersists(spark):
-    """ADVICE r3: the memo layers retained persisted frames for the
-    process lifetime with no eviction hook. clear_caches(spark) must
-    empty this session's memo entries and unpersist the dims bundle's
-    shared ranked frame — and a rebuild afterwards must still produce
-    the same dimension."""
+    """The memo layers must not retain persisted frames for the process
+    lifetime: evicting the star family must drop this dataset's star
+    entries and unpersist the dims bundle's shared ranked frame — and a
+    rebuild afterwards must still produce the same dimension."""
     before = {r["company_sk"]: r["employer_name"] for r in star.dim_company(spark, SF_DIR).collect()}
-    key = (spark, SF_DIR)
-    assert key in star._DIMS_BUNDLE_CACHE
-    shared = star._DIMS_SHARED[key]
+    shared = cachereg._MEMO[spark][(SF_DIR, "star", "dims_bundle")].pins
     # shared holds the memory-persisted ranked frame plus the ids-layer
     # checkpoint pins (LogicalRDD frames, not cache-manager entries)
     assert any(f.storageLevel.useMemory for f in shared)
-    star.clear_caches(spark)
-    assert key not in star._DIMS_BUNDLE_CACHE
-    assert not any(k[1] is spark for k in star._PLAN_CACHE)
-    assert key not in star._LANDING_CACHE
+    assert (SF_DIR, "star", "landing") in _entries(spark, "star")
+    cachereg.evict(spark, SF_DIR, family="star")
+    assert not _entries(spark, "star")
     assert all(not f.storageLevel.useMemory for f in shared)
     after = {r["company_sk"]: r["employer_name"] for r in star.dim_company(spark, SF_DIR).collect()}
     assert after == before
@@ -73,13 +74,11 @@ def test_jl_clear_caches_roundtrip(spark):
     from end_to_end_data_engineering_job_listings_etl_spark.plans import joblistings as jl
 
     before = jl.jl_fact_checked(spark, SF_DIR).count()
-    key = (spark, SF_DIR)
-    assert key in jl._JL_STAR_CACHE
-    shared = jl._JL_STAR_SHARED[key]
+    shared = cachereg._MEMO[spark][(SF_DIR, "jl_star", "star")].pins
     # shared holds persisted ranked frames plus ids-layer checkpoint
     # pins (LogicalRDD frames, which never show a cache storage level)
     assert any(f.storageLevel.useMemory for f in shared)
-    jl.clear_caches(spark)
-    assert key not in jl._JL_STAR_CACHE
+    cachereg.evict(spark, SF_DIR, family="jl_star")
+    assert not _entries(spark, "jl_star")
     assert all(not f.storageLevel.useMemory for f in shared)
     assert jl.jl_fact_checked(spark, SF_DIR).count() == before
