@@ -1,37 +1,46 @@
-"""Dimension builder: project → normalize → drop-null → distinct →
+"""Dimension builders: project → normalize → drop-null → distinct →
 surrogate key.
 
-Reference analog: the seven dimension subplans at
-``dags/spark_etl_script.py:92-144`` — each is
+Reference analog: the dimension subplans at
+``dags/spark_etl_script.py:92-144``. Each is
 ``select(normalized).filter(isNotNull).distinct()`` plus
-``row_number().over(Window.orderBy(key))`` for the surrogate key
-(:95,:100,:105,:110,:130,:144).
+``row_number().over(Window.orderBy(key))`` for the surrogate key.
 
-Three SK modes (SURVEY.md §7.3):
-- ``mode="range"`` (default): the scale path with reference-exact
-  VALUES — ``operators.ids.ranked_ids`` computes the same global
-  ``row_number`` via range repartition + in-partition windows +
-  prefix offsets, so no single-partition exchange exists anywhere in
-  the plan and every ANSI-SQL ``row_number() OVER (ORDER BY key)``
-  oracle still matches cell-for-cell.
-- ``mode="global"``  : the literal reference plan — ``row_number``
-  over a global ORDER BY, i.e. a one-partition WindowExec. Kept as
-  the opt-in parity mode; do not use above ~10M distinct keys.
-- ``mode="bucketed"``: md5-hash-bucketed dense ids (two narrow
-  shuffles). Keys are dense and deterministic for a given
-  (data, n_buckets) but NOT in global sort order — the variant for
-  engines whose oracle must reproduce bucket assignment instead of a
-  sort (kept oracle-checkable via the portable md5 bucket hash).
+A star states each ranked dimension once, as a ``DimSpec``:
+``build_dims_batched`` ranks every spec in one pass, and
+``operators.fact.join_star`` joins the fact on the same key
+expressions. Surrogate keys are the reference's global ``row_number``
+values, computed without a single-partition window
+(``operators.ids``). ``build_dim(mode="bucketed")`` is the one
+alternative: dense md5-bucketed ids that are not in key order
+(SURVEY.md §7.3). ``build_date_dim`` is the calendar dimension, whose
+key is the yyyyMMdd date itself.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.dates import date_attributes
 from .ids import ranked_ids, ranked_ids_grouped
+
+
+class DimSpec(NamedTuple):
+    """One ranked dimension of a star: rows ``source.select(*keys)``
+    (aliased, normalized key expressions), surrogate key ``sk``. When
+    ``source`` is the fact base, ``join_star`` left-joins the fact on
+    the same ``keys``; ``broadcast`` pins the broadcast hint for dims
+    whose size is fixed by the schema, not by the data."""
+
+    tag: str
+    source: DataFrame
+    keys: Sequence[Column]
+    sk: str
+    broadcast: bool = True
 
 
 def build_dim(
@@ -46,7 +55,9 @@ def build_dim(
     ``key_exprs`` must be aliased columns; nulls in the FIRST key column
     are rejected (reference P2 semantics: one natural key per dim, the
     multi-column location dim filters on its first column only —
-    ``dags/spark_etl_script.py:109``).
+    ``dags/spark_etl_script.py:109``). ``mode="range"`` gives the
+    reference's ``row_number() OVER (ORDER BY keys)``;
+    ``mode="bucketed"`` gives dense ids within md5 hash buckets.
     """
     projected = df.select(*key_exprs)
     key_names = list(projected.columns)
@@ -58,11 +69,6 @@ def build_dim(
         return ranked_ids(
             distinct, key_names, sk_name, pin_input=False
         ).select(sk_name, *key_names)
-    if mode == "global":
-        w = Window.orderBy(*key_names)
-        return distinct.select(
-            F.row_number().over(w).alias(sk_name), *key_names
-        )
     if mode == "bucketed":
         # Dense ids without a single-partition sort: row_number within a
         # hash bucket, then add the running count of all lower buckets.
@@ -99,38 +105,32 @@ def build_dim(
 
 
 def build_dims_batched(
-    specs: Sequence[tuple[str, DataFrame, Sequence[Column], str]],
-    n_parts: int | None = None,
+    specs: Sequence[DimSpec],
     shared_out: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Build MANY dimensions in one pass: union every dim's (tagged,
     normalized, null-rejected) key projection, distinct ONCE, rank
     ONCE with the grouped two-phase plan (``ids.ranked_ids_grouped``)
-    — a star build's 6 distinct shuffles + 6 rank pipelines collapse
-    to one of each. Values are identical to per-dim
+    — a star build's distinct shuffles and rank pipelines collapse to
+    one of each. Values are identical to per-dim
     ``build_dim(mode="range")``: per-tag distinct tuples are the
     dim's own distinct keys, and the per-group rank over aligned key
     positions (shorter key lists padded with typed nulls, which sort
     as a constant) is the dim's own ``row_number() OVER (ORDER BY
-    keys ASC NULLS FIRST)``.
+    keys ASC NULLS FIRST)``. Aligned key positions across specs must
+    share a type (string keys here — mixed types would need per-position
+    casts).
 
-    ``specs``: (tag, source, key_exprs, sk_name) per dim. Aligned key
-    positions across specs must share a type (string keys here — mixed
-    types would need per-position casts).
-
-    Lifetime: every returned dim is a slice of ONE internally
-    ``persist()``-ed ranked frame, retained until the session ends or
-    the caller unpersists it — pass ``shared_out`` (a list the shared
-    frame is appended to) to take ownership; memo layers above
-    (plans/star.py, plans/joblistings.py) pass their ``cachereg.memo``
-    pins list."""
-    arity = max(len(k) for _, _, k, _ in specs)
+    Returns ``{tag: dim}``. Every dim is a slice of ONE ``persist()``-ed
+    ranked frame; ``shared_out`` receives it and the rank's checkpoint,
+    so the caller's ``cachereg.memo`` entry releases both."""
+    arity = max(len(s.keys) for s in specs)
     parts = []
     names: dict[str, tuple[list[str], str]] = {}
-    for tag, src, key_exprs, sk_name in specs:
-        proj = src.select(*key_exprs)
+    for s in specs:
+        proj = s.source.select(*s.keys)
         cols = list(proj.columns)
-        sel: list[Column] = [F.lit(tag).alias("__tag")]
+        sel: list[Column] = [F.lit(s.tag).alias("__tag")]
         for i in range(arity):
             sel.append(
                 (
@@ -140,7 +140,7 @@ def build_dims_batched(
                 ).alias(f"__k{i}")
             )
         parts.append(proj.filter(F.col(cols[0]).isNotNull()).select(*sel))
-        names[tag] = (cols, sk_name)
+        names[s.tag] = (cols, s.sk)
     tagged = parts[0]
     for p in parts[1:]:
         tagged = tagged.unionByName(p)
@@ -149,7 +149,6 @@ def build_dims_batched(
         "__tag",
         [f"__k{i}" for i in range(arity)],
         "__sk",
-        n_parts=n_parts,
         # the distinct's shuffle output is stage-reused by the
         # sampling and exchange jobs — no input pin needed
         pin_input=False,
@@ -166,3 +165,14 @@ def build_dims_batched(
             *[F.col(f"__k{i}").alias(c) for i, c in enumerate(cols)],
         )
     return out
+
+
+def build_date_dim(df: DataFrame, date_col: str) -> DataFrame:
+    """The calendar dimension over ``date_col`` (reference
+    ``dags/spark_etl_script.py:112-120``): its SK is the yyyyMMdd int
+    itself, not a row_number."""
+    return (
+        df.select(*date_attributes(date_col))
+        .filter(F.col("full_date").isNotNull())
+        .distinct()
+    )

@@ -187,19 +187,10 @@ def ranked_ids_grouped(
     partitions by (pid, group) and offsets accumulate per group over
     that group's own lower partitions only — values are identical to
     running ``ranked_ids`` per group separately."""
-    sort_exprs = _as_sort_exprs([group_col, *order_cols])
-    in_group_exprs = _as_sort_exprs(order_cols)
-    pinned = df.localCheckpoint(eager=False) if pin_input else df
-    ranged = (
-        pinned.repartitionByRange(n_parts or _n_parts(df), *sort_exprs)
-        .select(F.spark_partition_id().alias(_PID), "*")
-        .localCheckpoint(eager=False)
+    ranged, _ = _ranged_with_pid(
+        df, [group_col, *order_cols], n_parts, pin_input, pinned_out
     )
-    if pinned_out is not None:
-        if pin_input:
-            pinned_out.append(pinned)
-        pinned_out.append(ranged)
-    w_in = Window.partitionBy(_PID, group_col).orderBy(*in_group_exprs)
+    w_in = Window.partitionBy(_PID, group_col).orderBy(*_as_sort_exprs(order_cols))
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
     totals = ranged.groupBy(group_col, _PID).agg(F.count("*").alias("__total"))
     a, b = totals.alias("a"), totals.alias("b")

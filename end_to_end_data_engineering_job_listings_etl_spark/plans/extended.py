@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table, load_table_dist
 from ..functions.normalize import norm_initcap
 from .star import STAR_PREFIX, star_wide
@@ -631,14 +632,16 @@ def agg_unpivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def jl_star_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference-shaped job-listings pipeline end to end (rows-only
     check: its landing is synthesized in-engine, outside the oracle's
-    parquet views — full assertions live in tests/test_joblistings.py)."""
+    parquet views — full assertions live in tests/test_joblistings.py).
+    Memoized in the ``jl_star`` family, which owns the build's pins."""
     from .joblistings import build_star_schema, synth_job_listings
 
-    landing = synth_job_listings(spark, 200)
-    star = build_star_schema(
-        landing, now=F.lit("2025-07-01 00:00:00").cast("timestamp")
-    )
-    return star["FACT_JOB_POSTINGS"]
+    def build(pins: list[DataFrame]) -> DataFrame:
+        landing = synth_job_listings(spark, 200)
+        now = F.lit("2025-07-01 00:00:00").cast("timestamp")
+        return build_star_schema(landing, pins, now=now)["FACT_JOB_POSTINGS"]
+
+    return cachereg.memo(spark, sf_dir, "jl_star", "synth_fact", build)
 
 
 def dim_company_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

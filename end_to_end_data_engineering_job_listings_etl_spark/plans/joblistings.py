@@ -1,7 +1,9 @@
 """The reference pipeline itself, reference-shaped: landing
 ``job_listings`` → 7 dims + fact + bridge with the reference's own
-table and column names. A user of the reference points this at their
-landing table and gets the same star schema out.
+table and column names. A user of the reference points
+``build_star_schema(landing, pins)`` at their landing table and gets
+the same star schema out; ``ids.release_pins(pins)`` frees what the
+build pinned.
 
 Reference analog: the whole of ``dags/spark_etl_script.py:41-192``,
 rebuilt on this engine's operators:
@@ -10,18 +12,24 @@ rebuilt on this engine's operators:
 - ``monotonically_increasing_id`` natural key (:88) → deterministic
   row_number over the landing's natural ordering (documented
   deviation, SURVEY.md §7.3)
-- per-dim select→filter→distinct→row_number (:92-144) → build_dim
+- per-dim select→filter→distinct→row_number (:92-144) → one
+  ``DimSpec`` per dim, ranked together by
+  ``operators.dims.build_dims_batched``
 - ``from_json`` with the reference's (wrong) array schema (:126) →
   reproduced faithfully: ``job_highlights_array`` is null for every
   object-shaped payload; the corrected map parse ships alongside as
   ``job_highlights_map``
-- fact join chain (:157-173) and skill bridge (:175-179) → broadcast
-  left joins on the same normalized expressions
+- fact join chain (:157-173) → ``operators.fact.join_star`` over the
+  same specs; skill bridge (:175-179) → the skill spec's keys joined to
+  the dim and to the fact's PK map
 - the 9 ``write_to_snowflake`` overwrite sinks (:181-189) →
   ``sinks.writers.overwrite_parquet_table`` / ``write_counted``
 
-Tested end-to-end in tests/test_joblistings.py on a deterministic
-synthetic landing (FIXTURES.md fixture-2 shape).
+The registered ``jl_*`` queries run the pipeline over a landing derived
+from the parquet fixture tables (``landing_from_orders``), memoized in
+the ``jl_star`` family of ``cachereg``. Tested end-to-end in
+tests/test_joblistings.py on a deterministic synthetic landing
+(FIXTURES.md fixture-2 shape).
 """
 
 from __future__ import annotations
@@ -30,96 +38,73 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cachereg
-from ..functions.dates import date_attributes
-from ..functions.keywords import extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
-from ..operators.dims import build_dim, build_dims_batched
+from ..operators.dims import DimSpec, build_date_dim, build_dims_batched
+from ..operators.fact import join_star
 from ..operators.ids import exclusive_prefix_sum, ranked_ids
+from .star import _initcap
+from .star import landing as enriched_orders
 
 SKILL_KEYWORDS = (
     "sql", "python", "spark", "aws", "excel", "tableau", "java", "airflow",
     "docker", "kubernetes", "snowflake", "etl",
 )
 
+# The landing's natural ordering: job_natural_key is row_number over it.
+_NK_ORDER = ["job_title", "employer_name", "job_posted_at_datetime_utc"]
 
-def build_star_schema(
-    landing: DataFrame,
-    now: Column | None = None,
-    sk_mode: str = "range",
-    shared_out: list[DataFrame] | None = None,
-) -> dict[str, DataFrame]:
-    """Landing job_listings → the 9 warehouse tables (reference
-    ``dags/spark_etl_script.py:92-189``).
 
-    ``now`` anchors relative-time parsing (pass a literal for
-    replayable runs; defaults to current_timestamp() like the
-    reference's utcnow()).
-
-    With ``sk_mode="range"`` the five ranked dims are slices of one
-    internally persisted frame (operators.dims.build_dims_batched);
-    pass ``shared_out`` to take ownership of its lifetime (the memoized
-    ``jl_*`` query layer hands it to ``cachereg.memo``)."""
-    if now is None:
-        now = F.current_timestamp()
-
+def _fact_base(landing: DataFrame, now: Column, pins: list[DataFrame]) -> DataFrame:
+    """The landing with parsed posting times, and with
+    ``job_natural_key`` derived when the landing does not carry it."""
     base = landing.withColumn(
         "job_posted_at_ts", parse_relative_time("job_posted_at", now)
     ).withColumn(
         "job_posted_at_utc", F.to_timestamp("job_posted_at_datetime_utc")
     )
-    if "job_natural_key" not in base.columns:
-        # Deterministic natural key (vs monotonically_increasing_id),
-        # derived WITHOUT funneling the full-width landing through a
-        # single-partition window: rank the DISTINCT ordering tuples on
-        # a narrow 3-column aggregate (the only partitionless window —
-        # it carries tuple + count, nothing wide), join the start-rank
-        # back on the tuple (null-safe: posting dates can be null), and
-        # disambiguate duplicate tuples with a per-tuple partitioned
-        # ordinal. Values are identical to the reference-exact
-        # ``row_number() over (order by title, employer, utc)`` whenever
-        # the tuple is unique (it is, in every shipped landing); for
-        # duplicate tuples the key stays dense + unique with arbitrary
-        # tie order — exactly the old single-window behavior.
-        ordering = ["job_title", "employer_name", "job_posted_at_datetime_utc"]
-        tuples = (
-            base.select(*ordering)
-            .groupBy(*ordering)
-            .agg(F.count("*").alias("__cnt"))
+    if "job_natural_key" in base.columns:
+        return base
+    # Deterministic natural key (vs monotonically_increasing_id),
+    # derived WITHOUT funneling the full-width landing through a
+    # single-partition window: rank the DISTINCT ordering tuples on a
+    # narrow aggregate (tuple + count), join the start rank back on the
+    # tuple (null-safe: posting dates can be null), and disambiguate
+    # duplicate tuples with a per-tuple partitioned ordinal. Values equal
+    # ``row_number() over (order by title, employer, utc)`` whenever the
+    # tuple is unique (it is, in every shipped landing); for duplicate
+    # tuples the key stays dense and unique with arbitrary tie order.
+    tuples = base.groupBy(*_NK_ORDER).agg(F.count("*").alias("__cnt"))
+    starts = exclusive_prefix_sum(
+        # pin_input=False: `tuples` is a groupBy output whose shuffle
+        # files are reused across the sampling + exchange jobs
+        tuples,
+        _NK_ORDER,
+        "__cnt",
+        "__start",
+        pin_input=False,
+        pinned_out=pins,
+    ).select(
+        *[F.col(c).alias(f"__k{i}") for i, c in enumerate(_NK_ORDER)],
+        "__start",
+    )
+    cond = None
+    for i, c in enumerate(_NK_ORDER):
+        eq = base[c].eqNullSafe(starts[f"__k{i}"])
+        cond = eq if cond is None else (cond & eq)
+    w_tuple = Window.partitionBy(*_NK_ORDER).orderBy(*_NK_ORDER)
+    return (
+        base.join(starts, cond, "left")
+        .drop(*[f"__k{i}" for i in range(len(_NK_ORDER))])
+        .withColumn(
+            "job_natural_key",
+            (F.col("__start") + F.row_number().over(w_tuple)).cast("int"),
         )
-        # Exclusive running start per distinct tuple via the
-        # range/two-phase plan (operators.ids) — same values as the
-        # old partitionless cumulative window (ASC NULLS FIRST pinned
-        # on both, and in the oracle SQL), no one-partition stage.
-        starts = exclusive_prefix_sum(
-            # pin_input=False: `tuples` is a groupBy output whose
-            # shuffle files are reused across the sampling + exchange
-            # jobs (skipped stages).
-            tuples,
-            ordering,
-            "__cnt",
-            "__start",
-            pin_input=False,
-            pinned_out=shared_out,
-        ).select(
-            *[F.col(c).alias(f"__k{i}") for i, c in enumerate(ordering)],
-            "__start",
-        )
-        cond = None
-        for i, c in enumerate(ordering):
-            eq = base[c].eqNullSafe(starts[f"__k{i}"])
-            cond = eq if cond is None else (cond & eq)
-        w_tuple = Window.partitionBy(*ordering).orderBy(*ordering)
-        base = (
-            base.join(starts, cond, "left")
-            .drop(*[f"__k{i}" for i in range(len(ordering))])
-            .withColumn(
-                "job_natural_key",
-                (F.col("__start") + F.row_number().over(w_tuple)).cast("int"),
-            )
-            .drop("__start")
-        )
+        .drop("__start")
+    )
 
+
+def _dim_specs(base: DataFrame) -> list[DimSpec]:
     skills = base.select(
         "job_natural_key",
         F.explode(
@@ -128,63 +113,72 @@ def build_star_schema(
             )
         ).alias("skill_raw"),
     ).filter(F.col("skill_raw") != "")
-
-    dim_specs = [
-        (
-            "company",
-            base,
-            [norm_upper("employer_name").alias("employer_name")],
-            "company_sk",
+    return [
+        # employers scale with the data: no broadcast pin; Catalyst/AQE
+        # broadcast the dim while it fits
+        DimSpec(
+            "company", base, [norm_upper("employer_name").alias("employer_name")],
+            "company_sk", broadcast=False,
         ),
-        (
-            "publisher",
-            base,
-            [norm_initcap("job_publisher").alias("publisher_name")],
+        DimSpec(
+            "publisher", base, [norm_initcap("job_publisher").alias("publisher_name")],
             "publisher_sk",
         ),
-        (
-            "employment_type",
-            base,
+        DimSpec(
+            "employment_type", base,
             [norm_initcap("job_employment_type").alias("employment_type_name")],
             "employment_type_sk",
         ),
-        (
-            "location",
-            base,
-            [
-                F.col("job_location"),
-                F.col("job_city"),
-                F.col("job_state"),
-                F.col("job_country"),
-            ],
+        DimSpec(
+            "location", base,
+            [F.col(c) for c in ("job_location", "job_city", "job_state", "job_country")],
             "location_sk",
         ),
-        ("skill", skills, [norm_initcap("skill_raw").alias("skill_name")], "skill_sk"),
+        DimSpec(
+            "skill", skills, [norm_initcap("skill_raw").alias("skill_name")], "skill_sk"
+        ),
     ]
-    if sk_mode == "range":
-        # One tagged union → one distinct → one grouped two-phase rank
-        # for all five ranked dims (operators.dims.build_dims_batched)
-        # instead of five independent distinct+rank pipelines.
-        batched = build_dims_batched(dim_specs, shared_out=shared_out)
-        dim_company = batched["company"]
-        dim_publisher = batched["publisher"]
-        dim_employment_type = batched["employment_type"]
-        dim_location = batched["location"]
-        dim_skill = batched["skill"]
-    else:
-        dim_company = build_dim(base, dim_specs[0][2], "company_sk", mode=sk_mode)
-        dim_publisher = build_dim(base, dim_specs[1][2], "publisher_sk", mode=sk_mode)
-        dim_employment_type = build_dim(
-            base, dim_specs[2][2], "employment_type_sk", mode=sk_mode
-        )
-        dim_location = build_dim(base, dim_specs[3][2], "location_sk", mode=sk_mode)
-        dim_skill = build_dim(skills, dim_specs[4][2], "skill_sk", mode=sk_mode)
-    dim_date = (
-        base.select(*date_attributes("job_posted_at_utc"))
-        .filter(F.col("full_date").isNotNull())
-        .distinct()
-    )
 
+
+def _fact(
+    base: DataFrame,
+    specs: list[DimSpec],
+    dims: dict[str, DataFrame],
+    dim_date: DataFrame,
+    pins: list[DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    j, pk_map = join_star(
+        base, dims, specs, "job_posted_at_utc", dim_date,
+        "job_natural_key", "job_posting_pk", pins,
+    )
+    fact = j.select(
+        F.col("job_posting_pk"),
+        F.col("job_natural_key").alias("job_sk"),
+        "company_sk",
+        "location_sk",
+        "date_sk",
+        "employment_type_sk",
+        "publisher_sk",
+        F.lit(1).alias("job_count"),
+    )
+    return fact, pk_map
+
+
+def build_star_schema(
+    landing: DataFrame, pins: list[DataFrame], now: Column | None = None
+) -> dict[str, DataFrame]:
+    """Landing job_listings → the 9 warehouse tables (reference
+    ``dags/spark_etl_script.py:92-189``).
+
+    ``pins`` receives every frame the build persists or checkpoints;
+    the caller owns them and frees them with ``ids.release_pins`` (the
+    ``jl_*`` queries hand them to ``cachereg.memo``). ``now`` anchors
+    relative-time parsing (pass a literal for replayable runs; defaults
+    to current_timestamp() like the reference's utcnow())."""
+    base = _fact_base(landing, F.current_timestamp() if now is None else now, pins)
+    specs = _dim_specs(base)
+    dims = build_dims_batched(specs, shared_out=pins)
+    dim_date = build_date_dim(base, "job_posted_at_utc")
     dim_job_details = base.select(
         F.col("job_natural_key").alias("job_sk"),
         F.trim("job_title").alias("job_title"),
@@ -199,79 +193,19 @@ def build_star_schema(
         "job_posted_at",
         "job_posted_at_utc",
     )
-
-    f = base
-    # dim_company scales with the employer population (O(data)) — no
-    # broadcast pin; Catalyst/AQE broadcast it while it fits. The
-    # bounded-domain dims below (publisher/employment type/location/
-    # date: small fixed vocabularies) keep the explicit hint.
-    j = f.join(
-        dim_company,
-        norm_upper(f["employer_name"]) == dim_company["employer_name"],
-        "left",
-    ).drop(dim_company["employer_name"])
-    j = j.join(
-        F.broadcast(dim_publisher),
-        norm_initcap(j["job_publisher"]) == dim_publisher["publisher_name"],
-        "left",
-    )
-    j = j.join(
-        F.broadcast(dim_employment_type),
-        norm_initcap(j["job_employment_type"])
-        == dim_employment_type["employment_type_name"],
-        "left",
-    )
-    j = j.join(F.broadcast(dim_location), ["job_location", "job_city", "job_state", "job_country"], "left")
-    j = j.join(
-        F.broadcast(dim_date),
-        F.to_date(j["job_posted_at_utc"]) == dim_date["full_date"],
-        "left",
-    )
-    # fact PK on a narrow projection of the (unique) natural key via
-    # the range/two-phase rank (operators.ids — no single-partition
-    # window), joined back 1:1: neither the wide joined frame nor the
-    # keys funnel through one task.
-    pk_map = ranked_ids(
-        base.select("job_natural_key"),
-        ["job_natural_key"],
-        "job_posting_pk",
-        pinned_out=shared_out,
-    )
-    # the pk map has one row per posting — fact-scale, never pinned
-    # to broadcast (a pinned 15M-row build OOMed the sf10 gate)
-    j = j.join(pk_map, "job_natural_key")
-    fact = j.select(
-        F.col("job_posting_pk"),
-        F.col("job_natural_key").alias("job_sk"),
-        "company_sk",
-        "location_sk",
-        "date_sk",
-        "employment_type_sk",
-        "publisher_sk",
-        F.lit(1).alias("job_count"),
-    )
-
+    fact, pk_map = _fact(base, specs, dims, dim_date, pins)
+    skill = specs[-1]
     bridge = (
-        skills.select(
-            "job_natural_key", norm_initcap("skill_raw").alias("skill_name")
-        )
-        .join(F.broadcast(dim_skill), "skill_name")
-        .join(
-            fact.select("job_posting_pk", "job_sk"),
-            F.col("job_natural_key") == F.col("job_sk"),
-        )
+        skill.source.select("job_natural_key", *skill.keys)
+        .join(F.broadcast(dims["skill"]), "skill_name")
+        .join(pk_map, "job_natural_key")
         .select("job_posting_pk", "skill_sk")
         .distinct()
     )
-
     return {
-        "DIM_COMPANY": dim_company,
-        "DIM_PUBLISHER": dim_publisher,
-        "DIM_EMPLOYMENT_TYPE": dim_employment_type,
-        "DIM_LOCATION": dim_location,
+        **{f"DIM_{tag.upper()}": d for tag, d in dims.items()},
         "DIM_DATE": dim_date,
         "DIM_JOB_DETAILS": dim_job_details,
-        "DIM_SKILL": dim_skill,
         "FACT_JOB_POSTINGS": fact,
         "BRIDGE_JOB_SKILL": bridge,
     }
@@ -280,8 +214,8 @@ def build_star_schema(
 def landing_from_orders(
     spark: SparkSession,
     sf_dir: str,
+    pins: list[DataFrame],
     with_natural_key: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """A reference-shaped ``job_listings`` landing derived from the
     driver's parquet tables with pure column expressions — every column
@@ -297,41 +231,18 @@ def landing_from_orders(
     reference grammar incl. unparseable forms (F11 null path), skills ←
     a Python-repr-style serialized pair of keywords indexed by order
     key (the reference's CSV transport shape,
-    ``dags/spark_etl_script.py:132-135``)."""
-    from .star import landing as enriched
+    ``dags/spark_etl_script.py:132-135``).
 
-    l = enriched(spark, sf_dir)
+    With ``with_natural_key`` the landing carries ``job_natural_key``,
+    ranked on a narrow projection of the natural ordering and joined
+    back on the unique order key, so ``build_star_schema`` skips its
+    own derivation; the rank's checkpoints go to ``pins``."""
     k = F.col("o_orderkey")
     kws = F.array(*[F.lit(x) for x in SKILL_KEYWORDS])
     kw1 = F.element_at(kws, (k % 12 + 1).cast("int"))
     kw2 = F.element_at(kws, ((k * 5 + 2) % 12 + 1).cast("int"))
-    # Natural key on a narrow 4-column projection, broadcast-joined
-    # back on the unique order key: build_star_schema then skips its
-    # full-width derivation (same values — row_number over the same
-    # (title, employer, utc) ordering). Callers exercising the
-    # no-key fallback pass with_natural_key=False so the key machinery
-    # isn't built only to be dropped.
-    key_cols = []
-    if with_natural_key:
-        nk_map = ranked_ids(
-            l.select(
-                "o_orderkey",
-                F.concat(F.lit("Engineer "), k.cast("string")).alias("__t"),
-                F.when(k % 3 == 0, F.upper("c_name"))
-                .otherwise(F.lower("c_name"))
-                .alias("__e"),
-                F.when(k % 7 != 0, F.date_format("o_orderdate", "yyyy-MM-dd")).alias(
-                    "__u"
-                ),
-            ),
-            ["__t", "__e", "__u"],
-            "job_natural_key",
-            pinned_out=pinned_out,
-        ).select("o_orderkey", "job_natural_key")
-        l = l.join(nk_map, "o_orderkey")  # one row per order: fact-scale, no pin
-        key_cols = [F.col("job_natural_key")]
-    return l.select(
-        *key_cols,
+    out = enriched_orders(spark, sf_dir).select(
+        "o_orderkey",
         F.concat(F.lit("Engineer "), k.cast("string")).alias("job_title"),
         F.when(k % 3 == 0, F.upper("c_name"))
         .otherwise(F.lower("c_name"))
@@ -363,6 +274,15 @@ def landing_from_orders(
         ).alias("job_highlights"),
         F.concat(F.lit('["'), kw1, F.lit('", "'), kw2, F.lit('"]')).alias("skills"),
     )
+    if not with_natural_key:
+        return out.drop("o_orderkey")
+    nk_map = ranked_ids(
+        out.select("o_orderkey", *_NK_ORDER), _NK_ORDER, "job_natural_key",
+        pinned_out=pins,
+    ).select("o_orderkey", "job_natural_key")
+    # one row per order: fact-scale, no broadcast pin
+    cols = out.columns[1:]
+    return out.join(nk_map, "o_orderkey").select("job_natural_key", *cols)
 
 
 def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -373,9 +293,7 @@ def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         sf_dir,
         "jl_star",
         "star",
-        lambda pins: build_star_schema(
-            landing_from_orders(spark, sf_dir, pinned_out=pins), shared_out=pins
-        ),
+        lambda pins: build_star_schema(landing_from_orders(spark, sf_dir, pins), pins),
     )
 
 
@@ -387,16 +305,24 @@ def jl_fact_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def jl_fact_fallback_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FACT_JOB_POSTINGS with the natural key DERIVED by
-    ``build_star_schema``'s fallback path (the landing arrives without
-    ``job_natural_key``) — proves the scale-safe narrow-tuple
-    derivation produces exactly the reference's
+    """FACT_JOB_POSTINGS with the natural key DERIVED by the fallback
+    path (the landing arrives without ``job_natural_key``) — proves the
+    scale-safe narrow-tuple derivation produces exactly the reference's
     ``row_number() over (order by title, employer, utc)`` values, under
     the DuckDB hash gate. The landing's titles are unique, so the
     distinct-tuple rank is a total order and the result is
-    deterministic."""
-    landing = landing_from_orders(spark, sf_dir, with_natural_key=False)
-    return build_star_schema(landing)["FACT_JOB_POSTINGS"]
+    deterministic. Dim values do not depend on the natural key, so the
+    fact joins the memoized ``_jl_star`` dims."""
+
+    def build(pins: list[DataFrame]) -> DataFrame:
+        star = _jl_star(spark, sf_dir)
+        landing = landing_from_orders(spark, sf_dir, pins, with_natural_key=False)
+        base = _fact_base(landing, F.current_timestamp(), pins)
+        specs = _dim_specs(base)
+        dims = {s.tag: star[f"DIM_{s.tag.upper()}"] for s in specs}
+        return _fact(base, specs, dims, star["DIM_DATE"], pins)[0]
+
+    return cachereg.memo(spark, sf_dir, "jl_star", "fact_fallback", build)
 
 
 def jl_bridge_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,16 +355,6 @@ def jl_dim_job_details_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- DuckDB oracles -------------------------------------------------------
-
-# DuckDB has no initcap; emulate Spark's whitespace-word initcap
-# (upper first letter, lower the rest, whitespace preserved by
-# split/join on single spaces).
-def _initcap(expr: str) -> str:
-    return (
-        "array_to_string(list_transform(string_split({e}, ' '), "
-        "w -> upper(w[1]) || lower(w[2:])), ' ')"
-    ).format(e=expr)
-
 
 _KW_LIST = "[" + ", ".join(f"'{k}'" for k in SKILL_KEYWORDS) + "]"
 

@@ -15,17 +15,14 @@ core. Domain mapping (reference → synthetic):
 - FACT_JOB_POSTINGS (left-join chain)   → fact_orders
 - BRIDGE_JOB_SKILL                      → bridge_doc_keyword
 
+Each ranked dim is stated once, in ``_dim_specs``: the dims are ranked
+in one batched pass (``operators.dims.build_dims_batched``) and the
+fact is ``operators.fact.join_star`` over the same specs. The landing,
+the dims and the star view are memoized and persisted per (session,
+sf_dir) in the ``star`` family of ``cachereg``.
+
 Every query here has a colocated DuckDB oracle (ORACLES) sharing the
 same CTE text, so Spark results hash-match ANSI SQL exactly.
-
-Scale notes: dims are broadcast at assembly (they are distincts of
-low-cardinality keys); the landing enrichment joins broadcast the
-customer/nation/region side (at true 100 TB the customer join flips to
-sort-merge automatically when it exceeds the broadcast threshold — the
-code does not pin it). Surrogate keys default to the range/two-phase
-``row_number`` (``operators.ids`` — reference-exact values, no
-single-partition window); ``build_dim(mode="global")`` remains the
-literal one-partition reference plan, opt-in (SURVEY.md §7.3).
 """
 
 from __future__ import annotations
@@ -35,12 +32,10 @@ from pyspark.sql import functions as F
 
 from .. import cachereg
 from ..catalog import load_table, load_table_dist
-from ..functions.dates import date_attributes
 from ..functions.keywords import DEFAULT_KEYWORDS, extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper
-from ..operators.dims import build_dim, build_dims_batched
-from ..operators.fact import join_dim
-from ..operators.ids import ranked_ids
+from ..operators.dims import DimSpec, build_date_dim, build_dims_batched
+from ..operators.fact import join_star
 
 # ---------------------------------------------------------------------------
 # Spark builders
@@ -118,55 +113,46 @@ def _landing(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFra
     return df
 
 
-def _dims_bundle(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All ranked dims in ONE batched pass (operators.dims.
-    build_dims_batched): tagged union of every dim's normalized keys →
-    one distinct → one grouped two-phase rank, instead of a
-    distinct+rank pipeline per dim — 2 landing-wide shuffles for the
-    whole dim layer. Values identical to per-dim build_dim
-    (mode-equivalence locked in tests/test_edges.py); each registered
-    dim query serves its slice."""
+def _dim_specs(spark: SparkSession, sf_dir: str) -> list[DimSpec]:
+    l = landing(spark, sf_dir)
+    return [
+        # employers scale with |customers|, O(data): no broadcast pin;
+        # Catalyst/AQE broadcast the dim while it fits
+        DimSpec(
+            "company", l, [norm_upper("c_name").alias("employer_name")],
+            "company_sk", broadcast=False,
+        ),
+        DimSpec(
+            "segment", l, [norm_initcap("c_mktsegment").alias("segment_name")],
+            "segment_sk",
+        ),
+        DimSpec(
+            "priority", l, [norm_initcap("o_orderpriority").alias("priority_name")],
+            "priority_sk",
+        ),
+        DimSpec(
+            "location", l,
+            [F.col("n_name").alias("nation_name"), F.col("r_name").alias("region_name")],
+            "location_sk",
+        ),
+        DimSpec(
+            "keyword", doc_keywords(spark, sf_dir),
+            [norm_initcap("keyword_raw").alias("keyword_name")], "keyword_sk",
+        ),
+    ]
 
-    def build(pins: list[DataFrame]) -> dict[str, DataFrame]:
-        l = landing(spark, sf_dir)
-        return build_dims_batched(
-            shared_out=pins,
-            specs=[
-                (
-                    "company",
-                    l,
-                    [norm_upper("c_name").alias("employer_name")],
-                    "company_sk",
-                ),
-                (
-                    "segment",
-                    l,
-                    [norm_initcap("c_mktsegment").alias("segment_name")],
-                    "segment_sk",
-                ),
-                (
-                    "priority",
-                    l,
-                    [norm_initcap("o_orderpriority").alias("priority_name")],
-                    "priority_sk",
-                ),
-                (
-                    "location",
-                    l,
-                    [
-                        F.col("n_name").alias("nation_name"),
-                        F.col("r_name").alias("region_name"),
-                    ],
-                    "location_sk",
-                ),
-                (
-                    "keyword",
-                    doc_keywords(spark, sf_dir),
-                    [norm_initcap("keyword_raw").alias("keyword_name")],
-                    "keyword_sk",
-                ),
-            ]
-        )
+
+def _dims_bundle(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DimSpec], dict[str, DataFrame]]:
+    """The dim specs and every ranked dim from ONE batched pass
+    (operators.dims.build_dims_batched): a tagged union of every dim's
+    normalized keys, one distinct, one grouped two-phase rank. Each
+    registered dim query serves its slice."""
+
+    def build(pins: list[DataFrame]) -> tuple[list[DimSpec], dict[str, DataFrame]]:
+        specs = _dim_specs(spark, sf_dir)
+        return specs, build_dims_batched(specs, shared_out=pins)
 
     return cachereg.memo(spark, sf_dir, "star", "dims_bundle", build)
 
@@ -174,37 +160,32 @@ def _dims_bundle(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 @_memo_persist
 def dim_company(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_COMPANY analog (``dags/spark_etl_script.py:92-95``)."""
-    return _dims_bundle(spark, sf_dir)["company"]
+    return _dims_bundle(spark, sf_dir)[1]["company"]
 
 
 @_memo_persist
 def dim_segment(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_PUBLISHER analog — trim+initcap (``:97-100``)."""
-    return _dims_bundle(spark, sf_dir)["segment"]
+    return _dims_bundle(spark, sf_dir)[1]["segment"]
 
 
 @_memo_persist
 def dim_priority(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_EMPLOYMENT_TYPE analog — trim+initcap (``:102-105``)."""
-    return _dims_bundle(spark, sf_dir)["priority"]
+    return _dims_bundle(spark, sf_dir)[1]["priority"]
 
 
 @_memo_persist
 def dim_location(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_LOCATION analog — multi-column distinct (``:107-110``)."""
-    return _dims_bundle(spark, sf_dir)["location"]
+    return _dims_bundle(spark, sf_dir)[1]["location"]
 
 
 @_memo_persist
 def dim_date(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_DATE analog — calendar attributes (``:112-120``). SK is the
     yyyyMMdd int itself (not a row_number), reference-exact."""
-    return (
-        landing(spark, sf_dir)
-        .select(*date_attributes("o_orderdate"))
-        .filter(F.col("full_date").isNotNull())
-        .distinct()
-    )
+    return build_date_dim(landing(spark, sf_dir), "o_orderdate")
 
 
 def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,7 +203,7 @@ def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_memo_persist
 def dim_keyword(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
     """DIM_SKILL analog (``:141-144``)."""
-    return _dims_bundle(spark, sf_dir)["keyword"]
+    return _dims_bundle(spark, sf_dir)[1]["keyword"]
 
 
 def fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,67 +227,23 @@ def star_wide(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFr
     """The fact join-chain keeping both SKs and dimension names — this
     is simultaneously the fact builder (project SKs) and the BI star
     view V1/V2 (project names): one plan, two consumers."""
-    base = landing(spark, sf_dir)
-    dc = dim_company(spark, sf_dir)
-    ds = dim_segment(spark, sf_dir)
-    dp = dim_priority(spark, sf_dir)
-    dl = dim_location(spark, sf_dir)
+    dims = {
+        "company": dim_company(spark, sf_dir),
+        "segment": dim_segment(spark, sf_dir),
+        "priority": dim_priority(spark, sf_dir),
+        "location": dim_location(spark, sf_dir),
+    }
     dd = dim_date(spark, sf_dir)
-
-    enriched = base.select(
-        "*",
-        norm_upper("c_name").alias("__emp"),
-        norm_initcap("c_mktsegment").alias("__seg"),
-        norm_initcap("o_orderpriority").alias("__prio"),
-        F.to_date("o_orderdate").alias("__odate"),
-    )
-    # dc (employers) scales with |customers| — O(data), never pinned
-    # to broadcast; Catalyst/AQE broadcast it while it fits and flip
-    # to shuffle join past the threshold. The bounded-domain dims
-    # (segment 5, priority 5, location 25, calendar dates) keep the
-    # explicit hint: their size is a property of the SCHEMA, not the
-    # data volume.
-    j = enriched.join(dc, enriched["__emp"] == dc["employer_name"], "left")
-    j = j.join(F.broadcast(ds), j["__seg"] == ds["segment_name"], "left")
-    j = j.join(F.broadcast(dp), j["__prio"] == dp["priority_name"], "left")
-    j = j.join(
-        F.broadcast(dl),
-        (j["n_name"] == dl["nation_name"]) & (j["r_name"] == dl["region_name"]),
-        "left",
-    )
-    j = j.join(F.broadcast(dd), j["__odate"] == dd["full_date"], "left")
-    # order_pk = row_number over o_orderkey, but computed on a narrow
-    # single-column projection with the range/two-phase plan
-    # (operators.ids.ranked_ids — no single-partition window anywhere)
-    # and joined back 1:1 on the unique key: the wide join output
-    # never funnels, and neither do the keys. Same values as a global
-    # window over the joined frame (the oracle's row_number() OVER
-    # (ORDER BY o_orderkey)). The keymap has ONE ROW PER ORDER — a
-    # fact-scale frame — so it is never broadcast-pinned (a pinned
-    # 15M-row build OOMed the sf10 gate); AQE still converts the join
-    # at small SFs where the map genuinely fits.
-    keymap = ranked_ids(
-        base.select("o_orderkey"),
-        ["o_orderkey"],
+    j, _ = join_star(
+        landing(spark, sf_dir),
+        dims,
+        _dims_bundle(spark, sf_dir)[0],
+        "o_orderdate",
+        dd,
+        "o_orderkey",
         "order_pk",
-        # pin_input=True (r13, VERDICT r12 ask #2): r12 set this False
-        # ("the upstream is the persisted landing, skip the input
-        # checkpoint") and jl_fact_checked regressed ~13% in BOTH the
-        # builder's and the driver's r12 runs. r13 A/B of exactly this
-        # flag (5 cold matched-subset passes per side, medians):
-        # pin_input=True wins jl_fact_checked 5.71 vs 5.91 s AND
-        # fact_orders 5.05 vs 5.55 s — the r12 fact_orders win from
-        # False did not reproduce. Reading the narrow o_orderkey
-        # projection from the checkpoint twice (sampling + exchange)
-        # beats scanning the WIDE persisted landing twice: the
-        # checkpoint holds one slim column, the landing cache holds
-        # every enrichment column.
-        pin_input=True,
-        # checkpoint ownership: released with the rest of this
-        # (session, sf_dir)'s pinned frames on eviction
-        pinned_out=pins,
+        pins,
     )
-    j = j.join(keymap, "o_orderkey")
     return j.select(
         F.col("order_pk"),
         "o_orderkey",
@@ -333,12 +270,11 @@ def star_wide(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFr
 def bridge_doc_keyword(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BRIDGE analog: exploded keywords ⋈ dim → distinct pairs
     (``:175-179``)."""
-    dk = dim_keyword(spark, sf_dir)
-    kw = doc_keywords(spark, sf_dir).select(
-        "doc_id", norm_initcap("keyword_raw").alias("keyword_name")
-    )
+    specs, _ = _dims_bundle(spark, sf_dir)
+    kw = next(s for s in specs if s.tag == "keyword")
     return (
-        kw.join(F.broadcast(dk), "keyword_name")
+        kw.source.select("doc_id", *kw.keys)
+        .join(F.broadcast(dim_keyword(spark, sf_dir)), "keyword_name")
         .select("doc_id", "keyword_sk")
         .distinct()
     )

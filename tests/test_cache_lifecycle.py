@@ -54,6 +54,8 @@ _BI_SURFACE = ("fact_orders", "star_wide")  # + every bi_* query
 # one query per remaining memo family: jl_star, dedup_cc, corpus, derby
 _OTHER_FAMILIES = (
     "jl_fact_checked",
+    "jl_fact_fallback_checked",
+    "jl_star_fact",
     "dd_keep_best",
     "dd_minhash_estimate",
     "src_jdbc_landing",

@@ -21,7 +21,7 @@ _DOC_SCHEMA = T.StructType(
 
 def test_build_dim_empty_input_both_modes(spark):
     empty = spark.createDataFrame([], _DOC_SCHEMA)
-    for mode in ("global", "bucketed"):
+    for mode in ("range", "bucketed"):
         dim = build_dim(empty, [F.col("text").alias("k")], "sk", mode=mode)
         assert dim.count() == 0
         assert dim.columns == ["sk", "k"]
@@ -100,6 +100,7 @@ def test_batched_dims_equal_per_dim_build(spark):
     import pyspark.sql.functions as F
 
     from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
+        DimSpec,
         build_dim,
         build_dims_batched,
     )
@@ -107,9 +108,9 @@ def test_batched_dims_equal_per_dim_build(spark):
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     specs = [
-        ("seg", cust, [F.upper(F.col("c_mktsegment")).alias("k")], "sk"),
-        ("prio", orders, [F.col("o_orderpriority").alias("k")], "sk"),
-        (
+        DimSpec("seg", cust, [F.upper(F.col("c_mktsegment")).alias("k")], "sk"),
+        DimSpec("prio", orders, [F.col("o_orderpriority").alias("k")], "sk"),
+        DimSpec(
             "two",
             orders,
             [
@@ -120,7 +121,7 @@ def test_batched_dims_equal_per_dim_build(spark):
         ),
     ]
     batched = build_dims_batched(specs)
-    for tag, src, keys, sk in specs:
+    for tag, src, keys, sk, _ in specs:
         expect = sorted(map(tuple, build_dim(src, keys, sk).collect()))
         got = sorted(map(tuple, batched[tag].collect()))
         assert got == expect, tag

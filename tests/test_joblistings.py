@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import release_pins
 from end_to_end_data_engineering_job_listings_etl_spark.plans.joblistings import (
     build_star_schema,
     synth_job_listings,
@@ -18,7 +19,9 @@ def _now():
 @pytest.fixture(scope="module")
 def star(spark):
     landing = synth_job_listings(spark, 200)
-    return build_star_schema(landing, now=_now()), landing
+    pins = []
+    yield build_star_schema(landing, pins, now=_now()), landing
+    release_pins(pins)
 
 
 def test_all_nine_tables_produced(star):

@@ -71,7 +71,7 @@ def test_window_is_exactly_50_oracled_names():
     assert not missing, f"window names without oracles waste slots: {missing}"
 
 
-@pytest.mark.parametrize("mode", ["range", "global"])
+@pytest.mark.parametrize("mode", ["range"])
 def test_ranked_ids_matches_global_row_number(spark, mode):
     """The scale-mode surrogate-key path must produce the EXACT global
     row_number values (this is what keeps every ANSI-SQL oracle valid),

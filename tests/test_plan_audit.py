@@ -47,6 +47,8 @@ def test_no_cartesian_no_row_python(spark, name):
         "star_wide",
         "jl_fact_checked",
         "jl_fact_fallback_checked",
+        "jl_bridge_checked",
+        "jl_star_fact",
     ],
 )
 def test_fact_paths_have_no_single_partition_stage(spark, name):

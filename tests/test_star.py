@@ -21,8 +21,9 @@ def test_dim_company_keys_dense_and_unique(spark):
     assert sks == list(range(1, len(sks) + 1))
 
 
-def test_bucketed_sk_mode_dense_unique(spark):
-    """Scale-path SK assigner: dense 1..N ids, same key set as global."""
+def test_bucketed_dim_dense_unique(spark):
+    """Bucketed SK assigner: dense 1..N ids, same key set as the ranked
+    dim."""
     from pyspark.sql import functions as F
 
     from end_to_end_data_engineering_job_listings_etl_spark.functions.normalize import norm_upper
