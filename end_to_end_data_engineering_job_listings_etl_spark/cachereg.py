@@ -1,14 +1,23 @@
 """Session memo state: one table owns every memoized frame and pin.
 
 Builders that reuse work across queries (reader plans, the star and
-job-listings stars, the near-dup labels, scratch pins, the Derby
-landing) go through ``memo(spark, sf_dir, family, key, build)``. The
-table is weakly keyed by session; per session it maps
-(sf_dir, family, key) to an entry, most recently used last. An entry
-holds the memoized value, the frames its build pinned, and a release
-action: ``ids.release_pins(frames)`` unless the caller passes another
-one (the Derby landing drops its database and also carries an
-unmanaged-heap estimate, state the block manager cannot see).
+job-listings stars, the near-dup labels, the MinHash estimate, the
+incremental dim upsert, the Derby landing) go through
+``memo(spark, sf_dir, family, key, build)``. The table is weakly keyed
+by session; per session it maps (sf_dir, family, key) to an entry,
+most recently used last. An entry holds the memoized value, the frames
+its build pinned, and a release action: ``ids.release_pins(frames)``
+unless the caller passes another one (the Derby landing drops its
+database and also carries an unmanaged-heap estimate, state the block
+manager cannot see).
+
+Pin contract: every frame that is persisted or checkpointed and
+outlives the call that made it goes into a ``pins`` list, which every
+such operator takes as a required parameter (``operators/ids.py``).
+A memoized builder is one ``memo(..., build)`` call whose
+``build(pins)`` builds and pins; the entry owns that list. A caller
+outside the memo table releases its own list with
+``ids.release_pins``.
 
 ``evict(spark, sf_dir, family)`` is the one release path; ``None`` is
 a wildcard on any axis. Its callers are the eviction scopes:

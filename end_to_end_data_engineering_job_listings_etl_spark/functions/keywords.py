@@ -71,13 +71,3 @@ def extract_keywords_pandas_udf(keywords: Sequence[str] = DEFAULT_KEYWORDS):
     # explicit functionType: `from __future__ import annotations`
     # stringifies hints, which defeats pandas_udf hint inference
     return pandas_udf(_extract, "array<string>")
-
-
-def keyword_flags(
-    col: Column | str, keywords: Sequence[str] = DEFAULT_KEYWORDS
-) -> list[Column]:
-    """One boolean column per keyword (`has_<kw>`) — the wide-flag
-    variant used for per-term analytics."""
-    c = F.col(col) if isinstance(col, str) else col
-    lowered = F.lower(c)
-    return [lowered.contains(kw.lower()).alias(f"has_{kw.lower()}") for kw in keywords]

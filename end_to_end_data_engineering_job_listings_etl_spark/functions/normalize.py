@@ -30,10 +30,3 @@ def parse_string_array(col: Column | str, sep: str = ", ") -> Column:
     array<string>: delete ``[]'"`` then split — reference :132-135."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(F.translate(c, "[]'\"", ""), sep)
-
-
-def null_if_blank(col: Column | str) -> Column:
-    """Map empty-after-trim strings to null (empty-skill filter analog,
-    reference :139)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) != "", c)

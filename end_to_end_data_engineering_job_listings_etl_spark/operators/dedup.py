@@ -42,20 +42,6 @@ def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Groups of exact duplicates (by normalized-text md5): one row per
-    fingerprint with >1 member. Single hash-aggregate."""
-    return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.min(id_col).alias("keep_id"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep one representative (min id) per fingerprint — distributed,
     no full-row shuffle of the text payload beyond the agg."""
@@ -399,11 +385,11 @@ def prefix_filter_pairs(
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
+    pins: list[DataFrame],
     id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 25,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Resolve near-dup candidate pairs into duplicate clusters:
     connected components by iterative min-label propagation. Returns
@@ -429,12 +415,10 @@ def connected_components(
     soon as its successor is materialized, so at most two generations
     are live.
 
-    The returned frame reads the final round's checkpoint. It outlives
-    the call, so its owner releases it: ``pinned_out`` receives that
-    checkpoint for ``ids.release_pins`` (the ``ids.ranked_ids``
-    convention). Without ``pinned_out`` the blocks live until the JVM's
-    ContextCleaner collects the plan. After release, a retained handle
-    fail-stops on access instead of recomputing.
+    The returned frame reads the final round's checkpoint, which
+    ``pins`` receives (the ``operators.ids`` pin contract). After
+    release, a retained handle fail-stops on access instead of
+    recomputing.
     """
     # Both directions from one pass over ``edges``: a union of two
     # projections would plan (and run) the whole edge pipeline twice.
@@ -499,8 +483,7 @@ def connected_components(
         if obs.get["changed"] == 0:
             break
     adj.unpersist()
-    if pinned_out is not None:
-        pinned_out.append(labels)
+    pins.append(labels)
     return labels.select(F.col("__id").alias(id_col), "cluster_id")
 
 

@@ -11,10 +11,10 @@ A star states each ranked dimension once, as a ``DimSpec``:
 ``operators.fact.join_star`` joins the fact on the same key
 expressions. Surrogate keys are the reference's global ``row_number``
 values, computed without a single-partition window
-(``operators.ids``). ``build_dim(mode="bucketed")`` is the one
-alternative: dense md5-bucketed ids that are not in key order
-(SURVEY.md §7.3). ``build_date_dim`` is the calendar dimension, whose
-key is the yyyyMMdd date itself.
+(``operators.ids``). ``build_dim`` is the one alternative: dense
+md5-bucketed ids that are not in key order (SURVEY.md §7.3).
+``build_date_dim`` is the calendar dimension, whose key is the
+yyyyMMdd date itself.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.dates import date_attributes
-from .ids import ranked_ids, ranked_ids_grouped
+from .ids import ranked_ids_grouped
 
 
 class DimSpec(NamedTuple):
@@ -47,83 +47,68 @@ def build_dim(
     df: DataFrame,
     key_exprs: Sequence[Column],
     sk_name: str,
-    mode: str = "range",
     n_buckets: int = 256,
 ) -> DataFrame:
-    """Build a dimension from normalized natural-key expressions.
+    """A dimension with dense surrogate keys assigned within md5 hash
+    buckets: row_number inside a bucket plus the running count of all
+    lower buckets, with no single-partition sort. The ids are dense and
+    unique but not in key order.
 
     ``key_exprs`` must be aliased columns; nulls in the FIRST key column
     are rejected (reference P2 semantics: one natural key per dim, the
     multi-column location dim filters on its first column only —
-    ``dags/spark_etl_script.py:109``). ``mode="range"`` gives the
-    reference's ``row_number() OVER (ORDER BY keys)``;
-    ``mode="bucketed"`` gives dense ids within md5 hash buckets.
+    ``dags/spark_etl_script.py:109``). The bucket hash is md5-based
+    (not Murmur) so the assignment is portable across engines and
+    stays oracle-checkable.
     """
     projected = df.select(*key_exprs)
     key_names = list(projected.columns)
     distinct = projected.filter(F.col(key_names[0]).isNotNull()).distinct()
-    if mode == "range":
-        # pin_input=False: the distinct is a shuffle whose map output
-        # Spark reuses across the sampling and exchange jobs (skipped
-        # stages), so checkpointing it first only adds a job.
-        return ranked_ids(
-            distinct, key_names, sk_name, pin_input=False
-        ).select(sk_name, *key_names)
-    if mode == "bucketed":
-        # Dense ids without a single-partition sort: row_number within a
-        # hash bucket, then add the running count of all lower buckets.
-        # Bucket hash is md5-based (not Murmur) so the assignment is
-        # portable across engines — the scale path stays oracle-checkable.
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.concat_ws("\x1f", *key_names)), 1, 8), 16, 10)
-            .cast("long"),
-            F.lit(n_buckets),
-        ).alias("__bucket")
-        bucketed = distinct.select(bucket, *key_names)
-        w_in = Window.partitionBy("__bucket").orderBy(*key_names)
-        counts = bucketed.groupBy("__bucket").count()
-        # ≤ n_buckets rows: exclusive prefix counts via a broadcast
-        # triangular self-join — a cumulative window here would plan a
-        # single-partition exchange (constant partition keys fold away).
-        ca, cb = counts.alias("ca"), counts.alias("cb")
-        offsets = (
-            ca.join(
-                F.broadcast(cb), F.col("cb.__bucket") < F.col("ca.__bucket"), "left"
-            )
-            .groupBy(F.col("ca.__bucket").alias("__bucket"))
-            .agg(F.coalesce(F.sum("cb.count"), F.lit(0)).alias("__offset"))
+    bucket = F.pmod(
+        F.conv(F.substring(F.md5(F.concat_ws("\x1f", *key_names)), 1, 8), 16, 10)
+        .cast("long"),
+        F.lit(n_buckets),
+    ).alias("__bucket")
+    bucketed = distinct.select(bucket, *key_names)
+    w_in = Window.partitionBy("__bucket").orderBy(*key_names)
+    counts = bucketed.groupBy("__bucket").count()
+    # ≤ n_buckets rows: exclusive prefix counts via a broadcast
+    # triangular self-join — a cumulative window here would plan a
+    # single-partition exchange (constant partition keys fold away).
+    ca, cb = counts.alias("ca"), counts.alias("cb")
+    offsets = (
+        ca.join(F.broadcast(cb), F.col("cb.__bucket") < F.col("ca.__bucket"), "left")
+        .groupBy(F.col("ca.__bucket").alias("__bucket"))
+        .agg(F.coalesce(F.sum("cb.count"), F.lit(0)).alias("__offset"))
+    )
+    return (
+        bucketed.withColumn("__rn", F.row_number().over(w_in))
+        .join(F.broadcast(offsets), "__bucket")
+        .select(
+            (F.col("__rn") + F.col("__offset")).cast("int").alias(sk_name),
+            *key_names,
         )
-        return (
-            bucketed.withColumn("__rn", F.row_number().over(w_in))
-            .join(F.broadcast(offsets), "__bucket")
-            .select(
-                (F.col("__rn") + F.col("__offset")).cast("int").alias(sk_name),
-                *key_names,
-            )
-        )
-    raise ValueError(f"unknown surrogate-key mode: {mode}")
+    )
 
 
 def build_dims_batched(
-    specs: Sequence[DimSpec],
-    shared_out: list[DataFrame] | None = None,
+    specs: Sequence[DimSpec], pins: list[DataFrame]
 ) -> dict[str, DataFrame]:
     """Build MANY dimensions in one pass: union every dim's (tagged,
     normalized, null-rejected) key projection, distinct ONCE, rank
     ONCE with the grouped two-phase plan (``ids.ranked_ids_grouped``)
     — a star build's distinct shuffles and rank pipelines collapse to
-    one of each. Values are identical to per-dim
-    ``build_dim(mode="range")``: per-tag distinct tuples are the
-    dim's own distinct keys, and the per-group rank over aligned key
-    positions (shorter key lists padded with typed nulls, which sort
-    as a constant) is the dim's own ``row_number() OVER (ORDER BY
-    keys ASC NULLS FIRST)``. Aligned key positions across specs must
-    share a type (string keys here — mixed types would need per-position
-    casts).
+    one of each. Each dim's values are the reference's
+    ``row_number() OVER (ORDER BY keys ASC NULLS FIRST)`` over its own
+    distinct non-null keys: per-tag distinct tuples are the dim's own
+    distinct keys, and shorter key lists are padded with typed nulls,
+    which sort as a constant. Aligned key positions across specs must
+    share a type (string keys here — mixed types would need
+    per-position casts).
 
     Returns ``{tag: dim}``. Every dim is a slice of ONE ``persist()``-ed
-    ranked frame; ``shared_out`` receives it and the rank's checkpoint,
-    so the caller's ``cachereg.memo`` entry releases both."""
+    ranked frame; ``pins`` receives it and the rank's checkpoint (the
+    ``operators.ids`` pin contract)."""
     arity = max(len(s.keys) for s in specs)
     parts = []
     names: dict[str, tuple[list[str], str]] = {}
@@ -149,15 +134,12 @@ def build_dims_batched(
         "__tag",
         [f"__k{i}" for i in range(arity)],
         "__sk",
+        pins,
         # the distinct's shuffle output is stage-reused by the
         # sampling and exchange jobs — no input pin needed
         pin_input=False,
-        # hand the internal checkpoint to the same owner as the
-        # persisted frame, so eviction releases BOTH (ids.release_pins)
-        pinned_out=shared_out,
     ).persist()
-    if shared_out is not None:
-        shared_out.append(ranked)
+    pins.append(ranked)
     out: dict[str, DataFrame] = {}
     for tag, (cols, sk_name) in names.items():
         out[tag] = ranked.filter(F.col("__tag") == tag).select(

@@ -66,6 +66,6 @@ def join_star(
     j = j.join(F.broadcast(dim_date), j["__date"] == dim_date["full_date"], "left")
     # pin_input (the default): the range sampling and the exchange both
     # read the one-column checkpoint instead of scanning the wide base
-    pk_map = ranked_ids(base.select(pk_key), [pk_key], pk_name, pinned_out=pins)
+    pk_map = ranked_ids(base.select(pk_key), [pk_key], pk_name, pins)
     j = j.join(pk_map, pk_key).drop("__date", *[h for hs in hidden for h in hs])
     return j, pk_map

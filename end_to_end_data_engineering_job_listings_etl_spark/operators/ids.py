@@ -37,6 +37,12 @@ duplicate/gapped ordinals. The ranged+pid frame is therefore
 consumers read the same pids, and lineage truncation makes loss
 fail-stop instead of silently renumbering. (The checkpointed frame is
 the NARROW key projection, not the caller's wide rows.)
+
+Pin contract: every operator whose result reads a frame it persisted
+or checkpointed takes a required ``pins`` list and appends each such
+frame to it. The caller owns those frames and frees them with
+``release_pins`` — directly, or by building inside ``cachereg.memo``,
+whose entry releases its build's ``pins`` on eviction.
 """
 
 from __future__ import annotations
@@ -67,11 +73,11 @@ def release_pins(frames: Sequence[DataFrame]) -> None:
     """Unpersist the checkpoint blocks behind localCheckpoint-pinned
     frames (``DataFrame.unpersist`` can't: a checkpointed frame is a
     ``LogicalRDD``, not a cache-manager entry — its blocks are pinned
-    at the RDD level). Used by the memo caches' eviction hooks so an
-    evicted dataset leaves ZERO orphaned persisted RDDs. Plain
-    persisted frames in ``frames`` are unpersisted normally. After
-    release, a retained handle to a pinned frame FAIL-STOPS on next
-    access (the module's designed loss semantics)."""
+    at the RDD level), so a released pin list leaves ZERO orphaned
+    persisted RDDs. Plain persisted frames in ``frames`` are
+    unpersisted normally. After release, a retained handle to a pinned
+    frame FAIL-STOPS on next access (the module's designed loss
+    semantics)."""
     for df in frames:
         try:
             df.unpersist()
@@ -87,9 +93,9 @@ def release_pins(frames: Sequence[DataFrame]) -> None:
 def _ranged_with_pid(
     df: DataFrame,
     order_cols: Sequence[Column | str],
+    pins: list[DataFrame],
     n_parts: int | None,
-    pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
+    pin_input: bool,
 ) -> tuple[DataFrame, list[Column]]:
     """Range-repartition on the ordering key and PIN the resulting
     (pid, row) assignment with a lazy localCheckpoint — see module
@@ -109,10 +115,9 @@ def _ranged_with_pid(
         .select(F.spark_partition_id().alias(_PID), "*")
         .localCheckpoint(eager=False)
     )
-    if pinned_out is not None:
-        if pin_input:
-            pinned_out.append(pinned)
-        pinned_out.append(ranged)
+    if pin_input:
+        pins.append(pinned)
+    pins.append(ranged)
     return ranged, sort_exprs
 
 
@@ -138,22 +143,18 @@ def ranked_ids(
     df: DataFrame,
     order_cols: Sequence[Column | str],
     id_name: str,
+    pins: list[DataFrame],
     start: int = 0,
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``start + row_number() OVER (ORDER BY order_cols)`` as an INT
     column, computed with the range/two-phase plan above. Output
-    columns: ``df``'s columns plus ``id_name``. ``pin_input=False``
-    skips the input checkpoint when the caller's upstream is already
-    persisted (cheap to scan twice). ``pinned_out`` receives the
-    checkpointed frames so memoizing callers can ``release_pins``
-    them on eviction — without it the checkpoint blocks live until
-    the JVM's ContextCleaner notices the plan is garbage."""
-    ranged, sort_exprs = _ranged_with_pid(
-        df, order_cols, n_parts, pin_input, pinned_out
-    )
+    columns: ``df``'s columns plus ``id_name``. ``pins`` receives the
+    checkpointed frames (the module's pin contract).
+    ``pin_input=False`` skips the input checkpoint when the caller's
+    upstream is already persisted (cheap to scan twice)."""
+    ranged, sort_exprs = _ranged_with_pid(df, order_cols, pins, n_parts, pin_input)
     w_in = Window.partitionBy(_PID).orderBy(*sort_exprs)
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
     out = _with_offsets(numbered, F.lit(1))
@@ -170,10 +171,10 @@ def ranked_ids_grouped(
     group_col: str,
     order_cols: Sequence[Column | str],
     id_name: str,
+    pins: list[DataFrame],
     start: int = 0,
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-group ``start + row_number() OVER (PARTITION BY group
     ORDER BY order_cols)`` with the same range/two-phase plan — the
@@ -188,7 +189,7 @@ def ranked_ids_grouped(
     that group's own lower partitions only — values are identical to
     running ``ranked_ids`` per group separately."""
     ranged, _ = _ranged_with_pid(
-        df, [group_col, *order_cols], n_parts, pin_input, pinned_out
+        df, [group_col, *order_cols], pins, n_parts, pin_input
     )
     w_in = Window.partitionBy(_PID, group_col).orderBy(*_as_sort_exprs(order_cols))
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
@@ -221,18 +222,16 @@ def exclusive_prefix_sum(
     order_cols: Sequence[Column | str],
     weight_col: str,
     out_name: str,
+    pins: list[DataFrame],
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``sum(weight) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING AND 1 PRECEDING)`` (0 for the first row) via the same
     two-phase plan — the running-start form used to seed dense key
     blocks (e.g. first ordinal of each duplicate-tuple group).
-    ``pin_input`` / ``pinned_out`` as in ``ranked_ids``."""
-    ranged, sort_exprs = _ranged_with_pid(
-        df, order_cols, n_parts, pin_input, pinned_out
-    )
+    ``pins`` / ``pin_input`` as in ``ranked_ids``."""
+    ranged, sort_exprs = _ranged_with_pid(df, order_cols, pins, n_parts, pin_input)
     w_in = (
         Window.partitionBy(_PID)
         .orderBy(*sort_exprs)

@@ -54,19 +54,21 @@ def upsert_dim(
     existing: DataFrame,
     keys: Sequence[str],
     sk_name: str,
+    pins: list[DataFrame],
 ) -> DataFrame:
     """Append-only dimension upsert: new natural keys get surrogate
     keys continuing after max(existing sk) — assigned via the
     range/two-phase rank (``operators.ids``), so a large backfill of
     new keys never funnels through a one-partition window. Returns the
-    unioned dim."""
+    unioned dim; ``pins`` receives the rank's checkpoints (the
+    ``operators.ids`` pin contract)."""
     from .ids import ranked_ids
 
     new_rows = anti_join_new(incoming.select(*keys).distinct(), existing, keys)
     start = existing.agg(F.coalesce(F.max(sk_name), F.lit(0)).alias("m")).collect()[0][
         "m"
     ]
-    new_with_sk = ranked_ids(new_rows, list(keys), sk_name, start=start).select(
+    new_with_sk = ranked_ids(new_rows, list(keys), sk_name, pins, start=start).select(
         sk_name, *keys
     )
     return existing.select(sk_name, *keys).unionByName(new_with_sk)

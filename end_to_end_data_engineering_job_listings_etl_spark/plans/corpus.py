@@ -131,25 +131,39 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT shingle-set Jaccard — the measurement a production dedup
     runs to tune k/bands/threshold.
 
-    Scale shape (round-7 rework of the r6 judge's weak flag #1): ALL
-    per-pair machinery — signatures, band buckets, the shingle
-    inverted-index intersection — runs per DISTINCT text fingerprint,
-    never per document. Exact duplicates share a fingerprint (md5 of
-    the same whitespace/case normalization the tokenizer applies, so
-    fp equality ⟹ identical token stream ⟹ identical signature and
-    shingle set), and a boilerplate-heavy corpus has dup multiplicity
-    that GROWS with scale: verifying each doc pair separately made
-    this query quadratic inside dup groups (17×/decade measured
-    sf0.1→sf1). Same-fp pairs need no verification at all — their
-    Jaccard is exactly 1 and they agree on every band — and
-    distinct-fp metrics are computed once and fanned out to doc pairs
-    by two hash joins whose cost is the (semantically demanded)
-    output size. Values are bit-identical to the per-doc plan,
-    including the edge the r7 advice flagged: docs shorter than the
-    shingle width have empty shingle sets, were never candidates in
-    the per-doc plan, and are excluded from same-fp emission by a
-    left-semi against the signature frame (the oracle mirrors the
-    gate with an IN (SELECT doc_id FROM signatures))."""
+    Memoized per (session, sf_dir) in the ``corpus`` family; the entry
+    owns every frame the build pins.
+
+    Scale shape: ALL per-pair machinery — signatures, band buckets,
+    the shingle inverted-index intersection — runs per DISTINCT text
+    fingerprint, never per document. Exact duplicates share a
+    fingerprint (md5 of the same whitespace/case normalization the
+    tokenizer applies, so fp equality ⟹ identical token stream ⟹
+    identical signature and shingle set), and a boilerplate-heavy
+    corpus has dup multiplicity that GROWS with scale: verifying each
+    doc pair separately would make this query quadratic inside dup
+    groups. Same-fp pairs need no verification at all — their Jaccard
+    is exactly 1 and they agree on every band — and distinct-fp
+    metrics are computed once and fanned out to doc pairs by two hash
+    joins whose cost is the (semantically demanded) output size.
+    Values are bit-identical to the per-doc plan, including one edge:
+    docs shorter than the shingle width have empty shingle sets, were
+    never candidates in the per-doc plan, and are excluded from
+    same-fp emission by a left-semi against the signature frame (the
+    oracle mirrors the gate with an IN (SELECT doc_id FROM
+    signatures))."""
+    return cachereg.memo(
+        spark,
+        sf_dir,
+        "corpus",
+        "minhash",
+        lambda pins: _minhash_estimate(spark, sf_dir, pins),
+    )
+
+
+def _minhash_estimate(
+    spark: SparkSession, sf_dir: str, pins: list[DataFrame]
+) -> DataFrame:
     from ..functions.text import word_shingles
 
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
@@ -190,11 +204,10 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # The candidate shingle frame feeds FOUR consumers (both sides of
-    # the intersection self-join + the sz_a/sz_b size lookups). r12's
-    # before-plan showed the semi-join + explode re-planned per
-    # consumer (4 explodes, 8 fp_pairs scans); both frames are
-    # candidate-bounded (≪ corpus), so pin them once like fp_pairs
-    # (r13, VERDICT r12 ask #3): one explode, one sizes aggregate.
+    # the intersection self-join + the sz_a/sz_b size lookups); unpinned,
+    # each would re-plan the semi-join + explode. Both frames are
+    # candidate-bounded (≪ corpus), so pin them once like fp_pairs:
+    # one explode, one sizes aggregate.
     sh = (
         reps.join(cand_fps, "fp", "left_semi")
         .select("fp", F.explode(word_shingles("text", _SHINGLE_K)).alias("sh"))
@@ -205,16 +218,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("sz"))
         .localCheckpoint(eager=False)
     )
-    # the latest call's scratch frames stay pinned per (session,
-    # sf_dir); the superseded generation is released first
-    cachereg.evict(spark, sf_dir, family="corpus")
-    cachereg.memo(
-        spark,
-        sf_dir,
-        "corpus",
-        "minhash_scratch",
-        lambda pins: pins.extend([reps, sigs, fp_pairs, sh, sizes]),
-    )
+    pins.extend([reps, sigs, fp_pairs, sh, sizes])
     a = sh.select(F.col("fp").alias("fp_a"), "sh")
     b = sh.select(F.col("fp").alias("fp_b"), "sh")
     inter = (
@@ -264,7 +268,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a doc shorter than the shingle width has an EMPTY shingle set,
     # so the per-doc plan never gave it a signature or band row and it
     # was never a candidate — its exact duplicates must not surface
-    # here either (r7 advice #1).
+    # here either.
     same_fp = reps.filter(F.col("n_docs") >= 2).join(
         sigs.select("fp"), "fp", "left_semi"
     ).select(

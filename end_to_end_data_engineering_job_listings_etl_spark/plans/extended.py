@@ -656,7 +656,6 @@ def dim_company_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         landing(spark, sf_dir),
         [norm_upper("c_name").alias("employer_name")],
         "company_sk",
-        mode="bucketed",
         n_buckets=16,
     )
 

@@ -18,10 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table
 from ..functions.keywords import extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
+from ..operators.ids import ranked_ids
 from ..operators.incremental import (
     filter_after,
     filter_upto,
@@ -165,23 +167,29 @@ def inc_watermark_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def inc_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: incremental dimension upsert — types seen before the
     watermark keep their SKs; genuinely-new post-watermark keys get
-    appended SKs (anti-join + offset row_number)."""
-    ev = load_table(spark, sf_dir, "events")
-    before = filter_upto(ev, "ts", _WM)
-    existing = (
-        before.select(norm_upper("event_type").alias("event_type_name"))
-        .filter(F.col("event_type_name").isNotNull())
-        .distinct()
-    )
-    from ..operators.ids import ranked_ids
+    appended SKs (anti-join + offset row_number). Memoized per
+    (session, sf_dir) in the ``incremental`` family, whose entry owns
+    both ranks' checkpoints."""
 
-    existing_dim = ranked_ids(
-        existing, ["event_type_name"], "event_type_sk"
-    ).select("event_type_sk", "event_type_name")
-    incoming = filter_after(ev, "ts", _WM).select(
-        norm_upper("event_type").alias("event_type_name")
-    )
-    return upsert_dim(incoming, existing_dim, ["event_type_name"], "event_type_sk")
+    def build(pins: list[DataFrame]) -> DataFrame:
+        ev = load_table(spark, sf_dir, "events")
+        existing = (
+            filter_upto(ev, "ts", _WM)
+            .select(norm_upper("event_type").alias("event_type_name"))
+            .filter(F.col("event_type_name").isNotNull())
+            .distinct()
+        )
+        existing_dim = ranked_ids(
+            existing, ["event_type_name"], "event_type_sk", pins
+        ).select("event_type_sk", "event_type_name")
+        incoming = filter_after(ev, "ts", _WM).select(
+            norm_upper("event_type").alias("event_type_name")
+        )
+        return upsert_dim(
+            incoming, existing_dim, ["event_type_name"], "event_type_sk", pins
+        )
+
+    return cachereg.memo(spark, sf_dir, "incremental", "upsert_dim", build)
 
 
 def inc_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -82,8 +82,8 @@ def _fact_base(landing: DataFrame, now: Column, pins: list[DataFrame]) -> DataFr
         _NK_ORDER,
         "__cnt",
         "__start",
+        pins,
         pin_input=False,
-        pinned_out=pins,
     ).select(
         *[F.col(c).alias(f"__k{i}") for i, c in enumerate(_NK_ORDER)],
         "__start",
@@ -177,7 +177,7 @@ def build_star_schema(
     to current_timestamp() like the reference's utcnow())."""
     base = _fact_base(landing, F.current_timestamp() if now is None else now, pins)
     specs = _dim_specs(base)
-    dims = build_dims_batched(specs, shared_out=pins)
+    dims = build_dims_batched(specs, pins)
     dim_date = build_date_dim(base, "job_posted_at_utc")
     dim_job_details = base.select(
         F.col("job_natural_key").alias("job_sk"),
@@ -277,8 +277,7 @@ def landing_from_orders(
     if not with_natural_key:
         return out.drop("o_orderkey")
     nk_map = ranked_ids(
-        out.select("o_orderkey", *_NK_ORDER), _NK_ORDER, "job_natural_key",
-        pinned_out=pins,
+        out.select("o_orderkey", *_NK_ORDER), _NK_ORDER, "job_natural_key", pins
     ).select("o_orderkey", "job_natural_key")
     # one row per order: fact-scale, no broadcast pin
     cols = out.columns[1:]

@@ -438,9 +438,12 @@ def stream_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     populate_star_schema semantics) to each micro-batch, persisting
     the dim to parquet between batches. After the availableNow drain
     the dim holds every distinct natural key exactly once, with dense
-    surrogate keys — checked against batch DISTINCT + row_number."""
+    surrogate keys — checked against batch DISTINCT + row_number.
+    Each batch releases its rank's pins once its write has landed, so
+    the query leaves nothing pinned."""
     import shutil
 
+    from ..operators.ids import release_pins
     from ..operators.incremental import upsert_dim
     from ..streaming.watermark import events_stream_dir, stream_events
 
@@ -457,15 +460,19 @@ def stream_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             existing = s.read.parquet(target)
         else:
             existing = s.createDataFrame([], "type_sk int, type_name string")
-        merged = upsert_dim(bdf, existing, ["type_name"], "type_sk")
         out = target + "__tmp"
-        merged.write.mode("overwrite").parquet(out)
+        pins: list[DataFrame] = []
+        try:
+            merged = upsert_dim(bdf, existing, ["type_name"], "type_sk", pins)
+            merged.write.mode("overwrite").parquet(out)
+        finally:
+            release_pins(pins)
         shutil.rmtree(target, ignore_errors=True)
         os.rename(out, target)
 
-    # no state sizing (r13, VERDICT r12 #6): foreachBatch carries NO
-    # keyed state store — cross-batch state lives in the parquet
-    # snapshot, and each batch's merge is a plain batch job
+    # no state sizing: foreachBatch carries NO keyed state store —
+    # cross-batch state lives in the parquet snapshot, and each batch's
+    # merge is a plain batch job
     q = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt)

@@ -18,8 +18,11 @@ core. Domain mapping (reference → synthetic):
 Each ranked dim is stated once, in ``_dim_specs``: the dims are ranked
 in one batched pass (``operators.dims.build_dims_batched``) and the
 fact is ``operators.fact.join_star`` over the same specs. The landing,
-the dims and the star view are memoized and persisted per (session,
-sf_dir) in the ``star`` family of ``cachereg``.
+the ranked dims, the date dim and the star view are memoized and
+persisted per (session, sf_dir) in the ``star`` family of
+``cachereg`` — the reference's ``.cache()`` cut points
+(``dags/spark_etl_script.py:146-153``). Each ranked dim query is a
+slice of the one persisted ranked frame.
 
 Every query here has a colocated DuckDB oracle (ORACLES) sharing the
 same CTE text, so Spark results hash-match ANSI SQL exactly.
@@ -40,29 +43,6 @@ from ..operators.fact import join_star
 # ---------------------------------------------------------------------------
 # Spark builders
 # ---------------------------------------------------------------------------
-
-
-def _memo_persist(fn):
-    """Memoize + persist a builder per (session, sf_dir): the BI
-    surface re-derives dims and the star view for every query — with
-    the memo they materialize once per session and every later query
-    starts from InMemoryTableScan (the reference's 8× .cache() at the
-    same cut points, ``dags/spark_etl_script.py:146-153``). ``fn`` is
-    called as ``fn(spark, sf_dir, pins)`` and appends any frame it pins
-    itself to ``pins``; the memo entry releases them with the persisted
-    result."""
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        def build(pins: list[DataFrame]) -> DataFrame:
-            df = fn(spark, sf_dir, pins).persist()
-            pins.append(df)
-            return df
-
-        return cachereg.memo(spark, sf_dir, "star", fn.__name__, build)
-
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
 
 
 def landing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,40 +132,41 @@ def _dims_bundle(
 
     def build(pins: list[DataFrame]) -> tuple[list[DimSpec], dict[str, DataFrame]]:
         specs = _dim_specs(spark, sf_dir)
-        return specs, build_dims_batched(specs, shared_out=pins)
+        return specs, build_dims_batched(specs, pins)
 
     return cachereg.memo(spark, sf_dir, "star", "dims_bundle", build)
 
 
-@_memo_persist
-def dim_company(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_company(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_COMPANY analog (``dags/spark_etl_script.py:92-95``)."""
     return _dims_bundle(spark, sf_dir)[1]["company"]
 
 
-@_memo_persist
-def dim_segment(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_PUBLISHER analog — trim+initcap (``:97-100``)."""
     return _dims_bundle(spark, sf_dir)[1]["segment"]
 
 
-@_memo_persist
-def dim_priority(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_EMPLOYMENT_TYPE analog — trim+initcap (``:102-105``)."""
     return _dims_bundle(spark, sf_dir)[1]["priority"]
 
 
-@_memo_persist
-def dim_location(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_LOCATION analog — multi-column distinct (``:107-110``)."""
     return _dims_bundle(spark, sf_dir)[1]["location"]
 
 
-@_memo_persist
-def dim_date(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_DATE analog — calendar attributes (``:112-120``). SK is the
     yyyyMMdd int itself (not a row_number), reference-exact."""
-    return build_date_dim(landing(spark, sf_dir), "o_orderdate")
+
+    def build(pins: list[DataFrame]) -> DataFrame:
+        df = build_date_dim(landing(spark, sf_dir), "o_orderdate").persist()
+        pins.append(df)
+        return df
+
+    return cachereg.memo(spark, sf_dir, "star", "dim_date", build)
 
 
 def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,8 +181,7 @@ def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_persist
-def dim_keyword(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def dim_keyword(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIM_SKILL analog (``:141-144``)."""
     return _dims_bundle(spark, sf_dir)[1]["keyword"]
 
@@ -222,49 +202,48 @@ def fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_persist
-def star_wide(spark: SparkSession, sf_dir: str, pins: list[DataFrame]) -> DataFrame:
+def star_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fact join-chain keeping both SKs and dimension names — this
     is simultaneously the fact builder (project SKs) and the BI star
     view V1/V2 (project names): one plan, two consumers."""
-    dims = {
-        "company": dim_company(spark, sf_dir),
-        "segment": dim_segment(spark, sf_dir),
-        "priority": dim_priority(spark, sf_dir),
-        "location": dim_location(spark, sf_dir),
-    }
-    dd = dim_date(spark, sf_dir)
-    j, _ = join_star(
-        landing(spark, sf_dir),
-        dims,
-        _dims_bundle(spark, sf_dir)[0],
-        "o_orderdate",
-        dd,
-        "o_orderkey",
-        "order_pk",
-        pins,
-    )
-    return j.select(
-        F.col("order_pk"),
-        "o_orderkey",
-        "company_sk",
-        "employer_name",
-        "segment_sk",
-        "segment_name",
-        "priority_sk",
-        "priority_name",
-        "location_sk",
-        "nation_name",
-        "region_name",
-        "date_sk",
-        "full_date",
-        "month_name",
-        "month_number",
-        "quarter_number",
-        "year_number",
-        "o_totalprice",
-        F.lit(1).alias("order_count"),
-    )
+
+    def build(pins: list[DataFrame]) -> DataFrame:
+        specs, dims = _dims_bundle(spark, sf_dir)
+        j, _ = join_star(
+            landing(spark, sf_dir),
+            dims,
+            specs,
+            "o_orderdate",
+            dim_date(spark, sf_dir),
+            "o_orderkey",
+            "order_pk",
+            pins,
+        )
+        df = j.select(
+            F.col("order_pk"),
+            "o_orderkey",
+            "company_sk",
+            "employer_name",
+            "segment_sk",
+            "segment_name",
+            "priority_sk",
+            "priority_name",
+            "location_sk",
+            "nation_name",
+            "region_name",
+            "date_sk",
+            "full_date",
+            "month_name",
+            "month_number",
+            "quarter_number",
+            "year_number",
+            "o_totalprice",
+            F.lit(1).alias("order_count"),
+        ).persist()
+        pins.append(df)
+        return df
+
+    return cachereg.memo(spark, sf_dir, "star", "star_wide", build)
 
 
 def bridge_doc_keyword(spark: SparkSession, sf_dir: str) -> DataFrame:

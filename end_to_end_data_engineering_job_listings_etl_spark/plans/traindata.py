@@ -140,7 +140,7 @@ def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("doc_id") < _JACCARD_MAX_ID)
         edges = D.jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
         return D.connected_components(
-            docs.select("doc_id"), edges, id_col="doc_id", pinned_out=pins
+            docs.select("doc_id"), edges, pins, id_col="doc_id"
         )
 
     return cachereg.memo(spark, sf_dir, "dedup_cc", "labels", build)

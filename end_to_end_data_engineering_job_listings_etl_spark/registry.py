@@ -70,8 +70,8 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
     owns the SparkSession; timestamps in the parquet are UTC instants,
     so date derivation must happen in UTC regardless of host TZ.
 
-    Also the engine's QUERY BOUNDARY (r9 verdict #1): before each
-    registry query — the only point where no memo build is in flight —
+    Also the engine's QUERY BOUNDARY: before each registry query —
+    the only point where no memo build is in flight —
     ``cachereg.query_boundary`` bounds within-dataset session state
     (evicts least-recently-touched family memos past the state budget,
     drops terminated streaming handles), so a long-lived driver

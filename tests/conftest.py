@@ -19,6 +19,18 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def pins():
+    """The pin list an operator that persists or checkpoints frames
+    takes (the ``operators.ids`` pin contract); released after the
+    test."""
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import release_pins
+
+    out = []
+    yield out
+    release_pins(out)
+
+
 @pytest.fixture(scope="session")
 def duck():
     from tests.oracle_check import duckdb_conn

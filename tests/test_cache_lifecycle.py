@@ -1,9 +1,10 @@
 """Cache lifecycle (cachereg) and localCheckpoint loss semantics.
 
-VERDICT r4 items 4 and 5: automatic eviction of the per-(session,
-sf_dir) memo caches (LRU dataset cap + session-stop hook), and proof
-that operators/ids.py's correctness pin FAIL-STOPS on checkpoint loss
-instead of silently renumbering.
+Automatic eviction of the per-(session, sf_dir) memo caches (LRU
+dataset cap + session-stop hook), no persisted RDD left behind by any
+memo family after eviction, and proof that operators/ids.py's
+correctness pin FAIL-STOPS on checkpoint loss instead of silently
+renumbering.
 """
 
 from __future__ import annotations
@@ -51,7 +52,9 @@ def _drop_persistent_blocks(spark, only_ids=None) -> None:
 
 
 _BI_SURFACE = ("fact_orders", "star_wide")  # + every bi_* query
-# one query per remaining memo family: jl_star, dedup_cc, corpus, derby
+# one query per remaining memo family (jl_star, dedup_cc, corpus,
+# derby, incremental), plus queries that pin frames they release
+# themselves
 _OTHER_FAMILIES = (
     "jl_fact_checked",
     "jl_fact_fallback_checked",
@@ -59,6 +62,8 @@ _OTHER_FAMILIES = (
     "dd_keep_best",
     "dd_minhash_estimate",
     "src_jdbc_landing",
+    "inc_upsert_dim",
+    "stream_upsert_dim",
 )
 
 
@@ -84,7 +89,9 @@ def test_two_datasets_full_bi_zero_orphans(spark):
     created = _persistent_ids(spark) - baseline
     assert created  # the memos really did pin frames
     families = {f for _, f, _ in _entries(spark)}
-    assert families == {"catalog", "star", "jl_star", "dedup_cc", "corpus", "derby"}
+    assert families == {
+        "catalog", "star", "jl_star", "dedup_cc", "corpus", "derby", "incremental"
+    }
     assert cachereg.unmanaged_estimates(spark)["derby"] > 0
     cachereg.evict(spark)
     assert not (_persistent_ids(spark) & created)  # zero orphans
@@ -159,8 +166,8 @@ def test_real_session_is_stop_hooked(spark):
     assert getattr(spark, "_sg_cache_stop_hooked", False)
 
 
-def test_local_checkpoint_loss_fail_stop(spark):
-    """VERDICT r4 item 5: ids.py pins the ranged+pid frame with
+def test_local_checkpoint_loss_fail_stop(spark, pins):
+    """ids.py pins the ranged+pid frame with
     localCheckpoint so pid misalignment is impossible — and LOSS of
     the checkpoint must fail-stop (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
     never silently renumber."""
@@ -170,7 +177,7 @@ def test_local_checkpoint_loss_fail_stop(spark):
     try:
         baseline = _persistent_ids(spark)
         df = spark.range(0, 1000, 1, 8).select(F.col("id").alias("k"))
-        out = ranked_ids(df, ["k"], "sk")
+        out = ranked_ids(df, ["k"], "sk", pins)
         assert out.count() == 1000  # materializes the checkpoint
         created = _persistent_ids(spark) - baseline
         assert created
@@ -186,7 +193,7 @@ def test_local_checkpoint_loss_fail_stop(spark):
 
 def test_connected_components_pins_released_on_reinvocation(spark):
     """connected_components hands its final labels checkpoint to the
-    caller through ``pinned_out`` and keeps nothing itself; the
+    caller through ``pins`` and keeps nothing itself; the
     near-dup labels memo owns that pin. Re-invoking the cluster
     queries reuses it — at most ONE labels checkpoint lives per
     (session, dataset) — and cachereg eviction releases it."""
@@ -200,7 +207,7 @@ def test_connected_components_pins_released_on_reinvocation(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     pins = []
-    out = dedup.connected_components(verts, edges, pinned_out=pins)
+    out = dedup.connected_components(verts, edges, pins)
     assert out.count() == 100
     assert len(pins) == 1
     assert _persistent_ids(spark) - baseline  # the checkpoint is pinned
@@ -338,7 +345,7 @@ def test_evictor_failure_does_not_wedge_eviction():
 
 
 # ---------------------------------------------------------------------------
-# Within-dataset state budget (r9 verdict #1): query_boundary evicts
+# Within-dataset state budget: query_boundary evicts
 # least-recently-touched FAMILY memos once pinned state exceeds the
 # budget, keeping the two most-recently-touched families (the active
 # burst's own memo plus the catalog scans nested under it).
@@ -411,8 +418,8 @@ def test_unmanaged_note_and_derby_drop(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-11 additions: env-guard on the budget override (ADVICE r10 #1),
-# boundary observability (VERDICT r10 #7), unmanaged-estimate accessor.
+# Env guard on the budget override, boundary observability, and the
+# unmanaged-estimate accessor.
 # ---------------------------------------------------------------------------
 
 

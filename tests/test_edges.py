@@ -9,7 +9,11 @@ from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords impor
 from end_to_end_data_engineering_job_listings_etl_spark.functions.relative_time import parse_relative_time
 from end_to_end_data_engineering_job_listings_etl_spark.functions.text import word_shingles
 from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import jaccard_pairs, minhash_signature
-from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import build_dim
+from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
+    DimSpec,
+    build_dim,
+    build_dims_batched,
+)
 
 _DOC_SCHEMA = T.StructType(
     [
@@ -19,19 +23,26 @@ _DOC_SCHEMA = T.StructType(
 )
 
 
-def test_build_dim_empty_input_both_modes(spark):
+def _both_dim_builders(df, pins):
+    """The ranked (``build_dims_batched`` with one spec) and the
+    bucketed (``build_dim``) dimension over ``text`` as ``k``."""
+    keys = [F.col("text").alias("k")]
+    ranked = build_dims_batched([DimSpec("t", df, keys, "sk")], pins)["t"]
+    return ranked, build_dim(df, keys, "sk")
+
+
+def test_build_dim_empty_input_both_modes(spark, pins):
     empty = spark.createDataFrame([], _DOC_SCHEMA)
-    for mode in ("range", "bucketed"):
-        dim = build_dim(empty, [F.col("text").alias("k")], "sk", mode=mode)
+    for dim in _both_dim_builders(empty, pins):
         assert dim.count() == 0
         assert dim.columns == ["sk", "k"]
 
 
-def test_build_dim_null_keys_rejected(spark):
+def test_build_dim_null_keys_rejected(spark, pins):
     df = spark.createDataFrame([(1, "a"), (2, None), (3, "a")], _DOC_SCHEMA)
-    dim = build_dim(df, [F.col("text").alias("k")], "sk")
-    rows = dim.collect()
-    assert [(r["sk"], r["k"]) for r in rows] == [(1, "a")]
+    for dim in _both_dim_builders(df, pins):
+        rows = dim.collect()
+        assert [(r["sk"], r["k"]) for r in rows] == [(1, "a")]
 
 
 def test_extract_keywords_null_and_empty_text(spark):
@@ -69,7 +80,7 @@ def test_jaccard_single_doc_no_pairs(spark):
     assert jaccard_pairs(df, "text", "doc_id", threshold=0.0).count() == 0
 
 
-def test_ranked_ids_partition_count_independent(spark):
+def test_ranked_ids_partition_count_independent(spark, pins):
     """The driver owns its SparkSession; its shuffle-partition default
     (200) differs from ours (cpus). Surrogate-key VALUES must not
     depend on it: the range/two-phase rank is partition-count-
@@ -83,27 +94,22 @@ def test_ranked_ids_partition_count_independent(spark):
     keys = cust.select(F.upper("c_name").alias("k")).distinct()
     expect = sorted(
         (r["k"], r["sk"])
-        for r in ranked_ids(keys, ["k"], "sk", n_parts=32).collect()
+        for r in ranked_ids(keys, ["k"], "sk", pins, n_parts=32).collect()
     )
     for n in (1, 3, 200):
         got = sorted(
             (r["k"], r["sk"])
-            for r in ranked_ids(keys, ["k"], "sk", n_parts=n).collect()
+            for r in ranked_ids(keys, ["k"], "sk", pins, n_parts=n).collect()
         )
         assert got == expect, f"n_parts={n} diverged"
 
 
-def test_batched_dims_equal_per_dim_build(spark):
-    """build_dims_batched must produce exactly build_dim(mode=range)'s
-    (sk, keys) rows for every spec — including a multi-column dim
-    whose shorter siblings are null-padded in the shared frame."""
-    import pyspark.sql.functions as F
-
-    from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
-        DimSpec,
-        build_dim,
-        build_dims_batched,
-    )
+def test_batched_dims_equal_per_dim_build(spark, pins):
+    """build_dims_batched must produce exactly each dim's own global
+    ``row_number() OVER (ORDER BY keys)`` over its distinct non-null
+    keys, as (sk, keys) rows for every spec — including a multi-column
+    dim whose shorter siblings are null-padded in the shared frame."""
+    from pyspark.sql import Window
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -120,9 +126,19 @@ def test_batched_dims_equal_per_dim_build(spark):
             "sk",
         ),
     ]
-    batched = build_dims_batched(specs)
+    batched = build_dims_batched(specs, pins)
     for tag, src, keys, sk, _ in specs:
-        expect = sorted(map(tuple, build_dim(src, keys, sk).collect()))
+        projected = src.select(*keys)
+        names = projected.columns
+        ref = (
+            projected.filter(F.col(names[0]).isNotNull())
+            .distinct()
+            .select(
+                F.row_number().over(Window.orderBy(*names)).cast("int").alias(sk),
+                *names,
+            )
+        )
+        expect = sorted(map(tuple, ref.collect()))
         got = sorted(map(tuple, batched[tag].collect()))
         assert got == expect, tag
 

@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from end_to_end_data_engineering_job_listings_etl_spark import registry
 
 from tests.oracle_check import duckdb_conn
@@ -71,28 +69,31 @@ def test_window_is_exactly_50_oracled_names():
     assert not missing, f"window names without oracles waste slots: {missing}"
 
 
-@pytest.mark.parametrize("mode", ["range"])
-def test_ranked_ids_matches_global_row_number(spark, mode):
+def test_ranked_ids_matches_global_row_number(spark, pins):
     """The scale-mode surrogate-key path must produce the EXACT global
     row_number values (this is what keeps every ANSI-SQL oracle valid),
     including under duplicate ordering keys and nulls."""
     import pyspark.sql.functions as F
 
-    from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import build_dim
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
+        DimSpec,
+        build_dims_batched,
+    )
 
     df = spark.range(2000).select(
         F.when(F.col("id") % 13 != 0, (F.col("id") * 7919) % 500)
         .cast("string")
         .alias("k")
     )
-    dim = build_dim(df, [F.col("k").alias("key_name")], "sk", mode=mode)
+    spec = DimSpec("k", df, [F.col("k").alias("key_name")], "sk")
+    dim = build_dims_batched([spec], pins)["k"]
     rows = sorted((r["key_name"], r["sk"]) for r in dim.collect())
-    # distinct non-null keys, ranked 1..n in sort order
-    keys = sorted({r[0] for r in rows})
+    # distinct non-null keys, ranked 1..n in Python sort order
+    keys = sorted({r["k"] for r in df.collect()} - {None})
     assert rows == [(k, i + 1) for i, k in enumerate(keys)]
 
 
-def test_ranked_ids_edge_cases(spark):
+def test_ranked_ids_edge_cases(spark, pins):
     """Dense 1..n ids under: empty input, duplicate keys (ties get
     arbitrary order but ids stay dense+unique and key-blocks stay
     ordered), NULL keys first — and the weighted exclusive prefix."""
@@ -104,10 +105,10 @@ def test_ranked_ids_edge_cases(spark):
     )
 
     empty = spark.range(0).select(F.col("id").cast("string").alias("k"))
-    assert ranked_ids(empty, ["k"], "rk").count() == 0
+    assert ranked_ids(empty, ["k"], "rk", pins).count() == 0
 
     dup = spark.range(100).select((F.col("id") % 7).cast("string").alias("k"))
-    rows = ranked_ids(dup, ["k"], "rk").collect()
+    rows = ranked_ids(dup, ["k"], "rk", pins).collect()
     assert sorted(r["rk"] for r in rows) == list(range(1, 101))
     by_key: dict[str, list[int]] = {}
     for r in rows:
@@ -120,7 +121,7 @@ def test_ranked_ids_edge_cases(spark):
     nulls = spark.range(10).select(
         F.when(F.col("id") % 2 == 0, F.col("id").cast("string")).alias("k")
     )
-    rows = ranked_ids(nulls, ["k"], "rk").collect()
+    rows = ranked_ids(nulls, ["k"], "rk", pins).collect()
     null_ids = [r["rk"] for r in rows if r["k"] is None]
     assert null_ids and max(null_ids) < min(
         r["rk"] for r in rows if r["k"] is not None
@@ -129,6 +130,6 @@ def test_ranked_ids_edge_cases(spark):
     t = spark.createDataFrame([("a", 2), ("b", 3), ("c", 5)], "k string, w int")
     got = {
         r["k"]: r["off"]
-        for r in exclusive_prefix_sum(t, ["k"], "w", "off").collect()
+        for r in exclusive_prefix_sum(t, ["k"], "w", "off", pins).collect()
     }
     assert got == {"a": 0, "b": 2, "c": 5}

@@ -116,6 +116,7 @@ def test_connected_components_match_union_find(spark, edges):
     union-find on arbitrary graphs (self-loops, duplicates, isolated
     vertices included)."""
     from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import connected_components
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import release_pins
 
     nodes = sorted({n for e in edges for n in e} | set(range(4)))
     # model: union-find with min representative
@@ -140,19 +141,25 @@ def test_connected_components_match_union_find(spark, edges):
     edf = spark.createDataFrame(edges or [(0, 0)], "id_a long, id_b long")
     if not edges:
         edf = edf.limit(0)
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, id_col="doc_id").collect()
-    }
+    # a local list, not the ``pins`` fixture: hypothesis reruns the
+    # body per example, and each example's checkpoint is released here
+    pins = []
+    try:
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components(verts, edf, pins, id_col="doc_id").collect()
+        }
+    finally:
+        release_pins(pins)
     assert got == expected
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, pins):
     """A 40-node path graph: diameter 39 forces several pointer-jumping
-    rounds, pinning the r12 changed-detection rewrite (the previous
-    label rides through the min-aggregate as the tagged ``__own`` row
-    instead of a per-round new ⋈ old join) across the multi-round
-    convergence path, including the final no-change round."""
+    rounds, pinning the changed-label count (the previous label rides
+    through the min-aggregate as the tagged ``__own`` row) across the
+    multi-round convergence path, including the final no-change
+    round."""
     from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import connected_components
 
     n = 40
@@ -162,7 +169,7 @@ def test_connected_components_long_chain(spark):
     )
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, id_col="doc_id").collect()
+        for r in connected_components(verts, edf, pins, id_col="doc_id").collect()
     }
     assert got == {i: 0 for i in range(n)}
 

@@ -31,8 +31,7 @@ def test_bucketed_dim_dense_unique(spark):
 
     base = star.landing(spark, SF_DIR)
     dim = build_dim(
-        base, [norm_upper("c_name").alias("employer_name")], "company_sk",
-        mode="bucketed", n_buckets=16,
+        base, [norm_upper("c_name").alias("employer_name")], "company_sk", n_buckets=16
     )
     rows = dim.collect()
     sks = sorted(r["company_sk"] for r in rows)
