@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash.
+"""Deduplication operators: exact, MinHash+LSH, token-set Jaccard and
+containment, SimHash.
 
 Beyond-reference training-data-pipeline layer (BASELINE.json). The
 reference's only dedup is `.distinct()` on dimension keys (P4/P6); a
@@ -9,8 +10,10 @@ shuffle-conscious:
 - MinHash/LSH: explode shingles → per-doc signature (one agg) → band
   buckets → self-join only within buckets (candidate generation is the
   classic LSH band trick — no O(n²) pair enumeration).
-- n-gram Jaccard: inverted-index token join with a document-frequency
-  cap so stop-tokens never create quadratic blowup.
+- token-set Jaccard / containment: both start from one distinct-token
+  array per doc. Jaccard indexes only each set's prefix (AllPairs/
+  PPJoin prefix filter) and verifies candidates in-row with
+  ``array_intersect``; containment joins the full inverted index.
 - SimHash: 64-bit signature via per-token md5 bits, hamming-ball
   candidate pairs via band rotation.
 
@@ -150,57 +153,84 @@ def minhash_lsh_pairs(
     )
 
 
+def _token_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __toks): each document's distinct lower-cased whitespace
+    tokens as one array — the shared input of the set-similarity
+    joins below."""
+    from ..functions.text import tokens
+
+    return df.select(
+        F.col(id_col),
+        F.array_distinct(tokens(F.lower(F.col(text_col)))).alias("__toks"),
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    max_df: int | None = None,
 ) -> DataFrame:
-    """Exact token-set Jaccard similarity pairs. Returns
-    (id_a, id_b, jaccard).
+    """Exact token-set Jaccard pairs via PREFIX FILTERING (AllPairs/
+    PPJoin, Bayardo et al. WWW'07). Returns (id_a, id_b, jaccard),
+    id_a < id_b, jaccard rounded to 6.
 
-    Default path (``max_df=None``) DELEGATES to
-    ``prefix_filter_pairs`` — exact (identical oracle) and the scale
-    path: prefix filtering bounds candidate generation without
-    dropping any qualifying pair, so there is no reason to pay the
-    full inverted-index join for exact results.
-
-    ``max_df`` is an EXPLICIT APPROXIMATION flag: tokens appearing in
-    more than that many docs are dropped from the token sets entirely
-    (both intersection and denominators — "Jaccard over stop-filtered
-    token sets", a deliberate redefinition). Use it only when even
-    prefix filtering is too expensive and losing pairs connected
-    solely through ultra-common tokens is acceptable."""
-    from ..functions.text import tokens
-
-    if max_df is None:
-        return prefix_filter_pairs(df, text_col, id_col, threshold)
-
-    toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias("tok")
+    Tokens get a canonical frequency-ascending order and each set
+    indexes only its first ``|x| − ⌈τ·|x|⌉ + 1`` tokens; any pair with
+    J ≥ τ provably shares a token within BOTH prefixes (pigeonhole on
+    the ≥ τ·|x| required overlap), so joining prefixes loses nothing.
+    Rare tokens land in prefixes, so index buckets stay small. Each
+    distinct candidate is then verified in-row against the two token
+    arrays (``size(array_intersect(a, b))``), with no token-level
+    verification join."""
+    sets = _token_sets(df, text_col, id_col)
+    toks = sets.select(
+        F.col(id_col),
+        F.size("__toks").alias("__sz"),
+        F.explode("__toks").alias("tok"),
     )
-    rare = toks.groupBy("tok").count().filter(F.col("count") <= max_df).select("tok")
-    toks = toks.join(rare, "tok", "left_semi")
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = (
-        a.join(b, "tok")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
+    dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
+    w_pos = Window.partitionBy(id_col).orderBy("__df", "tok")
+    # Prefix bound ⌈τ·|x|⌉ with an epsilon guard: for τ not exactly
+    # representable in binary (0.55, 0.7, ...) the float product can
+    # round a hair ABOVE the true rational value, making ceil one too
+    # large and the indexed prefix one token too short — silently
+    # dropping valid pairs from an exact operator. The 1e-9 slack
+    # absorbs that ulp-level excess; it cannot reach the next integer
+    # down unless τ·|x| was within 1e-9 of an integer, where ceil is
+    # the same either way for any real corpus size.
+    prefix = (
+        toks.join(dfreq, "tok")
+        .withColumn("__pos", F.row_number().over(w_pos))
+        .filter(
+            F.col("__pos")
+            <= F.col("__sz")
+            - F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9))
+            + 1
+        )
+        .select(F.col(id_col), "tok")
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    pa, pb = prefix.alias("pa"), prefix.alias("pb")
+    cand = (
+        pa.join(pb, "tok")
+        .filter(F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}"))
+        .select(
+            F.col(f"pa.{id_col}").alias("id_a"),
+            F.col(f"pb.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb"))
+    n_inter = F.size(F.array_intersect("__ta", "__tb"))
     return (
-        inter.join(sa, "id_a")
+        cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
             "id_a",
             "id_b",
             F.round(
-                F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")), 6
+                n_inter / (F.size("__ta") + F.size("__tb") - n_inter), 6
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -212,44 +242,31 @@ def containment_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.8,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Overlap-coefficient (containment) pairs: ``n_inter / min(|A|,
-    |B|)`` over token sets, via the same inverted-index join as
-    ``jaccard_pairs``. Catches near-SUBSET duplicates — a short doc
-    fully contained in a long one scores ~1.0 here but low on Jaccard
-    (the union is dominated by the long doc). The standard complement
-    to Jaccard in corpus dedup; same ``max_df`` stop-token cap keeps
-    the index join from going quadratic at scale.
-
-    ``max_df`` drops stop tokens from the INTERSECTION counting only;
-    denominators stay the true unfiltered set sizes |A|/|B| (so with a
-    cap the score can only undercount, never exceed, the real overlap
-    coefficient — a conservative candidate filter)."""
-    from ..functions.text import tokens
-
-    toks = df.select(
+    |B|)`` over the same token sets as ``jaccard_pairs``, via an
+    inverted-index token join. Returns (id_a, id_b, containment),
+    id_a < id_b, rounded to 6. Catches near-SUBSET duplicates — a
+    short doc fully contained in a long one scores 1.0 here but low on
+    Jaccard (the union is dominated by the long doc). Each side's set
+    size rides through the explode, so no separate sizes aggregate is
+    joined back."""
+    toks = _token_sets(df, text_col, id_col).select(
         F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias("tok"),
+        F.size("__toks").alias("__sz"),
+        F.explode("__toks").alias("tok"),
     )
-    # sizes BEFORE the stop-token cap: the docstring's |A|/|B|.
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("sz"))
-    if max_df is not None:
-        rare = toks.groupBy("tok").count().filter(F.col("count") <= max_df).select("tok")
-        toks = toks.join(rare, "tok", "left_semi")
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = (
+    a, b = toks.alias("a"), toks.alias("b")
+    return (
         a.join(b, "tok")
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.__sz").alias("sz_a"),
+            F.col("b.__sz").alias("sz_b"),
+        )
         .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
         .select(
             "id_a",
             "id_b",
@@ -289,96 +306,6 @@ def embedding_neardup_pairs(
             "id_a", "id_b", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim")
         )
         .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def prefix_filter_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin,
-    Bayardo et al. WWW'07) — same results as ``jaccard_pairs``, far
-    fewer candidates: tokens get a canonical frequency-ascending
-    order, each set indexes only its first ``|x| − ⌈τ·|x|⌉ + 1``
-    tokens, and any pair with J ≥ τ provably shares a token within
-    BOTH prefixes (pigeonhole on the ≥ τ·|x| required overlap), so
-    joining prefixes only loses nothing. Rare tokens land in
-    prefixes, so index buckets are small — the principled exact
-    alternative to the lossy ``max_df`` stop-token cap.
-
-    Returns (id_a, id_b, jaccard) with jaccard rounded to 6 —
-    identical contract (and oracle) to ``jaccard_pairs``."""
-    from ..functions.text import tokens
-
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias(
-            "tok"
-        ),
-    )
-    dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
-    w_pos = Window.partitionBy(id_col).orderBy("__df", "tok")
-    w_all = Window.partitionBy(id_col)
-    sized = (
-        toks.join(dfreq, "tok")
-        .select(
-            F.col(id_col),
-            "tok",
-            F.row_number().over(w_pos).alias("__pos"),
-            F.count("*").over(w_all).alias("__sz"),
-        )
-    )
-    # Prefix bound ⌈τ·|x|⌉ with an epsilon guard: for τ not exactly
-    # representable in binary (0.55, 0.7, ...) the float product can
-    # round a hair ABOVE the true rational value, making ceil one too
-    # large and the indexed prefix one token too short — silently
-    # dropping valid pairs from an operator documented as exact. The
-    # 1e-9 slack absorbs that ulp-level excess; it cannot reach the
-    # next integer down unless τ·|x| was within 1e-9 of an integer,
-    # where ceil is the same either way for any real corpus size.
-    prefix = sized.filter(
-        F.col("__pos")
-        <= F.col("__sz")
-        - F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9))
-        + 1
-    ).select(F.col(id_col), "tok")
-    pa, pb = prefix.alias("pa"), prefix.alias("pb")
-    cand = (
-        pa.join(pb, "tok")
-        .filter(F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}"))
-        .select(
-            F.col(f"pa.{id_col}").alias("id_a"),
-            F.col(f"pb.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    # exact verification on the candidate set only
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("sz"))
-    ta = toks.select(F.col(id_col).alias("id_a"), "tok")
-    tb = toks.select(F.col(id_col).alias("id_b"), "tok")
-    inter = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 

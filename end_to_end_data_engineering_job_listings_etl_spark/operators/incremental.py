@@ -3,7 +3,8 @@
 Reference analogs:
 - High-watermark extract: ``scripts/pyspark/extract_postgres_table.py``
   — read rows with ``ts > watermark`` via a pushed-down predicate
-  (:47-56), compute the new watermark as ``max(ts)`` (:72-76).
+  (:47-56); the new watermark, ``max(ts)`` (:72-76), is a plain
+  aggregate (``plans/functional.py::inc_watermark_agg``).
 - Incremental dimension upsert: the deleted ``populate_star_schema``
   loader (bytecode) — left-merge-with-indicator anti-join keeps only
   NEW dimension rows, appended to the existing dim (J8).
@@ -14,17 +15,10 @@ parquet scan (verify with `.explain`: PushedFilters).
 
 from __future__ import annotations
 
-import datetime as dt
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def high_watermark(df: DataFrame, ts_col: str):
-    """Current high watermark: scalar max(ts). Reference A2
-    (``extract_postgres_table.py:72``)."""
-    return df.agg(F.max(ts_col).alias("wm")).collect()[0]["wm"]
 
 
 def filter_after(df: DataFrame, ts_col: str, watermark) -> DataFrame:

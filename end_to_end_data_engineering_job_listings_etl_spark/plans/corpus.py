@@ -80,34 +80,20 @@ def dd_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dd_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard pairs. Since round 4 the default ``jaccard_pairs``
-    path delegates to prefix filtering (exact, bounded candidates), so
-    this and ``dd_prefix_filter_pairs`` share one plan; both stay
-    registered because each locks a distinct public API entry point
-    against the identical oracle."""
+    """Exact Jaccard pairs (τ = 0.5) over a bounded demo slice, through
+    the prefix-filtered ``jaccard_pairs``. Registered under two names:
+    ``dd_prefix_filter_pairs`` is the same plan and oracle."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text")).filter(
         F.col("doc_id") < _JACCARD_MAX_ID
     )
     return D.jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
 
 
-def dd_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same answer as ``dd_jaccard_pairs`` (identical oracle) through
-    the AllPairs/PPJoin prefix-filtering plan — exact, with
-    quadratically fewer index-join candidates (operators/dedup.py::
-    prefix_filter_pairs)."""
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text")).filter(
-        F.col("doc_id") < _JACCARD_MAX_ID
-    )
-    return D.prefix_filter_pairs(docs, "text", "doc_id", threshold=0.5)
-
-
 def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-subset duplicates by overlap coefficient (n_inter /
     min(|A|,|B|)) — the Jaccard complement that catches a short doc
-    contained in a long one. Same bounded demo slice as
-    dd_jaccard_pairs; the scale path is the same inverted index +
-    max_df cap."""
+    contained in a long one. Same bounded demo slice and token sets as
+    ``dd_jaccard_pairs``."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text")).filter(
         F.col("doc_id") < _JACCARD_MAX_ID
     )
@@ -802,7 +788,7 @@ QUERIES = {
     "text_langid": text_langid,
     "dd_dedup_stats": dd_dedup_stats,
     "dd_jaccard_pairs": dd_jaccard_pairs,
-    "dd_prefix_filter_pairs": dd_prefix_filter_pairs,
+    "dd_prefix_filter_pairs": dd_jaccard_pairs,
     "dd_containment_pairs": dd_containment_pairs,
     "dd_minhash_estimate": dd_minhash_estimate,
     "dd_minhash_signatures": dd_minhash_signatures,
@@ -917,6 +903,28 @@ _IVFPQ_ORACLE = f"""
     FROM scored ORDER BY adc, vec_id LIMIT {_PQ_TOPK}
 """
 
+# Both registry names of dd_jaccard_pairs share this oracle.
+_JACCARD_ORACLE = f"""
+    WITH toks AS (
+      SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok
+      FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
+    ), sizes AS (
+      SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
+    ), inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+      FROM toks a JOIN toks b USING (tok)
+      WHERE a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )
+    SELECT id_a, id_b,
+           round(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = id_a
+    JOIN sizes sb ON sb.doc_id = id_b
+    WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
+"""
+
+
 ORACLES = {
     "text_stats": f"""
         SELECT doc_id,
@@ -944,44 +952,8 @@ ORACLES = {
                count(DISTINCT {_FP}) AS n_unique
         FROM documents
     """,
-    "dd_jaccard_pairs": f"""
-        WITH toks AS (
-          SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok
-          FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
-        ), sizes AS (
-          SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
-        ), inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-          FROM toks a JOIN toks b USING (tok)
-          WHERE a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id_a, id_b,
-               round(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
-    """,
-    "dd_prefix_filter_pairs": f"""
-        WITH toks AS (
-          SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok
-          FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
-        ), sizes AS (
-          SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
-        ), inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-          FROM toks a JOIN toks b USING (tok)
-          WHERE a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id_a, id_b,
-               round(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.5
-    """,
+    "dd_jaccard_pairs": _JACCARD_ORACLE,
+    "dd_prefix_filter_pairs": _JACCARD_ORACLE,
     "dd_containment_pairs": f"""
         WITH toks AS (
           SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok

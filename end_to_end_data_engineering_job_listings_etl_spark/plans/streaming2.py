@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from ..util import scratch_dir
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession

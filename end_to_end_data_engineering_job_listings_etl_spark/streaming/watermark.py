@@ -41,7 +41,6 @@ def events_stream_dir(sf_dir: str) -> str:
     directory of symlinks to it (zero-copy). Production callers point
     stream_events at their real landing directory instead."""
     import os
-    import tempfile
 
     d = scratch_dir(prefix="events_stream_")
     os.symlink(

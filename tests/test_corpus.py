@@ -63,30 +63,41 @@ def test_dedup_exact_idempotent(spark):
 
 
 def test_prefix_filter_exact_at_non_binary_threshold(spark):
-    """ADVICE r3: the prefix bound ceil(tau * |x|) computed in floats
-    can round up for tau values not exactly representable in binary
-    (0.55), shortening the indexed prefix and silently dropping valid
-    pairs. The epsilon-guarded bound must make prefix filtering agree
-    with the independent full inverted-index join (the max_df branch
-    with a cap above every document frequency keeps all tokens) at
-    such a threshold."""
+    """The prefix bound ceil(tau * |x|) computed in floats can round up
+    for tau values not exactly representable in binary (0.55, 0.7),
+    shortening the indexed prefix and silently dropping valid pairs.
+    With the epsilon-guarded bound, prefix-filtered ``jaccard_pairs``
+    must equal a Python brute force over the collected token sets at
+    such thresholds, and at a low one (0.3) where prefixes are long."""
     from end_to_end_data_engineering_job_listings_etl_spark.operators import dedup as D
     from end_to_end_data_engineering_job_listings_etl_spark.catalog import load_table_dist
+    from end_to_end_data_engineering_job_listings_etl_spark.functions.text import tokens
     from pyspark.sql import functions as F
 
     docs = load_table_dist(spark, SF_DIR, "documents", cols=("doc_id", "text")).filter(
         F.col("doc_id") < 400
     )
-    tau = 0.55  # not binary-exact: 0.55 * 20 = 11.000000000000002 in float
-    full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, "text", "doc_id", threshold=tau, max_df=10**9).collect()
+    sets = {
+        r["doc_id"]: set(r["toks"] or ())
+        for r in docs.select(
+            "doc_id", F.array_distinct(tokens(F.lower("text"))).alias("toks")
+        ).collect()
     }
-    pref = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.prefix_filter_pairs(docs, "text", "doc_id", threshold=tau).collect()
-    }
-    assert full == pref
+    ids = sorted(sets)
+    for tau in (0.55, 0.7, 0.3):  # 0.55 * 20 = 11.000000000000002 in float
+        brute = {}
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                inter = len(sets[a] & sets[b])
+                if inter:
+                    j = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
+                    if j >= tau:
+                        brute[(a, b)] = j
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in D.jaccard_pairs(docs, "text", "doc_id", threshold=tau).collect()
+        }
+        assert got == brute, tau
 
 
 def test_pq_adc_self_coding_and_query_rank(spark):

@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords import extract_keywords
 from end_to_end_data_engineering_job_listings_etl_spark.functions.relative_time import parse_relative_time
 from end_to_end_data_engineering_job_listings_etl_spark.functions.text import word_shingles
-from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import jaccard_pairs, minhash_signature
+from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import (
+    containment_pairs,
+    jaccard_pairs,
+    minhash_signature,
+)
 from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
     DimSpec,
     build_dim,
@@ -75,9 +80,24 @@ def test_short_docs_yield_no_shingles_or_pairs(spark):
     assert minhash_signature(df, "text", "doc_id", 4, 3).count() == 0
 
 
-def test_jaccard_single_doc_no_pairs(spark):
+@pytest.mark.parametrize(
+    "op, subset_score",
+    [(jaccard_pairs, 0.5), (containment_pairs, 1.0)],
+    ids=["jaccard_pairs", "containment_pairs"],
+)
+def test_jaccard_single_doc_no_pairs(spark, op, subset_score):
+    """Degenerate inputs yield no pairs even at threshold 0: a single
+    doc, and empty- and null-text docs (no tokens to share). "a b"
+    inside "A b c d" scores Jaccard 2/4 = 0.5 but containment
+    2/min(2, 4) = 1.0 — the near-subset case containment exists for."""
     df = spark.createDataFrame([(1, "alpha beta gamma")], _DOC_SCHEMA)
-    assert jaccard_pairs(df, "text", "doc_id", threshold=0.0).count() == 0
+    assert op(df, "text", "doc_id", threshold=0.0).count() == 0
+    df = spark.createDataFrame([(1, ""), (2, None), (3, "   "), (4, None)], _DOC_SCHEMA)
+    assert op(df, "text", "doc_id", threshold=0.0).count() == 0
+    df = spark.createDataFrame([(1, "a b"), (2, "A b c d")], _DOC_SCHEMA)
+    assert [tuple(r) for r in op(df, "text", "doc_id", threshold=0.0).collect()] == [
+        (1, 2, subset_score)
+    ]
 
 
 def test_ranked_ids_partition_count_independent(spark, pins):

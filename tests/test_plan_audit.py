@@ -74,3 +74,38 @@ def test_approx_distinct_checked_has_no_expand(spark):
     df = registry.all_queries()["agg_approx_distinct_checked"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan, "multi-distinct Expand reintroduced"
+
+
+def _initial_exchanges(df) -> tuple[int, int]:
+    """(shuffle, broadcast) exchange counts in the AQE initial physical
+    plan: the plan as built, before runtime re-planning rewrites any
+    join. Walks ``children`` only, so the plans of cached inputs (an
+    InMemoryRelation's inner plan) are not counted."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    counts = {"Exchange": 0, "BroadcastExchange": 0}
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name in counts:
+            counts[name] += 1
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts["Exchange"], counts["BroadcastExchange"]
+
+
+@pytest.mark.parametrize(
+    "name, max_shuffle, max_broadcast",
+    [("dd_jaccard_pairs", 4, 5), ("dd_containment_pairs", 1, 1)],
+)
+def test_set_similarity_exchange_budget(spark, name, max_shuffle, max_broadcast):
+    """The token-set joins verify in-row: Jaccard candidates are scored
+    with ``array_intersect`` over the two token arrays, and both
+    operators carry set sizes through the explode, so neither plans a
+    token-level verification join or a sizes aggregate joined back."""
+    df = registry.all_queries()[name](spark, SF_DIR)
+    shuffles, broadcasts = _initial_exchanges(df)
+    assert shuffles <= max_shuffle, f"{name}: {shuffles} shuffle exchanges"
+    assert broadcasts <= max_broadcast, f"{name}: {broadcasts} broadcast exchanges"
