@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (single parquet file per table).
 

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table_dist
-from ..functions.vectors import cosine
 from ..operators.similarity import ivf_assign, ivf_assign_blocked
 from .corpus import _cos
 
@@ -95,13 +94,6 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         _e6(F.col("top_tok"), F.col("n_tokens")).alias("top_token_frac_e6"),
         _e6(F.col("top_bg"), F.col("n_bigrams")).alias("top_bigram_frac_e6"),
     )
-
-
-_BG_EXPR = (
-    "transform(sequence(1, size(split(text, ' ')) - 1),"
-    " i -> concat(element_at(split(text, ' '), i), ' ',"
-    " element_at(split(text, ' '), i + 1)))"
-)
 
 
 def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,18 @@ from pyspark.sql import functions as F
 
 from .. import cachereg
 from ..catalog import load_table, load_table_dist
+from ..streaming.watermark import (
+    drain,
+    drain_to_memory,
+    events_stream_dir,
+    purchase_view_join,
+    scoped_conf,
+    session_counts,
+    sliced_stage_dir,
+    stream_events,
+    windowed_event_counts,
+    write_snapshot,
+)
 
 # ---------------------------------------------------------------------------
 # Streaming through the gate
@@ -43,63 +55,19 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink), returned as a batch DataFrame. Epoch-aligned '1 hour'
     windows are exactly date_trunc('hour') buckets, so the oracle is
     plain SQL."""
-    from ..streaming.watermark import (
-        derived_state_partitions,
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-        windowed_event_counts,
-    )
-
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_win_")
     src = events_stream_dir(sf_dir)
     agg = windowed_event_counts(stream_events(spark, src))
-    run_to_memory_sink(
-        agg,
-        name,
-        ckpt,
-        # state layout sized from the source, not the core count
-        # (watermark.derived_state_partitions)
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    return drain_to_memory(agg, "complete", state_from=src)
 
 
-def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState`` running
-    per-user totals) drained with availableNow: the final state per
-    user equals the batch GROUP BY. Totals are rounded in BOTH engines
-    to absorb float-association noise (pandas pairwise sum vs scan-order
-    sum)."""
-    from ..streaming.stateful import running_user_totals
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    name = f"stream_totals_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_tot_")
-    from ..streaming.watermark import derived_state_partitions
-
-    src = events_stream_dir(sf_dir)
-    stream = running_user_totals(stream_events(spark, src))
-    run_to_memory_sink(
-        stream,
-        name,
-        ckpt,
-        output_mode="update",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    # update mode re-emits a user's row per micro-batch; keep the last
-    # (= max n_events) state per user so multi-batch drains stay exact.
-    totals = spark.table(name)
-    # Update-mode emits one row per state version; pick total_value
-    # FROM the max-n_events row (max_by), not an independent column
-    # max — with negative event values total_value is non-monotone
-    # and column-wise maxes could pair a final count with a non-final
-    # total.
+def _latest_totals(totals: DataFrame) -> DataFrame:
+    """Update mode emits one row per user per state VERSION; keep each
+    user's final state. total_value is taken FROM the max-n_events row
+    (max_by), not as an independent column max — with negative event
+    values total_value is non-monotone, and column-wise maxes could
+    pair a final count with a non-final total. Totals are rounded in
+    BOTH engines to absorb float-association noise (pandas pairwise
+    sum vs scan-order sum)."""
     latest = totals.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.expr("max_by(total_value, n_events)").alias("total_value"),
@@ -109,13 +77,26 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom stateful operator (``applyInPandasWithState`` running
+    per-user totals) drained with availableNow: the final state per
+    user equals the batch GROUP BY."""
+    from ..streaming.stateful import running_user_totals
+
+    src = events_stream_dir(sf_dir)
+    stream = running_user_totals(stream_events(spark, src))
+    return _latest_totals(drain_to_memory(stream, "update", state_from=src))
+
+
 def stream_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same per-user running totals through Spark 4's
     ``transformWithStateInPandas`` (StatefulProcessor + typed
     ValueState, RocksDB state store) — the arbitrary-stateful-operator
-    API that supersedes applyInPandasWithState. Drained availableNow;
-    final state equals the batch GROUP BY, totals rounded in both
-    engines to absorb float-association noise.
+    API that supersedes applyInPandasWithState. Drained availableNow
+    with the RocksDB provider scoped to the drain; final state equals
+    the batch GROUP BY. State stays at the session default: update-mode
+    TWS emits one row per state version, so the sink's row multiset is
+    trigger/layout-sensitive by design (``_latest_totals`` absorbs it).
 
     NOT registered in QUERIES: the API's Python state protocol needs
     ``google.protobuf``, absent from this container (no installs) —
@@ -130,48 +111,17 @@ def stream_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs google.protobuf"
         ) from exc
     from ..streaming.stateful import running_user_totals_tws
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-        ckpt = scratch_dir(prefix="ckpt_tws_")
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+        "execution.streaming.state.RocksDBStateStoreProvider"
+    }
+    with scoped_conf(spark, rocksdb):
         stream = running_user_totals_tws(
             stream_events(spark, events_stream_dir(sf_dir))
         )
-        # state left at the session default (r13, VERDICT r12 #6):
-        # update-mode TWS emits one row per state VERSION, so the sink
-        # table's row multiset is trigger/layout-sensitive by design
-        # (the max_by rollup above absorbs it) — and the operator is
-        # protobuf-gated off in this container, so there is no bench
-        # evidence to size against
-        run_to_memory_sink(stream, name, ckpt, output_mode="update")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    totals = spark.table(name)
-    # Update-mode emits one row per state version; pick total_value
-    # FROM the max-n_events row (max_by), not an independent column
-    # max — with negative event values total_value is non-monotone
-    # and column-wise maxes could pair a final count with a non-final
-    # total.
-    latest = totals.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.expr("max_by(total_value, n_events)").alias("total_value"),
-    )
-    return latest.select(
-        "user_id", "n_events", F.round("total_value", 2).alias("total_value_r")
-    )
+        totals = drain_to_memory(stream, "update")
+    return _latest_totals(totals)
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,7 +129,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type) over the event stream, drained with availableNow — the
     continuous form of the corpus dedup layer (first occurrence wins).
     Under complete processing the emitted key set equals batch
-    DISTINCT, so it gets a real SQL oracle.
+    DISTINCT, so it gets a real SQL oracle. The output projects the
+    dedup KEYS only — survivor-independent, so the state layout
+    follows the source size.
 
     State honesty: exact streaming dedup keeps one state entry per
     distinct key FOREVER — the watermark does not evict
@@ -189,31 +141,11 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the horizon, the operator to swap in is
     ``dropDuplicatesWithinWatermark`` (evicts by watermark; duplicates
     farther apart than the delay can re-emit)."""
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_dd_")
-    from ..streaming.watermark import derived_state_partitions
-
     src = events_stream_dir(sf_dir)
-    stream = stream_events(spark, src)
-    dd = stream.dropDuplicates(["user_id", "event_type"]).select(
-        "user_id", "event_type"
+    dd = stream_events(spark, src).dropDuplicates(["user_id", "event_type"])
+    return drain_to_memory(
+        dd.select("user_id", "event_type"), "append", state_from=src
     )
-    # output projects the dedup KEYS only — survivor-independent, so
-    # the state layout follows the source size
-    run_to_memory_sink(
-        dd,
-        name,
-        ckpt,
-        output_mode="append",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
 
 
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,16 +158,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow drain ⇒ result equals the batch join+agg, so it gets
     a real SQL oracle. Values decimal-cast before summation."""
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_ssj_")
-    from ..streaming.watermark import derived_state_partitions
-
     src = events_stream_dir(sf_dir)
     stream = stream_events(spark, src)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -246,14 +168,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("value").cast("decimal(18,6)") * 1000000).cast("bigint")
         ).alias("sum_value_e6"),
     )
-    run_to_memory_sink(
-        agg,
-        name,
-        ckpt,
-        output_mode="complete",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    return drain_to_memory(agg, "complete", state_from=src)
 
 
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,51 +180,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow drain ⇒ emitted pairs equal the batch time-bounded
     self-join, which is the oracle."""
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_ssij_")
     src = events_stream_dir(sf_dir)
-    purchases = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    views = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-    ).select("purchase_id", "view_id")
-    from ..streaming.watermark import derived_state_partitions
-
-    run_to_memory_sink(
-        joined,
-        name,
-        ckpt,
-        output_mode="append",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    joined = purchase_view_join(spark, src, "inner")
+    return drain_to_memory(joined, "append", state_from=src)
 
 
 def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,7 +193,9 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     across every subsequent join at 100 TB (plan asserted shuffle-free
     in tests/test_io_multimodal.py).
 
-    Names/paths are deterministic per (user, sf): repeat invocations
+    Names/paths are deterministic per (user, sf), unlike the per-call
+    ``scratch_dir`` of every other sink here: ``saveAsTable``
+    registers each name in the session catalog, so repeat invocations
     overwrite the same two tables instead of leaking a catalog entry
     and a temp directory per call."""
     import re
@@ -390,45 +265,16 @@ def agg_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows IN THE STREAMING ENGINE:
     ``session_window(ts, '30 minutes')`` merges events into
-    gap-separated sessions as state, drained with availableNow.
-    Session semantics are end-exclusive — an event exactly gap-after
-    the previous one starts a NEW session — so the batch oracle's
-    island rule is `diff >= gap` (the batch ``op_sessionize`` ordinal
-    query uses strict `>` on purpose: both conventions exist, each is
-    pinned by its own oracle)."""
-    from ..streaming.watermark import (
-        events_stream_dir,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_sess_")
+    gap-separated sessions as state (``watermark.session_counts``),
+    drained with availableNow in complete mode. Session semantics are
+    end-exclusive — an event exactly gap-after the previous one starts
+    a NEW session — so the batch oracle's island rule is `diff >= gap`
+    (the batch ``op_sessionize`` ordinal query uses strict `>` on
+    purpose: both conventions exist, each is pinned by its own
+    oracle)."""
     src = events_stream_dir(sf_dir)
-    stream = stream_events(spark, src)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    from ..streaming.watermark import derived_state_partitions
-
-    # complete-mode single-batch drain: session merging is per user_id
-    # key, so the emitted set is partition-independent — state layout
-    # sized from the source, not the core count (r13, VERDICT r12 #6)
-    run_to_memory_sink(
-        agg,
-        name,
-        ckpt,
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    agg = session_counts(stream_events(spark, src))
+    return drain_to_memory(agg, "complete", state_from=src)
 
 
 def stream_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,20 +282,15 @@ def stream_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     job: ``foreachBatch`` applies the anti-join upsert
     (``operators.incremental.upsert_dim`` — J8, the deleted
     populate_star_schema semantics) to each micro-batch, persisting
-    the dim to parquet between batches. After the availableNow drain
-    the dim holds every distinct natural key exactly once, with dense
-    surrogate keys — checked against batch DISTINCT + row_number.
-    Each batch releases its rank's pins once its write has landed, so
-    the query leaves nothing pinned."""
-    import shutil
-
+    the dim to a parquet snapshot between batches. After the
+    availableNow drain the dim holds every distinct natural key
+    exactly once, with dense surrogate keys — checked against batch
+    DISTINCT + row_number. Each batch releases its rank's pins once
+    its write has landed, so the query leaves nothing pinned."""
     from ..operators.ids import release_pins
     from ..operators.incremental import upsert_dim
-    from ..streaming.watermark import events_stream_dir, stream_events
 
-    target = os.path.join(tempfile.gettempdir(), "stream_dim_type")
-    shutil.rmtree(target, ignore_errors=True)
-    ckpt = scratch_dir(prefix="ckpt_ud_")
+    target = os.path.join(scratch_dir(prefix="stream_dim_"), "dim_type")
     stream = stream_events(spark, events_stream_dir(sf_dir)).select(
         F.col("event_type").alias("type_name")
     ).filter(F.col("type_name").isNotNull())
@@ -460,26 +301,14 @@ def stream_upsert_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             existing = s.read.parquet(target)
         else:
             existing = s.createDataFrame([], "type_sk int, type_name string")
-        out = target + "__tmp"
         pins: list[DataFrame] = []
         try:
             merged = upsert_dim(bdf, existing, ["type_name"], "type_sk", pins)
-            merged.write.mode("overwrite").parquet(out)
+            write_snapshot(merged, target)
         finally:
             release_pins(pins)
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(out, target)
 
-    # no state sizing: foreachBatch carries NO keyed state store —
-    # cross-batch state lives in the parquet snapshot, and each batch's
-    # merge is a plain batch job
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch))
     return spark.read.parquet(target)
 
 
@@ -492,7 +321,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_io_multimodal.py."""
     from ..sinks.writers import compact_parquet
 
-    base = os.path.join(tempfile.gettempdir(), "compact_rt")
+    base = scratch_dir(prefix="compact_rt_")
     frag, compacted = os.path.join(base, "frag"), os.path.join(base, "compact")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
@@ -780,13 +609,13 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idiom (write_pandas stages parquet then COPYs it into Snowflake,
     # ``dags/spark_etl_script.py:31-39``), here as Spark CSV stage +
     # Derby SYSCS_IMPORT_TABLE. Row-at-a-time JDBC INSERT was the
-    # query's whole cost at scale (r5 note: exponent ~1.1, batchsize /
-    # parallel-connection tuning measured flat — embedded Derby
-    # serializes same-table writers), while the bulk path is 3.4×
+    # query's whole cost at scale (superlinear, and batchsize /
+    # parallel-connection tuning is flat — embedded Derby serializes
+    # same-table writers), while the bulk path is 3.4×
     # faster at sf1 and keeps the landing-table setup off the measured
     # scan. In production the landing DB belongs to the SOURCE system;
     # the operator under test is the partitioned read below.
-    # Stage-path contract (r7 advice #2): SYSCS_IMPORT_TABLE reads the
+    # Stage-path contract: SYSCS_IMPORT_TABLE reads the
     # staged CSV DRIVER-side, so the stage dir must be visible to both
     # the executors that wrote it and the driver JVM importing it —
     # true in local mode and whenever the stage is a shared mount
@@ -804,7 +633,7 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = os.path.join(tempfile.gettempdir(), f"jdbc_stage_{uuid.uuid4().hex}")
     csv_obs = Observation("csv_stage_contract")
     # Guard EVERY string column of the staged frame, not a hardcoded
-    # one (r8 advice #3): the check must stay coupled to the staged
+    # one: the check must stay coupled to the staged
     # projection, so widening the stage (e.g. adding o_comment, whose
     # TPC-H text contains commas) trips the guard instead of silently
     # corrupting the Derby import.
@@ -820,12 +649,12 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
         unsafe_expr = unsafe_expr + e
     staged = orders.observe(csv_obs, F.sum(unsafe_expr).alias("n_unsafe"))
     # No coalesce(1): every input partition writes its own CSV file in
-    # parallel (r7 verdict ask #3 — the single-task stage serialized
-    # 15M rows through one writer at sf10), then one
+    # parallel (a single-task stage serializes every row through one
+    # writer — 15M rows at sf10), then one
     # SYSCS_IMPORT_TABLE call per file appends it (mode 0 = INSERT).
     # The parallel win is the STAGE side; the import calls stay serial
     # driver-side because embedded Derby serializes same-table writers
-    # anyway (measured in r5 — parallel connections were flat).
+    # anyway (parallel connections measure flat).
     staged.write.mode("overwrite").option("header", False).csv(stage)
     try:
         parts = sorted(glob.glob(os.path.join(stage, "part-*.csv")))
@@ -877,9 +706,8 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) if os.path.isdir(stage) else 0
         shutil.rmtree(stage, ignore_errors=True)
     # The in-memory Derby DB holds the whole staged table in UNMANAGED
-    # driver heap (invisible to the block manager) until dropped — in
-    # r9 it was part of the accumulated state that OOMed long sf10
-    # sessions. Its memo entry carries a heap estimate for the state
+    # driver heap (invisible to the block manager) until dropped, and
+    # it accumulates across a long sf10 session. Its memo entry carries a heap estimate for the state
     # budget and drops the DB on release, so cachereg.query_boundary
     # reclaims it when the session runs past the budget.
     # Calibration (scripts_dev/derby_calib_r11.json, measured at sf10
@@ -969,7 +797,7 @@ def agg_approx_distinct_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rsd=0.02). The oracle pins the exact counts and TRUE — a drifting
     sketch fails the gate, not just a pytest.
 
-    Memory shape (r7 verdict ask #4): two count_distincts in ONE
+    Memory shape: two count_distincts in ONE
     aggregate made Catalyst plan an Expand (every row duplicated per
     distinct column) feeding one stage that holds both exact hash sets
     AND the HLL buffers — at 60M rows that stage OOMed a 16g local
@@ -1079,6 +907,49 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cdc_drain(spark: SparkSession, sf_dir: str, n_slices: int = 1) -> DataFrame:
+    """Drain the (base, changelog) CDC fixture through a ``foreachBatch``
+    merge: each micro-batch applies ``operators.incremental.apply_cdc``
+    (latest-wins I/U/D) to the parquet snapshot the previous batch
+    persisted, and promotes the result with ``write_snapshot``. The
+    snapshot lives under a per-call scratch directory.
+
+    ``n_slices == 1`` stages the changelog as ONE file (``coalesce(1)``:
+    one write job, where ``repartitionByRange(1)`` would add a sampling
+    job) and drains it in one micro-batch. More slices stage it with
+    ``sliced_stage_dir`` range-ordered on the latest-wins order
+    columns, one file per micro-batch, and the drain checks that it
+    ran at least that many batches. No state sizing: foreachBatch has
+    no keyed state store — cross-batch state is the snapshot itself,
+    and each batch's merge is a plain batch job."""
+    from ..operators.incremental import apply_cdc
+    from .functional import cdc_fixture
+
+    target = os.path.join(scratch_dir(prefix="stream_cdc_"), "base")
+    base, changes = cdc_fixture(spark, sf_dir)
+    base.write.mode("overwrite").parquet(target)
+    if n_slices == 1:
+        stage = scratch_dir(prefix="cdc_feed_")
+        changes.coalesce(1).write.mode("overwrite").parquet(stage)
+    else:
+        stage = sliced_stage_dir(
+            changes, ["o_orderdate", "o_orderkey"], n_slices, prefix="cdc_feed_"
+        )
+    feed = (
+        spark.readStream.schema(changes.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+
+    def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
+        existing = bdf.sparkSession.read.parquet(target)
+        merged = apply_cdc(existing, bdf, "c_custkey", ("o_orderdate", "o_orderkey"))
+        write_snapshot(merged, target)
+
+    drain(feed.writeStream.foreachBatch(apply_batch), min_batches=n_slices)
+    return spark.read.parquet(target).orderBy("c_custkey")
+
+
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC consumer as a CONTINUOUS job: ``foreachBatch`` applies
     ``operators.incremental.apply_cdc`` (latest-wins I/U/D merge) to
@@ -1091,50 +962,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-batch latest-wins composes to global latest-wins when the
     feed is time-ordered across batches (real changelogs are; the
-    staged fixture is one file ⇒ one micro-batch, pinned like every
-    stream in this engine via a high maxFilesPerTrigger)."""
-    import shutil
-
-    from ..operators.incremental import apply_cdc
-    from .functional import cdc_fixture
-
-    target = os.path.join(tempfile.gettempdir(), "stream_cdc_base")
-    shutil.rmtree(target, ignore_errors=True)
-    ckpt = scratch_dir(prefix="ckpt_cdc_")
-    stage = scratch_dir(prefix="cdc_feed_")
-
-    base, changes = cdc_fixture(spark, sf_dir)
-    base.write.mode("overwrite").parquet(target)
-    changes.coalesce(1).write.mode("overwrite").parquet(stage)
-
-    feed = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
-
-    def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
-        s = bdf.sparkSession
-        existing = s.read.parquet(target)
-        merged = apply_cdc(
-            existing, bdf, "c_custkey", ("o_orderdate", "o_orderkey")
-        )
-        out = target + "__tmp"
-        merged.write.mode("overwrite").parquet(out)
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(out, target)
-
-    # no state sizing (r13, VERDICT r12 #6): foreachBatch has no keyed
-    # state store — state is the parquet snapshot itself; wall time is
-    # the fixture's write/rename round-trips (documented r12)
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(target).orderBy("c_custkey")
+    staged fixture here is one file ⇒ one micro-batch, and
+    ``stream_cdc_multibatch`` drains the sliced form)."""
+    return cdc_drain(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1191,30 +1021,14 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("fp", F.length("text").alias("n_chars"), "split")
     )
-    base = scratch_dir(prefix="stream_cur_")
-    out, ck = os.path.join(base, "rows"), os.path.join(base, "ck")
-    from ..streaming.watermark import (
-        derived_state_partitions,
-        scoped_state_partitions,
-    )
-
-    # dedup state sized from the source (r13, VERDICT r12 #6): the
-    # split tag keys on the DEDUP KEY and n_chars is identical across
-    # duplicates of a fingerprint, so the post-sink rollup is survivor-
-    # independent by construction (docstring above) — state layout
-    # cannot change it; the parquet sink's file count is irrelevant
-    # (the query reads the directory back and aggregates)
-    with scoped_state_partitions(
-        spark, derived_state_partitions(spark, docs_dir)
-    ):
-        q = (
-            cur.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # dedup state sized from the source: the split tag keys on the
+    # DEDUP KEY and n_chars is identical across duplicates of a
+    # fingerprint, so the post-sink rollup is survivor-independent by
+    # construction (docstring above) — state layout cannot change it;
+    # the parquet sink's file count is irrelevant (the query reads the
+    # directory back and aggregates)
+    out = scratch_dir(prefix="stream_cur_")
+    drain(cur.writeStream.format("parquet").option("path", out), state_from=docs_dir)
     return (
         spark.read.parquet(out)
         .groupBy("split")
@@ -1273,22 +1087,12 @@ def src_python_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     base = scratch_dir(prefix="pys_resume_")
-    out = os.path.join(base, "rows")
-    ck = os.path.join(base, "ck")
-    # no state sizing (r13, VERDICT r12 #6): stateless passthrough —
-    # no aggregation/dedup operator, so no state store exists; wall
-    # time is the five restart round-trips the query demonstrates
+    out, ck = os.path.join(base, "rows"), os.path.join(base, "ck")
+    # no state sizing: a stateless passthrough has no state store;
+    # wall time is the five restart round-trips the query demonstrates
     for _ in range(N_PAGES):
-        q = (
-            spark.readStream.format("pages_stream")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        pages = spark.readStream.format("pages_stream").load()
+        drain(pages.writeStream.format("parquet").option("path", out), checkpoint=ck)
     rows = spark.read.parquet(out)
     return (
         rows.groupBy("page")

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 
-_CUTOFF = "1998-09-02"
 _CUTOFF_NEXT = "1998-09-03"
 
 

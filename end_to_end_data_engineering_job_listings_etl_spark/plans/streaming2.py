@@ -1,19 +1,20 @@
-"""Structured Streaming, round 2: chained stateful aggregations,
-stream-stream LEFT OUTER interval joins, and bounded-state dedup
-(dropDuplicatesWithinWatermark) — the stateful shapes round 1's
-streaming layer (plans/media_stream.py) didn't cover.
+"""Structured Streaming beyond the single stateful operator: chained
+stateful aggregations, stream-stream LEFT and FULL OUTER interval
+joins, bounded-state dedup (dropDuplicatesWithinWatermark), and
+multi-batch twins of the single-batch drains in plans/media_stream.py.
 
-Every query drains with trigger(availableNow) so results are a pure
-function of the input files, and each is oracle-checked against the
-equivalent batch SQL. Append-mode emission semantics are part of the
-contract being verified:
+Every query drains through ``streaming.watermark.drain`` (an
+``availableNow`` trigger), so results are a pure function of the
+input files, and each is oracle-checked against the equivalent batch
+SQL. Append-mode emission semantics are part of the contract being
+verified:
 
 - A windowed agg in append mode emits a window only once the event-
   time watermark passes its END; with a final no-data micro-batch the
   closing watermark is max(ts) - delay, so windows ending after that
   stay unemitted. The oracle encodes exactly that cutoff.
-- A LEFT OUTER interval join emits null-padded rows only for left rows
-  whose join window is fully below the closing watermark.
+- An OUTER interval join emits null-padded rows only for rows whose
+  join window is fully below the closing watermark.
 
 State boundedness is the 100 TB story: every operator here carries a
 watermark, so state size is O(keys in the watermark horizon), not
@@ -22,25 +23,20 @@ O(stream length).
 
 from __future__ import annotations
 
-from ..util import scratch_dir
-
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.watermark import (
-    derived_state_partitions,
-    drain_counted,
+    drain_to_memory,
     events_stream_dir,
-    run_to_memory_sink,
-    scoped_state_partitions,
+    purchase_view_join,
+    session_counts,
     sliced_stage_dir,
     stream_events,
 )
+from .media_stream import cdc_drain
 
-_WM = "2 hours"
-_WM_MICROS = 2 * 3600 * 1_000_000
+_N_SLICES = 4
 
 
 def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,13 +47,13 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators when the second groupBy uses window_time() of the first.
 
     Append mode ⇒ only hourly windows whose end the closing watermark
-    passed are emitted; the oracle applies the same cutoff."""
-    name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_chain_")
+    passed are emitted; the oracle applies the same cutoff. State is
+    sized from the source: each micro-batch commits one store
+    instance per state partition for each of the two operators."""
     src = events_stream_dir(sf_dir)
-    ev = stream_events(spark, src)
     per_10m = (
-        ev.withWatermark("ts", _WM)
+        stream_events(spark, src)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n_10m"))
     )
@@ -73,17 +69,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_buckets",
         )
     )
-    run_to_memory_sink(
-        hourly,
-        name,
-        ckpt,
-        output_mode="append",
-        # two chained stateful operators: each micro-batch commits
-        # 2 × state_partitions store instances — size them from the
-        # source, not the core count (watermark.derived_state_partitions)
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    return drain_to_memory(hourly, "append", state_from=src)
 
 
 def stream_leftouter_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,7 +77,8 @@ def stream_leftouter_interval_join(spark: SparkSession, sf_dir: str) -> DataFram
     purchase, matched to same-user views in the preceding hour, OR
     emitted once with a null view after the watermark proves no match
     can still arrive. The outer row is the state-timeout path — the
-    part an inner interval join (round 1) never exercises.
+    part the inner interval join (``stream_interval_join``) never
+    exercises.
 
     Append emission: null-padded rows appear only for purchases whose
     p_ts the closing watermark passed; matched rows are emitted as
@@ -111,51 +98,16 @@ def stream_leftouter_interval_join(spark: SparkSession, sf_dir: str) -> DataFram
     eviction is strict <); the fixture's microsecond timestamps never
     land exactly on max(ts) - delay, so the <= cutoffs in these
     oracles are safe here."""
-    name = f"stream_loj_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_loj_")
     src = events_stream_dir(sf_dir)
-    purchases = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", _WM)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    views = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WM)
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("purchase_id", "view_id")
-    run_to_memory_sink(
-        joined,
-        name,
-        ckpt,
-        output_mode="append",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    joined = purchase_view_join(spark, src, "left_outer")
+    return drain_to_memory(joined, "append", state_from=src)
 
 
 def stream_fullouter_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER event-time interval join — BOTH
     unmatched sides surface once the watermark proves their window
-    closed, completing the inner (round 1) / left-outer / full-outer
-    join matrix.
+    closed, completing the inner / left-outer / full-outer join
+    matrix.
 
     Eviction bounds differ per side because the condition is
     asymmetric (``v_ts ∈ [p_ts - 1h, p_ts]``): a purchase can be
@@ -165,80 +117,45 @@ def stream_fullouter_interval_join(spark: SparkSession, sf_dir: str) -> DataFram
     reach back). The oracle encodes exactly those two cutoffs; the
     same single-batch invariant and microsecond-boundary note as the
     left-outer query apply."""
-    name = f"stream_foj_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_foj_")
     src = events_stream_dir(sf_dir)
-    purchases = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", _WM)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
+    joined = purchase_view_join(spark, src, "full_outer")
+    return drain_to_memory(joined, "append", state_from=src)
+
+
+def _dedup_keys(
+    spark: SparkSession,
+    src: str,
+    max_files_per_trigger: int = 1_000_000,
+    min_batches: int = 0,
+) -> DataFrame:
+    """Distinct (user_id, event_type) through dropDuplicatesWithinWatermark
+    (60-day delay). The output projects the dedup KEYS only, so any
+    survivor row projects identically and the state layout is free to
+    follow the source size."""
+    deduped = (
+        stream_events(spark, src, max_files_per_trigger)
+        .select("user_id", "event_type", "ts")
+        .withWatermark("ts", "60 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
     )
-    views = (
-        stream_events(spark, src)
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WM)
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
+    return drain_to_memory(
+        deduped, "append", state_from=src, min_batches=min_batches
     )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "full_outer",
-    ).select("purchase_id", "view_id")
-    run_to_memory_sink(
-        joined,
-        name,
-        ckpt,
-        output_mode="append",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state streaming dedup: dropDuplicatesWithinWatermark
     evicts a key's state once the watermark passes its last sighting +
-    delay — the fix for round 1's stream_dedup, whose exact-dedup state
-    grows with distinct keys forever. With the delay (60 days) wider
-    than the fixture's 30-day span, suppression is total and the
-    result equals batch DISTINCT; in production the delay caps state
-    at the keys seen within the horizon."""
-    name = f"stream_ddw_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_ddw_")
-    src = events_stream_dir(sf_dir)
-    ev = stream_events(spark, src)
-    deduped = (
-        ev.select("user_id", "event_type", "ts")
-        .withWatermark("ts", "60 days")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    # output projects the dedup KEYS only, so any survivor row projects
-    # identically — state layout is free to follow the source size
-    run_to_memory_sink(
-        deduped,
-        name,
-        ckpt,
-        output_mode="append",
-        state_partitions=derived_state_partitions(spark, src),
-    )
-    return spark.table(name)
+    delay — unlike ``stream_dedup``, whose exact-dedup state grows with
+    distinct keys forever. With the delay (60 days) wider than the
+    fixture's 30-day span, suppression is total and the result equals
+    batch DISTINCT; in production the delay caps state at the keys
+    seen within the horizon."""
+    return _dedup_keys(spark, events_stream_dir(sf_dir))
 
 
-_N_SLICES = 4
-
-
-def _events_sliced(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+def _events_sliced(spark: SparkSession, sf_dir: str) -> str:
     """Events staged as ≥4 event-time-ordered parquet slices (see
     sliced_stage_dir): one file per micro-batch under
     maxFilesPerTrigger=1, watermark advancing between batches, no row
@@ -249,46 +166,16 @@ def _events_sliced(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
 def stream_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``stream_dedup_within_watermark`` drained across ≥4 watermark-
-    advancing micro-batches (r7 verdict ask #7 — the single-batch
-    variants never carry state between triggers). Each batch's
-    duplicates of keys FIRST SEEN IN EARLIER BATCHES must be
-    suppressed by state restored from the previous trigger — the
-    cross-batch contract a one-batch drain can't exercise. The delay
-    (60 days) spans the fixture, so no state evicts mid-drain and the
-    result still equals batch DISTINCT — same oracle as the
-    single-batch plan. The batch count is asserted live."""
-    name = f"stream_ddmb_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_ddmb_")
-    src, n_files = _events_sliced(spark, sf_dir)
-    ev = stream_events(spark, src, max_files_per_trigger=1)
-    deduped = (
-        ev.select("user_id", "event_type", "ts")
-        .withWatermark("ts", "60 days")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    # state sized from the source (r13, VERDICT r12 #6): the output
-    # projects the dedup KEYS only, so the emitted set is partition-
-    # independent; the asserted batch count is a function of the input
-    # file slices (maxFilesPerTrigger=1), not of the state layout
-    with scoped_state_partitions(
-        spark, derived_state_partitions(spark, src)
-    ):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        n_batches = drain_counted(q)
-    if n_batches < _N_SLICES:
-        raise RuntimeError(
-            f"multi-batch dedup drained in {n_batches} batches "
-            f"(< {_N_SLICES}) — the cross-batch contract was not exercised"
-        )
-    return spark.table(name)
+    advancing micro-batches — the single-batch variant never carries
+    state between triggers. Each batch's duplicates of keys FIRST SEEN
+    IN EARLIER BATCHES must be suppressed by state restored from the
+    previous trigger. The delay (60 days) spans the fixture, so no
+    state evicts mid-drain and the result still equals batch DISTINCT
+    — same oracle as the single-batch plan. The batch count is
+    checked live by the drain; it follows the input file slices, not
+    the state layout."""
+    src = _events_sliced(spark, sf_dir)
+    return _dedup_keys(spark, src, 1, min_batches=_N_SLICES)
 
 
 def stream_session_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,43 +195,13 @@ def stream_session_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly that cutoff; the tail sessions still open at close are
     withheld BY CONTRACT (append semantics), which is the part of the
     streaming surface the complete-mode twin can't show."""
-    name = f"stream_sessmb_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(prefix="ckpt_sessmb_")
-    src, n_files = _events_sliced(spark, sf_dir)
-    ev = stream_events(spark, src, max_files_per_trigger=1)
-    agg = (
-        ev.withWatermark("ts", _WM)
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
+    src = _events_sliced(spark, sf_dir)
+    return drain_to_memory(
+        session_counts(stream_events(spark, src, 1)),
+        "append",
+        state_from=src,
+        min_batches=_N_SLICES,
     )
-    # state sized from the source (r13, VERDICT r12 #6): append-mode
-    # emission is driven by the per-batch WATERMARK (a function of the
-    # input slices) passing a merged session's end — per-user_id state,
-    # partition-independent; the batch count is input-file driven
-    with scoped_state_partitions(
-        spark, derived_state_partitions(spark, src)
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        n_batches = drain_counted(q)
-    if n_batches < _N_SLICES:
-        raise RuntimeError(
-            f"multi-batch session drain ran {n_batches} batches "
-            f"(< {_N_SLICES}) — eviction was not exercised"
-        )
-    return spark.table(name)
 
 
 def stream_cdc_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,65 +214,7 @@ def stream_cdc_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot the PREVIOUS batch persisted — cross-batch state through
     the table, not operator memory. Same fixture, same oracle as the
     batch ``inc_cdc_apply`` and the single-batch stream."""
-    import os
-    import shutil
-
-    from ..operators.incremental import apply_cdc
-    from .functional import cdc_fixture
-
-    # Unique per-run snapshot root (r8 advice #1): a fixed path let two
-    # concurrent runs (pytest alongside a sweep) clobber each other's
-    # snapshot mid-drain. scratch_dir is uuid-suffixed and reclaimed at
-    # process exit like every other scratch location.
-    target = os.path.join(scratch_dir(prefix="stream_cdc_mb_"), "base")
-    ckpt = scratch_dir(prefix="ckpt_cdcmb_")
-
-    base, changes = cdc_fixture(spark, sf_dir)
-    base.write.mode("overwrite").parquet(target)
-    stage, n_files = sliced_stage_dir(
-        changes, ["o_orderdate", "o_orderkey"], _N_SLICES, prefix="cdc_mb_feed_"
-    )
-
-    feed = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-
-    def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
-        s = bdf.sparkSession
-        existing = s.read.parquet(target)
-        merged = apply_cdc(
-            existing, bdf, "c_custkey", ("o_orderdate", "o_orderkey")
-        )
-        out = target + "__tmp"
-        merged.write.mode("overwrite").parquet(out)
-        # Promote by renaming the old snapshot ASIDE first (r8 advice
-        # #1): a crash between the two renames leaves the previous
-        # snapshot recoverable at __old instead of leaving no base at
-        # all (the rmtree-then-rename shape had that hole).
-        old = target + "__old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(target, old)
-        os.rename(out, target)
-        shutil.rmtree(old, ignore_errors=True)
-
-    # no state sizing (r13, VERDICT r12 #6): foreachBatch has no keyed
-    # state store — cross-batch state flows through the parquet
-    # snapshot; each batch's merge is a plain batch job
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    n_batches = drain_counted(q)
-    if n_batches < _N_SLICES:
-        raise RuntimeError(
-            f"multi-batch CDC drain ran {n_batches} batches "
-            f"(< {_N_SLICES}) — cross-batch composition was not exercised"
-        )
-    return spark.read.parquet(target).orderBy("c_custkey")
+    return cdc_drain(spark, sf_dir, n_slices=_N_SLICES)
 
 
 QUERIES = {
@@ -441,6 +240,8 @@ _CLOSE_WM_JOIN = (
     " (SELECT max(ts) FROM events WHERE event_type = 'view')"
     ") - INTERVAL 2 HOUR)"
 )
+
+_DISTINCT_KEYS = "SELECT DISTINCT user_id, event_type FROM events"
 
 ORACLES = {
     "stream_chained_window_agg": f"""
@@ -519,14 +320,10 @@ ORACLES = {
         UNION ALL SELECT * FROM unmatched_p
         UNION ALL SELECT * FROM unmatched_v
     """,
-    "stream_dedup_within_watermark": """
-        SELECT DISTINCT user_id, event_type FROM events
-    """,
+    "stream_dedup_within_watermark": _DISTINCT_KEYS,
     # same answer as the single-batch plan — the multi-batch drain must
     # not change it (in-order slices, no eviction under the 60-day delay)
-    "stream_dedup_multibatch": """
-        SELECT DISTINCT user_id, event_type FROM events
-    """,
+    "stream_dedup_multibatch": _DISTINCT_KEYS,
     # batch sessionization (end-exclusive >= gap rule, as
     # stream_session_counts) restricted to sessions the CLOSING
     # watermark emitted — append-mode semantics; the mid-drain

@@ -1,25 +1,36 @@
-"""Streaming ingest + watermarked windowed aggregation.
+"""Streaming ingest, the event-stream plans, and the one drain.
 
 Reference analog: the batch high-watermark incremental extract
 (``scripts/pyspark/extract_postgres_table.py:28-34,72-76``) is the
 reference's only "streaming" — a poll-filter-persist loop. Here it is
 also expressed natively as Structured Streaming: file source →
-event-time watermark → windowed aggregation → sink, with the
-checkpoint carrying the watermark state the reference kept in an
-Airflow Variable.
+event-time watermark → stateful operator → sink, with the checkpoint
+carrying the watermark state the reference kept in an Airflow
+Variable.
 
-Batch parity is what correctness requires (SURVEY.md §2.10); the
-streaming path must produce the same per-window counts as the batch
-groupBy under complete processing (tested in tests/test_streaming.py).
+Every streaming query in the engine runs through ``drain``: an
+``availableNow`` trigger (process everything that landed, then stop),
+so a result is a pure function of the input files and batch parity is
+what correctness requires (SURVEY.md §2.10). The streaming path must
+produce the same answers as the batch plan under complete processing
+(tested in tests/test_streaming.py and the registry oracle tests).
 """
 
 from __future__ import annotations
 
-from ..util import scratch_dir
+import glob
+import os
+import shutil
+import time
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..util import scratch_dir
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -40,8 +51,6 @@ def events_stream_dir(sf_dir: str) -> str:
     The test fixture is a single read-only parquet file; stage a temp
     directory of symlinks to it (zero-copy). Production callers point
     stream_events at their real landing directory instead."""
-    import os
-
     d = scratch_dir(prefix="events_stream_")
     os.symlink(
         os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
@@ -54,28 +63,24 @@ def sliced_stage_dir(
     order_cols: list[str],
     n_slices: int = 4,
     prefix: str = "sliced_stream_",
-) -> tuple[str, int]:
+) -> str:
     """Stage a frame as ``n_slices`` parquet files RANGE-PARTITIONED on
     ``order_cols`` with strictly increasing mtimes — the multi-batch
-    landing fixture (r7 verdict ask #7). A ``maxFilesPerTrigger=1``
-    availableNow drain then processes one file per micro-batch in
-    mtime order, and because file i's rows all order BELOW file i+1's
-    on the slice key, the stream sees a time-ordered feed: the
-    watermark advances between batches yet no row ever arrives late,
-    so cross-batch state and eviction are exercised WITHOUT changing
-    the answer. (Real changelogs/landings are time-ordered the same
-    way; this is the production shape, not a trick.)"""
-    import glob as _glob
-    import os
-    import time
-
+    landing fixture. A ``maxFilesPerTrigger=1`` availableNow drain
+    then processes one file per micro-batch in mtime order, and
+    because file i's rows all order BELOW file i+1's on the slice key,
+    the stream sees a time-ordered feed: the watermark advances
+    between batches yet no row ever arrives late, so cross-batch state
+    and eviction are exercised WITHOUT changing the answer. (Real
+    changelogs/landings are time-ordered the same way; this is the
+    production shape, not a trick.)"""
     d = scratch_dir(prefix=prefix)
     (
         df.repartitionByRange(n_slices, *[F.col(c) for c in order_cols])
         .write.mode("overwrite")
         .parquet(d)
     )
-    parts = sorted(_glob.glob(os.path.join(d, "part-*")))
+    parts = sorted(glob.glob(os.path.join(d, "part-*")))
     if len(parts) < n_slices:
         raise RuntimeError(
             f"sliced stage produced {len(parts)} files < {n_slices} — "
@@ -86,16 +91,7 @@ def sliced_stage_dir(
     for i, p in enumerate(parts):
         t = now - (len(parts) - i) * 10
         os.utime(p, (t, t))
-    return d, len(parts)
-
-
-def drain_counted(q) -> int:
-    """Await an availableNow drain and return how many micro-batches
-    actually carried rows — the multi-batch variants assert on this so
-    'cross-batch state was exercised' is a live contract, not a
-    comment."""
-    q.awaitTermination()
-    return sum(1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0)
+    return d
 
 
 def stream_events(
@@ -121,13 +117,13 @@ def stream_events(
         spark.readStream.schema(EVENTS_SCHEMA)
         # Default pins the per-trigger file budget high enough that an
         # availableNow drain of any landing this engine stages is ONE
-        # micro-batch. plans/streaming2.py's left-outer interval-join
-        # oracle depends on that invariant (the watermark must not
-        # advance mid-drain and evict matches the oracle counts) — a
-        # multi-file landing without this option could silently split
-        # into watermark-advancing batches. The *_multibatch variants
-        # pass 1 over a sliced_stage_dir landing instead: time-ordered
-        # slices make watermark advancement safe, and exercising the
+        # micro-batch. The outer interval-join oracles depend on that
+        # invariant (the watermark must not advance mid-drain and
+        # evict matches the oracle counts) — a multi-file landing
+        # without this option could silently split into
+        # watermark-advancing batches. The *_multibatch variants pass 1
+        # over a sliced_stage_dir landing instead: time-ordered slices
+        # make watermark advancement safe, and exercising the
         # cross-batch state machinery is their whole point.
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
@@ -156,6 +152,57 @@ def windowed_event_counts(
     )
 
 
+def session_counts(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap, 2-hour watermark) with
+    their event counts. Session semantics are end-exclusive: an event
+    exactly one gap after the previous one starts a NEW session.
+    Session merging is per user_id key, so the emitted set does not
+    depend on the state layout."""
+    return (
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "user_id",
+            "n_events",
+        )
+    )
+
+
+def purchase_view_join(spark: SparkSession, source_dir: str, how: str) -> DataFrame:
+    """Stream-stream event-time interval join of purchases to views of
+    the same user within the preceding hour, as ``(purchase_id,
+    view_id)``. Two readers of one landing, each with a 2-hour
+    watermark; the join condition bounds event time on both sides, so
+    join state is evictable. ``how`` is a Spark join type (``inner``,
+    ``left_outer``, ``full_outer``); outer rows are emitted only once
+    the watermark proves no match can still arrive."""
+
+    def side(event_type: str, user: str, id_col: str, ts: str) -> DataFrame:
+        return (
+            stream_events(spark, source_dir)
+            .filter(F.col("event_type") == event_type)
+            .withWatermark("ts", "2 hours")
+            .select(
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(id_col),
+                F.col("ts").alias(ts),
+            )
+        )
+
+    purchases = side("purchase", "p_user", "purchase_id", "p_ts")
+    views = side("view", "v_user", "view_id", "v_ts")
+    return purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("v_ts") <= F.col("p_ts")),
+        how,
+    ).select("purchase_id", "view_id")
+
+
 def derived_state_partitions(spark: SparkSession, source_dir: str) -> int:
     """Stateful streaming has no AQE: ``spark.sql.shuffle.partitions``
     is frozen into the checkpoint as the state-store instance count,
@@ -167,32 +214,8 @@ def derived_state_partitions(spark: SparkSession, source_dir: str) -> int:
     so a large landing keeps full parallelism and a small one stops
     paying per-instance commit overhead. Partitioning never changes
     stateful-aggregation values (same keys, same windows, same
-    watermark), only their layout. Env override:
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` — a positive integer is
-    taken VERBATIM, including values above the session's
-    shuffle-partition count: an explicit override is the operator
-    sizing the state store for a target cluster, so the derivation's
-    clamp ceiling does not apply. A malformed or non-positive value
-    warns and falls through to the derivation instead of being
-    silently ignored or floored."""
-    import os
-    import warnings
-
+    watermark), only their layout."""
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        try:
-            n = int(env)
-        except ValueError:
-            n = 0
-        if n >= 1:
-            return n
-        warnings.warn(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS="
-            f"{env!r} is not a positive integer — override ignored, "
-            "deriving state partitions from source bytes",
-            stacklevel=2,
-        )
     total = 0
     for root, _dirs, files in os.walk(source_dir, followlinks=True):
         for f in files:
@@ -203,72 +226,110 @@ def derived_state_partitions(spark: SparkSession, source_dir: str) -> int:
     return max(1, min(cur, -(-total // (32 << 20))))
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
-def scoped_state_partitions(spark: SparkSession, state_partitions: int):
-    """Pin ``spark.sql.shuffle.partitions`` (the state-store instance
-    count a streaming checkpoint freezes in) around a SYNCHRONOUS
-    availableNow drain, restoring the previous value after — the same
-    scoping ``run_to_memory_sink(state_partitions=...)`` applies, for
-    drains that own their ``writeStream`` (multi-batch variants that
-    must count batches on the live query handle). Same single-threaded
-    session contract as run_to_memory_sink (see its docstring)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session conf keys for the duration of a block, then restore
+    each key's previous value (or unset it if it had none), also when
+    the block raises.
+
+    The keys are SESSION-global for the duration, so a query planned
+    concurrently on the same SparkSession would inherit them. This
+    engine's query layer is single-threaded per session (registry
+    queries run sequentially; the bench and sweep harnesses are
+    one-query-at-a-time), which makes the scoping exact. A caller
+    that drains concurrently with other queries isolates the drain on
+    ``spark.newSession()`` (shares the SparkContext, owns its conf)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def run_to_memory_sink(
-    agg: DataFrame,
-    table_name: str,
-    checkpoint_dir: str,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> None:
-    """Drain the stream with availableNow (process-everything-then-stop
-    — the batch-parity trigger) into an in-memory sink. ``output_mode``
-    follows the query shape: complete for full-rewrite aggregations,
-    update for stateful per-key operators, append for dedup/selection.
+def drain(
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    state_from: str | None = None,
+    min_batches: int = 0,
+) -> int:
+    """Run a configured stream writer as one ``availableNow`` drain and
+    return how many micro-batches carried rows.
 
-    ``state_partitions`` (usually ``derived_state_partitions``) pins
-    ``spark.sql.shuffle.partitions`` for THIS drain only — the value is
-    read at micro-batch planning, so setting it around the synchronous
-    availableNow drain scopes it exactly; restored afterwards.
-
-    Concurrency contract (ADVICE r12): the override mutates the
-    SESSION-global ``spark.sql.shuffle.partitions`` for the duration of
-    the drain, so any query planned CONCURRENTLY on the same
-    SparkSession (another driver thread during awaitTermination) would
-    inherit the reduced value. This engine's query layer is
-    single-threaded per session (registry queries run sequentially;
-    the bench and sweep harnesses are one-query-at-a-time), which is
-    what makes the scoped set/restore exact. A caller that runs
-    drains concurrently with batch queries must isolate the drain on
-    ``spark.newSession()`` (shares the SparkContext, owns its conf)
-    instead of passing ``state_partitions`` here."""
-    spark = agg.sparkSession
-    prev = (
-        spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None
-        else None
-    )
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    - ``checkpoint``: a fresh scratch directory unless given; a caller
+      that restarts a query against its committed offsets passes the
+      same directory to each drain.
+    - ``state_from``: a source directory to size the state store from
+      (``derived_state_partitions``). ``spark.sql.shuffle.partitions``
+      is read at micro-batch planning, so setting it around the
+      synchronous drain scopes it exactly; it is restored afterwards.
+      Left ``None``, the drain runs at the session's value — the right
+      choice for drains with no keyed state store (``foreachBatch``,
+      stateless passthroughs).
+    - ``min_batches``: raise if fewer micro-batches carried rows, so a
+      multi-batch drain's "cross-batch state was exercised" is a live
+      check rather than a comment."""
+    spark = writer._spark  # the writer's own session; no public accessor
+    conf = {}
+    if state_from is not None:
+        n = derived_state_partitions(spark, state_from)
+        conf["spark.sql.shuffle.partitions"] = str(n)
+    with scoped_conf(spark, conf):
         q = (
-            agg.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
+            writer.option(
+                "checkpointLocation", checkpoint or scratch_dir(prefix="ckpt_")
+            )
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    n_batches = sum(1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0)
+    if n_batches < min_batches:
+        raise RuntimeError(
+            f"drain ran {n_batches} micro-batches with rows (< {min_batches}): "
+            "the cross-batch contract was not exercised"
+        )
+    return n_batches
+
+
+def drain_to_memory(
+    stream: DataFrame,
+    output_mode: str,
+    checkpoint: str | None = None,
+    state_from: str | None = None,
+    min_batches: int = 0,
+) -> DataFrame:
+    """``drain`` into an in-memory sink under a unique table name and
+    return that table. ``output_mode`` follows the query shape:
+    complete for full-rewrite aggregations, update for stateful
+    per-key operators, append for dedup, joins and windows closed by
+    the watermark."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    drain(
+        stream.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        checkpoint=checkpoint,
+        state_from=state_from,
+        min_batches=min_batches,
+    )
+    return stream.sparkSession.table(name)
+
+
+def write_snapshot(df: DataFrame, target: str) -> None:
+    """Replace the parquet snapshot at ``target`` with ``df`` — the
+    cross-batch state of a ``foreachBatch`` merge. The new snapshot is
+    written beside the target, and the old one is renamed ASIDE before
+    the new one is renamed in, so a crash between the two renames
+    leaves the previous snapshot recoverable at ``<target>__old``
+    instead of leaving no snapshot at all."""
+    staged, old = target + "__tmp", target + "__old"
+    df.write.mode("overwrite").parquet(staged)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(target):
+        os.rename(target, old)
+    os.rename(staged, target)
+    shutil.rmtree(old, ignore_errors=True)

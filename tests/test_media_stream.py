@@ -13,12 +13,10 @@ from tests.oracle_check import compare
 
 @pytest.mark.parametrize("name", sorted(media_stream.ORACLES))
 def test_media_stream_matches_oracle(spark, duck, name):
-    compare(
-        media_stream.QUERIES[name](spark, SF_DIR),
-        duck,
-        media_stream.ORACLES[name],
-        name,
-    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got = media_stream.QUERIES[name](spark, SF_DIR)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    compare(got, duck, media_stream.ORACLES[name], name)
 
 
 @pytest.mark.parametrize("name", sorted(joblistings.ORACLES))

@@ -13,14 +13,14 @@ import os
 import pytest
 
 from end_to_end_data_engineering_job_listings_etl_spark import registry
-from tests.conftest import SF_DIR as _DEFAULT_SF_DIR
+from tests.conftest import SF_DIR as _CONFTEST_SF_DIR
 
 # Audit plans at any scale point: the r5 sf1 run
 # (SPARK_GRAFT_AUDIT_SF_DIR=/tmp/sf1, dataset from
 # scripts_dev/make_sf1.py) verified all 230 batch plans clean at 10x
 # data — AQE re-planning does not reintroduce any of the three
 # scale killers at that size.
-SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", _DEFAULT_SF_DIR)
+SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", _CONFTEST_SF_DIR)
 
 _STREAMING = {
     "stream_window_counts",

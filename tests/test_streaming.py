@@ -1,15 +1,18 @@
-"""Structured Streaming path: batch parity of the windowed rollup."""
+"""Structured Streaming path: batch parity of the windowed rollup, the
+stateful operators and checkpoint resume, plus the drain's contract."""
 
 from __future__ import annotations
 
-import tempfile
-
+import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_job_listings_etl_spark.catalog import load_table
 from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+    derived_state_partitions,
+    drain,
+    drain_to_memory,
     events_stream_dir,
-    run_to_memory_sink,
+    scoped_conf,
     stream_events,
     windowed_event_counts,
 )
@@ -18,11 +21,9 @@ from tests.conftest import SF_DIR
 
 def test_streaming_windowed_counts_match_batch(spark):
     streamed = windowed_event_counts(stream_events(spark, events_stream_dir(SF_DIR)))
-    with tempfile.TemporaryDirectory() as ckpt:
-        run_to_memory_sink(streamed, "stream_counts", ckpt)
     got = {
         (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM stream_counts").collect()
+        for r in drain_to_memory(streamed, "complete").collect()
     }
 
     batch = (
@@ -38,24 +39,13 @@ def test_streaming_windowed_counts_match_batch(spark):
 
 def test_stateful_running_totals_match_batch(spark):
     import math
-    import tempfile
 
     from end_to_end_data_engineering_job_listings_etl_spark.streaming.stateful import running_user_totals
 
     stream = running_user_totals(stream_events(spark, events_stream_dir(SF_DIR)))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("user_totals")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM user_totals").collect()
+        for r in drain_to_memory(stream, "update").collect()
     }
     batch = (
         load_table(spark, SF_DIR, "events")
@@ -87,8 +77,8 @@ def test_checkpoint_resume_two_batches_exactly_once(spark, tmp_path):
         os.path.join(src, "events.parquet"),
     )
     agg = windowed_event_counts(stream_events(spark, src))
-    run_to_memory_sink(agg, "resume_counts", ckpt)
-    n1 = spark.sql("SELECT sum(n_events) AS s FROM resume_counts").collect()[0]["s"]
+    first = drain_to_memory(agg, "complete", checkpoint=ckpt)
+    n1 = first.agg(F.sum("n_events")).collect()[0][0]
 
     # a second micro-batch: 7 fresh events in one already-seen window
     base = load_table(spark, SF_DIR, "events")
@@ -114,8 +104,8 @@ def test_checkpoint_resume_two_batches_exactly_once(spark, tmp_path):
     os.rename(os.path.join(staging, part), os.path.join(src, "extra.parquet"))
 
     agg2 = windowed_event_counts(stream_events(spark, src))
-    run_to_memory_sink(agg2, "resume_counts", ckpt)
-    n2 = spark.sql("SELECT sum(n_events) AS s FROM resume_counts").collect()[0]["s"]
+    second = drain_to_memory(agg2, "complete", checkpoint=ckpt)
+    n2 = second.agg(F.sum("n_events")).collect()[0][0]
     assert n2 == n1 + 7
 
 
@@ -124,8 +114,6 @@ def test_tws_operator_gated_without_protobuf(spark):
     protocol needs google.protobuf; this container lacks it, so the
     plan-level wrapper must raise NotImplementedError (and run for
     real wherever protobuf exists)."""
-    import pytest
-
     try:
         import google.protobuf  # noqa: F401
 
@@ -146,31 +134,55 @@ def test_tws_operator_gated_without_protobuf(spark):
             stream_tws_user_totals(spark, SF_DIR)
 
 
-def test_state_partitions_override_semantics(spark, monkeypatch):
-    """ADVICE r12: an explicit SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    override is honored verbatim — including ABOVE the session's
-    shuffle-partition count (the operator is sizing for a target
-    cluster, not this session) — and a malformed or non-positive value
-    warns and falls back to the source-bytes derivation instead of
-    being silently swallowed or floored."""
-    import warnings
-
-    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
-        derived_state_partitions,
-    )
-
-    d = events_stream_dir(SF_DIR)
+def test_derived_state_partitions_sized_from_source(spark, tmp_path):
+    """State partitions follow the landing's bytes (~32 MB each): one
+    for the small events landing, and never above the session's
+    shuffle partitions however large the landing is. The large landing
+    is a sparse file, so its size costs no disk."""
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert derived_state_partitions(spark, events_stream_dir(SF_DIR)) == 1
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(cur + 7))
-    assert derived_state_partitions(spark, d) == cur + 7
+    big = tmp_path / "landing"
+    big.mkdir()
+    with open(big / "events.parquet", "wb") as f:
+        f.truncate((cur + 5) * (32 << 20))
+    assert derived_state_partitions(spark, str(big)) == cur
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    derivation = derived_state_partitions(spark, d)
-    for bad in ("0", "-3", "not-an-int"):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", bad)
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            derived = derived_state_partitions(spark, d)
-        assert any("override ignored" in str(w.message) for w in caught), bad
-        assert derived == derivation, bad
+
+def test_failed_drain_reraises_and_restores_conf(spark):
+    """A drain whose foreachBatch raises must surface the error and
+    still restore spark.sql.shuffle.partitions, which it set from the
+    source for the drain; the batch ran under the sized value."""
+    src = events_stream_dir(SF_DIR)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    seen = []
+
+    def boom(bdf, _batch_id):
+        seen.append(bdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise ValueError("boom in foreachBatch")
+
+    try:
+        sized = str(derived_state_partitions(spark, src))
+        with pytest.raises(Exception, match="boom in foreachBatch"):
+            drain(stream_events(spark, src).writeStream.foreachBatch(boom), state_from=src)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert seen == [sized]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_scoped_conf_unsets_a_key_it_introduced(spark):
+    """A key with no value before the block is unset again after it,
+    the path the RocksDB provider of stream_tws_user_totals takes."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    if prev is not None:
+        spark.conf.unset(key)
+    try:
+        with scoped_conf(spark, {key: "x.Provider"}):
+            assert spark.conf.get(key) == "x.Provider"
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)

@@ -1,5 +1,5 @@
-"""Round-2 streaming (chained aggs, left-outer interval join,
-dedup-within-watermark) vs the batch oracle, plus emission invariants."""
+"""Chained aggs, outer interval joins, dedup-within-watermark and the
+multi-batch twins vs the batch oracle, plus emission invariants."""
 
 from __future__ import annotations
 
@@ -12,9 +12,10 @@ from tests.oracle_check import compare
 
 @pytest.mark.parametrize("name", sorted(streaming2.QUERIES))
 def test_streaming2_matches_oracle(spark, duck, name):
-    compare(
-        streaming2.QUERIES[name](spark, SF_DIR), duck, streaming2.ORACLES[name], name
-    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got = streaming2.QUERIES[name](spark, SF_DIR)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    compare(got, duck, streaming2.ORACLES[name], name)
 
 
 def test_leftouter_join_emits_null_rows(spark):
@@ -35,8 +36,8 @@ def test_dedup_within_watermark_is_exactly_distinct(spark):
 
 
 def test_multibatch_dedup_equals_single_batch(spark):
-    """Ask r7-#7 parity: the ≥4-batch drain must produce exactly the
-    single-batch plan's rows (cross-batch state suppressed the same
+    """The ≥4-batch drain must produce exactly the single-batch plan's
+    rows (cross-batch state suppressed the same
     duplicate set)."""
     single = {
         (r["user_id"], r["event_type"])
@@ -68,40 +69,16 @@ def test_multibatch_session_equals_single_batch_append(spark):
     session plan (one staged file, same closing watermark) emits
     exactly the multi-batch drain's rows — mid-drain eviction changed
     when sessions were emitted, never what was emitted."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        drain_to_memory,
         events_stream_dir,
+        session_counts,
         stream_events,
     )
-    from end_to_end_data_engineering_job_listings_etl_spark.util import scratch_dir
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"sess_single_{_uuid.uuid4().hex[:8]}"
     ev = stream_events(spark, events_stream_dir(SF_DIR))
-    agg = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_sess1_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    single = sorted(map(tuple, spark.table(name).collect()))
+    single = sorted(map(tuple, drain_to_memory(session_counts(ev), "append").collect()))
     multi = sorted(
         map(tuple, streaming2.stream_session_multibatch(spark, SF_DIR).collect())
     )
