@@ -49,7 +49,6 @@ content, so replacing a file under a live session's sf_dir needs
 
 from __future__ import annotations
 
-import os
 import time
 import weakref
 from collections import OrderedDict
@@ -60,6 +59,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.ids import release_pins
+from .session import env_override
 
 _DATASET_CAP = 4
 
@@ -182,15 +182,12 @@ def state_budget_bytes(spark: SparkSession) -> int:
     """$SPARK_GRAFT_STATE_BUDGET_MB, default 40% of driver max heap —
     leaves the unified pool execution headroom plus unmanaged slack
     even when a query's working set peaks."""
-    env = os.environ.get("SPARK_GRAFT_STATE_BUDGET_MB")
-    if env:
-        # query_boundary sits on the registry hot path, so a malformed
-        # override falls through to the heap-derived default instead
-        # of failing every query
-        try:
-            return int(env) * 2**20
-        except ValueError:
-            pass
+    # query_boundary sits on the registry hot path, so a malformed
+    # override warns and falls through to the heap-derived default
+    # instead of failing every query
+    env = env_override("SPARK_GRAFT_STATE_BUDGET_MB", None)
+    if env is not None:
+        return int(env) * 2**20
     try:
         max_heap = int(
             spark._jvm.java.lang.Runtime.getRuntime().maxMemory()

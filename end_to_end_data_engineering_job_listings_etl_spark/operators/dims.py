@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.dates import date_attributes
-from .ids import ranked_ids_grouped
+from .ids import prefix_offsets, ranked_ids
 
 
 class DimSpec(NamedTuple):
@@ -71,23 +71,10 @@ def build_dim(
     ).alias("__bucket")
     bucketed = distinct.select(bucket, *key_names)
     w_in = Window.partitionBy("__bucket").orderBy(*key_names)
-    counts = bucketed.groupBy("__bucket").count()
-    # ≤ n_buckets rows: exclusive prefix counts via a broadcast
-    # triangular self-join — a cumulative window here would plan a
-    # single-partition exchange (constant partition keys fold away).
-    ca, cb = counts.alias("ca"), counts.alias("cb")
-    offsets = (
-        ca.join(F.broadcast(cb), F.col("cb.__bucket") < F.col("ca.__bucket"), "left")
-        .groupBy(F.col("ca.__bucket").alias("__bucket"))
-        .agg(F.coalesce(F.sum("cb.count"), F.lit(0)).alias("__offset"))
-    )
-    return (
-        bucketed.withColumn("__rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "__bucket")
-        .select(
-            (F.col("__rn") + F.col("__offset")).cast("int").alias(sk_name),
-            *key_names,
-        )
+    numbered = bucketed.withColumn("__rn", F.row_number().over(w_in))
+    return prefix_offsets(numbered, "__bucket", F.lit(1)).select(
+        (F.col("__rn") + F.col("__offset")).cast("int").alias(sk_name),
+        *key_names,
     )
 
 
@@ -96,9 +83,9 @@ def build_dims_batched(
 ) -> dict[str, DataFrame]:
     """Build MANY dimensions in one pass: union every dim's (tagged,
     normalized, null-rejected) key projection, distinct ONCE, rank
-    ONCE with the grouped two-phase plan (``ids.ranked_ids_grouped``)
-    — a star build's distinct shuffles and rank pipelines collapse to
-    one of each. Each dim's values are the reference's
+    ONCE with the grouped two-phase plan (``ids.ranked_ids`` with
+    ``group``) — a star build's distinct shuffles and rank pipelines
+    collapse to one of each. Each dim's values are the reference's
     ``row_number() OVER (ORDER BY keys ASC NULLS FIRST)`` over its own
     distinct non-null keys: per-tag distinct tuples are the dim's own
     distinct keys, and shorter key lists are padded with typed nulls,
@@ -129,12 +116,12 @@ def build_dims_batched(
     tagged = parts[0]
     for p in parts[1:]:
         tagged = tagged.unionByName(p)
-    ranked = ranked_ids_grouped(
+    ranked = ranked_ids(
         tagged.distinct(),
-        "__tag",
         [f"__k{i}" for i in range(arity)],
         "__sk",
         pins,
+        group=["__tag"],
         # the distinct's shuffle output is stage-reused by the
         # sampling and exchange jobs — no input pin needed
         pin_input=False,

@@ -16,7 +16,10 @@ ANSI-SQL oracle still matches) and removes the funnel:
 2. ``row_number`` / running-sum *within* each partition — parallel,
    whole-stage-codegen windows partitioned by ``spark_partition_id``.
 3. Per-partition totals (one tiny agg, ≤ #partitions rows) turned
-   into exclusive prefix offsets and broadcast back.
+   into exclusive prefix offsets and broadcast back
+   (``prefix_offsets`` — the one offsets join, also behind the
+   md5-bucketed ordinals of ``dims.build_dim`` and
+   ``traindata.samp_global_shuffle``).
 
 Ordinal = within-partition number + offset of all lower ranges — the
 exact global ``row_number`` (ties co-locate: range partitioning sends
@@ -65,10 +68,6 @@ def _as_sort_exprs(order_cols: Sequence[Column | str]) -> list[Column]:
     ]
 
 
-def _n_parts(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-
 def release_pins(frames: Sequence[DataFrame]) -> None:
     """Unpersist the checkpoint blocks behind localCheckpoint-pinned
     frames (``DataFrame.unpersist`` can't: a checkpointed frame is a
@@ -94,13 +93,11 @@ def _ranged_with_pid(
     df: DataFrame,
     order_cols: Sequence[Column | str],
     pins: list[DataFrame],
-    n_parts: int | None,
     pin_input: bool,
-) -> tuple[DataFrame, list[Column]]:
+) -> DataFrame:
     """Range-repartition on the ordering key and PIN the resulting
     (pid, row) assignment with a lazy localCheckpoint — see module
     docstring for why an unpinned pid is a correctness bug."""
-    sort_exprs = _as_sort_exprs(order_cols)
     # Pin the (narrow) input too: repartitionByRange's boundary-sampling
     # pass and the exchange itself would otherwise EACH recompute the
     # caller's upstream (typically a distinct over a join chain) — with
@@ -110,33 +107,46 @@ def _ranged_with_pid(
     # a persisted frame (dim distincts over the cached landing) pass
     # pin_input=False and skip this materialization's job entirely.
     pinned = df.localCheckpoint(eager=False) if pin_input else df
+    # An explicit partition count (the session's shuffle partitions)
+    # keeps AQE from coalescing the range exchange.
+    n_ranges = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranged = (
-        pinned.repartitionByRange(n_parts or _n_parts(df), *sort_exprs)
+        pinned.repartitionByRange(n_ranges, *_as_sort_exprs(order_cols))
         .select(F.spark_partition_id().alias(_PID), "*")
         .localCheckpoint(eager=False)
     )
     if pin_input:
         pins.append(pinned)
     pins.append(ranged)
-    return ranged, sort_exprs
+    return ranged
 
 
-def _with_offsets(ranged: DataFrame, weight: Column) -> DataFrame:
-    """Per-partition exclusive prefix totals of ``weight``, broadcast
-    back onto ``ranged`` as ``__offset``. The offsets frame is at most
-    #partitions rows; its prefix sum is a broadcast triangular
-    self-join (O(P²) on ≤ a few hundred rows) rather than a cumulative
-    window — a constant-partitioned window gets its foldable key
-    optimized away and regenerates the exact single-partition exchange
-    this module exists to remove."""
-    totals = ranged.groupBy(_PID).agg(F.sum(weight).alias("__total"))
+def prefix_offsets(
+    frame: DataFrame, part: str, weight: Column, group: Sequence[str] = ()
+) -> DataFrame:
+    """``frame`` plus ``__offset``: the sum of ``weight`` over the rows
+    of the same ``group`` whose ``part`` is lower than the row's own.
+    Every dense ordinal here is a within-part number plus this offset
+    (``part`` is a range partition id or an ordered hash bucket).
+
+    The offsets frame has one row per (group, part) — a few hundred at
+    most — and its prefix sum is a broadcast triangular self-join
+    (O(P²) on that frame) rather than a cumulative window: a
+    constant-partitioned window gets its foldable key optimized away
+    and regenerates the single-partition exchange this module exists
+    to remove."""
+    keys = [*group, part]
+    totals = frame.groupBy(*keys).agg(F.sum(weight).alias("__total"))
     a, b = totals.alias("a"), totals.alias("b")
+    cond = F.col(f"b.{part}") < F.col(f"a.{part}")
+    for g in group:
+        cond = (F.col(f"a.{g}") == F.col(f"b.{g}")) & cond
     offsets = (
-        a.join(F.broadcast(b), F.col(f"b.{_PID}") < F.col(f"a.{_PID}"), "left")
-        .groupBy(F.col(f"a.{_PID}").alias(_PID))
+        a.join(F.broadcast(b), cond, "left")
+        .groupBy(*[F.col(f"a.{k}").alias(k) for k in keys])
         .agg(F.coalesce(F.sum("b.__total"), F.lit(0)).alias("__offset"))
     )
-    return ranged.join(F.broadcast(offsets), _PID)
+    return frame.join(F.broadcast(offsets), keys)
 
 
 def ranked_ids(
@@ -144,71 +154,28 @@ def ranked_ids(
     order_cols: Sequence[Column | str],
     id_name: str,
     pins: list[DataFrame],
+    group: Sequence[str] = (),
     start: int = 0,
-    n_parts: int | None = None,
     pin_input: bool = True,
 ) -> DataFrame:
-    """``start + row_number() OVER (ORDER BY order_cols)`` as an INT
-    column, computed with the range/two-phase plan above. Output
-    columns: ``df``'s columns plus ``id_name``. ``pins`` receives the
-    checkpointed frames (the module's pin contract).
-    ``pin_input=False`` skips the input checkpoint when the caller's
-    upstream is already persisted (cheap to scan twice)."""
-    ranged, sort_exprs = _ranged_with_pid(df, order_cols, pins, n_parts, pin_input)
-    w_in = Window.partitionBy(_PID).orderBy(*sort_exprs)
+    """``start + row_number() OVER (PARTITION BY group ORDER BY
+    order_cols)`` as an INT column, computed with the range/two-phase
+    plan above. Output columns: ``df``'s columns plus ``id_name``.
+    ``pins`` receives the checkpointed frames (the module's pin
+    contract). ``pin_input=False`` skips the input checkpoint when the
+    caller's upstream is already persisted (cheap to scan twice).
+
+    With ``group`` this is the BATCHED surrogate-key assigner: a star
+    build that needs independent dense keys for N dimensions unions
+    their tagged keys and ranks them in ONE sampling pass, ONE range
+    exchange and ONE offsets broadcast. The range exchange keys on
+    (group, order_cols), so each group occupies contiguous partitions,
+    and offsets accumulate over the group's own lower partitions only:
+    the values equal ranking each group separately."""
+    ranged = _ranged_with_pid(df, [*group, *order_cols], pins, pin_input)
+    w_in = Window.partitionBy(_PID, *group).orderBy(*_as_sort_exprs(order_cols))
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
-    out = _with_offsets(numbered, F.lit(1))
-    return out.select(
-        *df.columns,
-        (F.col("__rn") + F.col("__offset") + F.lit(start))
-        .cast("int")
-        .alias(id_name),
-    )
-
-
-def ranked_ids_grouped(
-    df: DataFrame,
-    group_col: str,
-    order_cols: Sequence[Column | str],
-    id_name: str,
-    pins: list[DataFrame],
-    start: int = 0,
-    n_parts: int | None = None,
-    pin_input: bool = True,
-) -> DataFrame:
-    """Per-group ``start + row_number() OVER (PARTITION BY group
-    ORDER BY order_cols)`` with the same range/two-phase plan — the
-    BATCHED surrogate-key assigner: a star build that needs
-    independent dense SKs for N dimensions unions their (tagged,
-    normalized) keys and ranks them all in ONE sampling pass, ONE
-    range exchange, ONE offsets broadcast, instead of N of each.
-
-    The range exchange keys on (group, order_cols) so a group's keys
-    occupy contiguous partition ranges; the in-partition window
-    partitions by (pid, group) and offsets accumulate per group over
-    that group's own lower partitions only — values are identical to
-    running ``ranked_ids`` per group separately."""
-    ranged, _ = _ranged_with_pid(
-        df, [group_col, *order_cols], pins, n_parts, pin_input
-    )
-    w_in = Window.partitionBy(_PID, group_col).orderBy(*_as_sort_exprs(order_cols))
-    numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
-    totals = ranged.groupBy(group_col, _PID).agg(F.count("*").alias("__total"))
-    a, b = totals.alias("a"), totals.alias("b")
-    offsets = (
-        a.join(
-            F.broadcast(b),
-            (F.col(f"a.{group_col}") == F.col(f"b.{group_col}"))
-            & (F.col(f"b.{_PID}") < F.col(f"a.{_PID}")),
-            "left",
-        )
-        .groupBy(
-            F.col(f"a.{group_col}").alias(group_col),
-            F.col(f"a.{_PID}").alias(_PID),
-        )
-        .agg(F.coalesce(F.sum("b.__total"), F.lit(0)).alias("__offset"))
-    )
-    out = numbered.join(F.broadcast(offsets), [group_col, _PID])
+    out = prefix_offsets(numbered, _PID, F.lit(1), group)
     return out.select(
         *df.columns,
         (F.col("__rn") + F.col("__offset") + F.lit(start))
@@ -223,7 +190,6 @@ def exclusive_prefix_sum(
     weight_col: str,
     out_name: str,
     pins: list[DataFrame],
-    n_parts: int | None = None,
     pin_input: bool = True,
 ) -> DataFrame:
     """``sum(weight) OVER (ORDER BY order_cols ROWS UNBOUNDED
@@ -231,16 +197,16 @@ def exclusive_prefix_sum(
     two-phase plan — the running-start form used to seed dense key
     blocks (e.g. first ordinal of each duplicate-tuple group).
     ``pins`` / ``pin_input`` as in ``ranked_ids``."""
-    ranged, sort_exprs = _ranged_with_pid(df, order_cols, pins, n_parts, pin_input)
+    ranged = _ranged_with_pid(df, order_cols, pins, pin_input)
     w_in = (
         Window.partitionBy(_PID)
-        .orderBy(*sort_exprs)
+        .orderBy(*_as_sort_exprs(order_cols))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = ranged.select(
         "*", F.coalesce(F.sum(weight_col).over(w_in), F.lit(0)).alias("__local")
     )
-    out = _with_offsets(local, F.col(weight_col))
+    out = prefix_offsets(local, _PID, F.col(weight_col))
     return out.select(
         *df.columns, (F.col("__local") + F.col("__offset")).alias(out_name)
     )

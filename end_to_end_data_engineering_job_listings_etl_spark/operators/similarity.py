@@ -98,11 +98,13 @@ def ivf_assign(
     IVF-PQ encode) never need a join back on the id.
 
     ``quantize_e6=True`` ranks centroids by ``floor(cos·1e6)`` instead
-    of the raw double — the same grid as ``ivf_assign_arrow`` — so an
-    oracle replaying the assignment in another engine can't flip a
-    cell on a ~ULP fold difference (r7 advice #4). Exact-replay
-    consumers (ev_ann_recall, sim_ivfpq_topk) keep the raw default;
-    their oracles reproduce the engine fold bit for bit by contract."""
+    of the raw double — the e6 contract of ``ivf_assign_blocked`` — so
+    an oracle replaying the assignment in another engine can't flip a
+    cell on a ~ULP fold difference. A zero-norm vector's cosine is
+    null, which ``array_max`` orders below every score, so it goes to
+    the highest centroid id. Exact-replay consumers (ev_ann_recall,
+    sim_ivfpq_topk) keep the raw default; their oracles reproduce the
+    engine fold bit for bit by contract."""
     v = F.col(vec_col).cast("array<double>")
     raw = lambda cvec: cosine(v, lit_vector(cvec))  # noqa: E731
     sim = (
@@ -120,75 +122,6 @@ def ivf_assign(
     )
 
 
-def ivf_assign_arrow(
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: Sequence[tuple[int, Sequence[float]]],
-) -> DataFrame:
-    """``ivf_assign`` at production k: max-cosine centroid via an
-    Arrow-batched ``mapInPandas`` GEMM instead of a k-term Catalyst
-    expression — one narrow pass whose cost is a (batch × dim) @
-    (dim × k) matmul, so k can track corpus size (SemDeDup's cell-
-    size control) without exploding the plan. ``ivf_assign`` stays
-    the right call for literal-small k (≤ ~16).
-
-    Cross-engine exactness (ADVICE r6): BLAS pairwise summation and a
-    sequential fold can disagree by ~1e-15, so the argmax here runs
-    over ``floor(cos * 1e6)`` — the oracle side orders by the same
-    quantity — and near-ULP differences can no longer flip an
-    assignment (a flip now needs the true cosine within ~1e-15 of a
-    1e-6 grid line AND a second centroid in the same bucket).
-    Quantized ties resolve to the HIGHER centroid id on both sides.
-    Zero norms: a -inf sentinel is behaviorally identical to
-    ``ivf_assign``'s null cosine and the oracle's NULL — never chosen
-    while any centroid scores, and an all-zero row degrades to the
-    highest centroid id on all three paths (Catalyst ``array_max``
-    treats a null struct field as smallest; DuckDB orders NULLS LAST
-    under DESC — both verified empirically)."""
-    import numpy as np
-
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    order = np.argsort(cids)  # ascending, so reversed-argmax = highest cid
-    cmat = np.stack(
-        [np.asarray(v, dtype=np.float64) for _, v in centroids]
-    )[order]
-    cids = cids[order]
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("centroid_id", T.IntegerType()),
-        ]
-    )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            xn = np.sqrt((x * x).sum(axis=1))
-            denom = np.outer(xn, cnorm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom != 0, (x @ cmat.T) / denom, -np.inf)
-            cos = np.floor(cos * 1e6)  # e6 quantization, see docstring
-            rev = cos[:, ::-1]
-            pos = rev.argmax(axis=1)  # first max in reversed = highest cid
-            best = cids[len(cids) - 1 - pos]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "centroid_id": best.astype("int32"),
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(run, out_schema)
-
-
 def ivf_assign_blocked(
     corpus: DataFrame,
     vec_col: str,
@@ -199,39 +132,46 @@ def ivf_assign_blocked(
     block_size: int = 4096,
     group_vectors: int = 65536,
 ) -> DataFrame:
-    """``ivf_assign_arrow`` with the centroids kept IN A DATAFRAME —
-    the fully distributed shape for k that grows with the corpus
-    (r7 verdict weak #1). No driver-side collect of anything that
-    scales with the data, no task-closure matrix, no broadcast of the
-    centroid set:
+    """Max-cosine centroid assignment with the centroids kept IN A
+    DATAFRAME — the fully distributed shape for k that grows with the
+    corpus. No driver-side collect of anything that scales with the
+    data, no task-closure matrix, no broadcast of the centroid set.
+
+    Contract (shared with ``ivf_assign(..., quantize_e6=True)`` and
+    the SQL oracles that replay it):
+
+    - the argmax runs over ``floor(cos·1e6)``, not the raw double:
+      BLAS pairwise summation and a sequential fold can disagree by
+      ~1e-15, and on the e6 grid such a difference can flip an
+      assignment only if the true cosine lies within ~1e-15 of a grid
+      line AND a second centroid shares the bucket;
+    - equal quantized scores resolve to the HIGHER centroid id;
+    - a zero-norm vector scores a large-negative sentinel against
+      every centroid (never chosen while any centroid scores), so an
+      all-zero row goes to the highest centroid id — the same answer
+      as a null cosine under Catalyst's ``array_max`` and a NULL under
+      DuckDB's ``ORDER BY sim DESC`` (NULLS LAST).
+
+    Shape:
 
     - centroids are hashed into ``ceil(k / block_size)`` blocks of
       ``block_size`` expected rows via ``pmod(xxhash64(cid), B)`` —
-      hash-uniform for ARBITRARY cid sets (r8 advice #2: ``cid % B``
-      concentrated residue-sharing cids into one block, silently
-      defeating the per-task memory bound when cids are skewed;
-      xxhash64 keeps the bound in expectation with binomial
-      concentration regardless of the cid distribution);
+      hash-uniform for ARBITRARY cid sets, where ``cid % B`` would
+      put residue-sharing cids into one block and break the per-task
+      memory bound on skewed cids;
     - vectors are hashed into ``ceil(N / group_vectors)`` sub-
       partitions and EXPLODED once per centroid block (the honest
       cost of brute-force assignment is O(N·k) FLOPs either way; the
       explode only distributes it — shuffle volume N·B rows against
       N·k·d compute keeps arithmetic intensity high);
-    - each (block, vpart) group runs the same float64 GEMM +
-      ``floor(cos·1e6)`` argmax as ``ivf_assign_arrow`` over its
-      bounded slice (≤ group_vectors × block_size), emitting a
-      per-block partial best;
+    - each (block, vpart) group runs a float64 GEMM and the e6
+      argmax over its bounded slice (≤ group_vectors × block_size),
+      emitting a per-block partial best;
     - the global winner per vector is ``max(struct(sim_e6, cid))`` —
-      exactly "highest quantized cosine, ties → higher cid", the
-      ivf_assign_arrow contract, because struct ordering is
-      lexicographic.
-
-    Zero norms score a large-negative sentinel (never chosen while
-    any centroid scores; an all-zero row degrades to the highest
-    centroid id — same as ivf_assign_arrow's -inf). Per-pair cosines
-    are bit-identical to ivf_assign_arrow's: each pair's dot uses the
-    full dim, so which other centroids share the GEMM call cannot
-    change its value.
+      exactly "highest quantized cosine, ties → higher cid", because
+      struct ordering is lexicographic. Each pair's dot uses the full
+      dim, so which other centroids share a GEMM call cannot change
+      its value.
 
     Peak memory per task: O(group_vectors·d + block_size·d). Driver
     memory: O(1). At 100 TB both knobs hold — k = N/500 centroids
@@ -336,11 +276,11 @@ def ivf_topk(
     scan only the nprobe best cells — the 1/(n_cells/nprobe) scan-
     fraction scale path (vs the brute-force full scan).
 
-    Determinism contract (r7 advice #4): BOTH folds that pick the
-    probed cells — the Python probe ranking here and the Catalyst
-    cell assignment — rank by ``floor(cos·1e6)``, the same grid as
-    ``ivf_assign_arrow``, so the oracle's SQL replay can't diverge on
-    a ~ULP difference between three independent cosine folds."""
+    Determinism contract: BOTH folds that pick the probed cells — the
+    Python probe ranking here and the Catalyst cell assignment — rank
+    by ``floor(cos·1e6)`` (the e6 grid of ``ivf_assign_blocked``), so
+    the oracle's SQL replay can't diverge on a ~ULP difference between
+    three independent cosine folds."""
     import math
 
     def cos_e6(a: Sequence[float], b: Sequence[float]) -> int:

@@ -543,8 +543,8 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: codes are 4 small ints per vector (~64x smaller
     than 64 float32s) — the ADC scan reads ONLY the code columns plus
     a broadcast 8x4 LUT; the encode pass is one broadcast join of the
-    corpus against the codebook (at real k this becomes the Arrow GEMM
-    pass of ``ivf_assign_arrow``, see sem_dedup_scaled). Nothing
+    corpus against the codebook (at real k this becomes the blocked
+    GEMM pass of ``ivf_assign_blocked``, see sem_dedup_scaled). Nothing
     shuffles except the one encode-agg exchange and the final
     TakeOrdered."""
     base, cb = _pq_base_and_codebook(spark, sf_dir)

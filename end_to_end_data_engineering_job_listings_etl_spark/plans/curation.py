@@ -299,10 +299,10 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEM_CENTROID_IDS = [0, 7, 13, 42]
 _SEM_THRESHOLD = 0.3
 # Above this corpus size the fixed-k=4 contrast stops being a demo and
-# becomes an O(N²/4) footgun (sf10 exponent 1.88 measured, r6 — 75x
-# its sf1 time); route to the k ∝ N production path instead (r8
-# verdict weak #3). 5000 keeps the pedagogical k=4 shape at the demo
-# SFs (200 / 2000 embeddings) and hands sf0.1+ to sem_dedup_scaled.
+# becomes an O(N²/4) footgun (sf10 exponent 1.88 measured — 75x its
+# sf1 time); route to the k ∝ N production path instead. 5000 keeps
+# the pedagogical k=4 shape at the demo SFs (200 / 2000 embeddings)
+# and hands sf0.1+ to sem_dedup_scaled.
 _SEM_FIXED_K_MAX_N = 5000
 
 
@@ -331,7 +331,7 @@ def sem_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-15. No pair can flip, so the counts are bit-stable against the
     fold-left oracle formula.
 
-    SIZE GATE (r8 verdict weak #3): the fixed-k=4 contrast is
+    SIZE GATE: the fixed-k=4 contrast is
     pedagogical — within-cell pair work is O(N²/4), measured exponent
     1.88 at sf10. Above ``_SEM_FIXED_K_MAX_N`` vectors this query
     ROUTES TO ``sem_dedup_scaled`` (k ∝ N, target cell ≈ 500 — the
@@ -414,14 +414,13 @@ def sem_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic and SQL-mirrorable; distinct embeddings under the
     replica fixtures, which shift ids but keep content) and STAY IN A
     DATAFRAME — assignment is the fully distributed blocked GEMM
-    (``ivf_assign_blocked``, r7 verdict weak #1): no driver-side
-    collect of the k×d matrix, no task-closure centroid set, so k ∝ N
-    never concentrates O(N) bytes on the driver. The only driver-side
-    values on this path are two scalar aggregates (N, and k derived
-    from it). Per-pair quantized cosines are bit-identical to the
-    previous ``ivf_assign_arrow`` closure path (full-dim dots, same
-    floor(cos·1e6) argmax), so the oracle is unchanged. Same output
-    contract as sem_dedup_clusters."""
+    (``ivf_assign_blocked``): no driver-side collect of the k×d
+    matrix, no task-closure centroid set, so k ∝ N never concentrates
+    O(N) bytes on the driver. The only driver-side values on this path
+    are two scalar aggregates (N, and k derived from it). The
+    assignment is the argmax of floor(cos·1e6) with ties to the higher
+    cid (``ivf_assign_blocked``'s contract), which the oracle replays
+    in SQL. Same output contract as sem_dedup_clusters."""
     emb = load_table_dist(spark, sf_dir, "embeddings", cols=("vec_id", "embedding"))
     n = emb.count()
     k = max(n // _SEM_TARGET_CELL, 1)
@@ -626,10 +625,10 @@ ORACLES = {
             SELECT CAST(e.vec_id AS INT) AS cid, e.v AS cv
             FROM e, par WHERE e.vec_id < par.k
         ), sims AS (
-            -- floor(cos * 1e6): the Arrow GEMM path quantizes to e6
+            -- floor(cos * 1e6): the blocked GEMM quantizes to e6
             -- before its argmax (operators/similarity.py::
-            -- ivf_assign_arrow, ADVICE r6), so the oracle ranks the
-            -- same quantity; ties -> higher cid on both sides
+            -- ivf_assign_blocked), so the oracle ranks the same
+            -- quantity; ties -> higher cid on both sides
             SELECT e.vec_id, c.cid,
                    floor({_cos("e.v", "c.cv")} * 1000000) AS sim
             FROM e CROSS JOIN cents c

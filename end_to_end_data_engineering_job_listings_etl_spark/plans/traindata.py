@@ -40,6 +40,7 @@ from ..functions import text as T
 from ..functions.text import word_shingles
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..operators.ids import prefix_offsets
 from .corpus import (
     _BAND_EXPRS,
     _JACCARD_MAX_ID,
@@ -472,34 +473,21 @@ def samp_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     rand() is neither), rank = within-bucket row_number + cumulative
     bucket offset. The bucket is the key's OWN hex prefix, so bucket
     order is consistent with key order and the two-phase rank equals
-    the global ``row_number() over (order by key)`` exactly. The only
-    partitionless window runs over 256 (bucket, count) rows. This is
-    how a 100 TB corpus gets a reproducible epoch permutation without
+    the global ``row_number() over (order by key)`` exactly. The
+    bucket offsets are ``ids.prefix_offsets`` over the 256 bucket
+    counts. This is how a 100 TB corpus gets a reproducible epoch permutation without
     funneling through one reducer."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id",))
     key = F.md5(F.concat(F.lit(_SHUF_SEED), F.col("doc_id").cast("string")))
     keyed = docs.select("doc_id", key.alias("shuffle_key")).withColumn(
         "__b", F.substring("shuffle_key", 1, _SHUF_BUCKETS_HEX)
     )
-    counts = keyed.groupBy("__b").count()
-    # 256 rows: exclusive prefix counts via a broadcast triangular
-    # self-join — a cumulative window here would plan a
-    # single-partition exchange (constant partition keys fold away).
-    ca, cb = counts.alias("ca"), counts.alias("cb")
-    offsets = (
-        ca.join(F.broadcast(cb), F.col("cb.__b") < F.col("ca.__b"), "left")
-        .groupBy(F.col("ca.__b").alias("__b"))
-        .agg(F.coalesce(F.sum("cb.count"), F.lit(0)).alias("__off"))
-    )
     w_in = Window.partitionBy("__b").orderBy("shuffle_key", "doc_id")
-    return (
-        keyed.withColumn("__rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "__b")
-        .select(
-            "doc_id",
-            "shuffle_key",
-            (F.col("__off") + F.col("__rn")).cast("bigint").alias("shuffle_rank"),
-        )
+    numbered = keyed.withColumn("__rn", F.row_number().over(w_in))
+    return prefix_offsets(numbered, "__b", F.lit(1)).select(
+        "doc_id",
+        "shuffle_key",
+        (F.col("__offset") + F.col("__rn")).cast("bigint").alias("shuffle_rank"),
     )
 
 

@@ -9,8 +9,34 @@ hold on a real cluster unchanged.
 from __future__ import annotations
 
 import os
+import re
+import warnings
 
 from pyspark.sql import SparkSession
+
+# A JVM memory size as ``spark.driver.memory`` takes it: 512m, 8g, ...
+MEMORY_SIZE = r"\d+[kmgt]"
+_POSITIVE_INT = r"0*[1-9]\d*"
+
+
+def env_override(
+    name: str, default: str | None, pattern: str = _POSITIVE_INT
+) -> str | None:
+    """The value of the environment override ``name`` when it fully
+    matches ``pattern`` (default: an integer ≥ 1), else ``default``.
+    Unset or blank means ``default``. A malformed value warns, naming
+    the variable, and falls back to ``default`` — every package
+    override is read through here, so none crashes a session start or
+    reaches the JVM unchecked, and none is dropped silently."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    if re.fullmatch(pattern, raw, re.IGNORECASE):
+        return raw
+    warnings.warn(
+        f"ignoring malformed ${name}={raw!r}; using the default", stacklevel=2
+    )
+    return default
 
 
 def get_spark(app_name: str = "end_to_end_data_engineering_job_listings_etl_spark", cpus: int | None = None) -> SparkSession:
@@ -24,7 +50,7 @@ def get_spark(app_name: str = "end_to_end_data_engineering_job_listings_etl_spar
       columnar, not pickled rows.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(env_override("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -33,7 +59,10 @@ def get_spark(app_name: str = "end_to_end_data_engineering_job_listings_etl_spar
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            env_override("SPARK_GRAFT_DRIVER_MEM", "8g", MEMORY_SIZE),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")

@@ -428,13 +428,43 @@ def test_state_budget_malformed_env_falls_back(spark, monkeypatch):
     the heap-derived default instead of raising on the registry hot
     path (query_boundary runs before EVERY registry query)."""
     monkeypatch.setenv("SPARK_GRAFT_STATE_BUDGET_MB", "sixteen-gigs")
-    budget = cachereg.state_budget_bytes(spark)
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_STATE_BUDGET_MB"):
+        budget = cachereg.state_budget_bytes(spark)
     assert budget > 0  # heap-derived, no ValueError
     # the boundary itself stays a working no-op under that budget
-    stats = cachereg.query_boundary(spark)
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_STATE_BUDGET_MB"):
+        stats = cachereg.query_boundary(spark)
     assert stats["budget"] == budget
     monkeypatch.setenv("SPARK_GRAFT_STATE_BUDGET_MB", "7")
     assert cachereg.state_budget_bytes(spark) == 7 * 2**20
+
+
+def test_env_override_warns_and_falls_back(monkeypatch):
+    """Every package env override goes through one validator: a
+    well-formed value is returned, and a malformed one (not an integer,
+    an integer below 1, a memory size that is not ``<digits>[kmgt]``)
+    warns naming the variable and yields the default."""
+    from end_to_end_data_engineering_job_listings_etl_spark.session import (
+        MEMORY_SIZE,
+        env_override,
+    )
+
+    name = "SPARK_GRAFT_TEST_OVERRIDE"
+    monkeypatch.delenv(name, raising=False)
+    assert env_override(name, "32") == "32"
+    monkeypatch.setenv(name, "6")
+    assert env_override(name, "32") == "6"
+    monkeypatch.setenv(name, "12g")
+    assert env_override(name, "8g", MEMORY_SIZE) == "12g"
+    for raw, default, pattern in (
+        ("four", "32", None),
+        ("0", "32", None),
+        ("8 GB", "8g", MEMORY_SIZE),
+    ):
+        monkeypatch.setenv(name, raw)
+        kw = {"pattern": pattern} if pattern else {}
+        with pytest.warns(UserWarning, match=name):
+            assert env_override(name, default, **kw) == default
 
 
 def test_boundary_stats_counters_and_events(spark, monkeypatch):

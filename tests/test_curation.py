@@ -115,17 +115,19 @@ def test_quality_buckets_are_ordered_and_balanced(spark):
         assert max(sizes) - min(sizes) <= 1, (lang, sizes)
 
 
-def test_ivf_assign_blocked_matches_arrow_multiblock(spark):
-    """The distributed blocked assigner must reproduce
-    ivf_assign_arrow's closure-path answer exactly — exercised with
-    knobs forced tiny so BOTH the multi-centroid-block and the
-    multi-vector-subpartition merge paths actually run (k=7 centroids
-    over block_size=2 → 4 blocks; N=40 vectors over group_vectors=6
-    → 7 vparts), including a zero vector and quantized ties."""
+def test_ivf_assign_blocked_matches_literal_multiblock(spark):
+    """The distributed blocked assigner must reproduce the literal
+    assigner on the same e6 grid (``ivf_assign(..., quantize_e6=True)``:
+    argmax of ``floor(cos·1e6)``, ties to the higher cid) exactly —
+    exercised with knobs forced tiny so BOTH the multi-centroid-block
+    and the multi-vector-subpartition merge paths actually run (k=7
+    centroids over block_size=2 → 4 blocks; N=40 vectors over
+    group_vectors=6 → 7 vparts), including a zero vector and quantized
+    ties."""
     import random
 
     from end_to_end_data_engineering_job_listings_etl_spark.operators.similarity import (
-        ivf_assign_arrow,
+        ivf_assign,
         ivf_assign_blocked,
     )
 
@@ -134,15 +136,18 @@ def test_ivf_assign_blocked_matches_arrow_multiblock(spark):
     rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(n)]
     rows[5] = (5, [0.0] * dim)  # zero-norm row → highest cid on both paths
     rows[9] = (9, [x * 3.0 for x in rows[2][1]])  # exact tie with row 2's cell
+    rows[6] = (6, list(rows[3][1]))  # centroids 3 and 6 tie → cid 6 wins
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     centroids = [(cid, rows[cid][1]) for cid in range(k)]
     cents = spark.createDataFrame(
         [(c, v) for c, v in centroids], "cid int, cv array<double>"
     )
 
-    via_arrow = {
+    via_literal = {
         r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign_arrow(emb, "embedding", "vec_id", centroids).collect()
+        for r in ivf_assign(
+            emb, "embedding", "vec_id", centroids, quantize_e6=True
+        ).collect()
     }
     via_blocked = {
         r["vec_id"]: r["centroid_id"]
@@ -150,8 +155,9 @@ def test_ivf_assign_blocked_matches_arrow_multiblock(spark):
             emb, "embedding", "vec_id", cents, block_size=2, group_vectors=6
         ).collect()
     }
-    assert via_blocked == via_arrow
+    assert via_blocked == via_literal
     assert via_blocked[5] == k - 1  # zero vector degrades to highest cid
+    assert via_blocked[3] == via_blocked[6] == 6  # equal scores → higher cid
 
 
 def test_sem_dedup_scaled_never_collects(spark):

@@ -104,24 +104,30 @@ def test_ranked_ids_partition_count_independent(spark, pins):
     """The driver owns its SparkSession; its shuffle-partition default
     (200) differs from ours (cpus). Surrogate-key VALUES must not
     depend on it: the range/two-phase rank is partition-count-
-    independent by construction — pin that with hostile counts
-    (1, 3, 200) against the 32-partition result."""
+    independent by construction — pin that with hostile session
+    counts (1, 3, 200) against the 32-partition result."""
     import pyspark.sql.functions as F
 
     from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import ranked_ids
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
 
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     keys = cust.select(F.upper("c_name").alias("k")).distinct()
-    expect = sorted(
-        (r["k"], r["sk"])
-        for r in ranked_ids(keys, ["k"], "sk", pins, n_parts=32).collect()
-    )
+    n_keys = keys.count()
+
+    def ranked(n: int) -> list[tuple[str, int]]:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
+            rows = ranked_ids(keys, ["k"], "sk", pins).collect()
+        # the range exchange ran at the session's count (capped by the
+        # number of distinct keys it can split on)
+        assert pins[-1].rdd.getNumPartitions() == min(n, n_keys)
+        return sorted((r["k"], r["sk"]) for r in rows)
+
+    expect = ranked(32)
     for n in (1, 3, 200):
-        got = sorted(
-            (r["k"], r["sk"])
-            for r in ranked_ids(keys, ["k"], "sk", pins, n_parts=n).collect()
-        )
-        assert got == expect, f"n_parts={n} diverged"
+        assert ranked(n) == expect, f"shuffle.partitions={n} diverged"
 
 
 def test_batched_dims_equal_per_dim_build(spark, pins):

@@ -49,6 +49,9 @@ def test_no_cartesian_no_row_python(spark, name):
         "jl_fact_fallback_checked",
         "jl_bridge_checked",
         "jl_star_fact",
+        "samp_global_shuffle",
+        "dim_company_bucketed",
+        "inc_upsert_dim",
     ],
 )
 def test_fact_paths_have_no_single_partition_stage(spark, name):
@@ -56,7 +59,10 @@ def test_fact_paths_have_no_single_partition_stage(spark, name):
     or dimension build must never funnel through an
     `Exchange SinglePartition` (the physical form of a partitionless
     window). Scalar-aggregate queries legitimately have one; these
-    fact plans have none at all."""
+    plans have none at all. Together they cover every caller of the
+    shared offsets join (``operators.ids.prefix_offsets``): the ranked
+    and batched ranks, the natural-key starts, the md5-bucketed dim
+    and the hex-bucketed shuffle rank."""
     df = registry.all_queries()[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, f"{name}: single-partition stage"
