@@ -112,10 +112,10 @@ def fingerprint(col: Column | str) -> Column:
 def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Distinct k-word shingles from an already-tokenized column.
 
-    Pass a *projected column reference* (not a fresh tokens(...)
-    expression): every occurrence of the token array here is then one
-    codegen local instead of a re-tokenization per reference — staging
-    tokens first makes shingling ~3× faster (measured sf0.1)."""
+    ``toks`` must be a cheap reference (a projected column or a lambda
+    variable), not a fresh ``tokens(...)`` expression: the per-shingle
+    lambda reads it once per shingle, so an expression there would
+    re-tokenize the document for every shingle."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
@@ -125,7 +125,17 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles (the MinHash input set)."""
-    return shingles_from_tokens(
-        tokens(F.lower(F.col(col) if isinstance(col, str) else col)), k
-    )
+    """A document's set: its distinct k-word shingles over lower-cased
+    whitespace tokens. Every set operator (MinHash, Jaccard,
+    containment, decontamination) reads its sets from here; ``k == 1``
+    is the distinct token set, ``array_distinct(tokens(lower(col)))``.
+
+    For ``k > 1`` the token array is bound once as a lambda variable,
+    so the tokenizer runs once per document, not once per shingle. A
+    document with fewer than ``k`` tokens, or a null one, has the empty
+    set; for ``k == 1`` a null document's set is null. Either way it
+    explodes to no rows."""
+    toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
+    if k == 1:
+        return F.array_distinct(toks)
+    return F.transform(F.array(toks), lambda t: shingles_from_tokens(t, k))[0]

@@ -7,13 +7,17 @@ reference's only dedup is `.distinct()` on dimension keys (P4/P6); a
 shuffle-conscious:
 
 - exact: one hash-aggregate on an md5 fingerprint (map-side combine).
-- MinHash/LSH: explode shingles → per-doc signature (one agg) → band
-  buckets → self-join only within buckets (candidate generation is the
-  classic LSH band trick — no O(n²) pair enumeration).
-- token-set Jaccard / containment: both start from one distinct-token
-  array per doc. Jaccard indexes only each set's prefix (AllPairs/
-  PPJoin prefix filter) and verifies candidates in-row with
-  ``array_intersect``; containment joins the full inverted index.
+- sets: every set operator reads an ``(id, set)`` frame from
+  ``shingle_sets``, whose set is ``functions.text.word_shingles`` —
+  the one definition of a document's set (k = 1: distinct tokens).
+- MinHash/LSH: ``minhash_signature`` hashes an ``(id, set)`` frame
+  (explode → one agg per id); ``minhash_lsh_pairs`` bands a signature
+  frame into buckets and self-joins only within buckets (the classic
+  LSH band trick — no O(n²) pair enumeration).
+- token-set Jaccard / containment: both read k = 1 sets. Jaccard
+  indexes only each set's prefix (AllPairs/PPJoin prefix filter) and
+  verifies candidates in-row with ``array_intersect``; containment
+  joins the full inverted index.
 - SimHash: 64-bit signature via per-token md5 bits, hamming-ball
   candidate pairs via band rotation.
 
@@ -28,7 +32,7 @@ from pyspark.sql import functions as F
 
 import random
 
-from ..functions.text import fingerprint
+from ..functions.text import fingerprint, tokens, word_shingles
 from .ids import release_pins
 
 # Affine MinHash family h_i(x) = (a_i*x + b_i) mod p over a 32-bit base
@@ -57,26 +61,22 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(keep, id_col, "left_semi")
 
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signature: one 32-bit md5-derived base hash per
-    shingle, then the affine family (a_i*h + b_i) mod p per seed. One
-    explode + one aggregate — a single shuffle on id, and ONE md5 per
-    shingle regardless of signature width."""
-    from ..functions.text import shingles_from_tokens, tokens
+def shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """``(id, set)``: each document's ``word_shingles(text, k)`` — the
+    input frame of every set operator here."""
+    return df.select(F.col(id_col), word_shingles(text_col, k).alias("set"))
 
-    shingled = df.select(
-        F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__toks")
-    ).select(
-        F.col(id_col),
-        F.explode(shingles_from_tokens(F.col("__toks"), shingle_k)).alias("sh"),
-    )
-    based = shingled.selectExpr(
+
+def minhash_signature(
+    sets: DataFrame, id_col: str, num_hashes: int = 16
+) -> DataFrame:
+    """Per-id MinHash signature of an ``(id, set)`` frame
+    (``shingle_sets``): one 32-bit md5-derived base hash per set
+    member, then the affine family (a_i*h + b_i) mod p per seed. One
+    explode + one aggregate — a single shuffle on id, and ONE md5 per
+    member regardless of signature width. An empty set has no
+    signature row."""
+    based = sets.select(F.col(id_col), F.explode("set").alias("sh")).selectExpr(
         id_col,
         "cast(conv(substring(md5(sh), 1, 8), 16, 10) AS bigint) AS h0",
     )
@@ -123,23 +123,17 @@ def lsh_buckets(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
+    sig: DataFrame,
     id_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_k: int = 3,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding: docs sharing any band
-    of the signature. Returns (id_a, id_b, n_bands_shared), id_a<id_b.
+    """Candidate near-dup pairs via LSH banding of a signature frame
+    (``minhash_signature``): ids sharing any band of the signature.
+    Returns (id_a, id_b, n_bands_shared), id_a<id_b.
 
     Scale shape: the self-join happens per band-bucket (tiny groups),
-    never across the whole corpus. Pass a precomputed (persisted)
-    ``sig`` frame when the caller also consumes the signatures — the
-    corpus-wide signature shuffle then runs once, not per consumer."""
-    if sig is None:
-        sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_k)
+    never across the whole corpus."""
     stacked = lsh_buckets(sig, id_col, num_hashes, bands)
     a = stacked.alias("a")
     b = stacked.alias("b")
@@ -153,15 +147,21 @@ def minhash_lsh_pairs(
     )
 
 
-def _token_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, __toks): each document's distinct lower-cased whitespace
-    tokens as one array — the shared input of the set-similarity
-    joins below."""
-    from ..functions.text import tokens
-
-    return df.select(
-        F.col(id_col),
-        F.array_distinct(tokens(F.lower(F.col(text_col)))).alias("__toks"),
+def _with_overlap(pairs: DataFrame, sets: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) with both sides' sets joined in and
+    their overlap computed in-row: adds ``__inter`` = |A ∩ B| and
+    ``__union`` = |A ∪ B|. ``sets`` is an ``(id, set)`` frame with
+    distinct members, so ``size(array_intersect)`` is the exact
+    intersection and no member-level join is planned."""
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col("set").alias("__sa"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col("set").alias("__sb"))
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("__inter", F.size(F.array_intersect("__sa", "__sb")))
+        .withColumn(
+            "__union", F.size("__sa") + F.size("__sb") - F.col("__inter")
+        )
     )
 
 
@@ -181,13 +181,12 @@ def jaccard_pairs(
     the ≥ τ·|x| required overlap), so joining prefixes loses nothing.
     Rare tokens land in prefixes, so index buckets stay small. Each
     distinct candidate is then verified in-row against the two token
-    arrays (``size(array_intersect(a, b))``), with no token-level
-    verification join."""
-    sets = _token_sets(df, text_col, id_col)
+    arrays (``_with_overlap``), with no token-level verification join."""
+    sets = shingle_sets(df, text_col, id_col, 1)
     toks = sets.select(
         F.col(id_col),
-        F.size("__toks").alias("__sz"),
-        F.explode("__toks").alias("tok"),
+        F.size("set").alias("__sz"),
+        F.explode("set").alias("tok"),
     )
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
     w_pos = Window.partitionBy(id_col).orderBy("__df", "tok")
@@ -220,18 +219,12 @@ def jaccard_pairs(
         )
         .distinct()
     )
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb"))
-    n_inter = F.size(F.array_intersect("__ta", "__tb"))
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        _with_overlap(cand, sets, id_col)
         .select(
             "id_a",
             "id_b",
-            F.round(
-                n_inter / (F.size("__ta") + F.size("__tb") - n_inter), 6
-            ).alias("jaccard"),
+            F.round(F.col("__inter") / F.col("__union"), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -251,10 +244,10 @@ def containment_pairs(
     Jaccard (the union is dominated by the long doc). Each side's set
     size rides through the explode, so no separate sizes aggregate is
     joined back."""
-    toks = _token_sets(df, text_col, id_col).select(
+    toks = shingle_sets(df, text_col, id_col, 1).select(
         F.col(id_col),
-        F.size("__toks").alias("__sz"),
-        F.explode("__toks").alias("tok"),
+        F.size("set").alias("__sz"),
+        F.explode("set").alias("tok"),
     )
     a, b = toks.alias("a"), toks.alias("b")
     return (
@@ -415,6 +408,10 @@ def connected_components(
 
 
 SIMHASH_BITS = 60  # 15 hex chars — fits signed int64 in every engine
+# Per-document token bound of simhash60's lane-packed bit counts: the
+# top 16-bit lane starts at bit 48 of a signed long, so its count must
+# stay below 2^15.
+SIMHASH_MAX_TOKENS = 32_767
 
 
 def simhash60(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -423,11 +420,26 @@ def simhash60(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
     Expression-only (explode + conv + bit ops + one agg). 60 bits (not
     64) so the signature is portable to engines without unsigned int64.
-    Duplicate tokens intentionally count once per occurrence? No —
-    SimHash weights by frequency; we keep every occurrence."""
-    from ..functions.text import tokens
+    Every token occurrence counts (SimHash weights by frequency), so a
+    repeated token moves the sign as often as it occurs.
 
-    toks = df.select(F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+    A document may hold at most ``SIMHASH_MAX_TOKENS`` (32,767) tokens;
+    a longer one fails the query with an error naming the bound, with
+    or without ANSI mode. Chunk longer documents upstream."""
+    staged = df.select(
+        F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__toks")
+    )
+    checked = F.when(
+        F.size("__toks") > SIMHASH_MAX_TOKENS,
+        F.raise_error(
+            F.concat(
+                F.lit("simhash60: document "),
+                F.col(id_col).cast("string"),
+                F.lit(f" has more than {SIMHASH_MAX_TOKENS} tokens"),
+            )
+        ),
+    ).otherwise(F.col("__toks"))
+    toks = staged.select(F.col(id_col), F.explode(checked).alias("tok"))
     toks = toks.selectExpr(
         id_col,
         "cast(conv(substring(md5(tok), 1, 15), 16, 10) AS bigint) AS h60",
@@ -436,8 +448,10 @@ def simhash60(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # plus one total, reconstruct the sign from 2c > n. The 60 counts
     # are lane-packed SIMD-style — 4 counts per long in 16-bit lanes —
     # so the hash aggregate carries 16 buffers instead of 61 (~4× less
-    # per-row agg work, far less generated code to JIT). Lanes bound a
-    # per-doc token count at 65,535; chunk longer docs upstream.
+    # per-row agg work, far less generated code to JIT). A lane's sum
+    # is at most the document's token count, which the check above
+    # bounds at SIMHASH_MAX_TOKENS, so no lane carries into the next
+    # and the top lane never reaches the sign bit.
     # Expressions are built as SQL text: one parser call each, not one
     # py4j round trip per bit-op (hundreds of driver RPCs ≈ seconds).
     lane_sums = [

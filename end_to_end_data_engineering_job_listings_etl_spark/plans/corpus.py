@@ -102,12 +102,13 @@ def dd_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dd_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    return D.minhash_signature(docs, "text", "doc_id", _MINHASH_K, _SHINGLE_K)
+    sets = D.shingle_sets(docs, "text", "doc_id", _SHINGLE_K)
+    return D.minhash_signature(sets, "doc_id", _MINHASH_K)
 
 
 def dd_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    return D.minhash_lsh_pairs(docs, "text", "doc_id", _MINHASH_K, _LSH_BANDS, _SHINGLE_K)
+    sig = dd_minhash_signatures(spark, sf_dir)
+    return D.minhash_lsh_pairs(sig, "doc_id", _MINHASH_K, _LSH_BANDS)
 
 
 def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,8 +122,11 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     owns every frame the build pins.
 
     Scale shape: ALL per-pair machinery — signatures, band buckets,
-    the shingle inverted-index intersection — runs per DISTINCT text
-    fingerprint, never per document. Exact duplicates share a
+    the exact shingle-set intersection — runs per DISTINCT text
+    fingerprint, never per document. One ``shingle_sets`` frame per
+    fingerprint feeds the signatures; its candidate slice feeds the
+    exact Jaccard, checked in-row with ``array_intersect`` (the same
+    check as ``jaccard_pairs``). Exact duplicates share a
     fingerprint (md5 of the same whitespace/case normalization the
     tokenizer applies, so fp equality ⟹ identical token stream ⟹
     identical signature and shingle set), and a boilerplate-heavy
@@ -150,8 +154,6 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_estimate(
     spark: SparkSession, sf_dir: str, pins: list[DataFrame]
 ) -> DataFrame:
-    from ..functions.text import word_shingles
-
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
     doc_fp = docs.select("doc_id", T.fingerprint("text").alias("fp"))
     # one representative text per fingerprint (min(text) — any member
@@ -161,92 +163,54 @@ def _minhash_estimate(
         .groupBy("fp")
         .agg(F.min("text").alias("text"), F.count("*").alias("n_docs"))
     ).persist()
+    # One shingle set per fingerprint feeds both the signatures and the
+    # exact Jaccard.
+    sets = D.shingle_sets(reps, "text", "fp", _SHINGLE_K)
     # ONE signature pass over distinct fingerprints, persisted and
     # shared by the LSH banding AND the per-pair agreement join.
-    sigs = D.minhash_signature(
-        reps, "text", "fp", _MINHASH_K, _SHINGLE_K
-    ).persist()
+    sigs = D.minhash_signature(sets, "fp", _MINHASH_K).persist()
     # fp-level candidate pairs from band buckets; consumed twice
     # (candidate-fp projection + final metrics) — pin it so the
     # banding join runs once.
-    fp_pairs = (
-        D.minhash_lsh_pairs(
-            reps, "text", "fp", _MINHASH_K, _LSH_BANDS, _SHINGLE_K, sig=sigs
-        )
-        .select(
-            F.col("id_a").alias("fp_a"),
-            F.col("id_b").alias("fp_b"),
-            "n_bands_shared",
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Exact-Jaccard machinery runs ONLY over fingerprints that appear
-    # in a distinct-fp candidate pair: at scale |candidates| ≪
-    # |corpus|, so the shingle inverted-index join is bounded by the
-    # candidate set, not the corpus.
+    fp_pairs = D.minhash_lsh_pairs(
+        sigs, "fp", _MINHASH_K, _LSH_BANDS
+    ).localCheckpoint(eager=False)
+    # The exact Jaccard reads only the sets of fingerprints that appear
+    # in a candidate pair (at scale |candidates| ≪ |corpus|), on both
+    # sides of each pair, so that slice is pinned once.
     cand_fps = (
-        fp_pairs.select(F.col("fp_a").alias("fp"))
-        .unionByName(fp_pairs.select(F.col("fp_b").alias("fp")))
+        fp_pairs.select(F.col("id_a").alias("fp"))
+        .unionByName(fp_pairs.select(F.col("id_b").alias("fp")))
         .distinct()
     )
-    # The candidate shingle frame feeds FOUR consumers (both sides of
-    # the intersection self-join + the sz_a/sz_b size lookups); unpinned,
-    # each would re-plan the semi-join + explode. Both frames are
-    # candidate-bounded (≪ corpus), so pin them once like fp_pairs:
-    # one explode, one sizes aggregate.
-    sh = (
-        reps.join(cand_fps, "fp", "left_semi")
-        .select("fp", F.explode(word_shingles("text", _SHINGLE_K)).alias("sh"))
-        .localCheckpoint(eager=False)
-    )
-    sizes = (
-        sh.groupBy("fp")
-        .agg(F.count("*").alias("sz"))
-        .localCheckpoint(eager=False)
-    )
-    pins.extend([reps, sigs, fp_pairs, sh, sizes])
-    a = sh.select(F.col("fp").alias("fp_a"), "sh")
-    b = sh.select(F.col("fp").alias("fp_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("fp_a") < F.col("fp_b"))
-        .groupBy("fp_a", "fp_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    cand_sets = sets.join(cand_fps, "fp", "left_semi").localCheckpoint(eager=False)
+    pins.extend([reps, sigs, fp_pairs, cand_sets])
     sa = sigs.select(
-        F.col("fp").alias("fp_a"),
+        F.col("fp").alias("id_a"),
         *[F.col(f"mh_{i}").alias(f"ma_{i}") for i in range(_MINHASH_K)],
     )
     sb = sigs.select(
-        F.col("fp").alias("fp_b"),
+        F.col("fp").alias("id_b"),
         *[F.col(f"mh_{i}").alias(f"mb_{i}") for i in range(_MINHASH_K)],
     )
     n_match = sum(
         (F.col(f"ma_{i}") == F.col(f"mb_{i}")).cast("int")
         for i in range(_MINHASH_K)
     )
-    sz_a = sizes.select(F.col("fp").alias("fp_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("fp").alias("fp_b"), F.col("sz").alias("sz_b"))
-    ni = F.coalesce(F.col("n_inter"), F.lit(0))
     jacc_e6 = F.floor(
-        ni.cast("double")
+        F.col("__inter").cast("double")
         * F.lit(1000000.0)
-        / (F.col("sz_a") + F.col("sz_b") - ni).cast("double")
+        / F.col("__union").cast("double")
     ).cast("bigint")
-    cross_fp = (
-        fp_pairs.join(sa, "fp_a")
-        .join(sb, "fp_b")
-        .join(inter, ["fp_a", "fp_b"], "left")
-        .join(sz_a, "fp_a")
-        .join(sz_b, "fp_b")
-        .select(
-            "fp_a",
-            "fp_b",
-            "n_bands_shared",
-            n_match.alias("n_match_k"),
-            (n_match.cast("bigint") * F.lit(125000)).alias("est_e6"),
-            jacc_e6.alias("jacc_e6"),
-        )
+    cross_fp = D._with_overlap(
+        fp_pairs.join(sa, "id_a").join(sb, "id_b"), cand_sets, "fp"
+    ).select(
+        F.col("id_a").alias("fp_a"),
+        F.col("id_b").alias("fp_b"),
+        "n_bands_shared",
+        n_match.alias("n_match_k"),
+        (n_match.cast("bigint") * F.lit(125000)).alias("est_e6"),
+        jacc_e6.alias("jacc_e6"),
     )
     # exact-duplicate groups: identical signatures agree on every band
     # and position, and shingle Jaccard is exactly 1 — no metric joins
@@ -728,9 +692,9 @@ def _lsh_plane_bits(vec_expr: str) -> str:
 # cid = list position; probe ranking breaks ties by LOWER cid (the
 # engine's driver-side sort key (-cos_e6, cid)), cell assignment by
 # HIGHER cid (array_max over struct(sim, cid)). Both rank by
-# floor(cos*1e6) — the engine's quantized grid (r7 advice #4), so a
-# ~ULP fold difference between Python / Catalyst / DuckDB can no
-# longer flip the probe set or a cell assignment.
+# floor(cos*1e6) — the engine's quantized grid (``ivf_assign``'s e6
+# argmax), so a ~ULP fold difference between Python / Catalyst /
+# DuckDB cannot flip the probe set or a cell assignment.
 _IVF_TOPK_ORACLE = f"""
     WITH base AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings

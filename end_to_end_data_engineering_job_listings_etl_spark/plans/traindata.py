@@ -49,7 +49,6 @@ from .corpus import (
     _MINHASH_K,
     _PUNCT_CLASS,
     _QUALITY,
-    _SHINGLE_K,
     _SHINGLED_CTE,
     _SHINGLES,
     _TOKS,
@@ -57,6 +56,7 @@ from .corpus import (
     _cos,
     _query_vec,
     _query_vecs,
+    dd_minhash_signatures,
 )
 
 # ---------------------------------------------------------------------------
@@ -333,9 +333,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap join is map-side — the 100 TB side never shuffles on the
     shingle key. Shingle count and overlap count come out of ONE
     aggregation over a hit-marked broadcast LEFT join (the bench set
-    is distinct, so a hit is at most one match) — before r12 the
-    train-side explode ran twice (separate sizes/shared aggregates)
-    and met again in a doc_id sort-merge join."""
+    is distinct, so a hit is at most one match), so the train-side
+    explode runs once and no doc_id join is planned."""
     docs = load_table_dist(
         spark, sf_dir, "documents", cols=("doc_id", "text", "source")
     )
@@ -877,10 +876,9 @@ def samp_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 1-row broadcast of the denominator — nothing else."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "lang"))
     per_lang = docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
-    # (r12 note: the totals subtree is canonically identical to
-    # per_lang's, so AQE reuses its shuffle stage at runtime — a
-    # bounded-collect LocalRelation was tried and reverted, measured
-    # 0.49 → 1.03 s at sf0.1.)
+    # The totals subtree is canonically identical to per_lang's, so AQE
+    # reuses its shuffle stage at runtime; a driver collect of the
+    # per-language counts would cost an eager job of its own.
     s = F.floor(F.sqrt(F.col("n_docs").cast("double") * 1e12)).cast("bigint")
     sized = per_lang.select("lang", "n_docs", s.alias("__s"))
     totals = sized.agg(
@@ -930,10 +928,9 @@ def samp_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "lang"))
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_s"))
-    # (r12 note: every consumer of this frame shares its canonical
-    # shuffle stage under AQE at runtime — a bounded-collect
-    # LocalRelation was tried and reverted, measured 0.68 → 1.68 s at
-    # sf0.1: the eager collect job cost more than the reused stages.)
+    # Every consumer of this frame shares its canonical shuffle stage
+    # under AQE at runtime; a driver collect of the counts would cost
+    # an eager job of its own, more than the reused stages.
     tot = counts.agg(F.sum("n_s").cast("bigint").alias("N")).select(
         "N", F.expr(f"N div {_STRAT_DENOM}").cast("bigint").alias("k")
     )
@@ -1077,7 +1074,7 @@ def inc_lsh_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact verifier (``dd_minhash_estimate``'s machinery); the
     band-hit verdict here is the recall-side gate."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    sig = D.minhash_signature(docs, "text", "doc_id", _MINHASH_K, _SHINGLE_K)
+    sig = dd_minhash_signatures(spark, sf_dir)
     buckets = D.lsh_buckets(sig, "doc_id", _MINHASH_K, _LSH_BANDS)
     corpus_b = buckets.filter(F.col("doc_id") % 10 < 2).select(
         F.col("doc_id").alias("corpus_id"), "bucket"

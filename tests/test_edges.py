@@ -10,9 +10,12 @@ from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords impor
 from end_to_end_data_engineering_job_listings_etl_spark.functions.relative_time import parse_relative_time
 from end_to_end_data_engineering_job_listings_etl_spark.functions.text import word_shingles
 from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import (
+    SIMHASH_MAX_TOKENS,
     containment_pairs,
     jaccard_pairs,
     minhash_signature,
+    shingle_sets,
+    simhash60,
 )
 from end_to_end_data_engineering_job_listings_etl_spark.operators.dims import (
     DimSpec,
@@ -74,10 +77,54 @@ def test_relative_time_junk_is_null(spark):
 
 
 def test_short_docs_yield_no_shingles_or_pairs(spark):
-    df = spark.createDataFrame([(1, "one two"), (2, "a"), (3, "")], _DOC_SCHEMA)
+    """Docs shorter than the shingle width have the empty set and no
+    signature. ``k == 1`` is the distinct lower-cased token set, the
+    set the Jaccard and containment joins read: a null doc's set is
+    null and an empty or blank doc's is empty, so neither explodes to
+    a row or gets a signature."""
+    df = spark.createDataFrame([(1, "one two"), (2, "a"), (3, ""), (4, None)], _DOC_SCHEMA)
     sh = df.select(F.size(word_shingles("text", 3)).alias("n")).collect()
     assert all(r["n"] == 0 for r in sh)
-    assert minhash_signature(df, "text", "doc_id", 4, 3).count() == 0
+    assert minhash_signature(shingle_sets(df, "text", "doc_id", 3), "doc_id", 4).count() == 0
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "A a b  B c")], _DOC_SCHEMA
+    )
+    sets = shingle_sets(df, "text", "doc_id", 1)
+    assert {r["doc_id"]: r["set"] for r in sets.collect()} == {
+        1: None,
+        2: [],
+        3: [],
+        4: ["a", "b", "c"],
+    }
+    assert sets.select(F.explode("set")).count() == 3
+    sig = minhash_signature(sets, "doc_id", 4)
+    assert [r["doc_id"] for r in sig.collect()] == [4]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_simhash60_token_bound(spark, ansi):
+    """simhash60 packs its per-bit counts in 16-bit lanes whose top lane
+    sits at bit 48 of a signed long, so a document may hold at most
+    SIMHASH_MAX_TOKENS (32,767) tokens. At the bound, repeats of one
+    token give that token's signature; one token more fails with an
+    error naming the bound, with ANSI mode on and off (off, the lanes
+    would overflow silently)."""
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
+
+    assert SIMHASH_MAX_TOKENS == 32_767
+
+    def doc(n):
+        return spark.createDataFrame([(1, " ".join(["x"] * n))], _DOC_SCHEMA)
+
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        for n in (1, SIMHASH_MAX_TOKENS):
+            [row] = simhash60(doc(n), "text", "doc_id").collect()
+            assert row["simhash"] == 710810379057940483, n
+        with pytest.raises(Exception, match="has more than 32767 tokens"):
+            simhash60(doc(SIMHASH_MAX_TOKENS + 1), "text", "doc_id").collect()
 
 
 @pytest.mark.parametrize(
@@ -201,10 +248,9 @@ def test_apply_cdc_semantics(spark):
 
 
 def test_minhash_estimate_short_dup_docs_excluded(spark, tmp_path):
-    """r7 advice #1: a doc shorter than the shingle width has an EMPTY
-    shingle set, so the per-doc plan never banded it and it was never
-    a candidate — the fp-collapsed plan must not emit its exact
-    duplicates either. Long exact-dups still surface with Jaccard 1,
+    """A doc shorter than the shingle width has an EMPTY shingle set, so
+    the per-doc plan never banded it and it was never a candidate —
+    the fp-collapsed plan must not emit its exact duplicates either. Long exact-dups still surface with Jaccard 1,
     and the DuckDB oracle agrees bit-for-bit on the same corpus."""
     import duckdb
     import pandas as pd

@@ -104,13 +104,18 @@ def _initial_exchanges(df) -> tuple[int, int]:
 
 @pytest.mark.parametrize(
     "name, max_shuffle, max_broadcast",
-    [("dd_jaccard_pairs", 4, 5), ("dd_containment_pairs", 1, 1)],
+    [
+        ("dd_jaccard_pairs", 4, 5),
+        ("dd_containment_pairs", 1, 1),
+        ("dd_minhash_estimate", 0, 7),
+    ],
 )
 def test_set_similarity_exchange_budget(spark, name, max_shuffle, max_broadcast):
-    """The token-set joins verify in-row: Jaccard candidates are scored
-    with ``array_intersect`` over the two token arrays, and both
-    operators carry set sizes through the explode, so neither plans a
-    token-level verification join or a sizes aggregate joined back."""
+    """The set joins verify in-row: Jaccard candidates (token sets in
+    ``dd_jaccard_pairs``, shingle sets in ``dd_minhash_estimate``) are
+    scored with ``array_intersect`` over the two set arrays, and
+    containment carries set sizes through the explode, so none plans a
+    member-level verification join or a sizes aggregate joined back."""
     df = registry.all_queries()[name](spark, SF_DIR)
     shuffles, broadcasts = _initial_exchanges(df)
     assert shuffles <= max_shuffle, f"{name}: {shuffles} shuffle exchanges"
