@@ -38,9 +38,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from end_to_end_data_engineering_job_listings_etl_spark import cachereg, registry  # noqa: E402
 from end_to_end_data_engineering_job_listings_etl_spark.session import get_spark  # noqa: E402
 
-# Headline = the timed denominator (122 of 258 registered queries).
+# Headline = the timed denominator (119 of 258 registered queries).
 # A registered query is OMITTED from the headline iff it falls in one
-# of four classes (every omission is one of these — the remaining 136
+# of four classes (every omission is one of these — the remaining 139
 # names are enumerable from registry.all_queries() minus HEADLINE):
 #   1. plan-sharing twin: same physical plan as a timed name, kept
 #      only to lock a distinct public API entry point or an oracle
@@ -66,7 +66,7 @@ from end_to_end_data_engineering_job_listings_etl_spark.session import get_spark
 #      the engine; the linear production twins er_best_match and
 #      er_unlinked represent the ER family in the headline).
 # The artifact carries this criterion plus the omitted count, so the
-# "122 of 258 timed" split is self-explaining.
+# "119 of 258 timed" split is self-explaining.
 OMISSION_CRITERIA = (
     "omitted = plan-sharing twin | fixed-overhead floor (<100ms dim/"
     "scalar demo) | harness-bound transport fixture | demonstration "
@@ -127,7 +127,6 @@ HEADLINE = [
     # documented anti-pattern demo, not the engine. Its scale twins
     # er_blocking_refined and er_best_match are both timed below.
     "sink_zorder_roundtrip",
-    "jl_fact_fallback_checked",
     "sql_recursive_month_spine",
     # round-3 representatives: the newly window-verified LLM-pipeline
     # layer enters the recorded baseline the same round it is banked
@@ -242,12 +241,12 @@ HEADLINE = [
 
 # Queries that share a per-(session, sf_dir) memo cache: the FIRST
 # group member to run in a pass pays the one-time materialization
-# (landing + dims + star persist, or the jl star bundle). A noisy-query
-# subset pass must therefore include the noisy query's memo peers —
-# otherwise the resampled query pays a build cost it never pays in a
-# full pass, and the mixed median drifts (ADVICE r5 item 2). Peers run
-# (and are timed) in the subset, but only the NOISY names' extra
-# samples are merged back into the medians.
+# (landing + dims + star persist). A noisy-query subset pass must
+# therefore include the noisy query's memo peers — otherwise the
+# resampled query pays a build cost it never pays in a full pass, and
+# the mixed median drifts (ADVICE r5 item 2). Peers run (and are timed)
+# in the subset, but only the NOISY names' extra samples are merged
+# back into the medians.
 MEMO_PEER_GROUPS: list[set[str]] = [
     # cachereg memo family "star" (plans/star.py)
     {
@@ -258,8 +257,6 @@ MEMO_PEER_GROUPS: list[set[str]] = [
         "bi_revenue_by_segment",
         "bi_top_keywords",
     },
-    # cachereg memo family "jl_star" (plans/joblistings.py)
-    {"jl_fact_checked", "jl_fact_fallback_checked"},
 ]
 
 

@@ -263,9 +263,9 @@ def query_boundary(spark: SparkSession) -> dict:
         _BOUNDARY_EVENTS.append(
             {
                 "evicted": list(stats["evicted"]),
-                "before_mb": round(before / 2**20),
-                "after_mb": round(stats["after"] / 2**20),
-                "budget_mb": round(budget / 2**20),
+                "before_mb": round(before / 2**20, 3),
+                "after_mb": round(stats["after"] / 2**20, 3),
+                "budget_mb": round(budget / 2**20, 3),
                 "sec": stats["sec"],
             }
         )

@@ -9,9 +9,12 @@ Reference analog: the whole of ``dags/spark_etl_script.py:41-192``,
 rebuilt on this engine's operators:
 - UDF ``parse_relative_time`` (:12-29,:86-87) → native expressions
   with an injected deterministic ``now`` (functions/relative_time.py)
-- ``monotonically_increasing_id`` natural key (:88) → deterministic
-  row_number over the landing's natural ordering (documented
-  deviation, SURVEY.md §7.3)
+- ``monotonically_increasing_id`` natural key (:88) → a deterministic,
+  dense rank over the landing's natural ordering (documented
+  deviation, SURVEY.md §7.3), derived one way for every landing
+- fact PK ``row_number() OVER (ORDER BY job_natural_key)``
+  (:157-173) → the natural key itself: over a dense 1..N key that rank
+  is the identity
 - per-dim select→filter→distinct→row_number (:92-144) → one
   ``DimSpec`` per dim, ranked together by
   ``operators.dims.build_dims_batched``
@@ -21,7 +24,7 @@ rebuilt on this engine's operators:
   ``job_highlights_map``
 - fact join chain (:157-173) → ``operators.fact.join_star`` over the
   same specs; skill bridge (:175-179) → the skill spec's keys joined to
-  the dim and to the fact's PK map
+  the dim, with the natural key as the fact PK
 - the 9 ``write_to_snowflake`` overwrite sinks (:181-189) →
   ``sinks.writers.overwrite_parquet_table`` / ``write_counted``
 
@@ -42,7 +45,7 @@ from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
 from ..operators.dims import DimSpec, build_date_dim, build_dims_batched
 from ..operators.fact import join_star
-from ..operators.ids import exclusive_prefix_sum, ranked_ids
+from ..operators.ids import exclusive_prefix_sum
 from .star import _initcap
 from .star import landing as enriched_orders
 
@@ -51,29 +54,27 @@ SKILL_KEYWORDS = (
     "docker", "kubernetes", "snowflake", "etl",
 )
 
-# The landing's natural ordering: job_natural_key is row_number over it.
+# The landing's natural ordering: job_natural_key ranks it.
 _NK_ORDER = ["job_title", "employer_name", "job_posted_at_datetime_utc"]
 
 
 def _fact_base(landing: DataFrame, now: Column, pins: list[DataFrame]) -> DataFrame:
-    """The landing with parsed posting times, and with
-    ``job_natural_key`` derived when the landing does not carry it."""
+    """The landing with parsed posting times and ``job_natural_key``:
+    a dense, unique 1..N key, deterministic over the ordering tuples.
+
+    It is derived WITHOUT funneling the full-width landing through a
+    single-partition window: rank the DISTINCT ordering tuples on a
+    narrow aggregate (tuple + count), join the start rank back on the
+    tuple (null-safe: posting dates can be null), and number duplicate
+    tuples with a per-tuple partitioned ordinal. Values equal
+    ``row_number() over (order by title, employer, utc)`` whenever the
+    tuple is unique (it is, in every shipped landing); duplicate tuples
+    get consecutive keys in arbitrary order."""
     base = landing.withColumn(
         "job_posted_at_ts", parse_relative_time("job_posted_at", now)
     ).withColumn(
         "job_posted_at_utc", F.to_timestamp("job_posted_at_datetime_utc")
     )
-    if "job_natural_key" in base.columns:
-        return base
-    # Deterministic natural key (vs monotonically_increasing_id),
-    # derived WITHOUT funneling the full-width landing through a
-    # single-partition window: rank the DISTINCT ordering tuples on a
-    # narrow aggregate (tuple + count), join the start rank back on the
-    # tuple (null-safe: posting dates can be null), and disambiguate
-    # duplicate tuples with a per-tuple partitioned ordinal. Values equal
-    # ``row_number() over (order by title, employer, utc)`` whenever the
-    # tuple is unique (it is, in every shipped landing); for duplicate
-    # tuples the key stays dense and unique with arbitrary tie order.
     tuples = base.groupBy(*_NK_ORDER).agg(F.count("*").alias("__cnt"))
     starts = exclusive_prefix_sum(
         # pin_input=False: `tuples` is a groupBy output whose shuffle
@@ -140,30 +141,6 @@ def _dim_specs(base: DataFrame) -> list[DimSpec]:
     ]
 
 
-def _fact(
-    base: DataFrame,
-    specs: list[DimSpec],
-    dims: dict[str, DataFrame],
-    dim_date: DataFrame,
-    pins: list[DataFrame],
-) -> tuple[DataFrame, DataFrame]:
-    j, pk_map = join_star(
-        base, dims, specs, "job_posted_at_utc", dim_date,
-        "job_natural_key", "job_posting_pk", pins,
-    )
-    fact = j.select(
-        F.col("job_posting_pk"),
-        F.col("job_natural_key").alias("job_sk"),
-        "company_sk",
-        "location_sk",
-        "date_sk",
-        "employment_type_sk",
-        "publisher_sk",
-        F.lit(1).alias("job_count"),
-    )
-    return fact, pk_map
-
-
 def build_star_schema(
     landing: DataFrame, pins: list[DataFrame], now: Column | None = None
 ) -> dict[str, DataFrame]:
@@ -174,7 +151,10 @@ def build_star_schema(
     the caller owns them and frees them with ``ids.release_pins`` (the
     ``jl_*`` queries hand them to ``cachereg.memo``). ``now`` anchors
     relative-time parsing (pass a literal for replayable runs; defaults
-    to current_timestamp() like the reference's utcnow())."""
+    to current_timestamp() like the reference's utcnow()).
+
+    The fact PK ``job_posting_pk`` and the dim key ``job_sk`` are both
+    the natural key, so the bridge keys on it without a fact join."""
     base = _fact_base(landing, F.current_timestamp() if now is None else now, pins)
     specs = _dim_specs(base)
     dims = build_dims_batched(specs, pins)
@@ -193,13 +173,21 @@ def build_star_schema(
         "job_posted_at",
         "job_posted_at_utc",
     )
-    fact, pk_map = _fact(base, specs, dims, dim_date, pins)
+    fact = join_star(base, dims, specs, "job_posted_at_utc", dim_date).select(
+        F.col("job_natural_key").alias("job_posting_pk"),
+        F.col("job_natural_key").alias("job_sk"),
+        "company_sk",
+        "location_sk",
+        "date_sk",
+        "employment_type_sk",
+        "publisher_sk",
+        F.lit(1).alias("job_count"),
+    )
     skill = specs[-1]
     bridge = (
         skill.source.select("job_natural_key", *skill.keys)
         .join(F.broadcast(dims["skill"]), "skill_name")
-        .join(pk_map, "job_natural_key")
-        .select("job_posting_pk", "skill_sk")
+        .select(F.col("job_natural_key").alias("job_posting_pk"), "skill_sk")
         .distinct()
     )
     return {
@@ -211,12 +199,7 @@ def build_star_schema(
     }
 
 
-def landing_from_orders(
-    spark: SparkSession,
-    sf_dir: str,
-    pins: list[DataFrame],
-    with_natural_key: bool = True,
-) -> DataFrame:
+def landing_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A reference-shaped ``job_listings`` landing derived from the
     driver's parquet tables with pure column expressions — every column
     is reproducible in ANSI SQL, which makes the ENTIRE reference
@@ -231,18 +214,13 @@ def landing_from_orders(
     reference grammar incl. unparseable forms (F11 null path), skills ←
     a Python-repr-style serialized pair of keywords indexed by order
     key (the reference's CSV transport shape,
-    ``dags/spark_etl_script.py:132-135``).
-
-    With ``with_natural_key`` the landing carries ``job_natural_key``,
-    ranked on a narrow projection of the natural ordering and joined
-    back on the unique order key, so ``build_star_schema`` skips its
-    own derivation; the rank's checkpoints go to ``pins``."""
+    ``dags/spark_etl_script.py:132-135``). Titles carry the order key,
+    so the ordering tuples are unique."""
     k = F.col("o_orderkey")
     kws = F.array(*[F.lit(x) for x in SKILL_KEYWORDS])
     kw1 = F.element_at(kws, (k % 12 + 1).cast("int"))
     kw2 = F.element_at(kws, ((k * 5 + 2) % 12 + 1).cast("int"))
-    out = enriched_orders(spark, sf_dir).select(
-        "o_orderkey",
+    return enriched_orders(spark, sf_dir).select(
         F.concat(F.lit("Engineer "), k.cast("string")).alias("job_title"),
         F.when(k % 3 == 0, F.upper("c_name"))
         .otherwise(F.lower("c_name"))
@@ -274,14 +252,6 @@ def landing_from_orders(
         ).alias("job_highlights"),
         F.concat(F.lit('["'), kw1, F.lit('", "'), kw2, F.lit('"]')).alias("skills"),
     )
-    if not with_natural_key:
-        return out.drop("o_orderkey")
-    nk_map = ranked_ids(
-        out.select("o_orderkey", *_NK_ORDER), _NK_ORDER, "job_natural_key", pins
-    ).select("o_orderkey", "job_natural_key")
-    # one row per order: fact-scale, no broadcast pin
-    cols = out.columns[1:]
-    return out.join(nk_map, "o_orderkey").select("job_natural_key", *cols)
 
 
 def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -292,43 +262,26 @@ def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         sf_dir,
         "jl_star",
         "star",
-        lambda pins: build_star_schema(landing_from_orders(spark, sf_dir, pins), pins),
+        lambda pins: build_star_schema(landing_from_orders(spark, sf_dir), pins),
     )
 
 
 def jl_fact_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference-shaped FACT_JOB_POSTINGS over the parquet-derived
     landing — the full ``dags/spark_etl_script.py`` fact path under the
-    DuckDB value-hash gate."""
+    DuckDB value-hash gate. The oracle ranks the natural key a second
+    time, as the reference does, so the gate also checks that
+    ``job_posting_pk`` equals that rank; ``jl_fact_fallback_checked``
+    is the same plan and oracle."""
     return _jl_star(spark, sf_dir)["FACT_JOB_POSTINGS"]
-
-
-def jl_fact_fallback_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FACT_JOB_POSTINGS with the natural key DERIVED by the fallback
-    path (the landing arrives without ``job_natural_key``) — proves the
-    scale-safe narrow-tuple derivation produces exactly the reference's
-    ``row_number() over (order by title, employer, utc)`` values, under
-    the DuckDB hash gate. The landing's titles are unique, so the
-    distinct-tuple rank is a total order and the result is
-    deterministic. Dim values do not depend on the natural key, so the
-    fact joins the memoized ``_jl_star`` dims."""
-
-    def build(pins: list[DataFrame]) -> DataFrame:
-        star = _jl_star(spark, sf_dir)
-        landing = landing_from_orders(spark, sf_dir, pins, with_natural_key=False)
-        base = _fact_base(landing, F.current_timestamp(), pins)
-        specs = _dim_specs(base)
-        dims = {s.tag: star[f"DIM_{s.tag.upper()}"] for s in specs}
-        return _fact(base, specs, dims, star["DIM_DATE"], pins)[0]
-
-    return cachereg.memo(spark, sf_dir, "jl_star", "fact_fallback", build)
 
 
 def jl_bridge_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BRIDGE_JOB_SKILL over the parquet-derived landing: serialized
-    skills → translate/split parse → explode → initcap dim → fact join
-    → distinct pairs (``dags/spark_etl_script.py:132-144,175-179``),
-    oracle-checked."""
+    skills → translate/split parse → explode → initcap dim → distinct
+    (natural key as fact PK, skill) pairs
+    (``dags/spark_etl_script.py:132-144,175-179``), oracle-checked
+    against the reference's fact join."""
     return _jl_star(spark, sf_dir)["BRIDGE_JOB_SKILL"]
 
 
@@ -466,7 +419,7 @@ fact AS (
 
 QUERIES = {
     "jl_fact_checked": jl_fact_checked,
-    "jl_fact_fallback_checked": jl_fact_fallback_checked,
+    "jl_fact_fallback_checked": jl_fact_checked,
     "jl_bridge_checked": jl_bridge_checked,
     "jl_dim_company_checked": _jl_table("DIM_COMPANY"),
     "jl_dim_publisher_checked": _jl_table("DIM_PUBLISHER"),
@@ -477,9 +430,11 @@ QUERIES = {
     "jl_dim_job_details_checked": jl_dim_job_details_checked,
 }
 
+_JL_FACT_ORACLE = f"{_JL_PREFIX} SELECT * FROM fact"
+
 ORACLES = {
-    "jl_fact_checked": f"{_JL_PREFIX} SELECT * FROM fact",
-    "jl_fact_fallback_checked": f"{_JL_PREFIX} SELECT * FROM fact",
+    "jl_fact_checked": _JL_FACT_ORACLE,
+    "jl_fact_fallback_checked": _JL_FACT_ORACLE,
     "jl_bridge_checked": f"""{_JL_PREFIX}
 SELECT DISTINCT f.job_posting_pk, ds.skill_sk
 FROM skills s

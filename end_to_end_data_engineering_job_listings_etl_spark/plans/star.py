@@ -17,9 +17,10 @@ core. Domain mapping (reference → synthetic):
 
 Each ranked dim is stated once, in ``_dim_specs``: the dims are ranked
 in one batched pass (``operators.dims.build_dims_batched``) and the
-fact is ``operators.fact.join_star`` over the same specs. The landing,
-the ranked dims, the date dim and the star view are memoized and
-persisted per (session, sf_dir) in the ``star`` family of
+fact is ``operators.fact.join_star`` over the same specs, with the
+order PK ranked over ``o_orderkey`` (``operators.ids.ranked_ids``).
+The landing, the ranked dims, the date dim and the star view are
+memoized and persisted per (session, sf_dir) in the ``star`` family of
 ``cachereg`` — the reference's ``.cache()`` cut points
 (``dags/spark_etl_script.py:146-153``). Each ranked dim query is a
 slice of the one persisted ranked frame.
@@ -39,6 +40,7 @@ from ..functions.keywords import DEFAULT_KEYWORDS, extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper
 from ..operators.dims import DimSpec, build_date_dim, build_dims_batched
 from ..operators.fact import join_star
+from ..operators.ids import ranked_ids
 
 # ---------------------------------------------------------------------------
 # Spark builders
@@ -209,17 +211,13 @@ def star_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(pins: list[DataFrame]) -> DataFrame:
         specs, dims = _dims_bundle(spark, sf_dir)
-        j, _ = join_star(
-            landing(spark, sf_dir),
-            dims,
-            specs,
-            "o_orderdate",
-            dim_date(spark, sf_dir),
-            "o_orderkey",
-            "order_pk",
-            pins,
-        )
-        df = j.select(
+        l = landing(spark, sf_dir)
+        j = join_star(l, dims, specs, "o_orderdate", dim_date(spark, sf_dir))
+        # order keys are sparse, so the PK is their rank; pin_input
+        # (the default) lets the range sampling and the exchange read
+        # the one-column checkpoint instead of the wide landing
+        pk = ranked_ids(l.select("o_orderkey"), ["o_orderkey"], "order_pk", pins)
+        df = j.join(pk, "o_orderkey").select(
             F.col("order_pk"),
             "o_orderkey",
             "company_sk",

@@ -93,28 +93,35 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
 # or least-recently-checked surface into the window (every name here
 # has a DuckDB oracle — no rows-only checks waste a slot).
 #
-# The window leads with the near-dup cluster queries, which share one
-# memoized connected-components build, so the driver checks them
-# first. The other 47 are the oracled names whose last driver row is
-# oldest, oldest round first, alphabetical within a round: the r7
-# remainder (star_wide, the text chunk/langid/repetition/stats band,
-# latest-per-customer) plus the first 41 of the r8 band (exact-agg
-# checked twins, the relational-semantics rel_*/set_* kit, the ER
-# family, pandas cogroup/grouped-seq operators, the sql_* view stack,
-# bucketed-join sink).
+# Rotation rule, in window order:
+# 1. the near-dup cluster queries, which share one memoized
+#    connected-components build, so the driver checks them first;
+# 2. the oracled names whose plan changed since their last driver row;
+# 3. the oracled names whose last driver row is oldest, oldest round
+#    first, alphabetical within a round, until the window holds 50.
 _WINDOW = [
-    # near-dup cluster queries over the shared labels memo
+    # 1. near-dup cluster queries over the shared labels memo
     "dd_keep_best",
     "dd_duplicate_clusters",
     "samp_split_by_cluster",
-    # r7 band — last driver row in CORRECTNESS_r07 (the remainder)
+    # 2. changed since their last driver row: the job-listings star
+    "jl_bridge_checked",
+    "jl_dim_company_checked",
+    "jl_dim_date_checked",
+    "jl_dim_employment_type_checked",
+    "jl_dim_job_details_checked",
+    "jl_dim_location_checked",
+    "jl_dim_publisher_checked",
+    "jl_dim_skill_checked",
+    "jl_fact_checked",
+    "jl_fact_fallback_checked",
+    # 3. oldest last driver row first
     "star_wide",
     "text_chunk_dedup",
     "text_langid",
     "text_repetition_metrics",
     "text_stats",
     "w_latest_per_customer",
-    # r8 band — last driver row in CORRECTNESS_r08 (first 41)
     "agg_approx_distinct_checked",
     "agg_grouping_sets",
     "agg_multi_distinct",
@@ -146,16 +153,6 @@ _WINDOW = [
     "op_udtf_sentences",
     "rel_anti_null_semantics",
     "rel_division_all_priorities",
-    "rel_not_in_null_poison",
-    "rel_not_in_plain",
-    "rel_nullsafe_join",
-    "set_except_all_priority",
-    "set_intersect_all_priority",
-    "sink_bucketed_join",
-    "sql_q8_monthly",
-    "sql_v1_star",
-    "sql_v2_star_dates",
-    "sql_v3_bridge_flat",
 ]
 
 

@@ -106,12 +106,47 @@ def test_star_writes_roundtrip(tmp_path, spark, star):
     assert n == tables["DIM_SKILL"].count()
 
 
+def test_duplicate_ordering_tuples_get_dense_keys(spark, pins):
+    """The per-tuple ordinal of the natural-key derivation: on a landing
+    whose (title, employer, posting date) tuples repeat, null-dated
+    tuples among them, the key is still dense 1..N and unique, the fact
+    PK is that key, and the bridge keys only fact PKs."""
+    synth = synth_job_listings(spark, 40)
+    undated = synth.where(F.col("job_title").contains("Engineer 3 ")).withColumn(
+        "job_posted_at_datetime_utc", F.lit(None).cast("string")
+    )
+    landing = (
+        synth.unionByName(synth.where(F.col("job_publisher") == "linkedin"))
+        .unionByName(undated)
+        .unionByName(undated)
+    )
+    dup_tuples = (
+        landing.groupBy("job_title", "employer_name", "job_posted_at_datetime_utc")
+        .count()
+        .where("count > 1")
+        .collect()
+    )
+    assert any(r["job_posted_at_datetime_utc"] is None for r in dup_tuples)
+    assert any(r["job_posted_at_datetime_utc"] is not None for r in dup_tuples)
+    n = landing.count()
+
+    tables = build_star_schema(landing, pins, now=_now())
+    keys = [r["job_sk"] for r in tables["DIM_JOB_DETAILS"].collect()]
+    assert sorted(keys) == list(range(1, n + 1))
+    fact = tables["FACT_JOB_POSTINGS"].collect()
+    assert len(fact) == n
+    assert all(r["job_posting_pk"] == r["job_sk"] for r in fact)
+    assert sorted(r["job_posting_pk"] for r in fact) == list(range(1, n + 1))
+    bridge_pks = {r["job_posting_pk"] for r in tables["BRIDGE_JOB_SKILL"].collect()}
+    assert bridge_pks and bridge_pks <= {r["job_posting_pk"] for r in fact}
+
+
 def test_fallback_nk_single_partition_exchanges_are_narrow(spark):
-    """The fallback natural-key derivation (no pre-supplied
-    job_natural_key) must never funnel the full-width landing through a
+    """The natural-key derivation (a tuple rank over the landing's
+    ordering) must never funnel the full-width landing through a
     single-partition exchange: every Exchange SinglePartition in the
-    fact plan is fed by a narrow projection (distinct NK tuples, dim
-    keys, or the 1-column pk_map) — wide payload columns stay out."""
+    fact plan is fed by a narrow projection (distinct NK tuples or dim
+    keys) — wide payload columns stay out."""
     from end_to_end_data_engineering_job_listings_etl_spark.plans.extended import jl_star_fact
 
     fact = jl_star_fact(spark, "/root/testdata/sf0.001")

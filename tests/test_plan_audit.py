@@ -120,3 +120,27 @@ def test_set_similarity_exchange_budget(spark, name, max_shuffle, max_broadcast)
     shuffles, broadcasts = _initial_exchanges(df)
     assert shuffles <= max_shuffle, f"{name}: {shuffles} shuffle exchanges"
     assert broadcasts <= max_broadcast, f"{name}: {broadcasts} broadcast exchanges"
+
+
+@pytest.mark.parametrize(
+    "name, max_shuffle, max_broadcast",
+    [
+        ("jl_fact_checked", 9, 7),
+        ("jl_bridge_checked", 7, 3),
+        ("jl_star_fact", 9, 7),
+    ],
+)
+def test_reference_star_exchange_budget(spark, name, max_shuffle, max_broadcast):
+    """The job-listings fact PK is its natural key, which the tuple rank
+    already makes dense 1..N: neither the fact nor the bridge plans a
+    second rank of that key or a join back onto a PK map.
+
+    The company dim is not broadcast-pinned, so the fact's company join
+    is a sort-merge join (2 shuffles) when the plan is built before the
+    ranked dims are materialized, and a broadcast once they are: the
+    fact budgets allow either, 9 shuffles with 6 broadcasts or 7 with
+    7."""
+    df = registry.all_queries()[name](spark, SF_DIR)
+    shuffles, broadcasts = _initial_exchanges(df)
+    assert shuffles <= max_shuffle, f"{name}: {shuffles} shuffle exchanges"
+    assert broadcasts <= max_broadcast, f"{name}: {broadcasts} broadcast exchanges"

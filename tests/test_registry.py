@@ -38,7 +38,7 @@ def test_rows_only_queries_each_have_a_checked_twin():
     # self-synthesized landing input).
     twins = {
         "agg_approx_distinct": "agg_approx_distinct_checked",
-        "jl_star_fact": "jl_fact_fallback_checked",
+        "jl_star_fact": "jl_fact_checked",
     }
     assert rows_only == set(twins), f"unexpected rows-only set: {rows_only}"
     for twin in twins.values():
