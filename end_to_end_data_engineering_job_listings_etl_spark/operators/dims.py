@@ -22,11 +22,11 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dates import date_attributes
-from .ids import prefix_offsets, ranked_ids
+from .ids import ordinals, ranked_ids
 
 
 class DimSpec(NamedTuple):
@@ -50,9 +50,10 @@ def build_dim(
     n_buckets: int = 256,
 ) -> DataFrame:
     """A dimension with dense surrogate keys assigned within md5 hash
-    buckets: row_number inside a bucket plus the running count of all
-    lower buckets, with no single-partition sort. The ids are dense and
-    unique but not in key order.
+    buckets (``ids.ordinals`` with the bucket as the part): row_number
+    inside a bucket plus the count of all lower buckets, with no
+    single-partition sort. The ids are dense and unique but not in key
+    order.
 
     ``key_exprs`` must be aliased columns; nulls in the FIRST key column
     are rejected (reference P2 semantics: one natural key per dim, the
@@ -70,11 +71,8 @@ def build_dim(
         F.lit(n_buckets),
     ).alias("__bucket")
     bucketed = distinct.select(bucket, *key_names)
-    w_in = Window.partitionBy("__bucket").orderBy(*key_names)
-    numbered = bucketed.withColumn("__rn", F.row_number().over(w_in))
-    return prefix_offsets(numbered, "__bucket", F.lit(1)).select(
-        (F.col("__rn") + F.col("__offset")).cast("int").alias(sk_name),
-        *key_names,
+    return ordinals(bucketed, "__bucket", key_names, sk_name).select(
+        F.col(sk_name).cast("int").alias(sk_name), *key_names
     )
 
 
@@ -122,9 +120,6 @@ def build_dims_batched(
         "__sk",
         pins,
         group=["__tag"],
-        # the distinct's shuffle output is stage-reused by the
-        # sampling and exchange jobs — no input pin needed
-        pin_input=False,
     ).persist()
     pins.append(ranked)
     out: dict[str, DataFrame] = {}

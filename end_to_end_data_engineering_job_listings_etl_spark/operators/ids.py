@@ -7,28 +7,23 @@ executes as a one-partition WindowExec ("No Partition Defined") — a
 funnel that caps at one task regardless of cluster size. At 100 TB a
 fact PK assignment would push every key through that task.
 
-The scale path here keeps the VALUES identical (so every existing
-ANSI-SQL oracle still matches) and removes the funnel:
+The one rule (``ordinals``): split the rows into numbered parts. A
+row's ordinal is the running total of a weight (1 per row: a row
+number) inside its part, in key order, plus the total of every lower
+part of the same group. The per-part totals are one tiny aggregate
+(≤ #parts rows) whose exclusive prefix sum is broadcast back. The
+ordinals are dense; when the part order agrees with the key order,
+they equal the global window's values, so every ANSI-SQL oracle still
+matches. The work is cluster-wide instead of one task wide.
 
-1. ``repartitionByRange`` on the ordering key — partitions become
-   ordered, non-overlapping key ranges (Spark samples boundaries;
-   where they land does not affect the final ordinal).
-2. ``row_number`` / running-sum *within* each partition — parallel,
-   whole-stage-codegen windows partitioned by ``spark_partition_id``.
-3. Per-partition totals (one tiny agg, ≤ #partitions rows) turned
-   into exclusive prefix offsets and broadcast back
-   (``prefix_offsets`` — the one offsets join, also behind the
-   md5-bucketed ordinals of ``dims.build_dim`` and
-   ``traindata.samp_global_shuffle``).
-
-Ordinal = within-partition number + offset of all lower ranges — the
-exact global ``row_number`` (ties co-locate: range partitioning sends
-equal keys to one partition, matching the global window's
-arbitrary-within-ties semantics).
-
-Cost: one extra narrow shuffle (the range exchange) plus a sampling
-pass, both O(rows/partitions) per task. At 1000 executors the old plan
-is 1 task wide; this one is cluster-wide.
+``ranked_ids`` makes the parts for a caller's ordering key:
+``repartitionByRange`` on the key (Spark samples the boundaries; where
+they land does not affect the ordinal, and ties co-locate, matching
+the global window's arbitrary-within-ties semantics), tagged with
+``spark_partition_id``. ``traindata.samp_global_shuffle``'s parts are
+the key's own hex prefix, so they agree with the key order too;
+``dims.build_dim``'s md5 buckets do not, and its ids are dense but not
+in key order.
 
 Correctness hinge: ``spark_partition_id`` is only meaningful per
 MATERIALIZATION — two plan subtrees consuming the same
@@ -40,6 +35,11 @@ duplicate/gapped ordinals. The ranged+pid frame is therefore
 consumers read the same pids, and lineage truncation makes loss
 fail-stop instead of silently renumbering. (The checkpointed frame is
 the NARROW key projection, not the caller's wide rows.)
+
+Pin rule for the input: the boundary-sampling pass and the range
+exchange each read the input, so it is checkpointed too — unless its
+optimized plan ends in an ``Aggregate`` (a ``distinct`` or
+``groupBy``), whose shuffle output both passes reuse.
 
 Pin contract: every operator whose result reads a frame it persisted
 or checkpointed takes a required ``pins`` list and appends each such
@@ -93,50 +93,63 @@ def _ranged_with_pid(
     df: DataFrame,
     order_cols: Sequence[Column | str],
     pins: list[DataFrame],
-    pin_input: bool,
 ) -> DataFrame:
     """Range-repartition on the ordering key and PIN the resulting
     (pid, row) assignment with a lazy localCheckpoint — see module
-    docstring for why an unpinned pid is a correctness bug."""
-    # Pin the (narrow) input too: repartitionByRange's boundary-sampling
-    # pass and the exchange itself would otherwise EACH recompute the
-    # caller's upstream (typically a distinct over a join chain) — with
-    # the input checkpointed, upstream runs once and both passes read
-    # the materialized keys. Perf-only (the CORRECTNESS pin is the one
-    # on the ranged+pid frame below): callers whose upstream is already
-    # a persisted frame (dim distincts over the cached landing) pass
-    # pin_input=False and skip this materialization's job entirely.
-    pinned = df.localCheckpoint(eager=False) if pin_input else df
+    docstring for why an unpinned pid is a correctness bug. The input
+    is pinned by the module's pin rule."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "Aggregate":
+        df = df.localCheckpoint(eager=False)
+        pins.append(df)
     # An explicit partition count (the session's shuffle partitions)
     # keeps AQE from coalescing the range exchange.
     n_ranges = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranged = (
-        pinned.repartitionByRange(n_ranges, *_as_sort_exprs(order_cols))
+        df.repartitionByRange(n_ranges, *_as_sort_exprs(order_cols))
         .select(F.spark_partition_id().alias(_PID), "*")
         .localCheckpoint(eager=False)
     )
-    if pin_input:
-        pins.append(pinned)
     pins.append(ranged)
     return ranged
 
 
-def prefix_offsets(
-    frame: DataFrame, part: str, weight: Column, group: Sequence[str] = ()
+def ordinals(
+    frame: DataFrame,
+    part: str,
+    order_cols: Sequence[Column | str],
+    id_name: str,
+    group: Sequence[str] = (),
+    weight: str | None = None,
 ) -> DataFrame:
-    """``frame`` plus ``__offset``: the sum of ``weight`` over the rows
-    of the same ``group`` whose ``part`` is lower than the row's own.
-    Every dense ordinal here is a within-part number plus this offset
-    (``part`` is a range partition id or an ordered hash bucket).
+    """``frame`` plus ``id_name`` (a long): the running total of
+    ``weight`` (1 per row when ``None``: a row number) within
+    ``(part, *group)`` in ``order_cols`` order, ASC NULLS FIRST, plus
+    the total of every lower ``part`` in the same ``group``. The values
+    are dense per group; when ``part`` orders the rows as
+    ``order_cols`` do, they equal ``sum(weight) OVER (PARTITION BY
+    group ORDER BY order_cols ROWS UNBOUNDED PRECEDING)``.
 
-    The offsets frame has one row per (group, part) — a few hundred at
-    most — and its prefix sum is a broadcast triangular self-join
+    The part totals have one row per (group, part) — a few hundred at
+    most — and their prefix sum is a broadcast triangular self-join
     (O(P²) on that frame) rather than a cumulative window: a
     constant-partitioned window gets its foldable key optimized away
     and regenerates the single-partition exchange this module exists
     to remove."""
+    w = (
+        Window.partitionBy(part, *group)
+        .orderBy(*_as_sort_exprs(order_cols))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    if weight is None:
+        run, per_row = F.row_number().over(w), F.lit(1)
+    else:
+        # coalesce: a bare running sum is nullable, and so would be
+        # every key column derived from it
+        run, per_row = F.coalesce(F.sum(weight).over(w), F.lit(0)), F.col(weight)
+    numbered = frame.select("*", run.alias("__run"))
     keys = [*group, part]
-    totals = frame.groupBy(*keys).agg(F.sum(weight).alias("__total"))
+    totals = numbered.groupBy(*keys).agg(F.sum(per_row).alias("__total"))
     a, b = totals.alias("a"), totals.alias("b")
     cond = F.col(f"b.{part}") < F.col(f"a.{part}")
     for g in group:
@@ -146,7 +159,9 @@ def prefix_offsets(
         .groupBy(*[F.col(f"a.{k}").alias(k) for k in keys])
         .agg(F.coalesce(F.sum("b.__total"), F.lit(0)).alias("__offset"))
     )
-    return frame.join(F.broadcast(offsets), keys)
+    return numbered.join(F.broadcast(offsets), keys).select(
+        *frame.columns, (F.col("__run") + F.col("__offset")).alias(id_name)
+    )
 
 
 def ranked_ids(
@@ -155,15 +170,14 @@ def ranked_ids(
     id_name: str,
     pins: list[DataFrame],
     group: Sequence[str] = (),
-    start: int = 0,
-    pin_input: bool = True,
+    weight: str | None = None,
 ) -> DataFrame:
-    """``start + row_number() OVER (PARTITION BY group ORDER BY
-    order_cols)`` as an INT column, computed with the range/two-phase
-    plan above. Output columns: ``df``'s columns plus ``id_name``.
+    """``sum(weight) OVER (PARTITION BY group ORDER BY order_cols ROWS
+    UNBOUNDED PRECEDING)`` — ``row_number()`` when ``weight`` is
+    ``None`` — as an INT column: ``ordinals`` over range partitions of
+    ``df``. Output columns: ``df``'s columns plus ``id_name``.
     ``pins`` receives the checkpointed frames (the module's pin
-    contract). ``pin_input=False`` skips the input checkpoint when the
-    caller's upstream is already persisted (cheap to scan twice).
+    contract).
 
     With ``group`` this is the BATCHED surrogate-key assigner: a star
     build that needs independent dense keys for N dimensions unions
@@ -172,41 +186,6 @@ def ranked_ids(
     (group, order_cols), so each group occupies contiguous partitions,
     and offsets accumulate over the group's own lower partitions only:
     the values equal ranking each group separately."""
-    ranged = _ranged_with_pid(df, [*group, *order_cols], pins, pin_input)
-    w_in = Window.partitionBy(_PID, *group).orderBy(*_as_sort_exprs(order_cols))
-    numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
-    out = prefix_offsets(numbered, _PID, F.lit(1), group)
-    return out.select(
-        *df.columns,
-        (F.col("__rn") + F.col("__offset") + F.lit(start))
-        .cast("int")
-        .alias(id_name),
-    )
-
-
-def exclusive_prefix_sum(
-    df: DataFrame,
-    order_cols: Sequence[Column | str],
-    weight_col: str,
-    out_name: str,
-    pins: list[DataFrame],
-    pin_input: bool = True,
-) -> DataFrame:
-    """``sum(weight) OVER (ORDER BY order_cols ROWS UNBOUNDED
-    PRECEDING AND 1 PRECEDING)`` (0 for the first row) via the same
-    two-phase plan — the running-start form used to seed dense key
-    blocks (e.g. first ordinal of each duplicate-tuple group).
-    ``pins`` / ``pin_input`` as in ``ranked_ids``."""
-    ranged = _ranged_with_pid(df, order_cols, pins, pin_input)
-    w_in = (
-        Window.partitionBy(_PID)
-        .orderBy(*_as_sort_exprs(order_cols))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = ranged.select(
-        "*", F.coalesce(F.sum(weight_col).over(w_in), F.lit(0)).alias("__local")
-    )
-    out = prefix_offsets(local, _PID, F.col(weight_col))
-    return out.select(
-        *df.columns, (F.col("__local") + F.col("__offset")).alias(out_name)
-    )
+    ranged = _ranged_with_pid(df, [*group, *order_cols], pins)
+    out = ordinals(ranged, _PID, order_cols, id_name, group, weight)
+    return out.select(*df.columns, F.col(id_name).cast("int").alias(id_name))

@@ -62,8 +62,8 @@ def upsert_dim(
     start = existing.agg(F.coalesce(F.max(sk_name), F.lit(0)).alias("m")).collect()[0][
         "m"
     ]
-    new_with_sk = ranked_ids(new_rows, list(keys), sk_name, pins, start=start).select(
-        sk_name, *keys
+    new_with_sk = ranked_ids(new_rows, list(keys), sk_name, pins).select(
+        (F.col(sk_name) + start).alias(sk_name), *keys
     )
     return existing.select(sk_name, *keys).unionByName(new_with_sk)
 

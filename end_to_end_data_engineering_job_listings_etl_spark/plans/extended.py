@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from .. import cachereg
 from ..catalog import load_table, load_table_dist
 from ..functions.normalize import norm_initcap
+from ..functions.packed import packed_pair, unpacked
 from .star import STAR_PREFIX, star_wide
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -410,9 +411,10 @@ def er_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``er_blocking_refined`` intentionally keeps per-copy pairs (its
     OUTPUT is the pairs); this query's output is per-record, so its
     candidate volume can be bounded where the pair query's cannot.
-    The reduction is ``min(struct(lev, id_a))`` per dirty id — an
-    associative partial aggregate (map-side combine), NOT a sort
-    window, so no per-key ordering shuffle survives the agg.
+    The reduction is the (lev, id_a) minimum per dirty id
+    (``_best_links``) — an associative partial aggregate (map-side
+    combine), NOT a sort window, so no per-key ordering shuffle
+    survives the agg.
 
     Dirty records with no candidate under the lev cap are dropped
     (inner semantics — the unlinked-residual report is a trivial
@@ -427,25 +429,22 @@ def er_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_b", "id_a", F.levenshtein("name_a", "name_b").alias("lev"))
         .filter(F.col("lev") <= _ER_MAX_LEV)
     )
-    # min over the (lev, id_a) lexicographic order, encoded into ONE
-    # long (lev·2⁴⁴ + id_a — exact while id_a < 2⁴⁴ ≈ 1.8e13, far
-    # above the 15B customers of a 100 TB run, and lev ≤ 2): a STRUCT
-    # min plans as Sort + SortAggregate on the candidate-pair frame,
-    # the long min is a plain HashAggregate with map-side partials —
-    # no per-partition sort of the widest frame in the query (r13,
-    # guide §2.3/§1.2). Values identical: the encoding is strictly
-    # monotone in the lexicographic order.
-    enc = (F.col("lev").cast("long") * F.lit(1 << 44).cast("long")) + F.col(
-        "id_a"
-    )
+    return _best_links(pairs)
+
+
+def _best_links(pairs: DataFrame) -> DataFrame:
+    """Per ``id_b``, the (lev, id_a) lexicographic minimum of the
+    (id_b, id_a, lev) candidate pairs, as a min over one packed long
+    (``functions.packed``): no per-partition sort of the widest frame
+    in the query. Exact while id_a ∈ [0, 2⁴⁴) — 2⁴⁴ ≈ 1.8e13, far above
+    the 15B customers of a 100 TB run — and lev ∈ [0, 2¹⁹) (the cap
+    keeps it ≤ 2); a pair outside raises."""
+    enc = packed_pair("lev", "id_a", 44, "er_best_match")
+    lev, id_a = unpacked(F.col("m"), 44)
     return (
         pairs.groupBy("id_b")
         .agg(F.min(enc).alias("m"))
-        .select(
-            "id_b",
-            (F.col("m") % F.lit(1 << 44).cast("long")).alias("id_a"),
-            F.shiftright("m", 44).cast("int").alias("lev"),
-        )
+        .select("id_b", id_a.alias("id_a"), lev.cast("int").alias("lev"))
     )
 
 

@@ -45,7 +45,7 @@ from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
 from ..operators.dims import DimSpec, build_date_dim, build_dims_batched
 from ..operators.fact import join_star
-from ..operators.ids import exclusive_prefix_sum
+from ..operators.ids import ranked_ids
 from .star import _initcap
 from .star import landing as enriched_orders
 
@@ -64,8 +64,9 @@ def _fact_base(landing: DataFrame, now: Column, pins: list[DataFrame]) -> DataFr
 
     It is derived WITHOUT funneling the full-width landing through a
     single-partition window: rank the DISTINCT ordering tuples on a
-    narrow aggregate (tuple + count), join the start rank back on the
-    tuple (null-safe: posting dates can be null), and number duplicate
+    narrow aggregate (tuple + count) by their running count, join each
+    tuple's start (running count minus its own) back on the tuple
+    (null-safe: posting dates can be null), and number duplicate
     tuples with a per-tuple partitioned ordinal. Values equal
     ``row_number() over (order by title, employer, utc)`` whenever the
     tuple is unique (it is, in every shipped landing); duplicate tuples
@@ -76,18 +77,9 @@ def _fact_base(landing: DataFrame, now: Column, pins: list[DataFrame]) -> DataFr
         "job_posted_at_utc", F.to_timestamp("job_posted_at_datetime_utc")
     )
     tuples = base.groupBy(*_NK_ORDER).agg(F.count("*").alias("__cnt"))
-    starts = exclusive_prefix_sum(
-        # pin_input=False: `tuples` is a groupBy output whose shuffle
-        # files are reused across the sampling + exchange jobs
-        tuples,
-        _NK_ORDER,
-        "__cnt",
-        "__start",
-        pins,
-        pin_input=False,
-    ).select(
+    starts = ranked_ids(tuples, _NK_ORDER, "__end", pins, weight="__cnt").select(
         *[F.col(c).alias(f"__k{i}") for i, c in enumerate(_NK_ORDER)],
-        "__start",
+        (F.col("__end") - F.col("__cnt")).alias("__start"),
     )
     cond = None
     for i, c in enumerate(_NK_ORDER):

@@ -85,7 +85,7 @@ def _dsir_gram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, bucket): one row per distinct uni/bigram per doc
     (hashed binary features — the DSIR variant over hashed n-grams),
     staged tokens once per the shingles_from_tokens contract."""
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "lang", "text"))
+    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text", "lang"))
     staged = docs.select(
         "doc_id", "lang", T.tokens(F.lower(F.col("text"))).alias("__toks")
     )

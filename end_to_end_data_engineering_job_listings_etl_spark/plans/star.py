@@ -213,9 +213,9 @@ def star_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         specs, dims = _dims_bundle(spark, sf_dir)
         l = landing(spark, sf_dir)
         j = join_star(l, dims, specs, "o_orderdate", dim_date(spark, sf_dir))
-        # order keys are sparse, so the PK is their rank; pin_input
-        # (the default) lets the range sampling and the exchange read
-        # the one-column checkpoint instead of the wide landing
+        # order keys are sparse, so the PK is their rank; the input
+        # pin lets the range sampling and the exchange read the
+        # one-column checkpoint instead of the wide landing
         pk = ranked_ids(l.select("o_orderkey"), ["o_orderkey"], "order_pk", pins)
         df = j.join(pk, "o_orderkey").select(
             F.col("order_pk"),

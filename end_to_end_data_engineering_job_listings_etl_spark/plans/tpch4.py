@@ -39,9 +39,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.packed import packed_pair, unpacked
 from .tpch_more import _REV_E4_SQL, _rev_e4
 
 _BAL_CENTS = "CAST(CAST(s_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)"
+_BAL_MIN = -(1 << 21)  # the lowest bal_cents Q2's packed argmin takes
 
 
 def _bal_cents() -> F.Column:
@@ -94,14 +96,12 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     min acctbal, ties broken by suppkey).
 
     Argmin is one grouped ``min`` over the (bal, suppkey) order
-    ENCODED into a single long — a struct min plans as Sort +
-    SortAggregate over the candidate frame (the widest thing in the
-    query), the long min is a plain HashAggregate with map-side
-    partials (r13, same rewrite as er_best_match). Encoding is exact:
-    bal_cents ∈ [−10⁵, 10⁶] (TPC-H acctbal bounds) offset to
-    non-negative, suppkey < 2⁴⁰ ≈ 1.1e12 ≫ any shipped supplier
-    population; lexicographic (bal, suppkey) == numeric order of
-    (bal+off)·2⁴⁰ + suppkey. The winner's name is attached after the
+    packed into a single long (``functions.packed``, as in
+    er_best_match): no Sort + SortAggregate over the candidate frame,
+    the widest thing in the query. Exact while bal_cents ∈ [−2²¹,
+    2²³ − 2²¹) (TPC-H acctbal is [−10⁵, 10⁶] cents) and s_suppkey ∈
+    [0, 2⁴⁰) (≈ 1.1e12 ≫ any shipped supplier population); a candidate
+    outside raises. The winner's name is attached after the
     aggregate by re-joining the broadcast EU-supplier dim on the
     winning suppkey — a ≤|winning parts| row probe against a dim the
     plan already broadcasts, not a min subquery over the fact."""
@@ -132,23 +132,25 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = pairs.join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     ).join(F.broadcast(supp_eu), F.col("l_suppkey") == F.col("s_suppkey"))
-    _off = F.lit(1 << 21).cast("long")  # bal_cents ≥ −2²¹ by schema bounds
-    enc = (F.col("bal_cents") + _off) * F.lit(1 << 40).cast("long") + F.col(
-        "s_suppkey"
-    )
-    best = cand.groupBy("p_partkey", "p_name").agg(F.min(enc).alias("m"))
-    win = best.select(
-        "p_partkey",
-        "p_name",
-        (F.col("m") % F.lit(1 << 40).cast("long")).alias("s_suppkey"),
-        (F.shiftright("m", 40) - _off).alias("bal_cents"),
-    )
     return (
-        win.join(
+        _cheapest_supplier(cand).join(
             F.broadcast(supp_eu.select("s_suppkey", "s_name")), "s_suppkey"
         )
         .select("p_partkey", "p_name", "s_suppkey", "s_name", "bal_cents")
         .orderBy(F.col("bal_cents").desc(), "p_partkey")
+    )
+
+
+def _cheapest_supplier(cand: DataFrame) -> DataFrame:
+    """Per (p_partkey, p_name), the (bal_cents, s_suppkey)
+    lexicographic minimum of the candidates, packed as in the Q2
+    docstring."""
+    enc = packed_pair("bal_cents", "s_suppkey", 40, "q2_min_balance_supplier", _BAL_MIN)
+    bal, supp = unpacked(F.col("m"), 40, _BAL_MIN)
+    return (
+        cand.groupBy("p_partkey", "p_name")
+        .agg(F.min(enc).alias("m"))
+        .select("p_partkey", "p_name", supp.alias("s_suppkey"), bal.alias("bal_cents"))
     )
 
 

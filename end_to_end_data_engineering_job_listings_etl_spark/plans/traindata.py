@@ -40,7 +40,7 @@ from ..functions import text as T
 from ..functions.text import word_shingles
 from ..operators import dedup as D
 from ..operators import similarity as S
-from ..operators.ids import prefix_offsets
+from ..operators.ids import ordinals
 from .corpus import (
     _BAND_EXPRS,
     _JACCARD_MAX_ID,
@@ -469,24 +469,20 @@ def samp_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order shuffle with DENSE ranks and
     no single-partition stage: shuffle key = md5(seed || doc_id)
     (re-seedable per epoch, stable under retries/repartitioning —
-    rand() is neither), rank = within-bucket row_number + cumulative
-    bucket offset. The bucket is the key's OWN hex prefix, so bucket
-    order is consistent with key order and the two-phase rank equals
-    the global ``row_number() over (order by key)`` exactly. The
-    bucket offsets are ``ids.prefix_offsets`` over the 256 bucket
-    counts. This is how a 100 TB corpus gets a reproducible epoch permutation without
-    funneling through one reducer."""
+    rand() is neither), rank = ``ids.ordinals`` over 256 buckets:
+    within-bucket row_number + the count of all lower buckets. The
+    bucket is the key's OWN hex prefix, so bucket order is consistent
+    with key order and the rank equals the global ``row_number() over
+    (order by key)`` exactly. This is how a 100 TB corpus gets a
+    reproducible epoch permutation without funneling through one
+    reducer."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id",))
     key = F.md5(F.concat(F.lit(_SHUF_SEED), F.col("doc_id").cast("string")))
     keyed = docs.select("doc_id", key.alias("shuffle_key")).withColumn(
         "__b", F.substring("shuffle_key", 1, _SHUF_BUCKETS_HEX)
     )
-    w_in = Window.partitionBy("__b").orderBy("shuffle_key", "doc_id")
-    numbered = keyed.withColumn("__rn", F.row_number().over(w_in))
-    return prefix_offsets(numbered, "__b", F.lit(1)).select(
-        "doc_id",
-        "shuffle_key",
-        (F.col("__offset") + F.col("__rn")).cast("bigint").alias("shuffle_rank"),
+    return ordinals(keyed, "__b", ["shuffle_key", "doc_id"], "shuffle_rank").select(
+        "doc_id", "shuffle_key", "shuffle_rank"
     )
 
 

@@ -104,7 +104,17 @@ _WINDOW = [
     "dd_keep_best",
     "dd_duplicate_clusters",
     "samp_split_by_cluster",
-    # 2. changed since their last driver row: the job-listings star
+    # 2. changed since their last driver row: the ordinal callers, the
+    # packed argmins, the DSIR corpus scan, the MinHash estimate and
+    # the job-listings star
+    "dim_company_bucketed",
+    "samp_global_shuffle",
+    "inc_upsert_dim",
+    "stream_upsert_dim",
+    "samp_dsir_select",
+    "q2_min_balance_supplier",
+    "er_best_match",
+    "dd_minhash_estimate",
     "jl_bridge_checked",
     "jl_dim_company_checked",
     "jl_dim_date_checked",
@@ -130,7 +140,6 @@ _WINDOW = [
     "dd_containment_pairs",
     "dd_jaccard_pairs",
     "emb_int8_quantize",
-    "er_best_match",
     "er_blocking_refined",
     "er_name_blocking_pairs",
     "fn_array_hof",
@@ -146,13 +155,6 @@ _WINDOW = [
     "ml_kmeans_step",
     "mm_features",
     "mm_frame_sample_checked",
-    "mm_meta_checked",
-    "op_cogroup_pandas",
-    "op_grouped_seq_pandas",
-    "op_range_join",
-    "op_udtf_sentences",
-    "rel_anti_null_semantics",
-    "rel_division_all_priorities",
 ]
 
 

@@ -103,6 +103,26 @@ def test_two_datasets_full_bi_zero_orphans(spark):
     cachereg.evict(spark)
 
 
+def test_documents_text_lang_cached_once(spark):
+    """samp_dsir_select (through its DSIR gram buckets) and text_langid
+    read the same documents columns, so they share ONE catalog entry:
+    one persisted copy of documents.text, not one per column order."""
+    cachereg.evict(spark, SF_B)
+    try:
+        qs = registry.all_queries()
+        for name in ("samp_dsir_select", "text_langid"):
+            qs[name](spark, SF_B).count()
+        docs = [
+            key
+            for sf, _, key in _entries(spark, "catalog")
+            if sf == SF_B and key[0] == "documents"
+            and set(key[1] or ()) == {"doc_id", "text", "lang"}
+        ]
+        assert len(docs) == 1, docs
+    finally:
+        cachereg.evict(spark, SF_B)
+
+
 def test_sf_dir_scoped_eviction(spark):
     """evict(spark, sf_dir) drops exactly that dataset's entries."""
     cachereg.evict()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -127,6 +129,86 @@ def test_simhash60_token_bound(spark, ansi):
             simhash60(doc(SIMHASH_MAX_TOKENS + 1), "text", "doc_id").collect()
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_er_best_match_packed_domain(spark, ansi):
+    """er_best_match's argmin packs (lev, id_a) as lev·2⁴⁴ + id_a,
+    exact while id_a ∈ [0, 2⁴⁴) and lev ∈ [0, 2¹⁹). At the edges of
+    that domain the argmin is exact; one step outside raises an error
+    naming the query, the value and the bound, with ANSI on and off
+    (off, the long would wrap silently)."""
+    from end_to_end_data_engineering_job_listings_etl_spark.plans.extended import _best_links
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
+
+    id_end, lev_end = 1 << 44, 1 << 19
+
+    def best(rows):
+        df = spark.createDataFrame(rows, "id_b long, id_a long, lev int")
+        return sorted(tuple(r) for r in _best_links(df).collect())
+
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        assert best(
+            [
+                (1, id_end - 1, 0), (1, 0, 1),
+                (2, id_end - 1, lev_end - 1), (2, id_end - 2, lev_end - 1),
+                (3, 5, 0), (3, 0, 0),
+            ]
+        ) == [(1, id_end - 1, 0), (2, id_end - 2, lev_end - 1), (3, 0, 0)]
+        for row, message in [
+            ((1, id_end, 0), f"er_best_match: id_a {id_end} outside [0, {id_end})"),
+            ((1, -1, 0), f"er_best_match: id_a -1 outside [0, {id_end})"),
+            ((1, 0, lev_end), f"er_best_match: lev {lev_end} outside [0, {lev_end})"),
+            ((1, 0, -1), f"er_best_match: lev -1 outside [0, {lev_end})"),
+        ]:
+            with pytest.raises(Exception, match=re.escape(message)):
+                best([row])
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_q2_min_balance_packed_domain(spark, ansi):
+    """q2_min_balance_supplier's argmin packs (bal_cents, s_suppkey) as
+    (bal_cents + 2²¹)·2⁴⁰ + s_suppkey, exact while bal_cents ∈ [−2²¹,
+    2²³ − 2²¹) and s_suppkey ∈ [0, 2⁴⁰). At the edges the argmin is
+    exact; one step outside raises, with ANSI on and off."""
+    from end_to_end_data_engineering_job_listings_etl_spark.plans.tpch4 import (
+        _cheapest_supplier,
+    )
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
+
+    lo, hi, supp_end = -(1 << 21), (1 << 23) - (1 << 21), 1 << 40
+    q = "q2_min_balance_supplier"
+
+    def best(rows):
+        df = spark.createDataFrame(
+            rows, "p_partkey long, p_name string, bal_cents long, s_suppkey long"
+        )
+        return sorted(tuple(r) for r in _cheapest_supplier(df).collect())
+
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        assert best(
+            [
+                (1, "a", lo, supp_end - 1), (1, "a", lo + 1, 0),
+                (2, "b", hi - 1, supp_end - 1), (2, "b", hi - 1, supp_end - 2),
+                (3, "c", 0, 7), (3, "c", 0, 0),
+            ]
+        ) == [
+            (1, "a", supp_end - 1, lo),
+            (2, "b", supp_end - 2, hi - 1),
+            (3, "c", 0, 0),
+        ]
+        for row, message in [
+            ((1, "a", lo - 1, 0), f"{q}: bal_cents {lo - 1} outside [{lo}, {hi})"),
+            ((1, "a", hi, 0), f"{q}: bal_cents {hi} outside [{lo}, {hi})"),
+            ((1, "a", 0, -1), f"{q}: s_suppkey -1 outside [0, {supp_end})"),
+            ((1, "a", 0, supp_end), f"{q}: s_suppkey {supp_end} outside [0, {supp_end})"),
+        ]:
+            with pytest.raises(Exception, match=re.escape(message)):
+                best([row])
+
+
 @pytest.mark.parametrize(
     "op, subset_score",
     [(jaccard_pairs, 0.5), (containment_pairs, 1.0)],
@@ -175,6 +257,72 @@ def test_ranked_ids_partition_count_independent(spark, pins):
     expect = ranked(32)
     for n in (1, 3, 200):
         assert ranked(n) == expect, f"shuffle.partitions={n} diverged"
+
+
+def test_rank_input_pin_follows_the_input_plan(spark, pins, monkeypatch):
+    """``ranked_ids`` checkpoints its input unless the input's
+    optimized plan ends in an Aggregate, whose shuffle output the
+    sampling and exchange jobs reuse. Each caller's choice, pinned: the
+    batched dims (a distinct) and the natural-key tuples (a groupBy)
+    take no input checkpoint; ``star_wide``'s order keys (a projection
+    of the landing) and ``upsert_dim``'s new rows (an anti-join) do."""
+    from end_to_end_data_engineering_job_listings_etl_spark import cachereg
+    from end_to_end_data_engineering_job_listings_etl_spark.operators import ids
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.incremental import (
+        upsert_dim,
+    )
+    from end_to_end_data_engineering_job_listings_etl_spark.plans.joblistings import (
+        build_star_schema,
+        synth_job_listings,
+    )
+    from end_to_end_data_engineering_job_listings_etl_spark.plans.star import star_wide
+
+    pinned: dict[str, bool] = {}
+    ranged_with_pid = ids._ranged_with_pid
+
+    def spy(df, order_cols, pins):
+        before = len(pins)
+        out = ranged_with_pid(df, order_cols, pins)
+        pinned[order_cols[-1]] = len(pins) - before == 2
+        return out
+
+    monkeypatch.setattr(ids, "_ranged_with_pid", spy)
+    landing = synth_job_listings(spark, 50)
+    build_star_schema(landing, pins, now=F.lit("2025-07-01").cast("timestamp"))
+    existing = spark.createDataFrame([(1, "a")], "sk int, k string")
+    upsert_dim(spark.createDataFrame([("b",)], "k string"), existing, ["k"], "sk", pins)
+    sf = "/root/testdata/sf0.001"
+    cachereg.evict(spark, sf, "star")
+    try:
+        star_wide(spark, sf)
+    finally:
+        cachereg.evict(spark, sf, "star")
+    assert pinned == {
+        # build_dims_batched: the job-listings dims (the location dim
+        # has 4 keys) and the reference star's (2 keys)
+        "__k3": False,
+        "__k1": False,
+        "job_posted_at_datetime_utc": False,  # _fact_base
+        "k": True,  # upsert_dim
+        "o_orderkey": True,  # star_wide's order PK
+    }
+
+
+def test_upsert_dim_continues_after_existing_max(spark, pins):
+    """New keys continue after the existing dim's max key, gaps and
+    all ({1, 5} → 6, 7), and start at 1 over an empty dim; existing
+    keys keep theirs."""
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.incremental import (
+        upsert_dim,
+    )
+
+    incoming = spark.createDataFrame([("c",), ("b",), ("a",), ("c",)], "k string")
+    existing = spark.createDataFrame([(1, "a"), (5, "z")], "sk int, k string")
+    got = upsert_dim(incoming, existing, ["k"], "sk", pins).collect()
+    assert sorted((r["sk"], r["k"]) for r in got) == [(1, "a"), (5, "z"), (6, "b"), (7, "c")]
+    empty = spark.createDataFrame([], "sk int, k string")
+    got = upsert_dim(incoming, empty, ["k"], "sk", pins).collect()
+    assert sorted((r["sk"], r["k"]) for r in got) == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_batched_dims_equal_per_dim_build(spark, pins):

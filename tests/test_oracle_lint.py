@@ -96,13 +96,11 @@ def test_ranked_ids_matches_global_row_number(spark, pins):
 def test_ranked_ids_edge_cases(spark, pins):
     """Dense 1..n ids under: empty input, duplicate keys (ties get
     arbitrary order but ids stay dense+unique and key-blocks stay
-    ordered), NULL keys first — and the weighted exclusive prefix."""
+    ordered), NULL keys first — and the weighted running total, alone
+    and grouped."""
     import pyspark.sql.functions as F
 
-    from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import (
-        exclusive_prefix_sum,
-        ranked_ids,
-    )
+    from end_to_end_data_engineering_job_listings_etl_spark.operators.ids import ranked_ids
 
     empty = spark.range(0).select(F.col("id").cast("string").alias("k"))
     assert ranked_ids(empty, ["k"], "rk", pins).count() == 0
@@ -129,7 +127,40 @@ def test_ranked_ids_edge_cases(spark, pins):
 
     t = spark.createDataFrame([("a", 2), ("b", 3), ("c", 5)], "k string, w int")
     got = {
-        r["k"]: r["off"]
-        for r in exclusive_prefix_sum(t, ["k"], "w", "off", pins).collect()
+        r["k"]: r["end"] - r["w"]
+        for r in ranked_ids(t, ["k"], "end", pins, weight="w").collect()
     }
     assert got == {"a": 0, "b": 2, "c": 5}
+
+    # grouped and weighted, with tied keys, null keys and zero weights,
+    # against a Python reference: within a group, key blocks come in
+    # ascending key order (nulls first) and each block starts at the
+    # total weight of the lower blocks. Tied rows come in any order, so
+    # a block is checked as the running totals of SOME order of its
+    # rows: sorted by (total, -weight), each row adds its own weight.
+    data = [
+        (g, k, w)
+        for g in ("x", "y")
+        for k, w in [
+            (None, 2), (None, 0), ("a", 1), ("a", 0), ("a", 4), ("b", 0),
+            ("c", 3), ("c", 3), ("d", 0), ("e", 7),
+        ]
+        if not (g == "y" and k == "e")
+    ] + [("z", None, 0), ("z", "q", 0)]
+    df = spark.createDataFrame(data, "g string, k string, w int")
+    rows = ranked_ids(df, ["k"], "rk", pins, group=["g"], weight="w").collect()
+    got: dict[tuple, list[tuple[int, int]]] = {}
+    for r in rows:
+        got.setdefault((r["g"], r["k"]), []).append((r["rk"], -r["w"]))
+    want: dict[tuple, list[int]] = {}
+    for g, k, w in data:
+        want.setdefault((g, k), []).append(w)
+    assert {gk: len(v) for gk, v in got.items()} == {gk: len(v) for gk, v in want.items()}
+    run: dict[str, int] = {}
+    for g, k in sorted(want, key=lambda gk: (gk[0], gk[1] is not None, gk[1] or "")):
+        total = run.get(g, 0)
+        for rk, neg_w in sorted(got[(g, k)]):
+            total -= neg_w
+            assert rk == total, (g, k, sorted(got[(g, k)]))
+        assert total == run.get(g, 0) + sum(want[(g, k)])
+        run[g] = total

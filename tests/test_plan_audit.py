@@ -60,9 +60,9 @@ def test_fact_paths_have_no_single_partition_stage(spark, name):
     `Exchange SinglePartition` (the physical form of a partitionless
     window). Scalar-aggregate queries legitimately have one; these
     plans have none at all. Together they cover every caller of the
-    shared offsets join (``operators.ids.prefix_offsets``): the ranked
-    and batched ranks, the natural-key starts, the md5-bucketed dim
-    and the hex-bucketed shuffle rank."""
+    one ordinal rule (``operators.ids.ordinals``): the ranked and
+    batched ranks, the natural-key starts, the md5-bucketed dim and
+    the hex-bucketed shuffle rank."""
     df = registry.all_queries()[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, f"{name}: single-partition stage"
