@@ -123,9 +123,10 @@ def ordinals(
     weight: str | None = None,
 ) -> DataFrame:
     """``frame`` plus ``id_name`` (a long): the running total of
-    ``weight`` (1 per row when ``None``: a row number) within
-    ``(part, *group)`` in ``order_cols`` order, ASC NULLS FIRST, plus
-    the total of every lower ``part`` in the same ``group``. The values
+    ``weight`` (1 per row when ``None``: a row number; a null weight
+    counts as 0) within ``(part, *group)`` in ``order_cols`` order, ASC
+    NULLS FIRST, plus the total of every lower ``part`` in the same
+    ``group``. The values
     are dense per group; when ``part`` orders the rows as
     ``order_cols`` do, they equal ``sum(weight) OVER (PARTITION BY
     group ORDER BY order_cols ROWS UNBOUNDED PRECEDING)``.

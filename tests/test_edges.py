@@ -276,6 +276,7 @@ def test_rank_input_pin_follows_the_input_plan(spark, pins, monkeypatch):
         synth_job_listings,
     )
     from end_to_end_data_engineering_job_listings_etl_spark.plans.star import star_wide
+    from tests.conftest import SF_DIR
 
     pinned: dict[str, bool] = {}
     ranged_with_pid = ids._ranged_with_pid
@@ -291,12 +292,11 @@ def test_rank_input_pin_follows_the_input_plan(spark, pins, monkeypatch):
     build_star_schema(landing, pins, now=F.lit("2025-07-01").cast("timestamp"))
     existing = spark.createDataFrame([(1, "a")], "sk int, k string")
     upsert_dim(spark.createDataFrame([("b",)], "k string"), existing, ["k"], "sk", pins)
-    sf = "/root/testdata/sf0.001"
-    cachereg.evict(spark, sf, "star")
+    cachereg.evict(spark, SF_DIR, "star")
     try:
-        star_wide(spark, sf)
+        star_wide(spark, SF_DIR)
     finally:
-        cachereg.evict(spark, sf, "star")
+        cachereg.evict(spark, SF_DIR, "star")
     assert pinned == {
         # build_dims_batched: the job-listings dims (the location dim
         # has 4 keys) and the reference star's (2 keys)
