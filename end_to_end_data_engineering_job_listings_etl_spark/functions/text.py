@@ -1,10 +1,20 @@
 """Text-analysis expressions: tokenization, counts, quality scores,
-language ID, fingerprints, shingles.
+language ID, fingerprints, token windows and shingle sets.
 
 Beyond-reference operators (training-data-pipeline layer mandated by
 BASELINE.json): everything here is pure column expressions over
 `documents.text`-shaped columns, so it runs JVM-side at 100 TB with no
 Python in the loop.
+
+Two rules cut a token array, each stated once:
+
+- ``token_windows`` is the one window rule. Every shingle, bigram,
+  span and chunk is a run of consecutive tokens cut by it, from
+  whichever tokenizer its caller's oracle pins (``tokens``, or a plain
+  ``split``). It binds the token array once, so no window re-tokenizes
+  its document.
+- ``word_shingles`` is the one set rule: a document's distinct k-word
+  windows over ``tokens(lower(text))``, read by every set operator.
 """
 
 from __future__ import annotations
@@ -109,33 +119,44 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles from an already-tokenized column.
+def token_windows(
+    toks: Column, size: int, stride: int = 1, partial: bool = False
+) -> Column:
+    """The windows of ``size`` consecutive tokens that start every
+    ``stride`` tokens, in order, each joined with one space; repeats
+    are kept. Without ``partial`` only full windows count, so fewer
+    than ``size`` tokens give the empty array; with it every start
+    before the last token counts, and the trailing windows may be
+    shorter. A null ``toks`` gives the empty array.
 
-    ``toks`` must be a cheap reference (a projected column or a lambda
-    variable), not a fresh ``tokens(...)`` expression: the per-shingle
-    lambda reads it once per shingle, so an expression there would
-    re-tokenize the document for every shingle."""
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    return F.when(n >= k, F.array_distinct(sh)).otherwise(
-        F.array().cast("array<string>")
-    )
+    ``toks`` may be any tokenizer expression: it is bound once as a
+    lambda variable, so the tokenizer runs once per document, not once
+    per window. The ``sequence`` of starts never descends (Spark would
+    index from 0 for a short document); the empty case is the
+    ``otherwise`` branch."""
+
+    def cut(t: Column) -> Column:
+        last = F.size(t) - (1 if partial else size)
+        starts = F.sequence(F.lit(0), F.greatest(last, F.lit(0)), F.lit(stride))
+        windows = F.transform(
+            starts, lambda i: F.array_join(F.slice(t, i + 1, size), " ")
+        )
+        return F.when(last >= 0, windows).otherwise(F.array().cast("array<string>"))
+
+    return F.transform(F.array(toks), cut)[0]
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:
     """A document's set: its distinct k-word shingles over lower-cased
     whitespace tokens. Every set operator (MinHash, Jaccard,
     containment, decontamination) reads its sets from here; ``k == 1``
-    is the distinct token set, ``array_distinct(tokens(lower(col)))``.
+    is the distinct token set, ``array_distinct(tokens(lower(col)))``,
+    and ``k > 1`` the distinct ``token_windows`` of those tokens.
 
-    For ``k > 1`` the token array is bound once as a lambda variable,
-    so the tokenizer runs once per document, not once per shingle. A
-    document with fewer than ``k`` tokens, or a null one, has the empty
-    set; for ``k == 1`` a null document's set is null. Either way it
-    explodes to no rows."""
+    A document with fewer than ``k`` tokens, or a null one, has the
+    empty set; for ``k == 1`` a null document's set is null. Either
+    way it explodes to no rows."""
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
     if k == 1:
         return F.array_distinct(toks)
-    return F.transform(F.array(toks), lambda t: shingles_from_tokens(t, k))[0]
+    return F.array_distinct(token_windows(toks, k))

@@ -38,8 +38,10 @@ the NARROW key projection, not the caller's wide rows.)
 
 Pin rule for the input: the boundary-sampling pass and the range
 exchange each read the input, so it is checkpointed too — unless its
-optimized plan ends in an ``Aggregate`` (a ``distinct`` or
-``groupBy``), whose shuffle output both passes reuse.
+analyzed plan ends in an aggregation (``Aggregate``, ``Distinct`` or
+``Deduplicate``: a ``groupBy``, ``distinct`` or ``dropDuplicates``),
+whose shuffle output both passes reuse. The analyzed plan is the one
+the frame already holds, so the rule costs no optimizer pass.
 
 Pin contract: every operator whose result reads a frame it persisted
 or checkpointed takes a required ``pins`` list and appends each such
@@ -56,6 +58,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _PID = "__range_pid"
+# analyzed-plan roots whose shuffle output the range passes reuse
+_AGGREGATIONS = ("Aggregate", "Distinct", "Deduplicate")
 
 
 def _as_sort_exprs(order_cols: Sequence[Column | str]) -> list[Column]:
@@ -98,8 +102,8 @@ def _ranged_with_pid(
     (pid, row) assignment with a lazy localCheckpoint — see module
     docstring for why an unpinned pid is a correctness bug. The input
     is pinned by the module's pin rule."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "Aggregate":
+    root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    if root not in _AGGREGATIONS:
         df = df.localCheckpoint(eager=False)
         pins.append(df)
     # An explicit partition count (the session's shuffle partitions)

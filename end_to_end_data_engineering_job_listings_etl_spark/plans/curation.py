@@ -1,6 +1,6 @@
-"""Training-corpus curation, round 2: the document-interior and
+"""Training-corpus curation, second stage: the document-interior and
 embedding-space filters a 100 TB pretraining pipeline runs after the
-round-1 layers (exact/MinHash/SimHash dedup, lang-ID, quality,
+first-stage layers (exact/MinHash/SimHash dedup, lang-ID, quality,
 decontamination — plans/corpus.py, plans/traindata.py).
 
 - Repetition metrics (Gopher-style): within-document duplicate-token /
@@ -14,10 +14,11 @@ decontamination — plans/corpus.py, plans/traindata.py).
   centroid cell, turning O(n²) cosine pairs into O(n²/k).
 
 Determinism: ratios are floor(1e6·num/den) integers over exact counts
-(the shared e6 idiom); chunk identity is md5 text hashing; cosine uses
-the index-ordered fold that is bit-identical between Spark's
-F.aggregate and DuckDB's list_aggregate (plans/corpus.py oracle
-machinery, reused here).
+(the shared e6 idiom); every bigram and chunk is cut by
+``functions.text.token_windows`` from the caller's own tokenizer;
+chunk identity is md5 text hashing; cosine uses the index-ordered
+fold that is bit-identical between Spark's F.aggregate and DuckDB's
+list_aggregate (plans/corpus.py oracle machinery, reused here).
 
 Scale shapes: token/bigram metrics are explode → two-level partial
 aggs (shuffle on (doc_id, gram) then doc_id); chunk dedup shuffles
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table_dist
+from ..functions.text import token_windows
 from ..operators.similarity import ivf_assign, ivf_assign_blocked
 from .corpus import _cos
 
@@ -68,18 +70,10 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("c").alias("top_tok"),
         )
     )
-    # guard: sequence(1, 0) would DESCEND in Spark and index 0 —
-    # single-token docs must drop out here (the oracle's empty
-    # range(1,1) drops them on the DuckDB side).
-    bigrams = docs.filter(F.size(F.split("text", " ")) >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(split(text, ' ')) - 1),"
-                " i -> concat(element_at(split(text, ' '), i), ' ',"
-                " element_at(split(text, ' '), i + 1)))"
-            )
-        ).alias("bg"),
+    # a single-token doc has no bigram, so it drops out at the join
+    # (the oracle's empty range(1,1) drops it on the DuckDB side)
+    bigrams = docs.select(
+        "doc_id", F.explode(token_windows(F.split("text", " "), 2)).alias("bg")
     )
     bg_stats = (
         bigrams.groupBy("doc_id", "bg")
@@ -115,39 +109,28 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix counts are DERIVED from the bigram counts
     (``C(w1·) = Σ_w2 C(w1,w2)``) — a second agg over the already-
     reduced model frame instead of a second corpus-wide explode +
-    shuffle; the token array is staged once per doc so the bigram
-    lambda doesn't re-split the text per element access. (r12 note: a
-    shared ``repartition("bg")`` for the model agg and the score join
-    was tried and reverted — divergent column pruning keeps the two
-    exchanges non-identical, so nothing is reused, and the explicit
-    exchange forfeits the model branch's map-side partial agg.)
+    shuffle.
 
-    r13 note (VERDICT r12 ask #5, measured and settled): a per-
-    (doc_id, bg) pre-aggregate feeding both the model and the score —
-    the "project both consumers to one narrow frame so AQE stage reuse
-    fires" idea — was built, oracle-verified and A/B'd: it is WORSE.
-    (a) Reuse still never fires: the join consumer needs
-    (doc_id, bg, c_db) while the model consumer prunes doc_id from the
-    aggregate output, so the two exchange subtrees stay canonically
-    unequal (measured: 3 independent ShuffleQueryStages each re-running
-    the explode; 12 → 15 jobs, solo-cold median 1.97 → 2.35 s).
-    (b) First-principles, the pre-aggregate ADDS a corpus-scale
-    (doc_id, bg) exchange this plan never had: here the only shuffles
-    are post-aggregation (model counts, per-doc sums) — the occurrence
-    rows meet the model through a broadcast/hash join and partial
-    aggregation, never a corpus-wide exchange. Re-running the cheap
-    explode twice is the scale-correct trade (same rule as
-    samp_dsir_select). Kept as-is deliberately."""
+    The bigram explode runs twice, once for the model and once for the
+    score join, and that is the scale-correct trade (the same one
+    samp_dsir_select makes). The only shuffles come after aggregation
+    (model counts, per-doc sums); the occurrence rows meet the model
+    through a join and partial aggregation, never a corpus-wide
+    exchange. Two ways to share the explode lose:
+
+    - A shared ``repartition("bg")`` for the model aggregate and the
+      score join: divergent column pruning keeps the two exchanges
+      non-identical, so nothing is reused, and the explicit exchange
+      forfeits the model branch's map-side partial aggregate.
+    - A per-(doc_id, bg) pre-aggregate feeding both consumers: the
+      join needs (doc_id, bg, count) while the model prunes doc_id, so
+      the exchange subtrees still differ (3 shuffle stages, each
+      re-running the explode; 12 → 15 jobs, solo-cold median
+      1.97 → 2.35 s at sf0.1), and it adds a corpus-scale
+      (doc_id, bg) exchange this plan does not have."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    toked = docs.select("doc_id", F.split("text", " ").alias("__t"))
-    bigrams = toked.filter(F.size("__t") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(__t) - 1),"
-                " i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1)))"
-            )
-        ).alias("bg"),
+    bigrams = docs.select(
+        "doc_id", F.explode(token_windows(F.split("text", " "), 2)).alias("bg")
     )
     c2 = bigrams.groupBy("bg").agg(F.count("*").alias("c2"))
     c1 = (
@@ -224,12 +207,7 @@ def text_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = docs.select(
         "doc_id",
         F.posexplode(
-            F.expr(
-                f"transform(sequence(1, (size(split(text, ' ')) + {_CHUNK - 1})"
-                f" div {_CHUNK}),"
-                f" i -> concat_ws(' ', slice(split(text, ' '),"
-                f" (i - 1) * {_CHUNK} + 1, {_CHUNK})))"
-            )
+            token_windows(F.split("text", " "), _CHUNK, _CHUNK, partial=True)
         ).alias("idx", "chunk"),
     ).select(
         "doc_id",
@@ -267,32 +245,21 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure array expressions over a staged token array: one narrow map +
     one explode, no shuffle at all until a consumer aggregates."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    toked = docs.select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("__t")
-    ).filter(F.size("__t") >= 1)
-    starts = F.sequence(F.lit(1), F.size("__t"), F.lit(_RAG_STRIDE))
-    return toked.select(
+    toked = docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("__t"))
+    chunks = toked.select(
         "doc_id",
+        F.size("__t").alias("__n"),
         F.posexplode(
-            F.transform(
-                starts,
-                lambda i: F.struct(
-                    i.alias("start_tok"),
-                    F.least(
-                        F.lit(_RAG_SIZE), F.size("__t") - i + 1
-                    ).alias("n_chunk_tokens"),
-                    F.md5(
-                        F.concat_ws(" ", F.slice("__t", i, _RAG_SIZE))
-                    ).alias("chunk_fp"),
-                ),
-            )
-        ).alias("chunk_idx", "c"),
-    ).select(
+            token_windows(F.col("__t"), _RAG_SIZE, _RAG_STRIDE, partial=True)
+        ).alias("chunk_idx", "__chunk"),
+    )
+    start0 = F.col("chunk_idx") * _RAG_STRIDE  # 0-based first token
+    return chunks.select(
         "doc_id",
         "chunk_idx",
-        F.col("c.start_tok").alias("start_tok"),
-        F.col("c.n_chunk_tokens").alias("n_chunk_tokens"),
-        F.col("c.chunk_fp").alias("chunk_fp"),
+        (start0 + 1).alias("start_tok"),
+        F.least(F.lit(_RAG_SIZE), F.col("__n") - start0).alias("n_chunk_tokens"),
+        F.md5("__chunk").alias("chunk_fp"),
     )
 
 
@@ -409,8 +376,8 @@ def sem_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ``sem_dedup_clusters``' fixed k=4, so the within-cell GEMM
     stays O(N × cell) = linear in N while fixed-k is O(N²/k) —
     measured at sf10 the fixed-k query runs 75x its sf1 time
-    (exponent 1.88) and this one stays near-linear (BASELINE.md
-    round-6 sf10 section). Centroids are the first k vec_ids
+    (exponent 1.88) and this one stays near-linear (BASELINE.md, the
+    sf10 training-data-layer bench). Centroids are the first k vec_ids
     (deterministic and SQL-mirrorable; distinct embeddings under the
     replica fixtures, which shift ids but keep content) and STAY IN A
     DATAFRAME — assignment is the fully distributed blocked GEMM

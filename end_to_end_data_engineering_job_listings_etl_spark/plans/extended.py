@@ -293,9 +293,9 @@ _ER_BLOCK_CAP = 16  # refine any block wider than this
 def er_blocking_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ER blocking with OVERSIZED-BLOCK REFINEMENT TO THE FULL STABLE
     PREFIX — the production answer to the quadratic blowup the plain
-    block join shows on duplicate-heavy data (r5 sf1 bench:
-    er_name_blocking_pairs went 80x over 10x data because every name
-    block widened 10x and pair count is quadratic in block width).
+    block join shows on duplicate-heavy data (er_name_blocking_pairs
+    ran 80x slower on 10x data, sf0.1 → sf1, because every name block
+    widened 10x and pair count is quadratic in block width).
 
     Mechanism: measure block widths on the clean side in one tiny
     aggregate (broadcast back); a block wider than _ER_BLOCK_CAP (16)
@@ -312,16 +312,15 @@ def er_blocking_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely ARE lev≤2 matches: the refined pair count tracks the
     OUTPUT, the best any blocking can do without dropping true links.
 
-    (History: the r7 key was base-block + nationkey only — it
-    re-entered the quadratic regime once block width outgrew the
-    25-way nation split, sf10 exponent 1.21. The first r8 attempt
-    instead lengthened the digit key by one per decade of width,
-    assuming every digit splits ~10 ways — false when the next digit
-    carries no entropy, e.g. the 10^5 digit at sf1 key ranges, where
-    it regressed the sf1 bench 14 s → 97 s on ~100-wide sub-blocks;
-    and NO name-derived key can separate verbatim copies. Prefix +
-    attribute subsumes both: digits and the attribute each split
-    where they have signal, and the residual is output-driven.)
+    Two narrower keys fail. Base block + nationkey alone re-enters the
+    quadratic regime once block width outgrows the 25-way nation split
+    (sf10 exponent 1.21). Lengthening the digit key by one per decade
+    of width assumes every digit splits ~10 ways, which is false when
+    the next digit carries no entropy (the 10^5 digit at sf1 key
+    ranges: 14 s → 97 s on ~100-wide sub-blocks), and NO name-derived
+    key can separate verbatim copies. Prefix + attribute subsumes
+    both: digits and the attribute each split where they have signal,
+    and the residual is output-driven.
 
     True links keep 100% recall BY CONSTRUCTION: a customer's clean
     and dirty rows agree on all stable digits, on nationkey, AND on
@@ -392,12 +391,12 @@ def _er_refined_sides(
 
 
 def er_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BOUNDED-OUTPUT production default for the ER family (r7
-    verdict weak #2): per DIRTY record, its single best clean link —
-    lowest Levenshtein within the refined block, ties → lowest clean
-    id — the (record → canonical match) shape real linkage pipelines
-    emit. Output is ≤ 1 row per dirty record, so it is O(N) BY
-    CONSTRUCTION no matter how duplicate-heavy the blocks get.
+    """The BOUNDED-OUTPUT production default for the ER family: per
+    DIRTY record, its single best clean link — lowest Levenshtein
+    within the refined block, ties → lowest clean id — the (record →
+    canonical match) shape real linkage pipelines emit. Output is ≤ 1
+    row per dirty record, so it is O(N) BY CONSTRUCTION no matter how
+    duplicate-heavy the blocks get.
 
     Candidate stage — linear even on verbatim-duplicate corpora: under
     the (lev, id_a) lexicographic order, identical clean NAMES are
@@ -453,7 +452,7 @@ _ER_MISSING_NATION = 3
 
 def er_unlinked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNLINKED-RESIDUAL report that completes the ER production
-    triple (pairs → best-match → residual; r8 verdict ask #7): dirty
+    triple (pairs → best-match → residual): dirty
     records with NO clean candidate under the lev cap. On the base
     fixture every dirty record links by construction, so the residual
     is demonstrated against the realistic failure mode instead: an
@@ -517,13 +516,12 @@ def agg_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials merge associatively.
 
     Domain bound: sum(x*x) with e2-scaled prices reaches ~4e18 at
-    sf0.01 and OVERFLOWED int64 at the sf1 sweep (the r5 10x run
-    caught it live). The second-order sums therefore accumulate in
-    DECIMAL(38,0) (DuckDB: HUGEINT) and are emitted as exact decimal
-    DIGIT STRINGS — bit-identical across engines, hash-gate-stable
-    (no DECIMAL output column), and exact to 10^38, i.e. far past any
-    reachable scale factor. First-order sums stay BIGINT (headroom to
-    ~sf10000)."""
+    sf0.01 and OVERFLOWS int64 at sf1 (an sf1 sweep caught it). The
+    second-order sums therefore accumulate in DECIMAL(38,0) (DuckDB:
+    HUGEINT) and are emitted as exact decimal DIGIT STRINGS —
+    bit-identical across engines, hash-gate-stable (no DECIMAL output
+    column), and exact to 10^38, i.e. far past any reachable scale
+    factor. First-order sums stay BIGINT (headroom to ~sf10000)."""
     orders = load_table(spark, sf_dir, "orders")
     x = (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
     y = F.col("o_custkey").cast("bigint")
@@ -662,12 +660,10 @@ def dim_company_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 word bigrams across the corpus (tie-broken on the bigram
     so the selected set is engine-independent)."""
-    from ..functions.text import shingles_from_tokens, tokens
+    from ..functions.text import word_shingles
 
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    grams = docs.select(
-        tokens(F.lower(F.col("text"))).alias("__toks")
-    ).select(F.explode(shingles_from_tokens(F.col("__toks"), 2)).alias("bigram"))
+    grams = docs.select(F.explode(word_shingles("text", 2)).alias("bigram"))
     return (
         grams.groupBy("bigram")
         .agg(F.count("*").alias("n_docs"))

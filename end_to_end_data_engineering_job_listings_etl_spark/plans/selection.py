@@ -83,15 +83,16 @@ def _gram_bucket(gram: F.Column) -> F.Column:
 
 def _dsir_gram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, bucket): one row per distinct uni/bigram per doc
-    (hashed binary features — the DSIR variant over hashed n-grams),
-    staged tokens once per the shingles_from_tokens contract."""
+    (hashed binary features — the DSIR variant over hashed n-grams):
+    the distinct tokens and the distinct 2-token windows of one staged
+    token array."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text", "lang"))
     staged = docs.select(
         "doc_id", "lang", T.tokens(F.lower(F.col("text"))).alias("__toks")
     )
     grams = F.concat(
         F.array_distinct(F.col("__toks")),
-        T.shingles_from_tokens(F.col("__toks"), 2),
+        F.array_distinct(T.token_windows(F.col("__toks"), 2)),
     )
     return staged.select(
         "doc_id", "lang", F.explode(grams).alias("gram")
@@ -117,11 +118,10 @@ def samp_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("lang") == _DSIR_TARGET_LANG, F.lit(1)).otherwise(F.lit(0))
         ).alias("n_tgt"),
     )
-    # (r12 note: totals' subtree shares bucket_counts' canonical
-    # shuffle stage under AQE at runtime, so the gram explode really
-    # runs twice — histogram pass + scoring join — not three times; a
-    # bounded-collect LocalRelation of the 128-row histogram measured
-    # neutral and was reverted.)
+    # totals' subtree shares bucket_counts' shuffle stage under AQE,
+    # so the gram explode runs twice (histogram pass + scoring join),
+    # not three times; collecting the 128-row histogram to the driver
+    # as a local relation measured no faster.
     totals = bucket_counts.agg(
         F.sum("n_raw").alias("raw_tot"), F.sum("n_tgt").alias("tgt_tot")
     )

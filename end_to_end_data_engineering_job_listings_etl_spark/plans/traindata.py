@@ -734,23 +734,8 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     more hash agg. No UDFs, no driver state; the span relation is
     |tokens| rows per doc, the same order as the corpus itself."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    toked = docs.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("__t")
-    )
-    spans = toked.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("__t") >= _SPAN_K,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("__t") - _SPAN_K + 1),
-                    lambda i: F.md5(
-                        F.concat_ws(" ", F.slice("__t", i, _SPAN_K))
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("h"),
-    )
+    windows = T.token_windows(T.tokens(F.lower(F.col("text"))), _SPAN_K)
+    spans = docs.select("doc_id", F.explode(F.transform(windows, F.md5)).alias("h"))
     w_h = Window.partitionBy("h")
     counted = spans.select(
         "doc_id", (F.count("*").over(w_h) >= 2).cast("bigint").alias("is_dup")
@@ -814,15 +799,12 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("c").alias("top_count"),
         )
     )
-    n = F.size(F.col("toks"))
-    bigrams = F.transform(
-        F.sequence(F.lit(0), n - 2),
-        lambda i: F.array_join(F.slice(F.col("toks"), i + 1, 2), " "),
-    )
     bi_stats = toked.select(
         "doc_id",
-        (n - 1).alias("n_bi"),
-        F.size(F.array_distinct(bigrams)).alias("n_bi_distinct"),
+        (F.size("toks") - 1).alias("n_bi"),
+        F.size(F.array_distinct(T.token_windows(F.col("toks"), 2))).alias(
+            "n_bi_distinct"
+        ),
     )
     j = tok_stats.join(bi_stats, "doc_id")
     top_e6 = F.floor(

@@ -104,17 +104,29 @@ _WINDOW = [
     "dd_keep_best",
     "dd_duplicate_clusters",
     "samp_split_by_cluster",
-    # 2. changed since their last driver row: the ordinal callers, the
-    # packed argmins, the DSIR corpus scan, the MinHash estimate and
+    # 2. changed since their last driver row: the token-window and
+    # shingle-set readers, the ordinal callers, the packed argmins and
     # the job-listings star
+    "text_repetition_metrics",
+    "text_bigram_lm_score",
+    "text_quality_buckets",
+    "text_chunk_dedup",
+    "text_chunk_overlap",
+    "text_dup_spans",
+    "text_repetition_signals",
+    "text_top_bigrams",
+    "text_decontaminate",
+    "samp_dsir_select",
+    "dd_minhash_signatures",
+    "dd_lsh_candidates",
+    "dd_minhash_estimate",
+    "inc_lsh_merge",
     "dim_company_bucketed",
     "samp_global_shuffle",
     "inc_upsert_dim",
     "stream_upsert_dim",
-    "samp_dsir_select",
     "q2_min_balance_supplier",
     "er_best_match",
-    "dd_minhash_estimate",
     "jl_bridge_checked",
     "jl_dim_company_checked",
     "jl_dim_date_checked",
@@ -127,9 +139,7 @@ _WINDOW = [
     "jl_fact_fallback_checked",
     # 3. oldest last driver row first
     "star_wide",
-    "text_chunk_dedup",
     "text_langid",
-    "text_repetition_metrics",
     "text_stats",
     "w_latest_per_customer",
     "agg_approx_distinct_checked",
@@ -145,16 +155,6 @@ _WINDOW = [
     "fn_array_hof",
     "fn_map_column",
     "fn_posexplode_tokens",
-    "fn_try_arithmetic",
-    "graph_pagerank_step",
-    "inc_watermark_agg",
-    "li_market_share",
-    "li_promo_share_monthly",
-    "li_returned_top_customers",
-    "li_top_supplier",
-    "ml_kmeans_step",
-    "mm_features",
-    "mm_frame_sample_checked",
 ]
 
 

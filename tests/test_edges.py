@@ -10,7 +10,11 @@ from pyspark.sql import types as T
 
 from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords import extract_keywords
 from end_to_end_data_engineering_job_listings_etl_spark.functions.relative_time import parse_relative_time
-from end_to_end_data_engineering_job_listings_etl_spark.functions.text import word_shingles
+from end_to_end_data_engineering_job_listings_etl_spark.functions.text import (
+    token_windows,
+    tokens,
+    word_shingles,
+)
 from end_to_end_data_engineering_job_listings_etl_spark.operators.dedup import (
     SIMHASH_MAX_TOKENS,
     containment_pairs,
@@ -102,6 +106,43 @@ def test_short_docs_yield_no_shingles_or_pairs(spark):
     assert sets.select(F.explode("set")).count() == 3
     sig = minhash_signature(sets, "doc_id", 4)
     assert [r["doc_id"] for r in sig.collect()] == [4]
+
+
+def _windows_reference(text, size, stride, partial):
+    """``token_windows`` over ``tokens(text)``, in Python."""
+    toks = [] if text is None else text.split()
+    last = len(toks) - (1 if partial else size)
+    return [" ".join(toks[i : i + size]) for i in range(0, last + 1, stride)]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_token_windows_match_python_reference(spark, ansi):
+    """Null and empty documents, one token, exactly ``size`` tokens and
+    ``size + 1``, and stride 2 with ``partial`` over an exact multiple
+    of the stride (4 tokens) and one off it (5): full windows only
+    unless ``partial``, in order, repeats kept. ``size(null)`` is -1
+    with ANSI off and null with it on; both give the empty array."""
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
+
+    docs = [None, "", "a", "a b", "a b c", "a b a b", "a b c d e"]
+    cases = [(2, 1, False), (3, 1, False), (2, 2, False), (2, 2, True), (3, 2, True)]
+    df = spark.createDataFrame(list(enumerate(docs)), _DOC_SCHEMA)
+    cols = [
+        token_windows(tokens("text"), size, stride, partial).alias(f"w{i}")
+        for i, (size, stride, partial) in enumerate(cases)
+    ]
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        rows = {r["doc_id"]: r for r in df.select("doc_id", *cols).collect()}
+    for doc_id, text in enumerate(docs):
+        for i, case in enumerate(cases):
+            want = _windows_reference(text, *case)
+            assert rows[doc_id][f"w{i}"] == want, (text, case)
+    # any tokenizer: a plain split keeps the empty token of ""
+    got = df.select(token_windows(F.split("text", " "), 1, partial=True)).collect()
+    assert [r[0] for r in got] == [[], [""], ["a"], ["a", "b"], ["a", "b", "c"],
+                                   ["a", "b", "a", "b"], ["a", "b", "c", "d", "e"]]
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from end_to_end_data_engineering_job_listings_etl_spark import registry
 from tests.conftest import SF_DIR as _CONFTEST_SF_DIR
@@ -22,20 +23,33 @@ from tests.conftest import SF_DIR as _CONFTEST_SF_DIR
 # scale killers at that size.
 SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", _CONFTEST_SF_DIR)
 
-_STREAMING = {
-    "stream_window_counts",
-    "stream_user_totals",
-    "stream_dedup",
-    "stream_session_counts",
-}  # no batch plan
+
+class _Started(Exception):
+    """Raised in place of starting a stream; carries the streaming
+    frame the query would have started."""
+
+    def __init__(self, stream):
+        super().__init__("stream not started")
+        self.stream = stream
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n in registry.all_queries() if n not in _STREAMING)
-)
-def test_no_cartesian_no_row_python(spark, name):
-    df = registry.all_queries()[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.parametrize("name", sorted(registry.all_queries()))
+def test_no_cartesian_no_row_python(spark, name, monkeypatch):
+    """A streaming query is audited on the stream it would start, and
+    the stream is not started: a drained query returns a memory-sink
+    or parquet read-back, whose plan holds no streaming operator."""
+
+    def start(writer, *args, **kwargs):
+        raise _Started(writer._df)
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    try:
+        df = registry.all_queries()[name](spark, SF_DIR)
+    except _Started as started:
+        df = started.stream
+    # explain's physical plan: a streaming frame is planned as one
+    # incremental batch, with no stream started
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
 
@@ -144,3 +158,44 @@ def test_reference_star_exchange_budget(spark, name, max_shuffle, max_broadcast)
     shuffles, broadcasts = _initial_exchanges(df)
     assert shuffles <= max_shuffle, f"{name}: {shuffles} shuffle exchanges"
     assert broadcasts <= max_broadcast, f"{name}: {broadcasts} broadcast exchanges"
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Each ``lambdafunction(...)`` in a plan string, parentheses
+    matched, nested ones included."""
+    key, out, i = "lambdafunction(", [], plan.find("lambdafunction(")
+    while i >= 0:
+        depth, j = 1, i + len(key)
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        out.append(plan[i:j])
+        i = plan.find(key, i + 1)
+    return out
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_repetition_metrics",
+        "text_bigram_lm_score",
+        "text_chunk_dedup",
+        "text_chunk_overlap",
+        "text_dup_spans",
+        "text_repetition_signals",
+        "text_top_bigrams",
+        "samp_dsir_select",
+        "text_decontaminate",
+        "dd_minhash_signatures",
+    ],
+)
+def test_token_windows_do_not_retokenize(spark, name):
+    """Every shingle, bigram, span and chunk is cut by
+    ``functions.text.token_windows``, which binds its token array once
+    as a lambda variable: no lambda in the optimized plan splits the
+    document again for each window."""
+    df = registry.all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies, f"{name}: no lambda in the plan"
+    assert not [b for b in bodies if "split(" in b], f"{name}: a window re-tokenizes"
