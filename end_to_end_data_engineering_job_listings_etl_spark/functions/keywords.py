@@ -44,30 +44,3 @@ def extract_keywords(
     hits = [F.when(lowered.contains(kw.lower()), F.lit(kw.lower())) for kw in keywords]
     return F.array_sort(F.array_distinct(F.array_compact(F.array(*hits))))
 
-
-def extract_keywords_pandas_udf(keywords: Sequence[str] = DEFAULT_KEYWORDS):
-    """The Arrow-batched fallback for when the dictionary outgrows
-    expression compilation (thousands of terms → one Aho-Corasick-ish
-    pass in pandas beats a thousand-branch codegen expression).
-
-    Semantics are identical to ``extract_keywords`` (tested in
-    tests/test_functions.py). This is the engine's sanctioned slow
-    path: vectorized pandas_udf, never a row-at-a-time Python UDF
-    (the reference's ``.apply`` matcher, ``dags/test_extraction.py:129``,
-    done right)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    kws = sorted({k.lower() for k in keywords})
-
-    def _extract(texts):
-        lowered = texts.fillna("").str.lower()
-        hits = [lowered.str.contains(kw, regex=False) for kw in kws]
-        out = []
-        for i in range(len(lowered)):
-            out.append([kw for kw, h in zip(kws, hits) if h.iloc[i]])
-        return pd.Series(out)
-
-    # explicit functionType: `from __future__ import annotations`
-    # stringifies hints, which defeats pandas_udf hint inference
-    return pandas_udf(_extract, "array<string>")

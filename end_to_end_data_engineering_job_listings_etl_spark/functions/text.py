@@ -6,8 +6,18 @@ BASELINE.json): everything here is pure column expressions over
 `documents.text`-shaped columns, so it runs JVM-side at 100 TB with no
 Python in the loop.
 
-Two rules cut a token array, each stated once:
+Three rules, each stated once:
 
+- ``tokens`` is the one tokenizer, and a branch runs it once per
+  document. Spark does not share a lambda-bearing expression between
+  its uses, so the metrics (``stopword_ratio``, ``mean_word_length``,
+  ``quality_score``, ``lang_scores``) read a token array their caller
+  projected once instead of tokenizing for themselves. A staged array
+  explodes through ``explode_staged``: a plain ``explode`` of a column
+  lets the optimizer infer ``size(a) > 0`` below it and push that
+  filter through the staging projection, which runs the array's
+  definition again. ``tokens_sql`` renders the same tokenizer for the
+  DuckDB oracles.
 - ``token_windows`` is the one window rule. Every shingle, bigram,
   span and chunk is a run of consecutive tokens cut by it, from
   whichever tokenizer its caller's oracle pins (``tokens``, or a plain
@@ -21,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists for the n-gram-heuristic language ID.
@@ -42,9 +52,28 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
-def token_count(col: Column | str) -> Column:
-    """Whitespace token count (the `wc -w` analog)."""
-    return F.size(tokens(col))
+def tokens_sql(e: str) -> str:
+    """``tokens`` as DuckDB SQL over the expression ``e``: the oracles'
+    mirror of the tokenizer."""
+    return f"list_filter(string_split_regex(trim({e}), '\\s+'), x -> x != '')"
+
+
+def explode_staged(
+    frame: DataFrame, array: str, alias: str, *keep: Column | str
+) -> DataFrame:
+    """``frame.select(*keep, explode(array).alias(alias))`` for an array
+    column ``frame`` stages (a token array or a set), whose elements
+    are never null.
+
+    An ``explode`` of a column makes the optimizer infer
+    ``size(array) > 0 AND isnotnull(array)`` below it and push that
+    filter through the projection that staged the array, where it runs
+    the array's definition a second and third time. ``explode_outer``
+    infers nothing; dropping its null element (the row it emits for a
+    null or empty array) gives the rows ``explode`` would."""
+    return frame.select(*keep, F.explode_outer(array).alias(alias)).filter(
+        F.col(alias).isNotNull()
+    )
 
 
 def bpe_ish_token_count(col: Column | str) -> Column:
@@ -68,38 +97,42 @@ def punct_ratio(col: Column | str) -> Column:
 
 
 def stopword_ratio(
-    col: Column | str, stopwords: Sequence[str] = LANG_MARKERS["en"]
+    toks: Column | str, stopwords: Sequence[str] = LANG_MARKERS["en"]
 ) -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    toks = tokens(col)
+    """Fraction of a token array's tokens that are stopwords."""
+    toks = F.col(toks) if isinstance(toks, str) else toks
     sw = F.array(*[F.lit(w) for w in stopwords])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return n_stop / F.greatest(F.size(toks), F.lit(1))
 
 
-def mean_word_length(col: Column | str) -> Column:
-    toks = tokens(col)
+def mean_word_length(toks: Column | str) -> Column:
+    """Mean character length of a token array's tokens."""
+    toks = F.col(toks) if isinstance(toks, str) else toks
     total = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: Column | str, toks: Column | str) -> Column:
     """Composite [0,1] doc-quality heuristic: length band + low punct +
-    sane mean word length. Deterministic, expression-only."""
+    sane mean word length. The character terms read the text ``col``,
+    the word length its token array ``toks``. Deterministic,
+    expression-only."""
     c = F.col(col) if isinstance(col, str) else col
     n = F.length(c)
     len_ok = F.when((n >= 100) & (n <= 20000), F.lit(1.0)).otherwise(F.lit(0.5))
     punct_ok = F.lit(1.0) - F.least(punct_ratio(c) * 4, F.lit(1.0))
-    mwl = mean_word_length(c)
+    mwl = mean_word_length(toks)
     mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.3))
     return (len_ok + punct_ok + mwl_ok) / 3.0
 
 
-def lang_scores(col: Column | str) -> list[Column]:
-    """Per-language marker-hit counts (`score_<lang>`)."""
-    toks = tokens(col)
+def lang_scores(toks: Column | str) -> list[Column]:
+    """Per-language marker-hit counts (`score_<lang>`) over a token
+    array."""
+    toks = F.col(toks) if isinstance(toks, str) else toks
     out = []
     for lang, markers in LANG_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])

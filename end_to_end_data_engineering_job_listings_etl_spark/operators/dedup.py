@@ -10,6 +10,10 @@ shuffle-conscious:
 - sets: every set operator reads an ``(id, set)`` frame from
   ``shingle_sets``, whose set is ``functions.text.word_shingles`` —
   the one definition of a document's set (k = 1: distinct tokens).
+  Each explodes it through ``functions.text.explode_staged``, so a
+  branch computes a document's set once: a plain ``explode`` of the
+  column lets the optimizer run the set's definition again in an
+  inferred filter below it.
 - MinHash/LSH: ``minhash_signature`` hashes an ``(id, set)`` frame
   (explode → one agg per id); ``minhash_lsh_pairs`` bands a signature
   frame into buckets and self-joins only within buckets (the classic
@@ -32,7 +36,7 @@ from pyspark.sql import functions as F
 
 import random
 
-from ..functions.text import fingerprint, tokens, word_shingles
+from ..functions.text import explode_staged, fingerprint, tokens, word_shingles
 from .ids import release_pins
 
 # Affine MinHash family h_i(x) = (a_i*x + b_i) mod p over a 32-bit base
@@ -76,7 +80,7 @@ def minhash_signature(
     explode + one aggregate — a single shuffle on id, and ONE md5 per
     member regardless of signature width. An empty set has no
     signature row."""
-    based = sets.select(F.col(id_col), F.explode("set").alias("sh")).selectExpr(
+    based = explode_staged(sets, "set", "sh", F.col(id_col)).selectExpr(
         id_col,
         "cast(conv(substring(md5(sh), 1, 8), 16, 10) AS bigint) AS h0",
     )
@@ -183,11 +187,7 @@ def jaccard_pairs(
     distinct candidate is then verified in-row against the two token
     arrays (``_with_overlap``), with no token-level verification join."""
     sets = shingle_sets(df, text_col, id_col, 1)
-    toks = sets.select(
-        F.col(id_col),
-        F.size("set").alias("__sz"),
-        F.explode("set").alias("tok"),
-    )
+    toks = explode_staged(sets, "set", "tok", F.col(id_col), F.size("set").alias("__sz"))
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
     w_pos = Window.partitionBy(id_col).orderBy("__df", "tok")
     # Prefix bound ⌈τ·|x|⌉ with an epsilon guard: for τ not exactly
@@ -244,11 +244,8 @@ def containment_pairs(
     Jaccard (the union is dominated by the long doc). Each side's set
     size rides through the explode, so no separate sizes aggregate is
     joined back."""
-    toks = shingle_sets(df, text_col, id_col, 1).select(
-        F.col(id_col),
-        F.size("set").alias("__sz"),
-        F.explode("set").alias("tok"),
-    )
+    sets = shingle_sets(df, text_col, id_col, 1)
+    toks = explode_staged(sets, "set", "tok", F.col(id_col), F.size("set").alias("__sz"))
     a, b = toks.alias("a"), toks.alias("b")
     return (
         a.join(b, "tok")

@@ -42,33 +42,44 @@ def _e6(col) -> F.Column:
     return F.floor(col * 1_000_000).cast("long")
 
 
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    return docs.select(
-        "doc_id",
-        T.char_count("text").alias("n_chars"),
-        T.token_count("text").alias("n_tokens"),
-        T.bpe_ish_token_count("text").alias("n_bpe_tokens"),
-        _e6(T.punct_ratio("text")).alias("punct_e6"),
-        _e6(T.stopword_ratio("text")).alias("stop_e6"),
-        _e6(T.mean_word_length("text")).alias("mwl_e6"),
-        _e6(T.quality_score("text")).alias("quality_e6"),
-        T.fingerprint("text").alias("fp"),
-    )
-
-
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text", "lang"))
-    scored = docs.select("doc_id", "lang", *T.lang_scores("text"))
+def _predicted_lang() -> F.Column:
+    """The language whose ``score_<lang>`` is highest; the first max
+    wins, in declared language order."""
     langs = list(T.LANG_MARKERS)
     pred = None
-    for lang in langs:  # first max wins, in declared language order
+    for lang in langs:
         cond = None
         for other in langs:
             c = F.col(f"score_{lang}") >= F.col(f"score_{other}")
             cond = c if cond is None else (cond & c)
         pred = F.when(cond, F.lit(lang)) if pred is None else pred.when(cond, F.lit(lang))
-    return scored.select("doc_id", "lang", *[f"score_{l}" for l in langs], pred.alias("predicted"))
+    return pred
+
+
+def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table_dist(
+        spark, sf_dir, "documents", cols=("doc_id", "text")
+    ).withColumn("__toks", T.tokens("text"))
+    return docs.select(
+        "doc_id",
+        T.char_count("text").alias("n_chars"),
+        F.size("__toks").alias("n_tokens"),
+        T.bpe_ish_token_count("text").alias("n_bpe_tokens"),
+        _e6(T.punct_ratio("text")).alias("punct_e6"),
+        _e6(T.stopword_ratio("__toks")).alias("stop_e6"),
+        _e6(T.mean_word_length("__toks")).alias("mwl_e6"),
+        _e6(T.quality_score("text", "__toks")).alias("quality_e6"),
+        T.fingerprint("text").alias("fp"),
+    )
+
+
+def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table_dist(
+        spark, sf_dir, "documents", cols=("doc_id", "text", "lang")
+    ).withColumn("__toks", T.tokens("text"))
+    scored = docs.select("doc_id", "lang", *T.lang_scores("__toks"))
+    scores = [f"score_{l}" for l in T.LANG_MARKERS]
+    return scored.select("doc_id", "lang", *scores, _predicted_lang().alias("predicted"))
 
 
 def dd_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,7 +315,7 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed ANN. Value-gated since round 7: the oracle replays
+    """IVF-bucketed ANN. Value-gated: the oracle replays
     the whole approximate path in SQL (centroid ranking, nprobe=2
     probe set, cell assignment, in-cell top-k) with the engine's exact
     tie-break contract — see ``_IVF_TOPK_ORACLE``. Also
@@ -329,28 +340,22 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     token soup) — the zero branches are still verified: a single doc
     attributed differently by Spark vs the oracle breaks the reason
     histogram hash."""
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
+    docs = load_table_dist(
+        spark, sf_dir, "documents", cols=("doc_id", "text")
+    ).withColumn("__toks", T.tokens("text"))
     from pyspark.sql import Window
 
-    langs = list(T.LANG_MARKERS)
     scored = docs.select(
         "doc_id",
         T.fingerprint("text").alias("fp"),
         T.char_count("text").alias("n_chars"),
-        T.quality_score("text").alias("q"),
-        *T.lang_scores("text"),
+        T.quality_score("text", "__toks").alias("q"),
+        *T.lang_scores("__toks"),
     )
-    pred = None
-    for lang in langs:  # first max wins, in declared language order
-        cond = None
-        for other in langs:
-            c = F.col(f"score_{lang}") >= F.col(f"score_{other}")
-            cond = c if cond is None else (cond & c)
-        pred = F.when(cond, F.lit(lang)) if pred is None else pred.when(cond, F.lit(lang))
     keyed = scored.select(
         "*",
         F.min("doc_id").over(Window.partitionBy("fp")).alias("keep_id"),
-        pred.alias("predicted"),
+        _predicted_lang().alias("predicted"),
     )
     reason = (
         F.when(F.col("doc_id") != F.col("keep_id"), F.lit("exact_dup"))
@@ -363,7 +368,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed ANN. Value-gated since round 7: the oracle
+    """Sign-LSH bucketed ANN. Value-gated: the oracle
     embeds the seeded hyperplanes as SQL literals and replays the
     signature → single-bucket probe → top-k path (``_lsh_plane_bits``),
     so the APPROXIMATE default carries a hash-match gate.
@@ -584,16 +589,14 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 
-_TOKS = "list_filter(string_split_regex(trim({e}), '\\s+'), x -> x != '')"
-_TOKS_LOWER = "list_filter(string_split_regex(trim(lower({e})), '\\s+'), x -> x != '')"
 _PUNCT_CLASS = "[!-/:-@\\[-`{-~]"
 _FP = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
 
 _SHINGLES = f"""
-CASE WHEN len({_TOKS_LOWER.format(e='text')}) >= {_SHINGLE_K}
+CASE WHEN len({T.tokens_sql('lower(text)')}) >= {_SHINGLE_K}
      THEN list_distinct(list_transform(
-            range(1, len({_TOKS_LOWER.format(e='text')}) - {_SHINGLE_K} + 2),
-            i -> array_to_string({_TOKS_LOWER.format(e='text')}[i:i+{_SHINGLE_K - 1}], ' ')))
+            range(1, len({T.tokens_sql('lower(text)')}) - {_SHINGLE_K} + 2),
+            i -> array_to_string({T.tokens_sql('lower(text)')}[i:i+{_SHINGLE_K - 1}], ' ')))
      ELSE [] END
 """
 
@@ -625,15 +628,15 @@ _QUALITY = f"""
 ( (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 1.0 ELSE 0.5 END)
 + (1.0 - least(((length(text) - length(regexp_replace(text, '{_PUNCT_CLASS}', '', 'g')))
                 / greatest(length(text), 1)) * 4, 1.0))
-+ (CASE WHEN (list_aggregate(list_transform({_TOKS.format(e='text')}, t -> length(t)), 'sum')
-              / greatest(len({_TOKS.format(e='text')}), 1)) BETWEEN 2.0 AND 12.0
++ (CASE WHEN (list_aggregate(list_transform({T.tokens_sql('text')}, t -> length(t)), 'sum')
+              / greatest(len({T.tokens_sql('text')}), 1)) BETWEEN 2.0 AND 12.0
         THEN 1.0 ELSE 0.3 END) ) / 3.0
 """
 
 _LANGS = list(T.LANG_MARKERS)
 _SCORE_EXPRS = ", ".join(
     "CAST(len(list_filter({toks}, t -> lower(t) IN ({mk}))) AS INTEGER) AS score_{lang}".format(
-        toks=_TOKS.format(e="text"),
+        toks=T.tokens_sql("text"),
         mk=", ".join(f"'{m}'" for m in T.LANG_MARKERS[lang]),
         lang=lang,
     )
@@ -736,7 +739,7 @@ _IVF_TOPK_ORACLE = f"""
 _SIMHASH_TOKS_CTE = f"""
 toks AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(unnest({_TOKS_LOWER.format(e='text')})), 1, 15)) AS BIGINT) AS h60
+         CAST(concat('0x', substr(md5(unnest({T.tokens_sql('lower(text)')})), 1, 15)) AS BIGINT) AS h60
   FROM documents
 )"""
 _SIMHASH_BITSUMS = "count(*) AS n_tok, " + ", ".join(
@@ -870,7 +873,7 @@ _IVFPQ_ORACLE = f"""
 # Both registry names of dd_jaccard_pairs share this oracle.
 _JACCARD_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok
+      SELECT doc_id, unnest(list_distinct({T.tokens_sql('lower(text)')})) AS tok
       FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
     ), sizes AS (
       SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id
@@ -893,15 +896,15 @@ ORACLES = {
     "text_stats": f"""
         SELECT doc_id,
           CAST(length(text) AS INTEGER) AS n_chars,
-          CAST(len({_TOKS.format(e='text')}) AS INTEGER) AS n_tokens,
+          CAST(len({T.tokens_sql('text')}) AS INTEGER) AS n_tokens,
           CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS INTEGER) AS n_bpe_tokens,
           CAST(floor(((length(text) - length(regexp_replace(text, '{_PUNCT_CLASS}', '', 'g')))
                / greatest(length(text), 1)) * 1000000) AS BIGINT) AS punct_e6,
-          CAST(floor((len(list_filter({_TOKS.format(e='text')},
+          CAST(floor((len(list_filter({T.tokens_sql('text')},
                  t -> lower(t) IN ({", ".join(f"'{w}'" for w in T.LANG_MARKERS['en'])})))
-               / greatest(len({_TOKS.format(e='text')}), 1)) * 1000000) AS BIGINT) AS stop_e6,
-          CAST(floor((list_aggregate(list_transform({_TOKS.format(e='text')}, t -> length(t)), 'sum')
-               / greatest(len({_TOKS.format(e='text')}), 1)) * 1000000) AS BIGINT) AS mwl_e6,
+               / greatest(len({T.tokens_sql('text')}), 1)) * 1000000) AS BIGINT) AS stop_e6,
+          CAST(floor((list_aggregate(list_transform({T.tokens_sql('text')}, t -> length(t)), 'sum')
+               / greatest(len({T.tokens_sql('text')}), 1)) * 1000000) AS BIGINT) AS mwl_e6,
           CAST(floor(({_QUALITY}) * 1000000) AS BIGINT) AS quality_e6,
           {_FP} AS fp
         FROM documents
@@ -920,7 +923,7 @@ ORACLES = {
     "dd_prefix_filter_pairs": _JACCARD_ORACLE,
     "dd_containment_pairs": f"""
         WITH toks AS (
-          SELECT doc_id, unnest(list_distinct({_TOKS_LOWER.format(e='text')})) AS tok
+          SELECT doc_id, unnest(list_distinct({T.tokens_sql('lower(text)')})) AS tok
           FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
         ), sizes AS (
           SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id

@@ -22,6 +22,7 @@ from .. import cachereg
 from ..catalog import load_table, load_table_dist
 from ..functions.normalize import norm_initcap
 from ..functions.packed import packed_pair, unpacked
+from ..functions.text import tokens_sql, word_shingles
 from .star import STAR_PREFIX, star_wide
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -660,8 +661,6 @@ def dim_company_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 word bigrams across the corpus (tie-broken on the bigram
     so the selected set is engine-independent)."""
-    from ..functions.text import word_shingles
-
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
     grams = docs.select(F.explode(word_shingles("text", 2)).alias("bigram"))
     return (
@@ -738,11 +737,11 @@ _INITCAP_PRIO = (
     "w -> upper(w[1]) || lower(w[2:])), ' ')"
 )
 
-_BIGRAMS = """
-CASE WHEN len(list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '')) >= 2
+_BIGRAMS = f"""
+CASE WHEN len({tokens_sql('lower(text)')}) >= 2
      THEN list_distinct(list_transform(
-            range(1, len(list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '')) - 2 + 2),
-            i -> array_to_string(list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '')[i:i+1], ' ')))
+            range(1, len({tokens_sql('lower(text)')}) - 2 + 2),
+            i -> array_to_string({tokens_sql('lower(text)')}[i:i+1], ' ')))
      ELSE [] END
 """
 

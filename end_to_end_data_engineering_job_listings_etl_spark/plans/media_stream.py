@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import cachereg
 from ..catalog import load_table, load_table_dist
+from ..functions.text import tokens, tokens_sql
 from ..streaming.watermark import (
     drain,
     drain_to_memory,
@@ -1280,8 +1281,6 @@ def sink_inverted_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     recomputes the same lists straight off ``documents``, so a
     dropped shard, a bad partition filter, or an unsorted list all
     break the hash."""
-    from ..functions.text import tokens
-
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
     posting = (
         docs.select(
@@ -1330,8 +1329,7 @@ def sink_inverted_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 _IDX_ORACLE = f"""
 WITH raw AS (
   SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            x -> x != '')) AS term
+         unnest({tokens_sql('lower(text)')}) AS term
   FROM documents
 ),
 toks AS (SELECT DISTINCT doc_id, term FROM raw)

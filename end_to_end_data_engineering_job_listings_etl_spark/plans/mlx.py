@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_dist
-from ..functions.text import tokens
+from ..functions.text import tokens, tokens_sql
 from ..functions.vectors import lit_vector
 
 # ---------------------------------------------------------------------------
@@ -132,13 +132,13 @@ def graph_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     two hash aggregations and one join — the textbook distributed
     PR shape with none of the float nondeterminism.
 
-    Plan shape (r12): the edge distinct, the out-degree and the
+    Plan shape: the edge distinct, the out-degree and the
     per-edge contribution all share ONE exchange keyed on o_custkey —
     an explicit repartition establishes hashpartitioning(o_custkey),
     which satisfies the distinct's (o_custkey, l_suppkey) clustering
     (subset rule), and out-degree is a window over the same key
-    instead of a groupBy + self-join. Before: lineitem was scanned
-    (and the distinct shuffled) TWICE — once per side of an
+    instead of a groupBy + self-join. The self-join form scans
+    lineitem (and shuffles the distinct) TWICE — once per side of an
     edges ⋈ outdeg sort-merge join."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -182,7 +182,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint's out-degree (the classic skew fix — a hub vertex's
     wedges are generated from its low-degree neighbors, not from the
     hub); both joins are key-equi hash joins, no cartesian. Corner
-    credits are an explode over the triangle rows (r12) instead of a
+    credits are an explode over the triangle rows instead of a
     3-branch unionAll — the union re-planned the whole triple-join
     subtree once per corner (36 fact-scan nodes in one plan); with
     the explode each edge subtree appears 3× but AQE reuses their
@@ -431,8 +431,8 @@ def op_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONLY l_shipdate equals the join of per-shipdate partial sums — so
 # the oracle stays O(probes · days-in-window) instead of
 # O(probes · lineitems-in-window). The raw-BETWEEN formulation
-# measured quadratic across decades (6.5 s at sf1 → ~10 min at sf10,
-# r8) with values identical by construction; DuckDB SUMs of BIGINT
+# measured quadratic across decades (6.5 s at sf1 → ~10 min at
+# sf10) with values identical by construction; DuckDB SUMs of BIGINT
 # widen to HUGEINT, hence the outer BIGINT casts.
 _RANGE_JOIN_ORACLE = """
 WITH li AS (
@@ -454,7 +454,6 @@ GROUP BY o.o_orderkey"""
 # Oracles
 # ---------------------------------------------------------------------------
 
-_TOKS_LOWER = "list_filter(string_split_regex(trim(lower({e})), '\\s+'), x -> x != '')"
 
 _SQD_SQL = (
     "list_aggregate(list_transform(range(1, len({a}) + 1),"
@@ -501,7 +500,7 @@ FROM ex GROUP BY cluster, dim"""
 
 _TFIDF_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS_LOWER.format(e='text')}) AS term FROM documents
+  SELECT doc_id, unnest({tokens_sql('lower(text)')}) AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
 dfreq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),

@@ -691,11 +691,9 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 
-_TK = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '')"
-
 _DSIR_GRAMS_CTE = f"""
 dtoks AS (
-  SELECT doc_id, lang, {_TK} AS tk FROM documents
+  SELECT doc_id, lang, {T.tokens_sql('lower(text)')} AS tk FROM documents
 ), dgrams AS (
   SELECT doc_id, lang, unnest(list_concat(
     list_distinct(tk),
@@ -755,7 +753,7 @@ ORACLES = {
       FROM documents
     ), staged AS (
       SELECT doc_id, r,
-             list_filter(string_split_regex(trim(r), '\\s+'), x -> x != '') AS tk,
+             {T.tokens_sql('r')} AS tk,
              string_split(r, chr(10)) AS ln
       FROM rendered
     ), m AS (
@@ -901,8 +899,7 @@ ORACLES = {
       SELECT doc_id, r,
              string_split(r, chr(10)) AS ln,
              list_filter(string_split(r, chr(10)),
-               l -> len(list_filter(string_split_regex(trim(l), '\\s+'),
-                                    x -> x != '')) >= {_C4_MIN_LINE_WORDS}
+               l -> len({T.tokens_sql('l')}) >= {_C4_MIN_LINE_WORDS}
                     AND right(rtrim(l), 1) IN ('.', '!', '?', '"')
                     AND NOT contains(lower(l), 'javascript')) AS kept
       FROM rendered

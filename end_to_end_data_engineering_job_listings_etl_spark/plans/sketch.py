@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_dist
-from ..functions.text import tokens
+from ..functions.text import tokens, tokens_sql
 
 # --- shared md5-hash conventions (bit-identical in Spark and DuckDB) ---
 
@@ -478,8 +478,7 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CDC_ORACLE = f"""
 WITH lists AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS toks
+         {tokens_sql('lower(text)')} AS toks
   FROM documents
 ),
 toks AS (
@@ -600,8 +599,7 @@ _BM25_TERMS_SQL = ", ".join(f"('{t}')" for t in _BM25_TERMS)
 
 _BM25_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                                    x -> x != '')) AS term
+  SELECT doc_id, unnest({tokens_sql('lower(text)')}) AS term
   FROM documents
 ),
 dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
@@ -962,11 +960,11 @@ def rag_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk
     from .corpus import _query_vec
 
-    # (r12 note: the rank self-join's two sides and the fusion join
-    # share the candidate generator's canonical stages under AQE at
-    # runtime — a bounded-collect LocalRelation of the 20-row
-    # candidate lists was tried and REVERTED, measured 1.27 → 2.46 s
-    # at sf0.1: two eager collect jobs cost more than the reuse saved.)
+    # The rank self-join's two sides and the fusion join share the
+    # candidate generator's canonical stages under AQE at runtime, so
+    # the 20-row candidate lists stay lazy: a bounded-collect
+    # LocalRelation of them measured 1.27 → 2.46 s at sf0.1, because
+    # two eager collect jobs cost more than the reuse saved.
     lex = _rank_small(
         bm25_scores(spark, sf_dir)
         .orderBy(F.desc("score_e3"), F.asc("doc_id"))

@@ -51,8 +51,6 @@ from .corpus import (
     _QUALITY,
     _SHINGLED_CTE,
     _SHINGLES,
-    _TOKS,
-    _TOKS_LOWER,
     _cos,
     _query_vec,
     _query_vecs,
@@ -110,7 +108,7 @@ def text_pack_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
-        T.token_count("text").alias("n_tokens"),
+        F.size(T.tokens("text")).alias("n_tokens"),
     )
     w = (
         Window.partitionBy("shard")
@@ -216,7 +214,7 @@ def samp_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
     sized = docs.select(
         "doc_id",
-        T.token_count("text").cast("bigint").alias("n_tokens"),
+        F.size(T.tokens("text")).cast("bigint").alias("n_tokens"),
         F.expr(f"doc_id div {_PACK_BUFFER}").alias("chunk_id"),
     )
 
@@ -266,7 +264,7 @@ def samp_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         "source",
-        T.token_count("text").alias("n_tokens"),
+        F.size(T.tokens("text")).alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("__rk"),
     )
     w = (
@@ -526,24 +524,27 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: every feature is a floor(ratio*1e6) integer (the
     text_stats trick), so the logit is integer arithmetic and the
     decision boundary is hash-stable cross-engine."""
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
+    docs = load_table_dist(
+        spark, sf_dir, "documents", cols=("doc_id", "text")
+    ).withColumn("__toks", T.tokens("text"))
     e6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
     n_chars = T.char_count("text")
-    stop_e6 = e6(T.stopword_ratio("text"))
-    punct_e6 = e6(T.punct_ratio("text"))
     len_band = F.when(
         (n_chars >= 100) & (n_chars <= 20_000), F.lit(_QC_LEN_BONUS_E6)
     ).otherwise(F.lit(0))
-    logit_e6 = (
-        F.lit(_QC_W_STOP) * stop_e6 - F.lit(_QC_W_PUNCT) * punct_e6 + len_band
-    )
-    return docs.select(
+    feats = docs.select(
         "doc_id",
-        stop_e6.alias("stop_e6"),
-        punct_e6.alias("punct_e6"),
+        e6(T.stopword_ratio("__toks")).alias("stop_e6"),
+        e6(T.punct_ratio("text")).alias("punct_e6"),
         len_band.cast("long").alias("len_bonus_e6"),
-        logit_e6.cast("long").alias("logit_e6"),
-        (logit_e6 >= _QC_THRESHOLD_E6).alias("keep"),
+    )
+    logit_e6 = (
+        F.lit(_QC_W_STOP) * F.col("stop_e6")
+        - F.lit(_QC_W_PUNCT) * F.col("punct_e6")
+        + F.col("len_bonus_e6")
+    )
+    return feats.withColumn("logit_e6", logit_e6).withColumn(
+        "keep", F.col("logit_e6") >= _QC_THRESHOLD_E6
     )
 
 
@@ -553,8 +554,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JACC_EDGES_CTE = f"""
 jtoks AS (
-  SELECT doc_id, unnest(list_distinct(list_filter(
-           string_split_regex(trim(lower(text)), '\\s+'), x -> x != ''))) AS tok
+  SELECT doc_id, unnest(list_distinct({T.tokens_sql('lower(text)')})) AS tok
   FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
 ), jsizes AS (
   SELECT doc_id, count(*) AS sz FROM jtoks GROUP BY doc_id
@@ -591,7 +591,7 @@ ORACLES = {
                            - n_tokens) / {_PACK_CAPACITY}) AS INTEGER) AS batch_seq
         FROM (
           SELECT doc_id, doc_id % {_PACK_SHARDS} AS shard,
-                 CAST(len({_TOKS.format(e='text')}) AS INTEGER) AS n_tokens
+                 CAST(len({T.tokens_sql('text')}) AS INTEGER) AS n_tokens
           FROM documents
         )
     """,
@@ -785,11 +785,9 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing corpus-wide, thresholds are literals. Docs with <2
     tokens are excluded (no bigram denominator)."""
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
-    toked = docs.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("toks")
-    ).filter(F.size("toks") >= 2)
+    toked = docs.select("doc_id", T.tokens(F.lower(F.col("text"))).alias("toks"))
     tok_stats = (
-        toked.select("doc_id", F.explode("toks").alias("tok"))
+        T.explode_staged(toked, "toks", "tok", "doc_id")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
@@ -806,7 +804,10 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_bi_distinct"
         ),
     )
-    j = tok_stats.join(bi_stats, "doc_id")
+    # The <2-token filter reads the aggregate, so it stays above it: a
+    # filter on the staged array would be pushed into its projection
+    # and run the tokenizer again.
+    j = tok_stats.join(bi_stats, "doc_id").filter(F.col("n_tokens") >= 2)
     top_e6 = F.floor(
         F.lit(1000000.0) * F.col("top_count") / F.col("n_tokens")
     ).cast("bigint")
@@ -974,7 +975,7 @@ def samp_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
     sized = docs.select(
         "doc_id",
-        (T.token_count("text") % 4 + 1).cast("long").alias("weight"),
+        (F.size(T.tokens("text")) % 4 + 1).cast("long").alias("weight"),
     )
     keep = F.expr(
         "cast(conv(substring(md5(concat('wb|', cast(doc_id as string))), 1, 8),"
@@ -1087,13 +1088,15 @@ def dd_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep decision is ONE window over cluster_id (same shuffle key as
     the final label join — no extra exchange beyond the ranking
     sort)."""
-    docs = load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text")).filter(
-        F.col("doc_id") < _JACCARD_MAX_ID
+    docs = (
+        load_table_dist(spark, sf_dir, "documents", cols=("doc_id", "text"))
+        .filter(F.col("doc_id") < _JACCARD_MAX_ID)
+        .withColumn("__toks", T.tokens("text"))
     )
     labels = _near_dup_labels(spark, sf_dir)
     quality = docs.select(
         "doc_id",
-        F.floor(T.quality_score("text") * 1_000_000)
+        F.floor(T.quality_score("text", "__toks") * 1_000_000)
         .cast("long")
         .alias("quality_e6"),
     )
@@ -1212,7 +1215,7 @@ ORACLES["samp_split_by_cluster"] = f"""
 ORACLES["samp_token_budget"] = f"""
     WITH sized AS (
       SELECT doc_id, source,
-             CAST(len({_TOKS.format(e='text')}) AS BIGINT) AS n_tokens,
+             CAST(len({T.tokens_sql('text')}) AS BIGINT) AS n_tokens,
              md5(CAST(doc_id AS VARCHAR)) AS rk
       FROM documents
     ), cum AS (
@@ -1230,7 +1233,7 @@ ORACLES["samp_token_budget"] = f"""
 ORACLES["samp_pack_sequences"] = f"""
     WITH RECURSIVE sized AS (
       SELECT doc_id,
-             CAST(len({_TOKS.format(e='text')}) AS BIGINT) AS n_tokens,
+             CAST(len({T.tokens_sql('text')}) AS BIGINT) AS n_tokens,
              doc_id // {_PACK_BUFFER} AS chunk_id
       FROM documents
     ), ord AS (
@@ -1256,7 +1259,7 @@ ORACLES["samp_pack_sequences"] = f"""
 
 ORACLES["text_dup_spans"] = f"""
     WITH toked AS (
-      SELECT doc_id, {_TOKS_LOWER.format(e='text')} AS t FROM documents
+      SELECT doc_id, {T.tokens_sql('lower(text)')} AS t FROM documents
     ), spans AS (
       SELECT doc_id, md5(array_to_string(t[i:i+{_SPAN_K - 1}], ' ')) AS h
       FROM toked, UNNEST(range(1, len(t) - {_SPAN_K - 2})) AS u(i)
@@ -1341,9 +1344,9 @@ ORACLES["text_quality_classifier"] = f"""
              >= {_QC_THRESHOLD_E6} AS keep
     FROM (
       SELECT doc_id,
-        CAST(floor((len(list_filter({_TOKS.format(e='text')},
+        CAST(floor((len(list_filter({T.tokens_sql('text')},
                t -> lower(t) IN ('the', 'a', 'of', 'and')))
-             / greatest(len({_TOKS.format(e='text')}), 1)) * 1000000) AS BIGINT)
+             / greatest(len({T.tokens_sql('text')}), 1)) * 1000000) AS BIGINT)
           AS stop_e6,
         CAST(floor(((length(text) - length(regexp_replace(text, '{_PUNCT_CLASS}', '', 'g')))
              / greatest(length(text), 1)) * 1000000) AS BIGINT) AS punct_e6,
@@ -1355,7 +1358,7 @@ ORACLES["text_quality_classifier"] = f"""
 
 ORACLES["text_repetition_signals"] = f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS_LOWER.format(e='text')} AS toks FROM documents
+      SELECT doc_id, {T.tokens_sql('lower(text)')} AS toks FROM documents
     ), t2 AS (
       SELECT doc_id, toks FROM t WHERE len(toks) >= 2
     ), tok AS (
@@ -1467,7 +1470,7 @@ ORACLES["inc_dedup_merge"] = f"""
 ORACLES["samp_weighted_bernoulli"] = f"""
 WITH sized AS (
   SELECT doc_id,
-         CAST(len({_TOKS.format(e='text')}) % 4 + 1 AS BIGINT) AS weight
+         CAST(len({T.tokens_sql('text')}) % 4 + 1 AS BIGINT) AS weight
   FROM documents
 )
 SELECT doc_id, weight

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.text import tokens
+from ..functions.text import tokens, tokens_sql
 
 _30D_US = 30 * 86400 * 1_000_000
 
@@ -315,12 +315,12 @@ def w_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the per-day max is deterministic. The oracle states
     the naive single-window form; the decomposition is value-exact.
 
-    One pass (r12): the carry is CONSTANT within a (type, day) group,
+    One pass: the carry is CONSTANT within a (type, day) group,
     so max(run_in + carry) = max(run_in) + carry — the per-day max
     and the day's net delta come out of ONE aggregate directly over
     the windowed boundaries (which reuses the window's (type, day)
-    partitioning), and the carry window runs on that tiny aggregate.
-    Before r12 the boundary frame was built twice and re-joined on
+    partitioning), and the carry window runs on that tiny aggregate,
+    so the boundary frame is built once, not twice and re-joined on
     (type, day)."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
     starts = ev.select(
@@ -374,7 +374,6 @@ QUERIES = {
     "fn_posexplode_tokens": fn_posexplode_tokens,
 }
 
-_DTOKS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '')"
 
 ORACLES = {
     "w_max_concurrency": """
@@ -501,7 +500,7 @@ ORACLES = {
         GROUP BY o_custkey
     """,
     "fn_posexplode_tokens": f"""
-        WITH t AS (SELECT {_DTOKS} AS toks FROM documents)
+        WITH t AS (SELECT {tokens_sql('lower(text)')} AS toks FROM documents)
         SELECT pos, token, count(*) AS n FROM (
           SELECT 1 AS pos, toks[1] AS token FROM t WHERE len(toks) >= 1
           UNION ALL SELECT 2, toks[2] FROM t WHERE len(toks) >= 2

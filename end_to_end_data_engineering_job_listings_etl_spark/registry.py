@@ -70,6 +70,13 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
     owns the SparkSession; timestamps in the parquet are UTC instants,
     so date derivation must happen in UTC regardless of host TZ.
 
+    The pin is part of the registry's contract: calling a registry
+    query leaves its session's ``spark.sql.session.timeZone`` at UTC,
+    and nothing restores the previous zone. It cannot be scoped to the
+    call, because the returned frame is lazy and reads the zone when
+    it executes, after the call has returned. It is the package's one
+    ``spark.conf.set`` outside ``streaming.watermark.scoped_conf``.
+
     Also the engine's QUERY BOUNDARY: before each registry query —
     the only point where no memo build is in flight —
     ``cachereg.query_boundary`` bounds within-dataset session state
@@ -104,9 +111,16 @@ _WINDOW = [
     "dd_keep_best",
     "dd_duplicate_clusters",
     "samp_split_by_cluster",
-    # 2. changed since their last driver row: the token-window and
-    # shingle-set readers, the ordinal callers, the packed argmins and
-    # the job-listings star
+    # 2. changed since their last driver row: the staged-token and
+    # staged-set readers, the token-window and shingle-set readers,
+    # the ordinal callers, the packed argmins and the job-listings star
+    "text_stats",
+    "text_langid",
+    "corpus_curation",
+    "text_quality_classifier",
+    "dd_jaccard_pairs",
+    "dd_prefix_filter_pairs",
+    "dd_containment_pairs",
     "text_repetition_metrics",
     "text_bigram_lm_score",
     "text_quality_buckets",
@@ -139,22 +153,15 @@ _WINDOW = [
     "jl_fact_fallback_checked",
     # 3. oldest last driver row first
     "star_wide",
-    "text_langid",
-    "text_stats",
     "w_latest_per_customer",
     "agg_approx_distinct_checked",
     "agg_grouping_sets",
     "agg_multi_distinct",
     "cust_idle_above_avg",
     "cust_order_distribution",
-    "dd_containment_pairs",
-    "dd_jaccard_pairs",
     "emb_int8_quantize",
     "er_blocking_refined",
     "er_name_blocking_pairs",
-    "fn_array_hof",
-    "fn_map_column",
-    "fn_posexplode_tokens",
 ]
 
 

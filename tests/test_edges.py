@@ -11,6 +11,7 @@ from pyspark.sql import types as T
 from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords import extract_keywords
 from end_to_end_data_engineering_job_listings_etl_spark.functions.relative_time import parse_relative_time
 from end_to_end_data_engineering_job_listings_etl_spark.functions.text import (
+    explode_staged,
     token_windows,
     tokens,
     word_shingles,
@@ -143,6 +144,41 @@ def test_token_windows_match_python_reference(spark, ansi):
     got = df.select(token_windows(F.split("text", " "), 1, partial=True)).collect()
     assert [r[0] for r in got] == [[], [""], ["a"], ["a", "b"], ["a", "b", "c"],
                                    ["a", "b", "a", "b"], ["a", "b", "c", "d", "e"]]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_explode_staged_matches_explode(spark, ansi):
+    """``explode_staged`` gives the rows ``F.explode`` gives for a null
+    array, an empty one, one element and repeated elements. Over a
+    staged token array, ``F.explode`` plans an inferred
+    ``size(...) > 0`` filter that re-tokenizes below the staging
+    projection; the helper plans none."""
+    from end_to_end_data_engineering_job_listings_etl_spark.streaming.watermark import (
+        scoped_conf,
+    )
+
+    arrays = [None, [], ["a"], ["a", "b", "a", "a"]]
+    df = spark.createDataFrame(
+        list(enumerate(arrays)), "id long, arr array<string>"
+    )
+    staged = spark.range(3).select(
+        "id", tokens(F.col("id").cast("string")).alias("arr")
+    )
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        want = df.select("id", F.explode("arr").alias("e")).collect()
+        got = explode_staged(df, "arr", "e", "id").collect()
+        plans = [
+            f._jdf.queryExecution().optimizedPlan().toString()
+            for f in (
+                staged.select("id", F.explode("arr").alias("e")),
+                explode_staged(staged, "arr", "e", "id"),
+            )
+        ]
+    assert sorted(got) == sorted(want)
+    assert [tuple(r) for r in sorted(got)] == [
+        (2, "a"), (3, "a"), (3, "a"), (3, "a"), (3, "b")
+    ]
+    assert [p.count("split(") for p in plans] == [2, 1]
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
@@ -302,7 +338,7 @@ def test_ranked_ids_partition_count_independent(spark, pins):
 
 def test_rank_input_pin_follows_the_input_plan(spark, pins, monkeypatch):
     """``ranked_ids`` checkpoints its input unless the input's
-    optimized plan ends in an Aggregate, whose shuffle output the
+    analyzed plan ends in an Aggregate, whose shuffle output the
     sampling and exchange jobs reuse. Each caller's choice, pinned: the
     batched dims (a distinct) and the natural-key tuples (a groupBy)
     take no input checkpoint; ``star_wide``'s order keys (a projection

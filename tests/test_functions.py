@@ -1,32 +1,12 @@
-"""Function-library unit tests (expression vs pandas-UDF parity,
-skew operator exactness, bucketed SKs already covered in test_star)."""
+"""Function-library unit tests (skew operator exactness; bucketed SKs
+are covered in test_star)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_job_listings_etl_spark.catalog import load_table
-from end_to_end_data_engineering_job_listings_etl_spark.functions.keywords import (
-    extract_keywords,
-    extract_keywords_pandas_udf,
-)
 from tests.conftest import SF_DIR
-
-
-def test_pandas_udf_matches_expression_compiler(spark):
-    from end_to_end_data_engineering_job_listings_etl_spark.session import ship_package
-
-    ship_package(spark)
-    docs = load_table(spark, SF_DIR, "documents")
-    udf = extract_keywords_pandas_udf()
-    both = docs.select(
-        "doc_id",
-        extract_keywords("text").alias("expr_kw"),
-        F.array_sort(udf("text")).alias("udf_kw"),
-    ).collect()
-    assert len(both) > 0
-    for r in both:
-        assert r["expr_kw"] == r["udf_kw"], r["doc_id"]
 
 
 def test_salted_distinct_exact(spark):

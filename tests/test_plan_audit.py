@@ -199,3 +199,32 @@ def test_token_windows_do_not_retokenize(spark, name):
     bodies = _lambda_bodies(plan)
     assert bodies, f"{name}: no lambda in the plan"
     assert not [b for b in bodies if "split(" in b], f"{name}: a window re-tokenizes"
+
+
+@pytest.mark.parametrize(
+    "name, max_splits",
+    [
+        ("text_stats", 1),
+        ("text_langid", 1),
+        ("corpus_curation", 1),
+        ("text_quality_classifier", 1),
+        ("dd_keep_best", 1),
+        ("dd_minhash_signatures", 1),
+        ("dd_containment_pairs", 2),
+        ("dd_lsh_candidates", 2),
+        ("inc_lsh_merge", 2),
+        ("text_repetition_signals", 2),
+        ("dd_jaccard_pairs", 6),
+    ],
+)
+def test_tokenizer_runs_once_per_branch(spark, name, max_splits):
+    """Each branch of the optimized plan splits a document once: the
+    metrics read a token array their query projected once, and a
+    staged token or set array explodes through
+    ``functions.text.explode_staged``, so no inferred filter below the
+    explode runs the tokenizer again. The bound is the number of
+    branches that read ``documents`` (two sides of a self-join, six
+    readers in ``dd_jaccard_pairs``)."""
+    df = registry.all_queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") <= max_splits, f"{name}: {plan.count('split(')} splits"

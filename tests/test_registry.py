@@ -51,3 +51,62 @@ def test_bench_headline_names_are_registered():
     qs = registry.all_queries()
     missing = [n for n in bench.HEADLINE if n not in qs]
     assert not missing, f"bench headline references unknown queries: {missing}"
+
+
+def test_query_leaves_its_session_at_utc(spark):
+    """A registry query pins ``spark.sql.session.timeZone`` to UTC on
+    the session it is built on and leaves it there: the pin cannot be
+    scoped, because the returned frame reads the zone when it runs."""
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        registry.all_queries()["dim_date"](spark, SF_DIR)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_conf_is_set_only_by_scoped_conf_or_the_utc_pin():
+    """Library code changes no session conf as a side effect: every
+    ``.conf.set`` / ``.conf.unset`` in the package is inside
+    ``streaming.watermark.scoped_conf``, or is the registry's
+    documented UTC pin."""
+    import ast
+    from pathlib import Path
+
+    root = Path(registry.__file__).resolve().parent
+    found = []
+
+    def visit(node, path, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("set", "unset")
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            args = tuple(a.value for a in node.args if isinstance(a, ast.Constant))
+            found.append((path, scope, node.func.attr, args))
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, scope)
+
+    for f in sorted(root.rglob("*.py")):
+        visit(ast.parse(f.read_text()), str(f.relative_to(root)), ())
+    stray = [
+        c
+        for c in found
+        if not (c[0] == "streaming/watermark.py" and c[1] == ("scoped_conf",))
+        and c
+        != (
+            "registry.py",
+            ("_pinned", "wrapped"),
+            "set",
+            ("spark.sql.session.timeZone", "UTC"),
+        )
+    ]
+    assert found and not stray, f"session conf set outside scoped_conf: {stray}"

@@ -98,7 +98,7 @@ def test_token_budget_boundary_doc_crosses(spark):
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(T.token_count("text")).alias("n_tokens"),
+            F.sum(F.size(T.tokens("text"))).alias("n_tokens"),
         )
         .collect()
     )
@@ -127,7 +127,7 @@ def test_pack_sequences_invariants(spark):
         _PACK_CAP,
         samp_pack_sequences,
     )
-    from end_to_end_data_engineering_job_listings_etl_spark.functions.text import token_count
+    from end_to_end_data_engineering_job_listings_etl_spark.functions import text as T
     from end_to_end_data_engineering_job_listings_etl_spark.catalog import load_table
 
     rows = samp_pack_sequences(spark, SF_DIR).collect()
@@ -139,7 +139,7 @@ def test_pack_sequences_invariants(spark):
     docs = load_table(spark, SF_DIR, "documents")
     agg = docs.agg(
         F.count("*").alias("n"),
-        F.sum(token_count("text")).alias("t"),
+        F.sum(F.size(T.tokens("text"))).alias("t"),
     ).collect()[0]
     assert total_docs == agg["n"] and total_tokens == agg["t"]
     by_chunk = {}
